@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Rank-bucket quantization for Z-order clustering ([[graft.sinks.Lake
-  * .writeZOrdered]]): value → index of its quantile bucket via binary
+  * .zOrderShape]]): value → index of its quantile bucket via binary
   * search over precomputed boundaries. Rank-based (not min/max-uniform)
   * so skewed columns still spread across the full bucket range — the same
   * choice production OPTIMIZE ZORDER implementations make.

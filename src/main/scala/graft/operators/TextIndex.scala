@@ -364,9 +364,8 @@ object TextIndex {
   }
 
   /** Compact each bucket's accumulated small files (streamed appends
-    * land one file set per micro-batch) into `filesPerBucket`, with the
-    * same rename-aside swap discipline as [[graft.sinks.Lake
-    * .compactPartitions]]: write `.compact_tmp_bucket=*`, swap the live
+    * land one file set per micro-batch) into `filesPerBucket`, with a
+    * rename-aside swap: write `.compact_tmp_bucket=*`, swap the live
     * dir aside, swap tmp in, drop old LAST — plus leftover-dir recovery
     * at entry, so a crash at any point leaves a servable index. Also
     * folds `stats_log`'s per-batch rows into one (same swap). Query

@@ -51,45 +51,17 @@ object Lake {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
 
-  /** Z-ORDER clustered write — multi-dimensional data skipping for the
-    * lake (the OPTIMIZE ZORDER of Delta/Iceberg, on plain parquet).
-    *
-    * WHY: `writeArchive` clusters by (symbol, ts) — perfect pruning for
-    * the ingest/query dimensions the reference uses, NONE for any other
-    * predicate (a `user × value` box query reads every file because both
-    * dims are uniform within every time slice). Z-ordering interleaves
-    * the bits of each dimension's QUANTILE RANK, so proximity in the
-    * z-value ⇒ proximity in every dimension: a box selective in d dims
-    * touches ~∏(selectivityᵢ) of the files instead of all of them.
-    *
-    * How it scales (100 TB):
-    *   - quantile boundaries: one `approxQuantile` pass, driver state =
-    *     2^bits doubles per column (bounded, like the k-means sample);
-    *   - the z-value is a pure per-row expression (native binary-search
-    *     [[graft.functions.RankBucket]] + integer bit-interleave —
-    *     codegen'd, no UDF);
-    *   - layout = `repartitionByRange` on the z-value (one range shuffle,
-    *     same cost class as the (year,month) repartition) + within-file
-    *     sort, so parquet min/max row-group stats align with z-order too.
-    *   - readers need NOTHING special: pruning comes from ordinary
-    *     parquet column stats on the ORIGINAL columns — [[fileStats]]
-    *     computes the per-file envelope a pruning scan sees.
-    *
-    * Bucket count 2^bits per column; bits·|zCols| ≤ 62.
-    */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-      numFiles: Int, bits: Int = 12, mode: String = "overwrite"): Unit =
-    zOrderShape(df, zCols, numFiles, bits)
-      .write.mode(mode)
-      .option("compression", "zstd")
-      .parquet(path)
-
   /** The z-ordered LAYOUT without the write: `df` range-partitioned into
     * `numFiles` slices of the interleaved z-value and sorted within each —
-    * one file per partition when written as-is. Shared by [[writeZOrdered]]
-    * (directory lake) and [[SnapshotLake.optimizeZOrder]] (manifest lake,
-    * which stages the shaped frame itself so the new layout and its
-    * per-file envelopes commit in one manifest version).
+    * one file per partition when written as-is. Z-ordering interleaves
+    * the bits of each dimension's QUANTILE RANK (one `approxQuantile`
+    * pass, 2^bits doubles of driver state per column; the native
+    * [[graft.functions.RankBucket]] + integer shifts are codegen'd), so a
+    * box selective in d dims touches ~∏(selectivityᵢ) of the files.
+    * Used by [[SnapshotLake.optimizeZOrder]], which stages the shaped
+    * frame itself so the new layout and its per-file envelopes commit in
+    * one manifest version. Bucket count 2^bits per column; bits·|zCols|
+    * ≤ 62.
     */
   def zOrderShape(df: DataFrame, zCols: Seq[String],
       numFiles: Int, bits: Int = 12): DataFrame = {
@@ -118,290 +90,6 @@ object Lake {
       .repartitionByRange(numFiles, col("__zv"))
       .sortWithinPartitions("__zv")
       .select(df.columns.map(col): _*)
-  }
-
-  /** OPTIMIZE: rewrite chosen year/month partitions of the archive into
-    * Z-ordered files (the Delta `OPTIMIZE ... ZORDER BY` lifecycle on
-    * plain parquet). Each partition is rewritten INDEPENDENTLY —
-    * quantile boundaries are computed per partition, cost is
-    * O(partitions touched), and untouched directories are never read.
-    * Rewrite-swap-drop per directory (write to a hidden sibling, swap,
-    * drop the old) — the [[graft.operators.VectorIndex]] compact
-    * discipline. Crash contract (ADVICE r6): a crash BETWEEN the two
-    * renames leaves the partition parked in a dot-prefixed dir that
-    * partition discovery ignores — reads in that window miss the
-    * partition. [[recoverPartitionSwaps]] runs at the start of every
-    * optimize/compact (and is public for readers) and rolls any such
-    * swap forward or back, so the window ends at the next maintenance
-    * call rather than persisting silently.
-    */
-  def optimizeZOrder(spark: SparkSession, path: String, zCols: Seq[String],
-      partitions: Seq[(Int, Int)], filesPerPartition: Int = 8,
-      bits: Int = 12): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitionSwaps(spark, path)
-    partitions.foreach { case (y, m) =>
-      val dir = new org.apache.hadoop.fs.Path(path, s"year=$y/month=$m")
-      require(fs.exists(dir), s"no such partition: year=$y/month=$m")
-      val tmp = new org.apache.hadoop.fs.Path(path,
-        s"year=$y/.zorder_tmp_month=$m")
-      val old = new org.apache.hadoop.fs.Path(path,
-        s"year=$y/.zorder_old_month=$m")
-      writeZOrdered(spark.read.parquet(dir.toString), tmp.toString,
-        zCols, filesPerPartition, bits)
-      // swap: old dir aside, tmp in, old dropped — each rename atomic
-      fs.delete(old, true)
-      require(fs.rename(dir, old), s"swap-out failed for $dir")
-      require(fs.rename(tmp, dir), s"swap-in failed for $dir")
-      fs.delete(old, true)
-    }
-  }
-
-  /** Small-file compaction for chosen year/month partitions — the
-    * operational complement of streaming ingest (micro-batches land one
-    * file each; a month of 1-minute batches is ~43 k tiny files whose
-    * open/footer costs dominate any later scan). Each partition is
-    * rewritten to ceil(bytes / targetBytes) files with the archive's
-    * (symbol, ts) clustering restored, using the same rewrite-swap-drop
-    * discipline as [[optimizeZOrder]] — crash-safe, untouched partitions
-    * never read. Returns (partition, filesBefore, filesAfter) per
-    * partition touched.
-    */
-  def compactPartitions(spark: SparkSession, path: String,
-      partitions: Seq[(Int, Int)],
-      targetBytes: Long = 128L * 1024 * 1024): Seq[(String, Int, Int)] = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitionSwaps(spark, path)
-    partitions.map { case (y, m) =>
-      val dir = new org.apache.hadoop.fs.Path(path, s"year=$y/month=$m")
-      require(fs.exists(dir), s"no such partition: year=$y/month=$m")
-      val files = fs.listStatus(dir).filter(_.isFile)
-        .filter(!_.getPath.getName.startsWith("_"))
-      val bytes = files.map(_.getLen).sum
-      val nOut = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-      val tmp = new org.apache.hadoop.fs.Path(path, s"year=$y/.compact_tmp_month=$m")
-      val old = new org.apache.hadoop.fs.Path(path, s"year=$y/.compact_old_month=$m")
-      spark.read.parquet(dir.toString)
-        .repartition(nOut)
-        .sortWithinPartitions("symbol", "ts")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(tmp.toString)
-      fs.delete(old, true)
-      require(fs.rename(dir, old), s"swap-out failed for $dir")
-      require(fs.rename(tmp, dir), s"swap-in failed for $dir")
-      fs.delete(old, true)
-      val after = fs.listStatus(dir).count(s =>
-        s.isFile && !s.getPath.getName.startsWith("_"))
-      (s"year=$y/month=$m", files.length, after)
-    }
-  }
-
-  /** Concurrent-reader contract for the rename-aside maintenance swaps
-    * ([[compactPartitions]], [[optimizeZOrder]], [[graft.operators
-    * .TextIndex.compactPostings]]): a reader that RESOLVED its file list
-    * before a swap and executes after it reads file names that no longer
-    * exist and fails with a `FileNotFoundException` (Spark wraps it per
-    * task and suggests REFRESH TABLE). That failure is the designed
-    * behavior — loud and lossless. The recovery is to RE-PLAN: build a
-    * fresh DataFrame (a fresh `spark.read` re-lists the directory and
-    * sees the post-swap files) and re-run. This helper packages that
-    * loop; `body` MUST construct its read from scratch per invocation —
-    * retrying a captured DataFrame re-executes the same stale plan
-    * forever.
-    *
-    * Do NOT "fix" this with `spark.sql.files.ignoreMissingFiles=true`:
-    * during a swap the partition's files vanish as a SET, so an ignoring
-    * reader silently returns the lake minus that whole partition —
-    * a wrong answer with no error. The loud-FNF + re-plan contract is
-    * the only lossless one without a manifest layer. (Swaps are
-    * per-partition renames, so the vulnerable window is one partition at
-    * a time; readers that planned after the swap are untouched.)
-    *
-    * MergeSpec races a pre-swap plan against a compaction and pins both
-    * halves of the contract.
-    */
-  def retryingOnSwap[T](attempts: Int = 3)(body: => T): T = {
-    def swapLoss(t: Throwable): Boolean =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
-        .exists(_.isInstanceOf[java.io.FileNotFoundException])
-    def go(remaining: Int): T =
-      try body
-      catch {
-        case e: Throwable if swapLoss(e) && remaining > 1 => go(remaining - 1)
-      }
-    require(attempts >= 1, s"attempts must be >= 1, got $attempts")
-    go(attempts)
-  }
-
-  /** Roll interrupted [[optimizeZOrder]]/[[compactPartitions]] swaps
-    * forward or back. A `.{zorder,compact}_old_month=m` dir left behind
-    * means the process died inside a swap: if the live dir is missing,
-    * restore it (prefer the complete rewritten tmp, else the original);
-    * then drop the parked/tmp leftovers. Idempotent; called at the start
-    * of every optimize/compact, and callable by any reader that suspects
-    * a crashed maintainer. Returns the relative partition dirs touched.
-    */
-  def recoverPartitionSwaps(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) return Nil
-    val years = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("year="))
-    years.toSeq.flatMap { yr =>
-      val entries = fs.listStatus(yr.getPath).map(_.getPath)
-      val recovered = entries.flatMap { p =>
-        val n = p.getName
-        val oldPrefix = Seq(".zorder_old_", ".compact_old_").find(n.startsWith)
-        oldPrefix.map { pre =>
-          val liveName = n.stripPrefix(pre)
-          val live = new org.apache.hadoop.fs.Path(yr.getPath, liveName)
-          val tmp = new org.apache.hadoop.fs.Path(yr.getPath,
-            pre.replace("_old_", "_tmp_") + liveName)
-          if (!fs.exists(live)) {
-            if (fs.exists(tmp)) require(fs.rename(tmp, live),
-              s"swap recovery failed: $tmp -> $live")
-            else require(fs.rename(p, live), s"swap recovery failed: $p -> $live")
-          }
-          fs.delete(p, true)
-          fs.delete(tmp, true)
-          s"${yr.getPath.getName}/$liveName"
-        }
-      }
-      // a lone tmp (write finished or died mid-write, swap never started)
-      // is invisible garbage — drop it
-      entries.filter(p => (p.getName.startsWith(".zorder_tmp_") ||
-          p.getName.startsWith(".compact_tmp_")) && fs.exists(p))
-        .foreach(fs.delete(_, true))
-      recovered
-    }
-  }
-
-  /** Per-FILE min/max envelope of `cols` — exactly the statistics a
-    * pruning reader consults. `candidateFiles` counts the files a box
-    * predicate cannot skip; the Z-order spec asserts the clustered layout
-    * shrinks it vs the time-ordered one.
-    */
-  def fileStats(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Files whose stat envelope intersects the box `lo(c) ≤ c ≤ hi(c)`. */
-  def candidateFileList(stats: DataFrame,
-      box: Map[String, (Double, Double)]): Seq[String] =
-    box.foldLeft(stats) { case (d, (c, (lo, hi))) =>
-      d.filter(col(s"max_$c").cast("double") >= lo &&
-        col(s"min_$c").cast("double") <= hi)
-    }.select("file").collect().map(_.getString(0)).toSeq
-
-  /** Files whose stat envelope intersects the box `lo(c) ≤ c ≤ hi(c)`. */
-  def candidateFiles(stats: DataFrame, box: Map[String, (Double, Double)]): Long =
-    candidateFileList(stats, box).size.toLong
-
-  /** Read a box query through the file-stat envelope: open ONLY the
-    * candidate files, then apply the exact predicate as a residual —
-    * identical rows to a full scan + filter, I/O bounded by the
-    * candidate list (ZorderSpec asserts both, via the scan's numFiles).
-    * This is what makes [[writeZOrdered]] pay off end-to-end: Z-order
-    * shrinks each file's envelope, the envelope shrinks the open set.
-    *
-    * The candidate PATH list is driver-resident — that is how table
-    * formats (Delta/Iceberg) plan scans too: pruning decisions are
-    * metadata-sized (one row per file), never data-sized. An empty
-    * candidate list returns an empty frame with the lake's schema.
-    */
-  def readBox(spark: SparkSession, path: String, stats: DataFrame,
-      box: Map[String, (Double, Double)]): DataFrame = {
-    val files = candidateFileList(stats, box)
-    val residual = box.map { case (c, (lo, hi)) =>
-      col(c).cast("double") >= lo && col(c).cast("double") <= hi
-    }.reduce(_ && _)
-    if (files.isEmpty)
-      spark.read.parquet(path).filter(lit(false))
-    else
-      spark.read.parquet(files: _*).filter(residual)
-  }
-
-  /** MERGE (upsert) a batch of new/changed rows into the year/month
-    * lake, rewriting ONLY the partitions the batch touches — the lake
-    * analog of the reference's row-at-a-time ON CONFLICT DO UPDATE
-    * (timeseries_db.py:399-434), restated for 100 TB:
-    *
-    *   - affected partitions = distinct (year, month) of the BATCH — a
-    *     calendar-bounded driver list (years × 12), never data-sized;
-    *   - the existing side is read through a partition-pruning IN filter,
-    *     so the scan touches only those directories — merge cost is
-    *     O(touched partitions), not O(lake);
-    *   - winner per key: highest `versionCol`, batch beats lake on ties,
-    *     equal-version batch rows fall back to a whole-row hash order —
-    *     a total, run-stable order (no whole-row nondeterminism);
-    *   - the write uses DYNAMIC partition overwrite: untouched partition
-    *     directories are never listed, read, or replaced (asserted
-    *     file-for-file in MergeSpec).
-    *
-    * The batch must carry the lake's schema (minus year/month, which are
-    * re-derived from ts). Returns (partitions rewritten, rows written).
-    */
-  def mergeArchive(spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], versionCol: String): (Seq[(Int, Int)], Long) = {
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val up = updates
-      .withColumn("year", year(col("ts")))
-      .withColumn("month", month(col("ts")))
-    val touched = up.select("year", "month").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-    if (touched.isEmpty) return (Nil, 0L)
-    // OR-of-equalities prunes at the partition-directory level
-    val prune = touched.map { case (y, m) =>
-      col("year") === y && col("month") === m
-    }.reduce(_ || _)
-    val existing = spark.read.parquet(path).filter(prune)
-    val cols = existing.columns
-    val merged = existing.withColumn("__src", lit(0))
-      .unionByName(up.select(cols.map(col): _*).withColumn("__src", lit(1)))
-    // final xxhash64 tie-break (ADVICE r6): __src only orders batch vs
-    // lake — two BATCH rows sharing key AND version would otherwise win
-    // nondeterministically across runs; hashing the full row makes the
-    // pick arbitrary-but-stable (and irrelevant when the rows are equal)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc, col("__src").desc,
-        xxhash64(cols.map(col): _*).asc)
-    val winners = merged
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(cols.map(col): _*)
-    // Stage before overwriting: the winners plan READS the same files the
-    // dynamic overwrite replaces, so materialize once to a hidden dir
-    // (ignored by partition discovery) — the production-safe pattern, and
-    // it bounds memory where a localCheckpoint would not. Staged volume =
-    // touched partitions only.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(path,
-      s".merge_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      winners.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
-      val written = staged.count()
-      staged
-        .repartition(col("year"), col("month"))
-        .sortWithinPartitions(col("year"), col("month"), col("symbol"), col("ts"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .partitionBy("year", "month")
-        .parquet(path)
-      (touched, written)
-    } finally fs.delete(staging, true)
   }
 
   /** Retention/TTL janitor — drop year/month partitions older than

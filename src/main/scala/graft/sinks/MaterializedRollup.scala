@@ -232,7 +232,10 @@ object MaterializedRollup {
         s"no register lake under $mvRoot — init/fullRefresh creates it")
     }
     val delta = registersAll(rows, spec).persist()
-    (delta, delta.count())
+    // a failed count reaches the caller only through its swallowing join,
+    // which never sees this frame: release it before rethrowing
+    try (delta, delta.count())
+    catch { case e: Throwable => delta.unpersist(); throw e }
   }
 
   /** Phase 2: fold prepared delta registers into the register lake once

@@ -9,11 +9,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-pinned snapshot lake: serializable reads over plain parquet.
   *
-  * WHY: [[Lake]]'s maintenance swaps (compact / OPTIMIZE ZORDER) rename
-  * partition directories in place, so a reader that planned before a swap
-  * and executes after it fails loudly with FileNotFound and must re-plan
-  * ([[Lake.retryingOnSwap]] documents why that is the only LOSSLESS
-  * contract *without a manifest layer*). This IS the manifest layer — the
+  * WHY: maintenance that renames partition directories in place (compact
+  * / OPTIMIZE ZORDER on a plain directory lake) makes a reader that
+  * planned before a swap and executes after it fail with FileNotFound;
+  * the only LOSSLESS fix without a manifest is to re-plan, and
+  * `spark.sql.files.ignoreMissingFiles` would silently drop a whole
+  * partition instead. This is the manifest layer that removes the
+  * problem, and the only way this engine rewrites a lake — the
   * design Delta Lake / Iceberg published (log of immutable data files;
   * readers pin a log version; writers commit new versions atomically;
   * physical deletion deferred to an explicit retention-bounded vacuum),
@@ -753,8 +755,9 @@ object SnapshotLake {
     import org.apache.spark.util.sketch.BloomFilter
     val fs = fsOf(spark, root)
     val dd = dataDir(root)
-    def key(p: Path): String = p.toUri.getPath // scheme-insensitive
-    val relByKey = entries.map(e => key(new Path(dd, e.rel)) -> e.rel).toMap
+    // qualified first: tasks key by `input_file_name`, which is absolute
+    // even when `root` is relative; then scheme-insensitive
+    def key(p: Path): String = fs.makeQualified(p).toUri.getPath
     // sole caller is stageFiles, whose entries carry the footer row count
     // already — sizes each file's filter so fpp holds at any file size
     val rowsByKey = entries.map { e =>
@@ -1749,9 +1752,8 @@ object SnapshotLake {
     }
 
   /** Stats-pruned box read: plan over only [[candidateEntries]] plus the
-    * residual predicate — the manifest-level analog of [[Lake.readBox]],
-    * with the candidate set decided from ONE manifest instead of a
-    * stats-collection job over the lake.
+    * residual predicate — the candidate set is decided from ONE manifest,
+    * with no stats-collection job over the lake and no directory listing.
     */
   def readBox(spark: SparkSession, root: String,
       box: Map[String, (Double, Double)],
@@ -2180,9 +2182,8 @@ object SnapshotLake {
     * [[Lake.zOrderShape]]) and publish the result as ONE new manifest
     * version with [[compact]]'s guarantees: non-blocking for pinned
     * readers, concurrent appends carried forward by the lock-merge,
-    * crash leaves no torn state. The decisive difference from the
-    * directory lake's swap-based OPTIMIZE: the clustering and its
-    * data-skipping index move TOGETHER — `stageFiles` restamps every
+    * crash leaves no torn state. The clustering and its data-skipping
+    * index move TOGETHER — `stageFiles` restamps every
     * rewritten file's min/max envelopes (the z-dims are added to the
     * tracked stat columns), so the next [[readBox]] /
     * [[ManifestFileIndex.readPruned]] prunes against envelopes that are
@@ -2192,7 +2193,7 @@ object SnapshotLake {
     *
     * Unpartitioned lakes only (a hive-partitioned snapshot's directory
     * keys already cluster its partition dims; z-ordering WITHIN
-    * partitions is a compose-on-top maintenance job, not this rewrite).
+    * partitions is not supported).
     * Returns (newVersion, filesBefore, filesAfter).
     */
   def optimizeZOrder(spark: SparkSession, root: String, zCols: Seq[String],
@@ -2204,8 +2205,8 @@ object SnapshotLake {
       zCols.foreach(c => require(base.schema.fieldNames.contains(c),
         s"z-order column $c not in snapshot schema ${base.schema.simpleString}"))
       require(base.files.forall(!_.rel.contains("=")),
-        "optimizeZOrder supports unpartitioned snapshot lakes; z-order " +
-          "within hive partitions via Lake.optimizeZOrder on the data dirs")
+        "optimizeZOrder supports unpartitioned snapshot lakes only; " +
+          "z-ordering within hive partitions is not supported")
       val nOut = math.max(1,
         ((base.bytes + targetBytes - 1) / targetBytes).toInt)
       val shaped = Lake.zOrderShape(read(spark, root, Some(base.version)),
@@ -2379,7 +2380,7 @@ object SnapshotLake {
         val existing = readEntries(spark, root, base, rewrite)
         // keep-latest-wins with the deterministic tie-break (version desc,
         // updates beat lake at equal version, full-row hash stabilizes
-        // equal-version update pairs) — Lake.mergeArchive's contract
+        // equal-version update pairs)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(keyCols.map(col): _*)
           .orderBy(col(versionCol).desc, col("__src").desc,

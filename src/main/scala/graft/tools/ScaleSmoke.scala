@@ -329,12 +329,12 @@ object ScaleSmoke {
     }
 
     if (on("zorder")) {
-    // ---- Z-order vs time-ordered layout at 10 M rows x 128 files: the
-    // candidate-file count bounds what ANY pruning reader must touch for
-    // a 2-D box, and the timed filtered scans show it reaching wall time
-    // through ordinary parquet row-group stats.
-    import graft.sinks.Lake
-    val zdir = graft.TempDirs.create("smoke-zorder")
+    // ---- Z-order vs time-ordered layout at 10 M rows x 128 files on the
+    // manifest lake: the candidate-entry count bounds what ANY pruning
+    // reader must open for a 2-D box, and the timed box reads show it
+    // reaching wall time through the manifest's per-file envelopes.
+    import graft.sinks.SnapshotLake
+    val zroot = graft.TempDirs.create("smoke-zorder") + "/lake"
     val zn = 10000000L
     val zrows = spark.range(zn).select(
       col("id").as("event_id"),
@@ -347,27 +347,26 @@ object ScaleSmoke {
       val r = f
       println(f"[scale] $label%-22s rows=$r%-10d ${(System.nanoTime() - t0) / 1e9}%6.1f s")
     }
-    timeZ("zorder-write-10M") {
-      Lake.writeZOrdered(zrows, s"$zdir/z", Seq("user_id", "value"), numFiles = 128)
+    timeZ("linear-append-10M") {
+      SnapshotLake.append(spark, zroot,
+        zrows.repartitionByRange(128, col("ts")).sortWithinPartitions("ts"),
+        statsCols = Seq("user_id", "value"))
       zn
     }
-    timeZ("linear-write-10M") {
-      zrows.repartitionByRange(128, col("ts")).sortWithinPartitions("ts")
-        .write.parquet(s"$zdir/linear"); zn
-    }
     val box = Map("user_id" -> (45000.0, 55000.0), "value" -> (450.0, 550.0))
-    val zc = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$zdir/z", Seq("user_id", "value")), box)
-    val lc = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$zdir/linear", Seq("user_id", "value")), box)
-    println(s"[scale] zorder-candidates     z=$zc linear=$lc (of 128 files, 10%x10% box)")
-    def boxCount(path: String): Long =
-      spark.read.parquet(path)
-        .filter(col("user_id").between(45000L, 55000L) &&
-          col("value").between(450.0, 550.0))
-        .count()
-    timeZ("box-scan-zorder") { boxCount(s"$zdir/z") }
-    timeZ("box-scan-linear") { boxCount(s"$zdir/linear") }
+    def candidates(): String =
+      s"${SnapshotLake.candidateEntries(spark, zroot, box).size} of " +
+        s"${SnapshotLake.manifest(spark, zroot).files.size}"
+    val lc = candidates()
+    timeZ("box-read-linear") { SnapshotLake.readBox(spark, zroot, box).count() }
+    timeZ("optimize-zorder-10M") {
+      SnapshotLake.optimizeZOrder(spark, zroot, Seq("user_id", "value"),
+        targetBytes = math.max(1L, SnapshotLake.manifest(spark, zroot).bytes / 128))
+      zn
+    }
+    val zc = candidates()
+    println(s"[scale] zorder-candidates     z=$zc linear=$lc files (10%x10% box)")
+    timeZ("box-read-zorder") { SnapshotLake.readBox(spark, zroot, box).count() }
     }
 
     if (on("pack")) {
@@ -748,11 +747,10 @@ object ScaleSmoke {
     if (on("lake10")) {
     // ---- partitioned-lake lifecycle at sf10 derivation (VERDICT r8 #6):
     // the reference's monthly archive tree -> archiveToLake migration ->
-    // month-pruned reads -> OPTIMIZE ZORDER on one partition -> box-pruned
-    // reads, with FILES-OPENED counts printed for each step (the number
-    // that bounds any reader's I/O at 100 TB). Tree = the first 24 months
-    // of the sf10 bars (~1M rows, 5 symbols x 24 months), one file per
-    // (month, symbol) in the reference
+    // month-pruned reads, with FILES-OPENED counts printed for each step
+    // (the number that bounds any reader's I/O at 100 TB). Tree = the
+    // first 24 months of the sf10 bars (~1M rows, 5 symbols x 24 months),
+    // one file per (month, symbol) in the reference
     // {year}/{month}/{symbol}/{symbol}_{tf}_{yyyyMM}.parquet shape with
     // one month per codec (zlib/xz/bz2) like the reference's mixed layout.
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -825,29 +823,6 @@ object ScaleSmoke {
     timeL("month-pruned-read") {
       spark.read.parquet(lake)
         .filter(col("year") === 2025 && col("month") === 6).count()
-    }
-    // OPTIMIZE ZORDER one partition on (open, volume), then the box query
-    // envelope: candidate files before vs after
-    import graft.sinks.Lake
-    // box = a selective slice of the actual (log-ish) value mass: open
-    // 100-200 is ~8% of rows, volume 20-40 ~20% — the 2-D envelope any
-    // pruning reader must bound
-    val part = Seq((2025, 6))
-    val box = Map("open" -> (100.0, 200.0), "volume" -> (20.0, 40.0))
-    val candBefore = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$lake/year=2025/month=6", Seq("open", "volume")), box)
-    timeL("optimize-zorder-month") {
-      Lake.optimizeZOrder(spark, lake, Seq("open", "volume"), part,
-        filesPerPartition = 8); 1L
-    }
-    val candAfter = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$lake/year=2025/month=6", Seq("open", "volume")), box)
-    println(s"[scale] lake10-zorder-box     candidates $candBefore -> $candAfter " +
-      s"of ${leafFiles(s"$lake/year=2025/month=6")} files after OPTIMIZE")
-    timeL("box-read-zordered") {
-      spark.read.parquet(s"$lake/year=2025/month=6")
-        .filter(col("open").between(100.0, 200.0) &&
-          col("volume").between(20.0, 40.0)).count()
     }
     }
 

@@ -134,6 +134,32 @@ class MaterializedRollupSpec extends SparkSpec {
     assert(e.getMessage.contains("canonical"))
   }
 
+  test("a failed register count releases its persisted registers") {
+    val (base, mv) = roots()
+    def withUid(df: DataFrame) =
+      df.withColumn("uid", (col("close") % 13).cast("long"))
+    val dspec = spec.copy(distinctCols = Seq("uid"), hllP = 8)
+    SnapshotLake.append(spark, base, withUid(bars(1, 50, 100.0)),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, dspec)
+    val old = SnapshotLake.manifest(spark, base).files.map(_.rel).toSet
+    SnapshotLake.append(spark, base, withUid(bars(2, 50, 500.0)),
+      statsCols = Seq("bucket_ts"))
+    // corrupt the delta's data files in place: the file list still plans,
+    // every job reading it fails — the register count included
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SnapshotLake.manifest(spark, base).files.filterNot(f => old(f.rel))
+      .foreach { f =>
+        val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/data/${f.rel}"), true)
+        try out.write("not parquet".getBytes) finally out.close()
+      }
+    spark.catalog.clearCache()
+    intercept[Exception](MV.refresh(spark, base, mv, dspec))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed refresh left frames cached")
+  }
+
   test("no-op refresh publishes nothing; zero-row append bumps only the " +
       "anchor; init-over-existing refuses without replace") {
     val (base, mv) = roots()

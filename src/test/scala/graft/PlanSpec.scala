@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Physical-plan hygiene: the properties that make these operators survive
   * a 100 TB scale-up are asserted here, not just claimed in Scaladoc —
@@ -13,15 +16,16 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 class PlanSpec extends SparkSpec {
   override def sfDir: String = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def executed(name: String): SparkPlan = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect() // let AQE finalize
-    def unwrap(p: SparkPlan): String = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-      case other => other.toString
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
     }
-    unwrap(df.queryExecution.executedPlan)
   }
+
+  private def plan(name: String): String = executed(name).toString
 
   test("j1 dim join broadcasts the customer side") {
     assert(plan("j1_orders_by_nation").contains("BroadcastHashJoin"))
@@ -63,12 +67,33 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d4 at scale: equi-joins only — no cartesian, no nested-loop fallback") {
-    val p = plan("d4_token_jaccard")
+    val root = executed("d4_token_jaccard")
+    val p = root.toString
     assert(!p.contains("CartesianProduct"))
     assert(!p.contains("BroadcastNestedLoopJoin"))
-    // the class-collapse groupBy and the band equi-join are both present
-    assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate") ||
-      p.contains("SortAggregate"))
+    // children including AQE query stages and reused exchanges
+    def kids(n: SparkPlan): Seq[SparkPlan] = n match {
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    // for each band equi-join (keyed on the LSH band key), the operators
+    // between it and the root: the post-join candidate stream
+    def bandJoinPaths(n: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] = {
+      val here = n match {
+        case j: BaseJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "bkey")) =>
+          Seq(above)
+        case _ => Nil
+      }
+      here ++ kids(n).flatMap(bandJoinPaths(_, n :: above))
+    }
+    val paths = bandJoinPaths(root, Nil)
+    assert(paths.nonEmpty, s"no band equi-join on bkey in:\n$p")
+    // multi-band collisions dedupe map-side: no aggregate (a `.distinct()`
+    // plans as one over its hash exchange) consumes the candidate stream
+    paths.foreach(above => assert(!above.exists(_.isInstanceOf[BaseAggregateExec]),
+      s"aggregate on the post-join candidate stream:\n$p"))
   }
 
   test("d5 block-size guard rides the join partitioning, output still top-n") {

@@ -105,7 +105,7 @@ class SnapshotLakeSpec extends SparkSpec {
       targetBytes = Long.MaxValue) // everything into one file
     assert(v == 5 && before == filesBefore && after == 1)
     // the pre-compact plan executes AFTER the compact without error or
-    // row loss — the contract Lake.retryingOnSwap can only approximate
+    // row loss — no FileNotFound, no re-plan
     assert(pinned.count() == 32)
     assert(SnapshotLake.read(spark, root).count() == 32)
     assert(SnapshotLake.manifest(spark, root).files.size == 1)
@@ -223,6 +223,40 @@ class SnapshotLakeSpec extends SparkSpec {
     assert(pinned.filter(col("id") === 1001).select("payload").head
       .getDouble(0) == 1001.0)
     assert(v == 4)
+  }
+
+  test("merge: equal-version batch duplicates pick one winner on every lake") {
+    // two batch rows share (symbol, ts) AND v — the winner must be the
+    // same row every time (whole-row hash tie-break), not whichever task
+    // finished first
+    val dup = Seq(
+      ("sym1", ts("2024-05-01 00:00:00"), 111.0, 5L),
+      ("sym1", ts("2024-05-01 00:00:00"), 999.0, 5L)
+    ).toDF("symbol", "ts", "close", "v")
+    val picks = (1 to 3).map { _ =>
+      val root = freshRoot()
+      SnapshotLake.append(spark, root, bars(1, 4, 0.0).withColumn("v", lit(1L)))
+      SnapshotLake.merge(spark, root, dup, keyCols = Seq("symbol", "ts"),
+        versionCol = "v", pruneKey = "ts")
+      SnapshotLake.read(spark, root).filter(month(col("ts")) === 5)
+        .select("close").collect().map(_.getDouble(0)).toSeq
+    }
+    assert(picks.forall(_.length == 1))
+    assert(picks.distinct.size == 1, s"nondeterministic winners: $picks")
+  }
+
+  test("merge: an empty update batch publishes no version, rows unchanged") {
+    val root = freshRoot()
+    val base = bars(1, 6, 0.0).withColumn("v", lit(1L))
+    SnapshotLake.append(spark, root, base)
+    val before = SnapshotLake.read(spark, root).collect().map(_.toString).sorted
+    val (v, rewritten, _) = SnapshotLake.merge(spark, root,
+      base.filter(col("v") < 0), keyCols = Seq("symbol", "ts"),
+      versionCol = "v", pruneKey = "ts")
+    assert(v == 1 && rewritten == 0)
+    assert(SnapshotLake.versions(spark, root) == Seq(1L))
+    val after = SnapshotLake.read(spark, root).collect().map(_.toString).sorted
+    assert(after.sameElements(before))
   }
 
   test("conflicting rewrite detected: a merge landing between compact's " +
@@ -439,6 +473,36 @@ class SnapshotLakeSpec extends SparkSpec {
     val after = SnapshotLake.manifest(spark, root).files
     assert(after.forall(_.stats.contains("close")))
     assert(SnapshotLake.readBox(spark, root, box).count() == 10)
+  }
+
+  test("readBox opens at most the candidate files; impossible box is empty") {
+    val root = freshRoot()
+    // three appends of two files each with disjoint close ranges
+    Seq(0.0, 100.0, 1000.0).zipWithIndex.foreach { case (tag, i) =>
+      SnapshotLake.append(spark, root, bars(i + 1, 20, tag).repartition(2),
+        statsCols = Seq("close"))
+    }
+    val box = Map("close" -> (100.0, 200.0))
+    val nCand = SnapshotLake.candidateEntries(spark, root, box).size
+    assert(nCand > 0 && nCand < SnapshotLake.manifest(spark, root).files.size)
+    val pruned = SnapshotLake.readBox(spark, root, box)
+    val expect = SnapshotLake.read(spark, root)
+      .filter(col("close") >= 100.0 && col("close") <= 200.0)
+    // identical rows...
+    assert(pruned.count() == 20 && expect.count() == 20)
+    assert(pruned.exceptAll(expect).isEmpty && expect.exceptAll(pruned).isEmpty)
+    // ...with I/O bounded by the candidate list, not the file set
+    pruned.collect()
+    val opened = pruned.queryExecution.executedPlan.collectLeaves().collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metrics("numFiles").value
+    }.sum
+    assert(opened > 0 && opened <= nCand,
+      s"pruned read opened $opened files, $nCand candidates")
+    // an impossible box: no files opened, empty result, schema intact
+    val none = SnapshotLake.readBox(spark, root, Map("close" -> (-2e18, -1e18)))
+    assert(none.count() == 0)
+    assert(none.schema == SnapshotLake.manifest(spark, root).schema)
   }
 
   test("optimizeZOrder: one commit swaps in the clustered layout with " +
@@ -861,6 +925,18 @@ class SnapshotLakeSpec extends SparkSpec {
       SnapshotLake.append(spark, root, scattered(10), bloomCols = Seq("v"))
     }
     assert(e2.getMessage.contains("min/max envelopes"))
+  }
+
+  test("bloom append and readPoint under a relative lake root") {
+    val rel = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(freshRoot())).toString
+    assert(!new Path(rel).isAbsolute)
+    SnapshotLake.append(spark, rel, scattered(300).repartition(2),
+      statsCols = Seq("id"), bloomCols = Seq("id"))
+    assert(SnapshotLake.manifest(spark, rel).files.forall(_.bloomCols == Seq("id")))
+    assert(SnapshotLake.read(spark, rel).count() == 300)
+    assert(SnapshotLake.readPoint(spark, rel, Map("id" -> 150L)).collect()
+      .map(_.getString(1)).toSeq == Seq("user-150"))
   }
 
   test("metadata-only schema commits racing rewrites are never clobbered: " +

@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.Lake
 
-/** Z-order clustering: layout fidelity + measured multi-dimensional file
-  * skipping vs the time-ordered layout (the realistic ingest baseline).
+/** Z-order layout: the shaped frame keeps every row and only the input's
+  * columns, null dimensions survive, rank buckets are monotone. The
+  * layout's file skipping is measured where it is written — through
+  * `SnapshotLake.optimizeZOrder` in SnapshotLakeSpec.
   */
 class ZorderSpec extends SparkSpec {
 
@@ -14,7 +16,8 @@ class ZorderSpec extends SparkSpec {
 
   test("z-ordered write preserves rows exactly") {
     val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    Lake.writeZOrdered(events, s"$dir/z", Seq("user_id", "value"), numFiles = 32)
+    Lake.zOrderShape(events, Seq("user_id", "value"), numFiles = 32)
+      .write.parquet(s"$dir/z")
     val back = spark.read.parquet(s"$dir/z")
     assert(back.count() == events.count())
     // set equality row-for-row (event_id unique → multiset == set)
@@ -23,139 +26,13 @@ class ZorderSpec extends SparkSpec {
     assert(back.columns.sorted.toSeq == events.columns.sorted.toSeq) // no __zv leak
   }
 
-  test("z-order skips files on a 2-D box where the time layout cannot") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    // ingest-order baseline: range-partitioned + sorted by ts, like any
-    // streaming landing zone
-    events.repartitionByRange(32, col("ts")).sortWithinPartitions("ts")
-      .write.parquet(s"$dir/linear")
-    Lake.writeZOrdered(events, s"$dir/z", Seq("user_id", "value"), numFiles = 32)
-
-    val Array(uLo, uHi) = events.stat.approxQuantile("user_id", Array(0.45, 0.55), 0.0)
-    val Array(vLo, vHi) = events.stat.approxQuantile("value", Array(0.45, 0.55), 0.0)
-    val box = Map("user_id" -> (uLo, uHi), "value" -> (vLo, vHi))
-
-    val zc = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$dir/z", Seq("user_id", "value")), box)
-    val lc = Lake.candidateFiles(
-      Lake.fileStats(spark, s"$dir/linear", Seq("user_id", "value")), box)
-    info(s"candidate files for a 10% x 10% box: zorder=$zc linear=$lc (of 32)")
-    // time-ordered files all span the full user/value range -> no skipping
-    assert(lc >= 30, s"expected the time layout to scan ~all files, got $lc")
-    // z-order confines the box to a small corner of the file set
-    assert(zc * 3 <= lc, s"expected >=3x skipping, got z=$zc linear=$lc")
-  }
-
-  test("optimizeZOrder rewrites chosen partitions in place, rows identical") {
-    import graft.sinks.Lake
-    val dir = java.nio.file.Files.createTempDirectory("zopt").toString + "/lake"
-    val bars = events
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      .withColumn("symbol", concat(lit("s"), (col("event_id") % 3).cast("string")))
-    Lake.writeArchive(bars, dir)
-    val before = spark.read.parquet(dir)
-    val rows = before.count()
-    val parts = before.select("year", "month").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).sorted
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (oy, om) = parts.last // leave the last partition alone
-    val untouchedBefore = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/year=$oy/month=$om"))
-      .map(f => f.getPath.getName -> f.getModificationTime).toMap
-
-    Lake.optimizeZOrder(spark, dir, Seq("user_id", "value"),
-      parts.dropRight(1).toSeq, filesPerPartition = 4)
-
-    val after = spark.read.parquet(dir)
-    assert(after.count() == rows)
-    assert(after.select(before.columns.map(col): _*).except(before).isEmpty)
-    assert(before.except(after.select(before.columns.map(col): _*)).isEmpty)
-    // untouched partition: identical files and mtimes; no temp dirs left
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/year=$oy/month=$om"))
-      .map(f => f.getPath.getName -> f.getModificationTime).toMap == untouchedBefore)
-    val leftovers = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/year=$oy"))
-      .map(_.getPath.getName).filter(_.startsWith(".zorder"))
-    assert(leftovers.isEmpty, s"temp dirs left: ${leftovers.mkString(",")}")
-  }
-
-  test("readBox opens only candidate files and returns exactly the box rows") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    Lake.writeZOrdered(events, s"$dir/z", Seq("user_id", "value"), numFiles = 32)
-    val Array(uLo, uHi) = events.stat.approxQuantile("user_id", Array(0.45, 0.55), 0.0)
-    val Array(vLo, vHi) = events.stat.approxQuantile("value", Array(0.45, 0.55), 0.0)
-    val box = Map("user_id" -> (uLo, uHi), "value" -> (vLo, vHi))
-    val stats = Lake.fileStats(spark, s"$dir/z", Seq("user_id", "value"))
-    val nCand = Lake.candidateFiles(stats, box)
-    assert(nCand < 32, s"box unexpectedly touches all files")
-
-    val pruned = Lake.readBox(spark, s"$dir/z", stats, box)
-    val expect = spark.read.parquet(s"$dir/z").filter(
-      col("user_id").cast("double") >= uLo && col("user_id").cast("double") <= uHi &&
-        col("value").cast("double") >= vLo && col("value").cast("double") <= vHi)
-    // identical rows...
-    assert(pruned.count() == expect.count() && expect.count() > 0)
-    assert(pruned.select(expect.columns.map(col): _*).except(expect).isEmpty)
-    assert(expect.except(pruned.select(expect.columns.map(col): _*)).isEmpty)
-    // ...with I/O bounded by the candidate list, not the file set
-    pruned.collect()
-    val opened = pruned.queryExecution.executedPlan.collectLeaves().collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
-    assert(opened <= nCand, s"pruned read opened $opened files > $nCand candidates")
-
-    // an impossible box: no files opened, empty result, schema intact
-    val none = Lake.readBox(spark, s"$dir/z", stats,
-      Map("user_id" -> (-2e18, -1e18)))
-    assert(none.count() == 0)
-    assert(none.columns.sorted.toSeq == expect.columns.sorted.toSeq)
-  }
-
-  test("recoverPartitionSwaps rolls a crashed optimize forward or back") {
-    val dir = java.nio.file.Files.createTempDirectory("zrec").toString + "/lake"
-    val bars = events.withColumn("symbol",
-      concat(lit("s"), (col("event_id") % 3).cast("string")))
-    Lake.writeArchive(bars, dir)
-    val before = spark.read.parquet(dir)
-    val rows = before.count()
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = before.select("year", "month").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).sorted
-    val (y, m) = parts.head
-    val live = new org.apache.hadoop.fs.Path(dir, s"year=$y/month=$m")
-    val old = new org.apache.hadoop.fs.Path(dir, s"year=$y/.zorder_old_month=$m")
-
-    // crash between swap-out and swap-in, rewritten tmp complete:
-    // recovery must install the tmp (roll FORWARD)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"year=$y/.zorder_tmp_month=$m")
-    Lake.writeZOrdered(spark.read.parquet(live.toString), tmp.toString,
-      Seq("user_id", "value"), numFiles = 2)
-    assert(fs.rename(live, old))
-    // the loss window: the partition is invisible to discovery (a
-    // single-partition lake here, so the read cannot even infer a schema)
-    assert(!fs.exists(live))
-    val recovered = Lake.recoverPartitionSwaps(spark, dir)
-    assert(recovered == Seq(s"year=$y/month=$m"))
-    assert(spark.read.parquet(dir).count() == rows)
-    assert(!fs.exists(old) && !fs.exists(tmp))
-
-    // crash with NO tmp (died before/mid-write): roll BACK to the original
-    assert(fs.rename(live, old))
-    Lake.recoverPartitionSwaps(spark, dir)
-    assert(spark.read.parquet(dir).count() == rows)
-    assert(fs.exists(live) && !fs.exists(old))
-    // idempotent on a clean lake
-    assert(Lake.recoverPartitionSwaps(spark, dir).isEmpty)
-  }
-
   test("z-order tolerates null dimension values (nulls cluster, rows survive)") {
     val dir = java.nio.file.Files.createTempDirectory("zorder").toString
     val withNulls = events.withColumn("value",
       when(col("event_id") % 7 === 0, lit(null).cast("double"))
         .otherwise(col("value")))
-    Lake.writeZOrdered(withNulls, s"$dir/z", Seq("user_id", "value"), numFiles = 8)
+    Lake.zOrderShape(withNulls, Seq("user_id", "value"), numFiles = 8)
+      .write.parquet(s"$dir/z")
     val back = spark.read.parquet(s"$dir/z")
     assert(back.count() == withNulls.count())
     assert(back.filter(col("value").isNull).count() ==
