@@ -205,11 +205,11 @@ object MaterializedRollup {
     * `pruneKey` envelope overlaps the delta's [lo, hi] (sound — a
     * register row's group key is the delta row's group key, so a
     * non-overlapping file cannot hold any folded-into group), max-merge
-    * against the delta registers, publish behind the read-set-intact
-    * guard so racing refreshers never resurrect superseded register
-    * files (duplicate (group, slot) rows would double-count in the
-    * harmonic sum). Idempotent: re-folding the same rows is a no-op
-    * state change.
+    * against the delta registers, publish through the rewrite-commit
+    * core ([[SnapshotLake.commitRewrite]]), whose read-set guard keeps
+    * racing refreshers from resurrecting superseded register files
+    * (duplicate (group, slot) rows would double-count in the harmonic
+    * sum). Idempotent: re-folding the same rows is a no-op state change.
     */
   /** Phase 1 of the fold, independent of the delta's key range: check
     * the register lake exists (loud legacy-layout message) and
@@ -246,42 +246,34 @@ object MaterializedRollup {
       hi: Double): Unit = {
     if (nDelta == 0) return // all distinct values null in this delta
     val root = hllRegsRoot(mvRoot)
-    locally {
-      SnapshotLake.retryOnConflict(spark, root, "hll-fold") { () =>
-        val m = SnapshotLake.manifest(spark, root, None)
-        val (overlap, untouched) = m.files.partition(f =>
-          f.stats.get(spec.pruneKey).forall { case (fLo, fHi) =>
-            fHi >= lo && fLo <= hi })
-        val existing =
-          if (overlap.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-          else {
-            val dd = new org.apache.hadoop.fs.Path(root, "data").toString
-            spark.read.option("basePath", dd).schema(m.schema)
-              .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
-          }
-        // persist: cluster()'s repartitionByRange SAMPLES its input, so an
-        // uncached fold would re-read the overlap register files and
-        // re-run the max-merge a second time for the write (measured
-        // +~16 s at sf10 before this cache)
-        val folded = graft.operators.Hll.mergeRegisters(existing, delta,
-          "__col" +: spec.keyCols).persist()
-        val boundRows = overlap.map(f => math.max(0L, f.rows)).sum + nDelta
-        val newFiles =
-          try SnapshotLake.stageFiles(spark, root,
-            cluster(folded, spec, boundRows, spec.regRowsPerFile),
-            Nil, Set(spec.pruneKey))
-          finally folded.unpersist()
-        val overlapSet = SnapshotLake.readSetOf(overlap)
-        SnapshotLake.commit(spark, root, "merge:hll-fold", m.schema,
-          build = head => newFiles ++
-            SnapshotLake.requireReadSetIntact(overlapSet, head, newFiles,
-              "hll-fold", root)
-              .filterNot(f => overlapSet.contains(f.rel)),
-          lockExpiryMs = 10L * 60 * 1000)
-        untouched.size // for the compiler; callers don't consume it
-      }
+    SnapshotLake.retryOnConflict(spark, root, "hll-fold") { () =>
+      val m = SnapshotLake.manifest(spark, root, None)
+      val overlap = m.files.filter(f =>
+        f.stats.get(spec.pruneKey).forall { case (fLo, fHi) =>
+          fHi >= lo && fLo <= hi })
+      val existing =
+        if (overlap.isEmpty)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+        else {
+          val dd = new org.apache.hadoop.fs.Path(root, "data").toString
+          spark.read.option("basePath", dd).schema(m.schema)
+            .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
+        }
+      // persist: cluster()'s repartitionByRange SAMPLES its input, so an
+      // uncached fold would re-read the overlap register files and
+      // re-run the max-merge a second time for the write (measured
+      // +~16 s at sf10 before this cache)
+      val folded = graft.operators.Hll.mergeRegisters(existing, delta,
+        "__col" +: spec.keyCols).persist()
+      val boundRows = overlap.map(f => math.max(0L, f.rows)).sum + nDelta
+      val newFiles =
+        try SnapshotLake.stageFiles(spark, root,
+          cluster(folded, spec, boundRows, spec.regRowsPerFile),
+          Nil, Set(spec.pruneKey))
+        finally folded.unpersist()
+      SnapshotLake.commitRewrite(spark, root, "merge:hll-fold", m,
+        replaced = overlap, guarded = Nil, added = newFiles)
     }
   }
 
@@ -355,7 +347,7 @@ object MaterializedRollup {
     */
   def init(spark: SparkSession, baseRoot: String, mvRoot: String, spec: Spec,
       replace: Boolean = false,
-      lockExpiryMs: Long = 10L * 60 * 1000): Refresh = {
+      lockExpiryMs: Long = SnapshotLake.DefaultLockExpiryMs): Refresh = {
     require(replace || SnapshotLake.latestVersion(spark, mvRoot).isEmpty,
       s"$mvRoot already has a materialized rollup — use refresh, or " +
         "init(replace=true) to rebuild")
@@ -405,7 +397,7 @@ object MaterializedRollup {
     * commits (max-merge idempotence makes the early fold harmless).
     */
   def refresh(spark: SparkSession, baseRoot: String, mvRoot: String,
-      spec: Spec, lockExpiryMs: Long = 10L * 60 * 1000): Refresh = {
+      spec: Spec, lockExpiryMs: Long = SnapshotLake.DefaultLockExpiryMs): Refresh = {
     val anchor = lastRefreshedBase(spark, mvRoot).getOrElse(
       throw new IllegalStateException(s"no materialized rollup under $mvRoot — init first"))
     val baseHead = SnapshotLake.latestVersion(spark, baseRoot).getOrElse(

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -39,11 +38,13 @@ import org.apache.spark.util.SerializableConfiguration
   * matched key) costs megabytes instead of the lake. Readers apply the
   * deletes ([[SnapshotLake.readEntries]] / [[SnapshotMorScan]]);
   * `compact`/`zorder`/any rewrite absorbs them (fresh entries start
-  * delete-free) and `vacuum` sweeps unreferenced sidecars. Concurrency
-  * is the library's read-set discipline, EXTENDED to delete sets: a
-  * rival that replaced a candidate file — or stacked new deletes onto
-  * one — aborts the statement loudly (positions against a replaced file
-  * would be meaningless; insert-after-rival-delete would be write skew).
+  * delete-free) and `vacuum` sweeps unreferenced sidecars. The commit
+  * goes through the same rewrite-commit core as every rewrite
+  * ([[SnapshotLake.commitRewrite]]), whose read-set guard covers delete
+  * sets: a rival that replaced a candidate file — or stacked new deletes
+  * onto one — aborts the statement loudly (positions against a replaced
+  * file would be meaningless; insert-after-rival-delete would be write
+  * skew).
   *
   * Opt-in per lake: `dmlMode = 'mor'` in CREATE TABLE TBLPROPERTIES (or
   * `SnapshotLake.create(tableProps)`); the default stays copy-on-write,
@@ -419,11 +420,11 @@ final class SnapshotDeltaRowLevelOperation(
 
 /** The delta BatchWrite: executors write insert files (hive-routed, same
   * convention as every SQL write) and one position-delete sidecar per
-  * task; the driver publishes inserts through [[SnapshotLake.
-  * publishStaged]] (footer stats + bloom sidecars restamped), moves the
-  * sidecars under `_deletes/`, and commits ONE manifest version that
-  * stacks each sidecar onto the entries it covers — every data file
-  * survives by IDENTITY.
+  * task; the driver publishes the inserts (footer stats + bloom sidecars
+  * restamped), moves the sidecars under `_deletes/`, and commits ONE
+  * rewrite that guards the statement's candidates and stacks each
+  * sidecar onto the entries it covers — every data file survives by
+  * IDENTITY.
   */
 final class SnapshotDeltaWrite(
     spark: SparkSession,
@@ -431,7 +432,8 @@ final class SnapshotDeltaWrite(
     base: SnapshotLake.Manifest,
     op: SnapshotDeltaRowLevelOperation,
     writeSchema: StructType,
-    opName: String) extends DeltaWrite with DeltaBatchWrite {
+    opName: String)
+    extends SnapshotStagedWrite(spark, root) with DeltaWrite with DeltaBatchWrite {
 
   // the framework must hand insert rows in exactly the table's schema;
   // a delete-only statement (SQL DELETE) carries NO row projection and
@@ -442,123 +444,40 @@ final class SnapshotDeltaWrite(
     s"delta write schema ${writeSchema.simpleString} != lake schema " +
       s"${base.schema.simpleString}")
 
-  private val token = java.util.UUID.randomUUID.toString.replace("-", "").take(16)
-  private val stageDir = new Path(root, s".stage-$token")
-
   override def toBatch: DeltaBatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    SnapshotLake.requireFieldIdWrites(spark, base.schema)
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(stageDir)
+    openStage(base.schema)
     fs.mkdirs(new Path(stageDir, "deletes"))
     // delete-only statements pass an empty write schema; the (unused)
     // insert factory still needs a real one
     val rowSchema = if (writeSchema.fields.isEmpty) base.schema else writeSchema
-    val dataSchema = StructType(
-      rowSchema.fields.filterNot(f => op.partCols.contains(f.name)))
-    // prepareWrite threads the write schema through the job conf, so the
-    // data and delete factories each need their own Job
-    val dataJob = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val dataFactory = new ParquetFileFormat().prepareWrite(spark, dataJob,
-      Map("compression" -> "zstd"), dataSchema)
-    val delJob = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val delFactory = new ParquetFileFormat().prepareWrite(spark, delJob,
-      Map("compression" -> "zstd"), SnapshotMor.DeleteSchema)
-    new SnapshotDeltaWriterFactory(dataFactory,
-      new SerializableConfiguration(dataJob.getConfiguration),
-      delFactory, new SerializableConfiguration(delJob.getConfiguration),
+    val (dataFactory, dataConf) = parquetFactory(StructType(
+      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))))
+    val (delFactory, delConf) = parquetFactory(SnapshotMor.DeleteSchema)
+    new SnapshotDeltaWriterFactory(dataFactory, dataConf, delFactory, delConf,
       stageDir.toString, rowSchema, op.partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
       SnapshotLake.boundConstraints(spark, rowSchema, base.props))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      def tokened(rel: String): String = {
-        val i = rel.lastIndexOf('/')
-        if (i < 0) s"$token-$rel" else rel.take(i + 1) + s"$token-" + rel.drop(i + 1)
-      }
-      val msgs = messages.collect { case m: DeltaFilesMessage => m }
-      val inserts = msgs.flatMap(_.inserts).filter(_.rows > 0).toSeq
-      val deleteInfos = msgs.flatMap(_.delete).filter(_.positions > 0).toSeq
-      if (inserts.isEmpty && deleteInfos.isEmpty) return // no-match no-op
-      def declared(k: String): Seq[String] = base.props.get(k).toSeq
-        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-      val statsCols = (base.files.flatMap(_.stats.keys).toSet ++
-        declared("statsCols")) -- op.partCols
-      val bloomCols = (base.files.flatMap(_.bloomCols) ++
-        declared("bloomCols")).distinct.filterNot(op.partCols.contains)
-      val newFiles = SnapshotLake.publishStaged(spark, root,
-        inserts.map(f => (new Path(stageDir, f.rel), tokened(f.rel), f.bytes)),
-        statsCols, bloomCols)
-      // move the sidecars under _deletes/ (invisible until the commit)
-      val moved: Seq[(String, Seq[String])] = deleteInfos.map { d =>
-        val finalRel = s"$token-${new Path(d.rel).getName}"
-        val target = new Path(SnapshotLake.deletesDir(root), finalRel)
-        fs.mkdirs(target.getParent)
-        require(fs.rename(new Path(stageDir, d.rel), target),
-          s"delete sidecar move failed: $target")
-        (finalRel, d.covered)
-      }
-      val coverMap: Map[String, Seq[String]] = moved
-        .flatMap { case (rel, covered) => covered.map(_ -> rel) }
-        .groupBy(_._1).map { case (dataRel, ps) => dataRel -> ps.map(_._2) }
-      val readSet = SnapshotLake.readSetOf(op.candidates)
-      SnapshotDeltaWrite.beforeCommit()
-      def cleanup(): Unit = {
-        newFiles.foreach { f =>
-          fs.delete(new Path(root, s"data/${f.rel}"), false)
-          f.bloomCols.foreach(c =>
-            fs.delete(SnapshotLake.bloomPath(root, f.rel, c), false))
-        }
-        moved.foreach { case (rel, _) =>
-          fs.delete(new Path(SnapshotLake.deletesDir(root), rel), false)
-        }
-      }
-      try {
-        SnapshotLake.commit(spark, root, s"$opName:sql-mor", base.schema,
-          build = head => {
-            SnapshotLake.requireSchemaIntact(base.schema, head, newFiles,
-              s"$opName:sql-mor", root)
-            val headFiles = SnapshotLake.requireReadSetIntact(readSet, head,
-              newFiles, s"$opName:sql-mor", root)
-            // defense: every covered file must be a statement candidate
-            val stray = coverMap.keySet.diff(readSet.keySet)
-            require(stray.isEmpty,
-              s"delete sidecars cover non-candidate file(s): $stray")
-            headFiles.map { f =>
-              coverMap.get(f.rel).fold(f)(ds =>
-                f.copy(deletes = (f.deletes ++ ds).sorted))
-            } ++ newFiles
-          },
-          lockExpiryMs = 10L * 60 * 1000)
-      } catch {
-        case e: SnapshotLake.ConflictingRewriteException =>
-          cleanup()
-          throw new IllegalStateException(
-            s"SQL $opName (merge-on-read) lost to a concurrent rewrite or " +
-              s"delta DML of the same lake — re-run the statement against " +
-              s"the new head (${e.getMessage})")
-      }
-    } finally fs.delete(stageDir, true)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
+    val inserts = stagedFiles(messages)
+    val deleteInfos = messages.toSeq.collect { case m: DeltaFilesMessage => m }
+      .flatMap(_.delete).filter(_.positions > 0)
+    // a no-match statement publishes nothing
+    if (inserts.nonEmpty || deleteInfos.nonEmpty) {
+      val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
+      val newFiles = publish(inserts, statsCols, bloomCols)
+      val deletes = SnapshotLake.moveDeleteSidecars(spark, root, token,
+        deleteInfos.map(d => (new Path(stageDir, d.rel), d.covered)))
+      SnapshotLake.commitRewrite(spark, root, s"$opName:sql-mor", base,
+        replaced = Nil, guarded = op.candidates, added = newFiles,
+        deletes = deletes,
+        statement = Some(s"SQL $opName (merge-on-read) lost to a " +
+          "concurrent rewrite or delta DML of the same lake"))
+    }
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(stageDir, true)
-  }
-}
-
-object SnapshotDeltaWrite {
-  /** Test seam: runs after the statement's files are staged and its
-    * delete sidecars moved, immediately before the manifest commit —
-    * the deterministic replay point for the extended read-set guard (a
-    * spec injects a rival rewrite or delta DML here; production value
-    * is a no-op).
-    */
-  @volatile private[graft] var beforeCommit: () => Unit = () => ()
 }
 
 final class SnapshotDeltaWriterFactory(

@@ -75,6 +75,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * lease caveat every lock-service design documents) — the expiry is
   * 10 min against a millisecond critical section.
   *
+  * Every rewrite of existing files — library compact / zorder / merge /
+  * delete / replaceWhere, the MV register fold, SQL copy-on-write and
+  * merge-on-read DML, dynamic INSERT OVERWRITE — publishes through ONE
+  * rewrite-commit core ([[commitRewrite]] / [[publishRewrite]]): the
+  * schema and read-set guards under the lock, unread files carried by
+  * identity with new delete sidecars stacked on, and a lost race's files
+  * reclaimed through [[reclaim]]. Library ops then retry
+  * ([[retryOnConflict]]); SQL statements abort loudly.
+  *
   * At 100 TB the wins over directory-listing reads compound: planning
   * reads ONE small manifest instead of listing O(100k) objects (on S3 a
   * LIST-consistency + throttling hazard), the stored schema skips footer
@@ -141,7 +150,7 @@ object SnapshotLake {
   def bloomPath(root: String, rel: String, c: String): Path =
     new Path(bloomsDir(root), s"$rel.$c.bloom")
 
-  private def newToken(): String =
+  private[sinks] def newToken(): String =
     java.util.UUID.randomUUID.toString.replace("-", "").take(16)
 
   // ---------------------------------------------------------------- encode
@@ -326,7 +335,7 @@ object SnapshotLake {
       schema: StructType, build: Option[Manifest] => Seq[FileEntry],
       lockExpiryMs: Long,
       props: Option[Map[String, String]] = None,
-      schemaOf: Option[Option[Manifest] => StructType] = None): Long = prof("commit") {
+      schemaOf: Option[Option[Manifest] => StructType] = None): Long = {
     val fs = fsOf(spark, root)
     fs.mkdirs(manifestDir(root))
     val deadline = System.nanoTime + java.util.concurrent.TimeUnit.MILLISECONDS
@@ -415,7 +424,7 @@ object SnapshotLake {
     done
   }
 
-  private val DefaultLockExpiryMs = 10L * 60 * 1000
+  private[sinks] val DefaultLockExpiryMs = 10L * 60 * 1000
 
   /** Observability seam: cumulative 25 ms waits spent behind a LIVE
     * rival's lock (not expiry breaks). The lockbench tool reads the
@@ -423,14 +432,15 @@ object SnapshotLake {
     */
   private[graft] val lockWaits = new java.util.concurrent.atomic.AtomicLong
 
-  /** Thrown from a rewrite's build callback (under the commit lock) when a
-    * file the op read-and-rewrote is no longer in the head manifest: a
-    * rival merge/delete/compact replaced it mid-flight, so publishing
-    * would resurrect its old rows alongside the rival's replacement.
-    * Carries the staged files so the retry loop can drop them.
+  /** Thrown under the commit lock when a rewrite's base no longer holds
+    * in the frozen head: a rival merge/delete/compact replaced a file it
+    * read (publishing would resurrect the old rows alongside the rival's
+    * replacement), or a metadata commit changed the schema. `staged` is
+    * what the attempt published that [[retryOnConflict]] must reclaim
+    * (empty when [[publishRewrite]] already reclaimed it).
     */
-  private[sinks] final class ConflictingRewriteException(
-      val staged: Seq[FileEntry], msg: String) extends RuntimeException(msg)
+  private[sinks] final class ConflictingRewriteException(msg: String,
+      val staged: Seq[FileEntry] = Nil) extends RuntimeException(msg)
 
   /** The read-set fingerprint of the entries a rewrite op read: rel →
     * position-delete list AT READ TIME. Both components matter — a
@@ -441,26 +451,24 @@ object SnapshotLake {
   private[sinks] def readSetOf(entries: Seq[FileEntry]): Map[String, Seq[String]] =
     entries.map(e => e.rel -> e.deletes.sorted).toMap
 
-  /** Build-callback guard for every rewrite op: the files this op read
-    * (and is about to supersede) must ALL still be present in the frozen
-    * head WITH THE SAME position-delete sets — concurrent appends ride
-    * through, but a concurrent rewrite of any read file (or a delta DML
-    * stacking new deletes onto one) aborts the commit. The lock-merge
-    * alone only protects against appends; without this check a compact
-    * racing a merge would publish the merged-away rows back into the
-    * lake (silent duplication), and a compact racing a delta DELETE
-    * would resurrect the deleted rows. Returns the head file list for
-    * the caller's merge arithmetic.
+  /** Read-set guard of [[commitRewrite]]: the files the rewrite read
+    * must ALL still be present in the frozen head WITH THE SAME
+    * position-delete sets — concurrent appends ride through, but a
+    * concurrent rewrite of any read file (or a delta DML stacking new
+    * deletes onto one) aborts the commit. The lock-merge alone only
+    * protects against appends; without this check a compact racing a
+    * merge would publish the merged-away rows back into the lake (silent
+    * duplication), and a compact racing a delta DELETE would resurrect
+    * the deleted rows. Returns the head file list.
     */
   private[sinks] def requireReadSetIntact(readSet: Map[String, Seq[String]],
-      head: Option[Manifest], staged: Seq[FileEntry], op: String,
-      root: String): Seq[FileEntry] = {
+      head: Option[Manifest], op: String, root: String): Seq[FileEntry] = {
     val files = head.map(_.files).getOrElse(Nil)
     val headByRel = files.map(f => f.rel -> f.deletes.sorted).toMap
     val gone = readSet.collect {
       case (rel, dels) if !headByRel.get(rel).contains(dels) => rel
     }
-    if (gone.nonEmpty) throw new ConflictingRewriteException(staged,
+    if (gone.nonEmpty) throw new ConflictingRewriteException(
       s"$op under $root: ${gone.size} of ${readSet.size} base file(s) " +
         s"were rewritten (or delta-deleted from) concurrently (e.g. " +
         s"${gone.head}); aborting this commit and recomputing from the " +
@@ -468,53 +476,168 @@ object SnapshotLake {
     files
   }
 
-  /** Companion guard for every rewrite that publishes ITS base's schema:
+  /** Companion guard for every commit that publishes ITS base's schema:
     * a METADATA-ONLY schema commit (evolve / rename / widen / drop)
-    * landing between the rewrite's base read and its commit would be
-    * silently CLOBBERED — the rewrite would republish the stale schema
-    * (and, for rename/drop, stale column-keyed entries). The file-level
-    * read-set check cannot see it (metadata commits keep the file list),
-    * so schema identity is checked EXACTLY (names, types, and field-id
+    * landing between the base read and the commit would be silently
+    * CLOBBERED — the commit would republish the stale schema (and, for
+    * rename/drop, stale column-keyed entries). The file-level read-set
+    * check cannot see it (metadata commits keep the file list), so
+    * schema identity is checked EXACTLY (names, types, and field-id
     * metadata — a rename keeps types but rebinds names). On drift the
-    * commit aborts and [[retryOnConflict]] re-runs from the new head,
-    * which picks the evolved schema up.
+    * commit aborts and [[retryOnConflict]] reclaims `staged` and re-runs
+    * from the new head, which picks the evolved schema up.
     */
   private[sinks] def requireSchemaIntact(baseSchema: StructType,
-      head: Option[Manifest], staged: Seq[FileEntry], op: String,
-      root: String): Unit = {
+      head: Option[Manifest], op: String, root: String,
+      staged: Seq[FileEntry] = Nil): Unit = {
     val headSchema = head.map(_.schema).getOrElse(baseSchema)
     if (headSchema != baseSchema) throw new ConflictingRewriteException(
-      staged,
       s"$op under $root: the lake schema changed concurrently " +
         s"(${baseSchema.simpleString} -> ${headSchema.simpleString}); " +
-        "aborting this commit and recomputing from the new head")
+        "aborting this commit and recomputing from the new head", staged)
   }
 
   /** Run a whole rewrite attempt (read head → stage → commit); on a
-    * detected conflicting rewrite, delete the attempt's orphaned staged
-    * files (+ bloom sidecars) and re-run from the new head. Bounded so a
-    * pathological rewrite storm fails loudly instead of spinning.
+    * detected conflicting rewrite, reclaim what the attempt left staged
+    * and re-run from the new head. Bounded so a pathological rewrite
+    * storm fails loudly instead of spinning.
     */
   private[sinks] def retryOnConflict[A](spark: SparkSession, root: String,
       op: String, maxAttempts: Int = 5)(body: () => A): A = {
-    val fs = fsOf(spark, root)
-    val dd = dataDir(root)
     var attempt = 0
     while (true) {
       attempt += 1
       try return body()
       catch {
         case e: ConflictingRewriteException =>
-          e.staged.foreach { f =>
-            fs.delete(new Path(dd, f.rel), false)
-            f.bloomCols.foreach(c => fs.delete(bloomPath(root, f.rel, c), false))
-          }
+          reclaim(spark, root, e.staged)
           require(attempt < maxAttempts,
             s"$op under $root lost to concurrent rewrites $maxAttempts " +
               s"times; last conflict: ${e.getMessage}")
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Delete what a lost commit attempt published: its data files, their
+    * bloom sidecars, and its position-delete sidecars (`_deletes/`-
+    * relative). No manifest references any of them, so no reader sees
+    * them go.
+    */
+  private[sinks] def reclaim(spark: SparkSession, root: String,
+      files: Seq[FileEntry], sidecars: Seq[String] = Nil): Unit = {
+    val fs = fsOf(spark, root)
+    files.foreach { f =>
+      fs.delete(new Path(dataDir(root), f.rel), false)
+      f.bloomCols.foreach(c => fs.delete(bloomPath(root, f.rel, c), false))
+    }
+    sidecars.foreach(rel => fs.delete(new Path(deletesDir(root), rel), false))
+  }
+
+  /** Test seam: runs just before the NEXT rewrite's lock commit (every
+    * [[publishRewrite]] caller: library rewrites, SQL DML and dynamic
+    * overwrite, the MV register fold) — the deterministic replay point
+    * for the rewrite guards. One-shot: it is cleared before it runs, so
+    * a rival rewrite it fires does not fire it again. Production value
+    * is a no-op.
+    */
+  private[graft] val beforeRewriteCommit =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
+
+  /** The index columns a rewrite of `base` restamps on the files it
+    * writes: the stats and bloom columns its files track plus the lake's
+    * declared `statsCols`/`bloomCols` props, minus `partCols` (partition
+    * values live in directory names, not in the files). Callers add
+    * their op's own extra stats columns.
+    */
+  private[sinks] def indexCols(base: Manifest,
+      partCols: Seq[String]): (Set[String], Seq[String]) = {
+    def declared(k: String): Seq[String] = base.props.get(k).toSeq
+      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    ((base.files.flatMap(_.stats.keys).toSet ++ declared("statsCols")) --
+      partCols,
+      (base.files.flatMap(_.bloomCols) ++ declared("bloomCols")).distinct
+        .filterNot(partCols.contains))
+  }
+
+  /** Move staged position-delete sidecars under `_deletes/` with the
+    * attempt's `token` prefix (invisible until a manifest references
+    * them). `staged` pairs each sidecar with the data rels it covers;
+    * returns the data rel → new sidecar rels map [[commitRewrite]]
+    * stacks.
+    */
+  private[sinks] def moveDeleteSidecars(spark: SparkSession, root: String,
+      token: String, staged: Seq[(Path, Seq[String])]): Map[String, Seq[String]] = {
+    val fs = fsOf(spark, root)
+    staged.flatMap { case (p, covered) =>
+      val rel = s"$token-${p.getName}"
+      val target = new Path(deletesDir(root), rel)
+      fs.mkdirs(target.getParent)
+      require(fs.rename(p, target), s"delete sidecar move failed: $target")
+      covered.map(_ -> rel)
+    }.groupBy(_._1).map { case (dataRel, ps) => dataRel -> ps.map(_._2) }
+  }
+
+  /** The rewrite-commit core every rewrite of existing files publishes
+    * through (library compact / zorder / merge / delete / replaceWhere,
+    * the MV register fold, SQL copy-on-write and merge-on-read DML). In
+    * ONE lock commit it checks the schema and read-set guards over
+    * `replaced ++ guarded` (the files this attempt read), checks that the
+    * delete sidecars cover only `guarded` files, drops `replaced`, carries
+    * every other head file by identity — rivals' appends included — with
+    * `deletes` (data rel → new sidecar rels) stacked onto the files they
+    * cover, and adds `added`. Returns the version won.
+    */
+  private[sinks] def commitRewrite(spark: SparkSession, root: String,
+      op: String, base: Manifest, replaced: Seq[FileEntry],
+      guarded: Seq[FileEntry], added: Seq[FileEntry],
+      deletes: Map[String, Seq[String]] = Map.empty,
+      lockExpiryMs: Long = DefaultLockExpiryMs,
+      props: Option[Map[String, String]] = None,
+      statement: Option[String] = None): Long = {
+    val readSet = readSetOf(replaced ++ guarded)
+    val gone = replaced.map(_.rel).toSet
+    val covered = guarded.map(_.rel).toSet
+    publishRewrite(spark, root, op, base.schema, added,
+      deletes.values.flatten.toSeq.distinct, lockExpiryMs, props,
+      statement) { head =>
+      val stray = deletes.keySet.diff(covered)
+      require(stray.isEmpty,
+        s"delete sidecars cover non-candidate file(s): $stray")
+      requireReadSetIntact(readSet, head, op, root).collect {
+        case f if !gone(f.rel) => deletes.get(f.rel).fold(f)(ds =>
+          f.copy(deletes = (f.deletes ++ ds).sorted))
+      }
+    }
+  }
+
+  /** The publish half of [[commitRewrite]], for a caller with its own
+    * carry rule (dynamic overwrite's drop-set guard): one lock commit of
+    * `added ++ carry(head)` behind the schema guard. A lost race
+    * ([[ConflictingRewriteException]] from either guard) reclaims
+    * `added` and `sidecars`, then rethrows for [[retryOnConflict]] — or,
+    * for a SQL statement (whose committer cannot re-run the query),
+    * aborts loudly with `statement` describing what it lost to.
+    */
+  private[sinks] def publishRewrite(spark: SparkSession, root: String,
+      op: String, schema: StructType, added: Seq[FileEntry],
+      sidecars: Seq[String] = Nil,
+      lockExpiryMs: Long = DefaultLockExpiryMs,
+      props: Option[Map[String, String]] = None,
+      statement: Option[String] = None)(
+      carry: Option[Manifest] => Seq[FileEntry]): Long = {
+    beforeRewriteCommit.getAndSet(() => ())()
+    try commit(spark, root, op, schema, build = head => {
+        requireSchemaIntact(schema, head, op, root)
+        added ++ carry(head)
+      }, lockExpiryMs, props = props)
+    catch {
+      case e: ConflictingRewriteException =>
+        reclaim(spark, root, added, sidecars)
+        throw statement.fold[Throwable](e)(what => new IllegalStateException(
+          s"$what — re-run the statement against the new head " +
+            s"(${e.getMessage})"))
+    }
   }
 
   private def schemasCompatible(a: StructType, b: StructType): Boolean =
@@ -919,19 +1042,6 @@ object SnapshotLake {
     * violation deletes the invisible stage and refuses before anything
     * could commit.
     */
-  /** Env-gated phase timing (`SPARK_GRAFT_LAKE_PROF=1`) for the commit
-    * constant's composition — stage write vs footer probe vs publish vs
-    * manifest commit. Pure observability; a no-op in normal runs.
-    */
-  private val lakeProf = sys.env.get("SPARK_GRAFT_LAKE_PROF").contains("1")
-  private def prof[A](name: String)(f: => A): A =
-    if (!lakeProf) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[lakeprof] $name%-16s ${(System.nanoTime() - t0) / 1e9}%6.3f s")
-      r
-    }
-
   private[sinks] def stageFiles(spark: SparkSession, root: String, df: DataFrame,
       partitionCols: Seq[String], statsCols: Set[String],
       bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
@@ -953,9 +1063,8 @@ object SnapshotLake {
         (df.observe(o, metrics.head, metrics.tail: _*), Some(o))
       }
     val w = toWrite.write.mode("overwrite").option("compression", "zstd")
-    prof("stage-write")(
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(stage.toString))
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+      .parquet(stage.toString)
     obs.foreach { o =>
       val bad = o.get.toSeq.collect {
         case (n, v: Long) if v > 0 => s"$n ($v row(s))"
@@ -1001,7 +1110,7 @@ object SnapshotLake {
     // on a bounded pool instead of serially (a refresh that stages N
     // files pays one footer open each; serial probes were the dominant
     // commit constant in the incremental-rollup loop)
-    val probed: Map[String, (Map[String, (Double, Double)], Long)] = prof("footer-probe")(
+    val probed: Map[String, (Map[String, (Double, Double)], Long)] =
       if (parts.size <= 1)
         parts.map { case (p, rel, _) =>
           rel -> footerProbe(spark, p, statsCols) }.toMap
@@ -1031,15 +1140,15 @@ object SnapshotLake {
             }
           }.toMap
         } finally pool.shutdown()
-      })
+      }
     // pass 3: publish moves in walk order
-    val staged = prof("publish-moves")(parts.map { case (p, relOut, len) =>
+    val staged = parts.map { case (p, relOut, len) =>
       val target = new Path(dataDir(root), relOut)
       fs.mkdirs(target.getParent)
       val (stats, nRows) = probed(relOut)
       require(fs.rename(p, target), s"stage move failed: $target")
       FileEntry(relOut, len, stats, sortedBlooms, nRows)
-    })
+    }
     // sidecars land BEFORE the manifest commit that makes the files
     // visible; a crash in between leaves unreferenced files + sidecars
     // (invisible garbage, swept by vacuum), never a committed file whose
@@ -1307,7 +1416,7 @@ object SnapshotLake {
       commit(spark, root,
         s"repartition:${newPartitionCols.mkString(",")}", head.schema,
         build = h => {
-          requireSchemaIntact(head.schema, h, Nil, "repartition", root)
+          requireSchemaIntact(head.schema, h, "repartition", root)
           h.map(_.files).getOrElse(Nil)
         },
         lockExpiryMs,
@@ -1355,7 +1464,7 @@ object SnapshotLake {
         // when the schema the migration was computed from is no longer
         // the head's, and recompute from the fresh head on retry.
         build = h => {
-          requireSchemaIntact(head.schema, h, Nil, "upgradefieldids", root)
+          requireSchemaIntact(head.schema, h, "upgradefieldids", root)
           h.map(_.files).getOrElse(Nil).map(_.copy(idless = true))
         },
         lockExpiryMs, props = Some(props))
@@ -1516,9 +1625,9 @@ object SnapshotLake {
           }) h
           // drop/rename/retype raced the append: abort; the retry's
           // fresh compatibility check speaks loudly
-          else throw new ConflictingRewriteException(added,
+          else throw new ConflictingRewriteException(
             s"$op under $root lost to a concurrent schema change " +
-              s"(${schema.simpleString} vs head ${h.simpleString})")
+              s"(${schema.simpleString} vs head ${h.simpleString})", added)
         })
     }
   }
@@ -2048,32 +2157,17 @@ object SnapshotLake {
   def compact(spark: SparkSession, root: String,
       partitionCols: Seq[String] = Nil,
       targetBytes: Long = 128L * 1024 * 1024,
-      lockExpiryMs: Long = DefaultLockExpiryMs): (Long, Int, Int) =
-    compactPinned(spark, root, partitionCols, targetBytes, lockExpiryMs, None)
-
-  /** [[compact]] with the FIRST attempt's base pinned at `pinFirstBase` —
-    * the deterministic replay of the race the conflict check exists for
-    * (a rival rewrite landing between compact's base read and its
-    * commit). Test seam only; retries always re-read the live head.
-    */
-  private[graft] def compactPinned(spark: SparkSession, root: String,
-      partitionCols: Seq[String], targetBytes: Long, lockExpiryMs: Long,
-      pinFirstBase: Option[Long]): (Long, Int, Int) = {
+      lockExpiryMs: Long = DefaultLockExpiryMs): (Long, Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val pin = new java.util.concurrent.atomic.AtomicReference(pinFirstBase)
     retryOnConflict(spark, root, "compact") { () =>
-      val base = manifest(spark, root, pin.getAndSet(None))
+      val base = manifest(spark, root, None)
       val nOut = math.max(1,
         ((base.bytes + targetBytes - 1) / targetBytes).toInt)
       val rewritten = read(spark, root, Some(base.version)).repartition(nOut)
-      // carry the data-skipping index through: recompute whatever stat
-      // columns and bloom sidecars the base manifest tracked
-      val statsCols = base.files.flatMap(_.stats.keys).toSet
-      val bloomCols = base.files.flatMap(_.bloomCols).distinct
+      val (statsCols, bloomCols) = indexCols(base, partitionCols)
       val newFiles = stageFiles(spark, root,
         attachFieldIds(rewritten, base.schema), partitionCols,
         statsCols, bloomCols)
-      val baseSet = readSetOf(base.files)
       // a full rewrite re-lands every current file under CURRENT column
       // names: retired names become re-usable (see RetiredColsProp).
       // The hash repartition also destroys any z-order clustering, so
@@ -2083,19 +2177,9 @@ object SnapshotLake {
             base.props.contains(ZorderColsProp))
           Some(base.props - RetiredColsProp - ZorderColsProp)
         else None
-      val v = commit(spark, root, "compact", base.schema,
-        // lock-merge: files that appeared after our base (concurrent
-        // appends) ride along; only the files we actually rewrote drop
-        // out — and every rewritten file must still be in head (same
-        // delete sets), else a rival rewrite intervened and we abort +
-        // retry.
-        build = head => {
-          requireSchemaIntact(base.schema, head, newFiles, "compact", root)
-          newFiles ++
-          requireReadSetIntact(baseSet, head, newFiles, "compact", root)
-            .filterNot(f => baseSet.contains(f.rel))
-        },
-        lockExpiryMs, props = compactProps)
+      val v = commitRewrite(spark, root, "compact", base,
+        replaced = base.files, guarded = Nil, added = newFiles,
+        lockExpiryMs = lockExpiryMs, props = compactProps)
       (v, base.files.size, newFiles.size)
     }
   }
@@ -2128,7 +2212,7 @@ object SnapshotLake {
       val newFiles = stageFiles(spark, root, attachFieldIds(df, schema),
         partitionCols, statsCols.toSet, bloomCols)
       commit(spark, root, "replace", schema, build = head => {
-        requireSchemaIntact(schema, head, newFiles, "replace", root)
+        requireSchemaIntact(schema, head, "replace", root, newFiles)
         newFiles
       }, lockExpiryMs)
     }
@@ -2211,23 +2295,17 @@ object SnapshotLake {
         ((base.bytes + targetBytes - 1) / targetBytes).toInt)
       val shaped = Lake.zOrderShape(read(spark, root, Some(base.version)),
         zCols, nOut, bits)
-      val statsCols = base.files.flatMap(_.stats.keys).toSet ++ zCols
-      val bloomCols = base.files.flatMap(_.bloomCols).distinct
+      val (statsCols, bloomCols) = indexCols(base, Nil)
       val newFiles = stageFiles(spark, root,
-        attachFieldIds(shaped, base.schema), Nil, statsCols, bloomCols)
-      val baseSet = readSetOf(base.files)
+        attachFieldIds(shaped, base.schema), Nil, statsCols ++ zCols,
+        bloomCols)
       // record the clustering (round 16): advise() reads it to detect
       // appends drifting an ordered lake out of its layout
       val zProps = Some((base.props - RetiredColsProp) +
         (ZorderColsProp -> zCols.mkString(",")))
-      val v = commit(spark, root, "zorder", base.schema,
-        build = head => {
-          requireSchemaIntact(base.schema, head, newFiles, "zorder", root)
-          newFiles ++
-          requireReadSetIntact(baseSet, head, newFiles, "zorder", root)
-            .filterNot(f => baseSet.contains(f.rel))
-        },
-        lockExpiryMs, props = zProps)
+      val v = commitRewrite(spark, root, "zorder", base,
+        replaced = base.files, guarded = Nil, added = newFiles,
+        lockExpiryMs = lockExpiryMs, props = zProps)
       (v, base.files.size, newFiles.size)
     }
   }
@@ -2305,7 +2383,7 @@ object SnapshotLake {
           else {
             commit(spark, root, "evolve", widened,
               build = h => {
-                requireSchemaIntact(head0.schema, h, Nil, op, root)
+                requireSchemaIntact(head0.schema, h, op, root)
                 h.map(_.files).getOrElse(Nil)
               },
               lockExpiryMs, props = o.map(head0.props ++ _))
@@ -2366,9 +2444,8 @@ object SnapshotLake {
     }
   }
 
-  /** One copy-on-write merge attempt (the round-13 body of [[mergeOp]],
-    * unchanged): read the envelope-overlapping files, keep-latest-wins
-    * against the updates, rewrite them wholesale.
+  /** One copy-on-write merge attempt: read the envelope-overlapping
+    * files, keep-latest-wins against the updates, rewrite them wholesale.
     */
   private def mergeCowAttempt(spark: SparkSession, root: String,
       base: Manifest, updates: DataFrame, keyCols: Seq[String],
@@ -2391,20 +2468,12 @@ object SnapshotLake {
           .withColumn("__rn", fns.row_number().over(w))
           .filter(col("__rn") === 1)
           .select(cols.toIndexedSeq: _*)
-        val statsCols = base.files.flatMap(_.stats.keys).toSet ++ pruneKeys
+        val (statsCols, bloomCols) = indexCols(base, partitionCols)
         val newFiles = stageFiles(spark, root,
           attachFieldIds(winners, base.schema), partitionCols,
-          statsCols, base.files.flatMap(_.bloomCols).distinct)
-        val rewriteSet = readSetOf(rewrite)
-        val v = commit(spark, root, op, base.schema,
-          build = head => {
-            requireSchemaIntact(base.schema, head, newFiles, op, root)
-            newFiles ++
-              requireReadSetIntact(rewriteSet, head, newFiles, op, root)
-                .filterNot(f => rewriteSet.contains(f.rel) ||
-                  newFiles.exists(_.rel == f.rel))
-          },
-          lockExpiryMs)
+          statsCols ++ pruneKeys, bloomCols)
+        val v = commitRewrite(spark, root, op, base, replaced = rewrite,
+          guarded = Nil, added = newFiles, lockExpiryMs = lockExpiryMs)
         (v, rewrite.size, untouched.size)
   }
 
@@ -2431,11 +2500,9 @@ object SnapshotLake {
     * standing key discipline — keyCols unique per version — makes the
     * case vacuous on contract-observing lakes.)
     *
-    * Commit shape mirrors the SQL delta write: sidecars move under
-    * `_deletes/`, the manifest stacks them onto the entries they cover,
-    * inserts append, and the extended read-set guard (rel + delete
-    * list) aborts loudly if a rival rewrote or delta-deleted a
-    * candidate. Returns (version, filesGainingDeletes, filesUntouched).
+    * Commits like the SQL delta write: the sidecars stack onto the
+    * candidates [[commitRewrite]] guards, and the inserts are added.
+    * Returns (version, filesGainingDeletes, filesUntouched).
     */
   private def mergeMorAttempt(spark: SparkSession, root: String,
       base: Manifest, updates: DataFrame, keyCols: Seq[String],
@@ -2481,68 +2548,27 @@ object SnapshotLake {
     val covRows = spark.read.parquet(delStage.toString)
       .select(col("_metadata.file_path").as("__side"), col("file"))
       .distinct().collect()
-    val statsCols = (base.files.flatMap(_.stats.keys).toSet ++
-      base.props.get("statsCols").toSeq
-        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))) --
-      partitionCols
-    val bloomCols = (base.files.flatMap(_.bloomCols) ++
-      base.props.get("bloomCols").toSeq
-        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)))
-      .distinct.filterNot(partitionCols.contains)
-    val stagedAll = stageFiles(spark, root,
+    val (statsCols, bloomCols) = indexCols(base, partitionCols)
+    val (newFiles, emptyStaged) = stageFiles(spark, root,
       attachFieldIds(inserts, base.schema), partitionCols, statsCols,
-      bloomCols)
-    val (newFiles, emptyStaged) = stagedAll.partition(_.rows > 0)
-    emptyStaged.foreach { f => // zero-row part files: reclaim, not publish
-      fs.delete(new Path(dataDir(root), f.rel), false)
-      f.bloomCols.foreach(c => fs.delete(bloomPath(root, f.rel, c), false))
+      bloomCols).partition(_.rows > 0)
+    reclaim(spark, root, emptyStaged) // zero-row part files: reclaim, not publish
+    try {
+      // move the non-empty sidecars under _deletes/; empty part files
+      // cover no rows, stay in the stage dir and die with it
+      val coverMap = moveDeleteSidecars(spark, root, token, covRows
+        .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+        .map { case (abs, rows) =>
+          (new Path(abs), rows.map(_.getString(1)).toSeq) })
+      val v = commitRewrite(spark, root, op, base, replaced = Nil,
+        guarded = candidates, added = newFiles, deletes = coverMap,
+        lockExpiryMs = lockExpiryMs)
+      (v, coverMap.size, untouched.size)
+    } finally {
+      fs.delete(delStage, true)
+      classified.unpersist(blocking = false)
+      winners.unpersist(blocking = false)
     }
-    // move the non-empty sidecars under _deletes/ (invisible until the
-    // commit); empty part files stay in the stage dir and die with it
-    val moved: Seq[(String, Seq[String])] = covRows
-      .groupBy(_.getString(0)).toSeq.sortBy(_._1)
-      .map { case (abs, rows) =>
-        val finalRel = s"$token-${new Path(abs).getName}"
-        val target = new Path(deletesDir(root), finalRel)
-        fs.mkdirs(target.getParent)
-        require(fs.rename(new Path(abs), target),
-          s"delete sidecar move failed: $target")
-        (finalRel, rows.map(_.getString(1)).toSeq)
-      }
-    val coverMap: Map[String, Seq[String]] = moved
-      .flatMap { case (rel, covered) => covered.map(_ -> rel) }
-      .groupBy(_._1).map { case (dataRel, ps) => dataRel -> ps.map(_._2) }
-    val readSet = readSetOf(candidates)
-    val v =
-      try {
-        commit(spark, root, op, base.schema,
-          build = head => {
-            requireSchemaIntact(base.schema, head, newFiles, op, root)
-            val headFiles = requireReadSetIntact(readSet, head, newFiles,
-              op, root)
-            val stray = coverMap.keySet.diff(readSet.keySet)
-            require(stray.isEmpty,
-              s"delete sidecars cover non-candidate file(s): $stray")
-            headFiles.map { f =>
-              coverMap.get(f.rel).fold(f)(ds =>
-                f.copy(deletes = (f.deletes ++ ds).sorted))
-            } ++ newFiles
-          },
-          lockExpiryMs)
-      } catch {
-        case e: ConflictingRewriteException =>
-          // retryOnConflict reclaims e.staged (the data files); the
-          // already-moved sidecars are ours to reclaim here
-          moved.foreach { case (rel, _) =>
-            fs.delete(new Path(deletesDir(root), rel), false)
-          }
-          throw e
-      } finally {
-        fs.delete(delStage, true)
-        classified.unpersist(blocking = false)
-        winners.unpersist(blocking = false)
-      }
-    (v, coverMap.size, untouched.size)
   }
 
   /** The MOR merge's classification plan — the seam WritePlanSpec pins.
@@ -2698,29 +2724,18 @@ object SnapshotLake {
         val keep = touched
           .observe(obs, fns.count(fns.when(hit, fns.lit(1))).as("deleted"))
           .filter(!hit)
-        val statsCols = base.files.flatMap(_.stats.keys).toSet
+        val (statsCols, bloomCols) = indexCols(base, partitionCols)
         val newFiles = stageFiles(spark, root,
           attachFieldIds(keep, base.schema), partitionCols, statsCols,
-          base.files.flatMap(_.bloomCols).distinct)
+          bloomCols)
         val deleted = obs.get("deleted").asInstanceOf[Long]
         if (deleted == 0) {
-          val fs = fsOf(spark, root)
-          newFiles.foreach { f =>
-            fs.delete(new Path(dataDir(root), f.rel), false)
-            f.bloomCols.foreach(c => fs.delete(bloomPath(root, f.rel, c), false))
-          }
+          reclaim(spark, root, newFiles)
           (base.version, 0L, 0, untouched.size)
         } else {
-          val rewriteSet = readSetOf(rewrite)
-          val v = commit(spark, root, "delete", base.schema,
-            build = head => {
-              requireSchemaIntact(base.schema, head, newFiles, "delete", root)
-              newFiles ++
-                requireReadSetIntact(rewriteSet, head, newFiles, "delete",
-                  root)
-                  .filterNot(f => rewriteSet.contains(f.rel))
-            },
-            lockExpiryMs)
+          val v = commitRewrite(spark, root, "delete", base,
+            replaced = rewrite, guarded = Nil, added = newFiles,
+            lockExpiryMs = lockExpiryMs)
           (v, deleted, rewrite.size, untouched.size)
         }
       }
@@ -2793,23 +2808,15 @@ object SnapshotLake {
           val touched = readEntries(spark, root, base, rewrite)
           (touched.filter(!hit), touched.filter(hit).count())
         }
-      val allStats = base.files.flatMap(_.stats.keys).toSet ++ statsCols
+      val (indexStats, bloomCols) = indexCols(base, partitionCols)
       val newFiles = stageFiles(spark, root,
         attachFieldIds(
           keep.unionByName(df.select(base.schema.fieldNames.map(col): _*)),
           base.schema),
-        partitionCols, allStats, base.files.flatMap(_.bloomCols).distinct)
-      val rewriteSet = readSetOf(rewrite)
-      val v = commit(spark, root, "replacewhere", base.schema,
-        build = head => {
-          requireSchemaIntact(base.schema, head, newFiles, "replacewhere",
-            root)
-          newFiles ++
-            requireReadSetIntact(rewriteSet, head, newFiles, "replacewhere",
-              root)
-              .filterNot(f => rewriteSet.contains(f.rel))
-        },
-        lockExpiryMs)
+        partitionCols, indexStats ++ statsCols, bloomCols)
+      val v = commitRewrite(spark, root, "replacewhere", base,
+        replaced = rewrite, guarded = Nil, added = newFiles,
+        lockExpiryMs = lockExpiryMs)
       (v, deleted, rewrite.size, untouched.size)
     }
 

@@ -58,10 +58,10 @@ import org.apache.spark.util.SerializableConfiguration
   *      applied), mirroring Iceberg's `SparkCopyOnWriteScan`.
   *
   * The [[SnapshotReplaceDataWrite]] commit then replaces exactly the
-  * narrowed candidate set in ONE lock commit and carries every other
-  * file by IDENTITY — correct under the same read-set-intact guard as
-  * every library rewrite (a concurrent rewrite of a candidate aborts
-  * the statement loudly; concurrent appends ride through untouched).
+  * narrowed candidate set through the rewrite-commit core every library
+  * rewrite uses ([[SnapshotLake.commitRewrite]]) and carries every other
+  * file by IDENTITY (a concurrent rewrite of a candidate aborts the
+  * statement loudly; concurrent appends ride through untouched).
   *
   * The write path is a REAL distributed DSv2 write (ReplaceData has no
   * V1 fallback): executors write zstd parquet through Spark's own
@@ -70,7 +70,7 @@ import org.apache.spark.util.SerializableConfiguration
   * rows to per-partition files (partition columns live in the directory
   * name, not the file, exactly like a library append) — commit messages
   * carry (file, bytes, rows), and the driver publishes through
-  * [[SnapshotLake.publishStaged]] + the lock commit — footer stats and
+  * [[SnapshotStagedWrite]] + the rewrite-commit core — footer stats and
   * bloom sidecars restamped exactly like every other rewrite,
   * crash-safety by the same invisible-stage contract.
   */
@@ -292,9 +292,71 @@ private case class StagedFileInfo(rel: String, bytes: Long, rows: Long)
 private case class StagedFilesMessage(files: Seq[StagedFileInfo])
   extends WriterCommitMessage
 
+/** The driver-side plumbing every SQL write into a snapshot lake shares:
+  * a stage dir under a fresh token, Spark's own parquet `prepareWrite`
+  * factories for the executor writers, publishing the staged data files
+  * under their token-prefixed names, and dropping the stage dir on
+  * commit or abort. Subclasses commit through
+  * [[SnapshotLake.commitRewrite]] / [[SnapshotLake.publishRewrite]],
+  * which reclaim a lost race's files and abort the statement loudly.
+  */
+private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
+    root: String) {
+
+  protected val token: String = SnapshotLake.newToken()
+  protected val stageDir = new Path(root, s".stage-$token")
+
+  protected def fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Create the stage dir, refusing id-less writes into an id lake. */
+  protected def openStage(lakeSchema: StructType): Unit = {
+    SnapshotLake.requireFieldIdWrites(spark, lakeSchema)
+    fs.mkdirs(stageDir)
+  }
+
+  /** A zstd parquet writer factory for files of `schema`, with its own
+    * Job: `prepareWrite` threads the schema through the job conf.
+    */
+  protected def parquetFactory(schema: StructType)
+      : (OutputWriterFactory, SerializableConfiguration) = {
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job,
+      Map("compression" -> "zstd"), schema)
+    (factory, new SerializableConfiguration(job.getConfiguration))
+  }
+
+  /** The non-empty data files the executors staged. */
+  private[sinks] def stagedFiles(messages: Array[WriterCommitMessage])
+      : Seq[StagedFileInfo] =
+    messages.toSeq.flatMap {
+      case m: StagedFilesMessage => m.files
+      case m: DeltaFilesMessage => m.inserts
+      case _ => Nil
+    }.filter(_.rows > 0)
+
+  /** Footer-probe, move under data/ and bloom-index the staged files:
+    * the write token prefixes each BASENAME, preserving the hive
+    * partition directories the task writers routed into.
+    */
+  private[sinks] def publish(files: Seq[StagedFileInfo], statsCols: Set[String],
+      bloomCols: Seq[String]): Seq[SnapshotLake.FileEntry] =
+    SnapshotLake.publishStaged(spark, root, files.map { f =>
+      val i = f.rel.lastIndexOf('/')
+      (new Path(stageDir, f.rel),
+        f.rel.take(i + 1) + s"$token-" + f.rel.drop(i + 1), f.bytes)
+    }, statsCols, bloomCols)
+
+  /** Run the driver-side commit; the stage dir goes on every exit. */
+  protected def committing(body: => Unit): Unit =
+    try body finally fs.delete(stageDir, true)
+
+  def abort(messages: Array[WriterCommitMessage]): Unit =
+    fs.delete(stageDir, true)
+}
+
 /** The ReplaceData BatchWrite: replace the operation's (possibly
   * runtime-narrowed) candidate files with the rewrite's output in ONE
-  * lock commit; every non-candidate file is carried by IDENTITY —
+  * rewrite commit; every non-candidate file is carried by IDENTITY —
   * unread, unwritten, unmoved. Concurrent appends ride through (they
   * merge against versions after `base`); a concurrent REWRITE of a
   * candidate fails the read-set guard and aborts this statement loudly —
@@ -307,7 +369,7 @@ final class SnapshotReplaceDataWrite(
     base: SnapshotLake.Manifest,
     op: SnapshotRowLevelOperation,
     writeSchema: StructType,
-    opName: String) extends BatchWrite {
+    opName: String) extends SnapshotStagedWrite(spark, root) with BatchWrite {
 
   // the framework must hand us rows in exactly the table's schema — a
   // Spark upgrade that adds projection columns would otherwise land
@@ -317,85 +379,28 @@ final class SnapshotReplaceDataWrite(
     s"row-level write schema ${writeSchema.simpleString} != lake schema " +
       s"${base.schema.simpleString}")
 
-  private val token = java.util.UUID.randomUUID.toString.replace("-", "").take(16)
-  private val stageDir = new Path(root, s".stage-$token")
-
-  /** Partition columns live in the directory name; files carry the rest. */
-  private val dataSchema = StructType(
-    writeSchema.fields.filterNot(f => op.partCols.contains(f.name)))
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    SnapshotLake.requireFieldIdWrites(spark, base.schema)
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(stageDir)
-    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "zstd"), dataSchema)
-    new SnapshotDataWriterFactory(factory,
-      new SerializableConfiguration(job.getConfiguration),
+    openStage(base.schema)
+    // partition columns live in the directory name; files carry the rest
+    val (factory, conf) = parquetFactory(StructType(
+      writeSchema.fields.filterNot(f => op.partCols.contains(f.name))))
+    new SnapshotDataWriterFactory(factory, conf,
       stageDir.toString, writeSchema, op.partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
       SnapshotLake.boundConstraints(spark, writeSchema, base.props))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      // prefix the unique write token on the BASENAME, preserving any
-      // hive partition directories the task writers routed into
-      def tokened(rel: String): String = {
-        val i = rel.lastIndexOf('/')
-        if (i < 0) s"$token-$rel" else rel.take(i + 1) + s"$token-" + rel.drop(i + 1)
-      }
-      val staged = messages.collect {
-        case m: StagedFilesMessage => m.files
-      }.flatten.collect {
-        case StagedFileInfo(rel, bytes, rows) if rows > 0 =>
-          (new Path(stageDir, rel), tokened(rel), bytes)
-      }.toSeq
-      def declared(k: String): Seq[String] = base.props.get(k).toSeq
-        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-      val statsCols = (base.files.flatMap(_.stats.keys).toSet ++
-        declared("statsCols")) -- op.partCols
-      val bloomCols = (base.files.flatMap(_.bloomCols) ++
-        declared("bloomCols")).distinct.filterNot(op.partCols.contains)
-      val newFiles = SnapshotLake.publishStaged(spark, root, staged,
-        statsCols, bloomCols)
-      // the REPLACED set: exactly the candidate files the statement's
-      // scan was narrowed to — every other file survives by identity
-      val replaced = SnapshotLake.readSetOf(op.candidates)
-      if (replaced.isEmpty && newFiles.isEmpty) return // touched nothing
-      try {
-        SnapshotLake.commit(spark, root, s"$opName:sql", base.schema,
-          build = head => {
-            SnapshotLake.requireSchemaIntact(base.schema, head, newFiles,
-              s"$opName:sql", root)
-            newFiles ++
-              SnapshotLake.requireReadSetIntact(replaced, head, newFiles,
-                s"$opName:sql", root)
-                .filterNot(f => replaced.contains(f.rel))
-          },
-          lockExpiryMs = 10L * 60 * 1000)
-      } catch {
-        case e: SnapshotLake.ConflictingRewriteException =>
-          // a SQL statement's committer cannot silently re-run the
-          // query, so clean the orphaned files and surface the
-          // statement-level contract
-          e.staged.foreach { f =>
-            fs.delete(new Path(root, s"data/${f.rel}"), false)
-            f.bloomCols.foreach(c =>
-              fs.delete(SnapshotLake.bloomPath(root, f.rel, c), false))
-          }
-          throw new IllegalStateException(
-            s"SQL $opName lost to a concurrent rewrite of the same lake — " +
-              s"re-run the statement against the new head (${e.getMessage})")
-      }
-    } finally fs.delete(stageDir, true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(stageDir, true)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
+    val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
+    val newFiles = publish(stagedFiles(messages), statsCols, bloomCols)
+    // the REPLACED set: exactly the candidate files the statement's
+    // scan was narrowed to; a statement that touched nothing publishes
+    // nothing
+    if (op.candidates.nonEmpty || newFiles.nonEmpty)
+      SnapshotLake.commitRewrite(spark, root, s"$opName:sql", base,
+        replaced = op.candidates, guarded = Nil, added = newFiles,
+        statement = Some(s"SQL $opName lost to a concurrent rewrite of " +
+          "the same lake"))
   }
 }
 
@@ -424,8 +429,10 @@ final class SnapshotReplaceDataWrite(
   * start and commit would otherwise be SILENTLY dropped with the
   * partition — that is data loss of a committed write, not overwrite
   * semantics, so the statement aborts loudly and the user re-runs it
-  * against the new head (the row-level paths' `requireReadSetIntact`
-  * discipline, applied to the dynamically-derived drop set).
+  * against the new head. The drop set is derived from the head, not
+  * read from `base`, so this guard replaces the read-set guard of
+  * [[SnapshotLake.commitRewrite]] and publishes through
+  * [[SnapshotLake.publishRewrite]] directly.
   */
 final class SnapshotDynamicOverwriteWrite(
     spark: SparkSession,
@@ -434,48 +441,28 @@ final class SnapshotDynamicOverwriteWrite(
     tableSchema: StructType,
     partCols: Seq[String],
     declaredPartitioning: Seq[String],
-    tableOptions: CaseInsensitiveStringMap) extends BatchWrite {
-
-  private val token = java.util.UUID.randomUUID.toString.replace("-", "").take(16)
-  private val stageDir = new Path(root, s".stage-$token")
-
-  private val dataSchema = StructType(
-    tableSchema.fields.filterNot(f => partCols.contains(f.name)))
+    tableOptions: CaseInsensitiveStringMap)
+    extends SnapshotStagedWrite(spark, root) with BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    SnapshotLake.requireFieldIdWrites(spark, tableSchema)
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(stageDir)
-    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "zstd"), dataSchema)
-    new SnapshotDataWriterFactory(factory,
-      new SerializableConfiguration(job.getConfiguration),
+    openStage(tableSchema)
+    val (factory, conf) = parquetFactory(StructType(
+      tableSchema.fields.filterNot(f => partCols.contains(f.name))))
+    new SnapshotDataWriterFactory(factory, conf,
       stageDir.toString, tableSchema, partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
       SnapshotLake.boundConstraints(spark, tableSchema,
         base.map(_.props).getOrElse(Map.empty)))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      def tokened(rel: String): String = {
-        val i = rel.lastIndexOf('/')
-        if (i < 0) s"$token-$rel" else rel.take(i + 1) + s"$token-" + rel.drop(i + 1)
-      }
-      val infos = messages.collect {
-        case m: StagedFilesMessage => m.files
-      }.flatten.filter(_.rows > 0).toSeq
-      // partitioned + empty frame: replace nothing, publish nothing
-      // (Delta semantics — there is no partition to derive)
-      if (infos.isEmpty && partCols.nonEmpty) return
-      val staged = infos.map(f =>
-        (new Path(stageDir, f.rel), tokened(f.rel), f.bytes))
+  override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
+    val infos = stagedFiles(messages)
+    // partitioned + empty frame: replace nothing, publish nothing
+    // (Delta semantics — there is no partition to derive)
+    if (infos.nonEmpty || partCols.isEmpty) {
       val (_, _, statsCols, bloomCols) = SnapshotTable.writeShape(spark,
         root, declaredPartitioning, tableOptions)
-      val newFiles = SnapshotLake.publishStaged(spark, root, staged,
-        statsCols.toSet -- partCols,
+      val newFiles = publish(infos, statsCols.toSet -- partCols,
         bloomCols.filterNot(partCols.contains))
       // the REPLACED partitions: exactly the directory prefixes the
       // frame's own rows routed into; an unpartitioned lake is one
@@ -483,58 +470,27 @@ final class SnapshotDynamicOverwriteWrite(
       def dirOf(rel: String): String = rel.take(math.max(rel.lastIndexOf('/'), 0))
       val touched = newFiles.map(f => dirOf(f.rel)).toSet
       val baseSet = base.map(_.files.map(_.rel).toSet).getOrElse(Set.empty)
-      SnapshotDynamicOverwriteWrite.beforeCommit()
-      try {
-        SnapshotLake.commit(spark, root, "overwrite-dynamic", tableSchema,
-          build = head => {
-            SnapshotLake.requireSchemaIntact(tableSchema, head, newFiles,
-              "overwrite-dynamic", root)
-            val headFiles = head.map(_.files).getOrElse(Nil)
-            val (dropped, carried) =
-              if (partCols.isEmpty) (headFiles, Nil)
-              else headFiles.partition(f => touched.contains(dirOf(f.rel)))
-            // WriteSerializable guard: a file we are about to drop that
-            // was NOT in the statement-start manifest is a rival's
-            // committed write — dropping it is silent data loss
-            val racing = dropped.filterNot(f => baseSet.contains(f.rel))
-            if (racing.nonEmpty)
-              throw new SnapshotLake.ConflictingRewriteException(newFiles,
-                s"dynamic overwrite under $root would drop ${racing.size} " +
-                  s"file(s) committed concurrently into overwritten " +
-                  s"partition(s) (e.g. ${racing.head.rel})")
-            newFiles ++ carried
-          },
-          lockExpiryMs = 10L * 60 * 1000)
-      } catch {
-        case e: SnapshotLake.ConflictingRewriteException =>
-          // a SQL statement's committer cannot silently re-run the
-          // query: clean the orphans and surface the statement contract
-          e.staged.foreach { f =>
-            fs.delete(new Path(root, s"data/${f.rel}"), false)
-            f.bloomCols.foreach(c =>
-              fs.delete(SnapshotLake.bloomPath(root, f.rel, c), false))
-          }
-          throw new IllegalStateException(
-            s"INSERT OVERWRITE (dynamic) lost to a concurrent write into " +
-              s"an overwritten partition — re-run the statement against " +
-              s"the new head (${e.getMessage})")
+      SnapshotLake.publishRewrite(spark, root, "overwrite-dynamic",
+        tableSchema, newFiles,
+        statement = Some("INSERT OVERWRITE (dynamic) lost to a concurrent " +
+          "write into an overwritten partition")) { head =>
+        val headFiles = head.map(_.files).getOrElse(Nil)
+        val (dropped, carried) =
+          if (partCols.isEmpty) (headFiles, Nil)
+          else headFiles.partition(f => touched.contains(dirOf(f.rel)))
+        // WriteSerializable guard: a file we are about to drop that
+        // was NOT in the statement-start manifest is a rival's
+        // committed write — dropping it is silent data loss
+        val racing = dropped.filterNot(f => baseSet.contains(f.rel))
+        if (racing.nonEmpty)
+          throw new SnapshotLake.ConflictingRewriteException(
+            s"dynamic overwrite under $root would drop ${racing.size} " +
+              s"file(s) committed concurrently into overwritten " +
+              s"partition(s) (e.g. ${racing.head.rel})")
+        carried
       }
-    } finally fs.delete(stageDir, true)
+    }
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(stageDir, true)
-  }
-}
-
-object SnapshotDynamicOverwriteWrite {
-  /** Test seam: runs after the frame is staged, immediately before the
-    * manifest commit — the deterministic replay point for the
-    * racing-append guard (a spec injects a concurrent append into a
-    * touched partition here; production value is a no-op).
-    */
-  @volatile private[graft] var beforeCommit: () => Unit = () => ()
 }
 
 /** The executor-side hive-routing parquet writer every SQL write path

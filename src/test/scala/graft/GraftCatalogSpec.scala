@@ -332,9 +332,9 @@ class GraftCatalogSpec extends SparkSpec {
       // overwrite is about to replace — dropping it with the partition
       // would silently lose a committed write
       val racing = bars(3, 900.0).filter(col("symbol") === "sym1")
-      graft.sinks.SnapshotDynamicOverwriteWrite.beforeCommit = () =>
+      SnapshotLake.beforeRewriteCommit.set(() =>
         SnapshotLake.append(spark, root, racing,
-          partitionCols = Seq("symbol"))
+          partitionCols = Seq("symbol")))
       val before = SnapshotLake.manifest(spark, root)
       val e = intercept[Exception] {
         spark.sql("INSERT OVERWRITE graft.dynrace.t " +
@@ -356,19 +356,19 @@ class GraftCatalogSpec extends SparkSpec {
       // a rival append into an UNTOUCHED partition is no conflict: the
       // overwrite drops only statement-start files of its own partitions
       val riding = bars(3, 900.0).filter(col("symbol") === "sym0")
-      graft.sinks.SnapshotDynamicOverwriteWrite.beforeCommit = () =>
+      SnapshotLake.beforeRewriteCommit.set(() =>
         SnapshotLake.append(spark, root, riding,
-          partitionCols = Seq("symbol"))
+          partitionCols = Seq("symbol")))
       spark.sql("INSERT OVERWRITE graft.dynrace.t " +
         "SELECT * FROM gc_dynrace_src")
-      graft.sinks.SnapshotDynamicOverwriteWrite.beforeCommit = () => ()
+      SnapshotLake.beforeRewriteCommit.set(() => ())
       assert(SnapshotLake.manifest(spark, root).op == "overwrite-dynamic")
       assert(spark.sql("SELECT * FROM graft.dynrace.t " +
         "WHERE symbol = 'sym0' AND close >= 900").count() == 1)
       assert(spark.sql("SELECT * FROM graft.dynrace.t " +
         "WHERE symbol = 'sym1'").count() == 2) // the frame's rows only
     } finally {
-      graft.sinks.SnapshotDynamicOverwriteWrite.beforeCommit = () => ()
+      SnapshotLake.beforeRewriteCommit.set(() => ())
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
       spark.sql("DROP TABLE graft.dynrace.t")
     }

@@ -269,16 +269,20 @@ class SnapshotLakeSpec extends SparkSpec {
       statsCols = Seq("id"))                                   // v1
     SnapshotLake.append(spark, root, rows(1001 to 1100, 1L, 0.0),
       statsCols = Seq("id"))                                   // v2
-    // the rival: rewrites the second append's files (id 1001 updated)
-    val (v3, _, _) = SnapshotLake.merge(spark, root,
-      Seq((1001L, 2L, 777.0)).toDF("id", "v", "payload"),
-      keyCols = Seq("id"), versionCol = "v", pruneKey = "id")
-    assert(v3 == 3)
-    // compact whose FIRST attempt read the PRE-merge head (v2) — the
+    // the rival: rewrites the second append's files (id 1001 updated),
+    // landing between compact's base read (v2) and its commit — the
     // exact interleaving where the old build published the merged-away
     // row 1001 back into the lake next to the merge's replacement file.
-    val (v4, _, _) = SnapshotLake.compactPinned(spark, root, Nil,
-      128L * 1024 * 1024, 60000L, pinFirstBase = Some(2))
+    var v3 = -1L
+    SnapshotLake.beforeRewriteCommit.set { () =>
+      v3 = SnapshotLake.merge(spark, root,
+        Seq((1001L, 2L, 777.0)).toDF("id", "v", "payload"),
+        keyCols = Seq("id"), versionCol = "v", pruneKey = "id")._1
+    }
+    val (v4, _, _) =
+      try SnapshotLake.compact(spark, root, lockExpiryMs = 60000L)
+      finally SnapshotLake.beforeRewriteCommit.set(() => ())
+    assert(v3 == 3)
     assert(v4 == 4)
     val got = SnapshotLake.read(spark, root)
     assert(got.count() == 200)                        // no resurrection
@@ -927,6 +931,40 @@ class SnapshotLakeSpec extends SparkSpec {
     assert(e2.getMessage.contains("min/max envelopes"))
   }
 
+  test("library merge and compact stamp the lake's declared statsCols " +
+      "and bloomCols on every file they write") {
+    import org.apache.spark.sql.types._
+    val root = freshRoot()
+    SnapshotLake.create(spark, root, StructType(Seq(
+      StructField("symbol", StringType), StructField("id", LongType),
+      StructField("v", LongType), StructField("close", DoubleType))),
+      tableProps = Map("statsCols" -> "close", "bloomCols" -> "symbol"))
+    def rows(ids: Range, v: Long) = ids.map(i =>
+      (s"sym${i % 3}", i.toLong, v, i * 1.5)).toDF("symbol", "id", "v", "close")
+    // library appends that pass no index columns stamp none
+    SnapshotLake.append(spark, root, rows(0 until 20, 1L).repartition(2))
+    SnapshotLake.append(spark, root, rows(20 until 40, 1L))
+    assert(SnapshotLake.manifest(spark, root).files
+      .forall(f => f.stats.isEmpty && f.bloomCols.isEmpty))
+    def written(op: => Any): Seq[SnapshotLake.FileEntry] = {
+      val before = SnapshotLake.manifest(spark, root).files.map(_.rel).toSet
+      op
+      SnapshotLake.manifest(spark, root).files.filterNot(f => before(f.rel))
+    }
+    val merged = written(SnapshotLake.merge(spark, root, rows(5 until 8, 2L),
+      keyCols = Seq("id"), versionCol = "v", pruneKey = "id"))
+    val compacted = written(SnapshotLake.compact(spark, root))
+    Seq("merge" -> merged, "compact" -> compacted).foreach { case (op, files) =>
+      assert(files.nonEmpty, s"$op wrote no file")
+      assert(files.forall(f =>
+        f.stats.contains("close") && f.bloomCols == Seq("symbol")),
+        s"$op: ${files.map(f => (f.stats.keySet, f.bloomCols))}")
+    }
+    assert(SnapshotLake.read(spark, root).count() == 40)
+    assert(SnapshotLake.readPoint(spark, root, Map("symbol" -> "sym1"))
+      .count() == 13)
+  }
+
   test("bloom append and readPoint under a relative lake root") {
     val rel = java.nio.file.Paths.get("").toAbsolutePath
       .relativize(java.nio.file.Paths.get(freshRoot())).toString
@@ -943,19 +981,20 @@ class SnapshotLakeSpec extends SparkSpec {
       "compact retries onto the evolved schema, appends ride a widening " +
       "through, and a rename racing an append refuses loudly") {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // --- compact vs evolve (deterministic via the pinned-base seam) ---
+    // --- compact vs evolve (deterministic via the rewrite-commit seam) ---
     val root = TempDirs.create("snaplake-schemarace") + "/lake"
     val df = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("event_id", "close")
     SnapshotLake.append(spark, root, df.repartition(2),
       statsCols = Seq("event_id")) // v1
-    SnapshotLake.addColumns(spark, root,
-      StructType(Seq(StructField("venue", StringType)))) // v2, evolve
     // first attempt reads the PRE-EVOLVE base: same file list (the
     // read-set check alone cannot see the drift), stale schema — the
     // schema guard must abort it and the retry publishes the evolved one
-    SnapshotLake.compactPinned(spark, root, Nil,
-      targetBytes = 256L * 1024 * 1024, lockExpiryMs = 60000,
-      pinFirstBase = Some(1L))
+    SnapshotLake.beforeRewriteCommit.set(() =>
+      SnapshotLake.addColumns(spark, root,
+        StructType(Seq(StructField("venue", StringType))))) // v2, evolve
+    try SnapshotLake.compact(spark, root,
+      targetBytes = 256L * 1024 * 1024, lockExpiryMs = 60000)
+    finally SnapshotLake.beforeRewriteCommit.set(() => ())
     val m = SnapshotLake.manifest(spark, root)
     assert(m.op == "compact" &&
       m.schema.fieldNames.toSeq == Seq("event_id", "close", "venue"),

@@ -176,8 +176,8 @@ class SnapshotMorSpec extends SparkSpec {
     // rival = a compact replacing every candidate between the statement's
     // staging and its commit: the recorded positions reference files that
     // no longer exist in the head — publishing would lose the deletes
-    graft.sinks.SnapshotDeltaWrite.beforeCommit = () =>
-      SnapshotLake.compact(spark, root)
+    SnapshotLake.beforeRewriteCommit.set(() =>
+      SnapshotLake.compact(spark, root))
     try {
       val before = SnapshotLake.manifest(spark, root).version
       val e = intercept[Exception] {
@@ -185,7 +185,7 @@ class SnapshotMorSpec extends SparkSpec {
       }
       assert(chain(e).exists(m => m != null && m.contains("concurrent")),
         s"expected the loud statement abort, got ${chain(e)}")
-      graft.sinks.SnapshotDeltaWrite.beforeCommit = () => ()
+      SnapshotLake.beforeRewriteCommit.set(() => ())
       // the rival's compact won; the lake is consistent, nothing deleted,
       // no orphaned sidecars referenced
       val m = SnapshotLake.manifest(spark, root)
@@ -204,7 +204,7 @@ class SnapshotMorSpec extends SparkSpec {
         s"history must count pending sidecars, got ${hist.mkString(",")}")
       assert(byOp("compact") == 0)
     } finally {
-      graft.sinks.SnapshotDeltaWrite.beforeCommit = () => ()
+      SnapshotLake.beforeRewriteCommit.set(() => ())
       spark.sql("DROP TABLE graft.mor.race")
     }
   }

@@ -6,6 +6,8 @@
 #   1. sbt compile + full sbt test (live-PG spec included via the sidecar;
 #      if the sidecar cannot start, the spec cancels rather than fails and
 #      the gate records that)
+#   1b. cd perfbench && sbt test -> the repo benchmark still builds against
+#      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
 #   3. tools/check_oracle.py   -> the DuckDB hash-compare (all declared
 #      queries must PASS)
@@ -48,6 +50,16 @@ if [[ $SKIP_TESTS -eq 0 ]]; then
     TESTS=$(grep -Eo "Tests: succeeded [0-9]+, failed [0-9]+, canceled [0-9]+" "$LOG" | tail -1)
     note "TESTS FAILED: $TESTS"; fail=1
   fi
+fi
+
+# --- 1b. repo benchmark build + tests ---------------------------------
+note "perfbench: sbt test"
+if (cd perfbench && sbt -batch test) >> "$LOG" 2>&1; then
+  PERFBENCH=$(grep -Eo "Tests: succeeded [0-9]+, failed [0-9]+" "$LOG" | tail -1)
+  note "perfbench green: $PERFBENCH"
+else
+  PERFBENCH="FAILED"
+  note "PERFBENCH FAILED"; fail=1
 fi
 
 # --- 2+3. correctness surface ----------------------------------------
@@ -108,11 +120,12 @@ EOF
 fi
 
 # --- summary ----------------------------------------------------------
-python3 - "$TS" "$fail" "$ORACLE" "${TESTS:-unknown}" "${BENCH:-unknown}" <<'EOF'
+python3 - "$TS" "$fail" "$ORACLE" "${TESTS:-unknown}" "${BENCH:-unknown}" \
+    "${PERFBENCH:-unknown}" <<'EOF'
 import json, sys
-ts, fail, oracle, tests, bench = sys.argv[1:6]
+ts, fail, oracle, tests, bench, perfbench = sys.argv[1:7]
 json.dump({"ts": ts, "pass": fail == "0", "tests": tests,
-           "oracle": oracle, "bench": bench},
+           "perfbench": perfbench, "oracle": oracle, "bench": bench},
           open("target/gate_summary.json", "w"), indent=1)
 EOF
 note "summary -> target/gate_summary.json (pass=$((1-fail)))"
