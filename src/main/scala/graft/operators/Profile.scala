@@ -52,67 +52,48 @@ object Profile {
     val numeric = target.filter(c => NumericTypes(df.schema(c).dataType))
     val hllable = target.filter(c => HllTypes(df.schema(c).dataType))
 
-    // The three passes are INDEPENDENT Spark actions over the same input
-    // (guide §2.6: actions are only sequential because driver code calls
-    // them sequentially): submit them from a small thread pool so each
-    // job's tail back-fills the others' idle executors. At any scale the
-    // wall is max(pass) instead of sum(passes); results are identical —
-    // each pass computes exactly what the sequential form computed.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val (row, distincts, qRow) =
-      try {
-        // pass 1 — exact census: one aggregate row
-        val aggs =
-          Seq(count(lit(1)).cast("double").as("__n")) ++
-            target.map(c => (count(lit(1)) - count(col(c))).cast("double")
-              .as(s"__nulls_$c")) ++
-            numeric.flatMap(c => Seq(
-              min(col(c)).cast("double").as(s"__min_$c"),
-              max(col(c)).cast("double").as(s"__max_$c")))
-        val rowF = pool.submit(new java.util.concurrent.Callable[Row] {
-          override def call(): Row = df.agg(aggs.head, aggs.tail: _*).head
+    // pass 1 — exact census: one aggregate row
+    val aggs =
+      Seq(count(lit(1)).cast("double").as("__n")) ++
+        target.map(c => (count(lit(1)) - count(col(c))).cast("double")
+          .as(s"__nulls_$c")) ++
+        numeric.flatMap(c => Seq(
+          min(col(c)).cast("double").as(s"__min_$c"),
+          max(col(c)).cast("double").as(s"__max_$c")))
+    // the three passes are independent actions over the same input: run
+    // them concurrently ([[graft.Concurrent]]); results are identical
+    val (row, distincts, qRow) = graft.Concurrent.scope(spark) { s =>
+      val rowF = s.fork(df.agg(aggs.head, aggs.tail: _*).head)
+
+      // pass 2 — per-column HLL registers from ONE scan: each row explodes
+      // into its (column, value-hash) entries; null values drop like
+      // COUNT DISTINCT does
+      val distinctsF = s.fork[Map[String, Double]](
+        if (hllable.isEmpty) Map.empty
+        else {
+          val entries = df.select(explode(array(hllable.map(c =>
+            struct(lit(c).as("column"),
+              col(c).cast("string").as("v"))): _*)).as("e"))
+            .select(col("e.column").as("column"), col("e.v").as("v"))
+            .filter(col("v").isNotNull)
+          val regs = Hll.registers(entries, Seq("column"), col("v"), p)
+          Hll.estimate(regs, Seq("column"), p)
+            .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
         })
 
-        // pass 2 — per-column HLL registers from ONE scan: each row explodes
-        // into its (column, value-hash) entries; null values drop like
-        // COUNT DISTINCT does
-        val distinctsF = pool.submit(
-          new java.util.concurrent.Callable[Map[String, Double]] {
-            override def call(): Map[String, Double] =
-              if (hllable.isEmpty) Map.empty
-              else {
-                val entries = df.select(explode(array(hllable.map(c =>
-                  struct(lit(c).as("column"),
-                    col(c).cast("string").as("v"))): _*)).as("e"))
-                  .select(col("e.column").as("column"), col("e.v").as("v"))
-                  .filter(col("v").isNotNull)
-                val regs = Hll.registers(entries, Seq("column"), col("v"), p)
-                Hll.estimate(regs, Seq("column"), p)
-                  .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-              }
-          })
-
-        // pass 3 — quantiles of the global bottom-k sample per numeric column
-        val qRowF = pool.submit(new java.util.concurrent.Callable[Row] {
-          override def call(): Row =
-            if (numeric.isEmpty) null
-            else {
-              val sample = Sketch.sampleBottomK(df, Nil, col(keyCol), k)
-              val qAggs = numeric.flatMap(c => Seq(
-                percentile(col(c), lit(0.25)).as(s"__q25_$c"),
-                percentile(col(c), lit(0.5)).as(s"__q50_$c"),
-                percentile(col(c), lit(0.75)).as(s"__q75_$c")))
-              sample.agg(qAggs.head, qAggs.tail: _*).head
-            }
+      // pass 3 — quantiles of the global bottom-k sample per numeric column
+      val qRowF = s.fork[Row](
+        if (numeric.isEmpty) null
+        else {
+          val sample = Sketch.sampleBottomK(df, Nil, col(keyCol), k)
+          val qAggs = numeric.flatMap(c => Seq(
+            percentile(col(c), lit(0.25)).as(s"__q25_$c"),
+            percentile(col(c), lit(0.5)).as(s"__q50_$c"),
+            percentile(col(c), lit(0.75)).as(s"__q75_$c")))
+          sample.agg(qAggs.head, qAggs.tail: _*).head
         })
-        def get[A](f: java.util.concurrent.Future[A]): A =
-          try f.get()
-          catch { // surface the pass's own exception, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
-        (get(rowF), get(distinctsF), get(qRowF))
-      } finally pool.shutdown()
+      (rowF.join(), distinctsF.join(), qRowF.join())
+    }
 
     def d(r: Row, name: String): Any = r.get(r.fieldIndex(name))
     val out = target.flatMap { c =>

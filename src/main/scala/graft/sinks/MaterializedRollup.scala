@@ -214,8 +214,8 @@ object MaterializedRollup {
   /** Phase 1 of the fold, independent of the delta's key range: check
     * the register lake exists (loud legacy-layout message) and
     * materialize the delta's registers + their count. Split out so the
-    * refresh can run it CONCURRENTLY with its own range aggregate — both
-    * read only the persisted delta (guide §2.6). Caller owns the
+    * refresh can overlap it with its own range aggregate — both read only
+    * the persisted delta ([[graft.Concurrent]]). Caller owns the
     * returned frame's unpersist.
     */
   private def prepareDistinct(spark: SparkSession, mvRoot: String,
@@ -232,8 +232,8 @@ object MaterializedRollup {
         s"no register lake under $mvRoot — init/fullRefresh creates it")
     }
     val delta = registersAll(rows, spec).persist()
-    // a failed count reaches the caller only through its swallowing join,
-    // which never sees this frame: release it before rethrowing
+    // a failed count produces no value for the caller to release: release
+    // it here before rethrowing
     try (delta, delta.count())
     catch { case e: Throwable => delta.unpersist(); throw e }
   }
@@ -293,38 +293,6 @@ object MaterializedRollup {
     } finally regs.unpersist()
   }
 
-  /** Run `distinctWork` (register replace/fold) on a side thread while
-    * `stage` (the rollup file staging) runs on the caller's — both are
-    * joined before returning, so the caller's anchor-advancing commit
-    * still happens strictly after the register work (the crash-safety
-    * ordering). With no distinct columns the side thread is skipped
-    * entirely. Spark handles concurrent jobs from driver threads natively
-    * (guide §2.6); the two sides touch different lakes.
-    */
-  private def overlapWithDistinct[A](spark: SparkSession,
-      distinctWork: () => Unit, spec: Spec)(stage: => A): A = {
-    if (spec.distinctCols.isEmpty) return stage
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val f = pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = distinctWork()
-    })
-    try {
-      val staged = stage
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-      staged
-    } finally {
-      // a staging failure must not leave the register commit running past
-      // this call — join it (its own failure already surfaced above when
-      // staging succeeded; when staging threw, staging's exception wins)
-      try f.get() catch { case _: Throwable => () }
-      pool.shutdown()
-    }
-  }
-
   private val AnchorRe = raw"mv:base=(\d+).*".r
 
   /** Base version the MV head reflects (None before [[init]]). */
@@ -358,14 +326,13 @@ object MaterializedRollup {
     val state = lift(baseRead, spec).cache()
     try {
       // distinct registers BEFORE the anchor-advancing rollup commit
-      // (atomic replace; a crash in between just re-replaces on retry) —
-      // but the register build and the rollup staging are INDEPENDENT
-      // jobs over different lakes, so run them concurrently (guide §2.6)
-      // and join before the commit: ordering guarantee intact, wall =
-      // max(register replace, rollup stage) instead of the sum.
-      val files = overlapWithDistinct(spark,
-        () => replaceDistinct(spark, mvRoot, baseRead, spec),
-        spec) {
+      // (atomic replace; a crash in between just re-replaces on retry).
+      // The register build and the rollup staging are independent jobs
+      // over different lakes, so they overlap ([[graft.Concurrent]]); the
+      // scope joins the register build before the commit below.
+      val files = graft.Concurrent.scope(spark) { s =>
+        if (spec.distinctCols.nonEmpty)
+          s.fork(replaceDistinct(spark, mvRoot, baseRead, spec))
         SnapshotLake.stageFiles(spark, mvRoot,
           cluster(state, spec, state.count()), Nil, Set(spec.pruneKey))
       }
@@ -417,102 +384,86 @@ object MaterializedRollup {
     val delta =
       if (spec.distinctCols.nonEmpty) delta0.persist() else delta0
     val deltaState = lift(delta, spec).cache()
-    // kick off the register-delta materialization NOW, concurrent with
-    // the range aggregate below — phase 1 of the fold reads only the
-    // persisted delta, not the delta's key range (guide §2.6); its frame
-    // is unpersisted in the outer finally
     checkDistinctCols(delta, spec)
-    val regPool =
-      if (spec.distinctCols.isEmpty) None
-      else Some(java.util.concurrent.Executors.newSingleThreadExecutor())
-    val regPrep = regPool.map(_.submit(
-      new java.util.concurrent.Callable[(DataFrame, Long)] {
-        override def call(): (DataFrame, Long) =
-          prepareDistinct(spark, mvRoot, delta, spec)
-      }))
-    def regJoin(): (DataFrame, Long) =
-      try regPrep.get.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
     try {
-      val dom = SnapshotLake.statsDomain(deltaState.schema, spec.pruneKey)
-      // one aggregate serves the prune range, the delta row count AND the
-      // delta group count (for output-file sizing — no later count job)
-      val range = deltaState.agg(min(dom), max(dom), sum(col("n_rows")),
-        count(lit(1))).head
-      if (range.isNullAt(0)) { // zero-row appends: anchor-only bump, so
-        // steady-state refreshes take the baseHead==anchor fast path
-        // instead of re-walking the empty versions forever
-        val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead",
-          mvHead.schema, build = head => {
-            guardAnchor(head, anchor, mvRoot)
-            head.map(_.files).getOrElse(Nil)
-          }, lockExpiryMs)
-        return Refresh(v, baseHead, 0L, 0, mvHead.files.size)
-      }
-      val (lo, hi) = (SnapshotLake.toDoubleStat(range.get(0)),
-        SnapshotLake.toDoubleStat(range.get(1)))
-      val (overlap, untouched) = mvHead.files.partition(f =>
-        f.stats.get(spec.pruneKey).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi })
-      val existing =
-        if (overlap.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            mvHead.schema)
+      // the scope joins the register work (and releases the register
+      // delta) before the anchor-advancing commit below
+      val (newFiles, overlap, nUntouched, nDelta) =
+        graft.Concurrent.scope(spark) { s =>
+        // phase 1 of the register fold reads only the persisted delta, not
+        // its key range: start it now, overlapping the range aggregate
+        val regPrep =
+          if (spec.distinctCols.isEmpty) None
+          else Some(s.fork(prepareDistinct(spark, mvRoot, delta, spec),
+            release = (p: (DataFrame, Long)) => p._1.unpersist()))
+        val dom = SnapshotLake.statsDomain(deltaState.schema, spec.pruneKey)
+        // one aggregate serves the prune range, the delta row count AND the
+        // delta group count (for output-file sizing — no later count job)
+        val range = deltaState.agg(min(dom), max(dom), sum(col("n_rows")),
+          count(lit(1))).head
+        // zero-row appends: anchor-only bump, so steady-state refreshes
+        // take the baseHead==anchor fast path instead of re-walking the
+        // empty versions forever
+        if (range.isNullAt(0)) (Nil, Nil, mvHead.files.size, 0L)
         else {
-          val dd = new org.apache.hadoop.fs.Path(mvRoot, "data").toString
-          spark.read.option("basePath", dd).schema(mvHead.schema)
-            .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
-        }
-      val combined = combine(existing.unionByName(deltaState), spec)
-      // combined's row count is bounded by overlap-state rows (exact, from
-      // the manifest's footer counts) + delta groups (from the one agg
-      // above) — keys on both sides merge, so this only ever OVER-sizes
-      // the range partitioning, and empty ranges write no file. Sizing
-      // from metadata saves the count job (and the cache the count needed)
-      // that used to materialize `combined` twice per refresh.
-      val boundRows = overlap.map(f => math.max(0L, f.rows)).sum +
-        range.getLong(3)
-      // cluster()'s repartitionByRange SAMPLES its input before the write
-      // consumes it, so without a persist the union+combine aggregate runs
-      // twice per refresh — the same double-compute foldDistinct persists
-      // `folded` to avoid (its comment cites +16 s measured at sf10).
-      // distinct registers BEFORE the anchor-advancing commit (idempotent
-      // max-merge: a crash in between re-folds the same delta on retry).
-      // The register fold and the rollup staging are independent jobs over
-      // different lakes reading the same persisted delta — run them
-      // concurrently (guide §2.6) and join before the commit; an abort
-      // after the fold leaves registers LEADING the anchor, which the
-      // lead-window contract above already allows.
-      val combinedP = combined.persist()
-      val newFiles = try {
-        overlapWithDistinct(spark,
-          () => {
-            val (regDelta, nRegs) = regJoin()
+          val (lo, hi) = (SnapshotLake.toDoubleStat(range.get(0)),
+            SnapshotLake.toDoubleStat(range.get(1)))
+          val (overlap, untouched) = mvHead.files.partition(f =>
+            f.stats.get(spec.pruneKey).forall { case (fLo, fHi) =>
+              fHi >= lo && fLo <= hi })
+          val existing =
+            if (overlap.isEmpty)
+              spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                mvHead.schema)
+            else {
+              val dd = new org.apache.hadoop.fs.Path(mvRoot, "data").toString
+              spark.read.option("basePath", dd).schema(mvHead.schema)
+                .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
+            }
+          val combined = combine(existing.unionByName(deltaState), spec)
+          // combined's row count is bounded by overlap-state rows (exact,
+          // from the manifest's footer counts) + delta groups (from the one
+          // agg above) — keys on both sides merge, so this only ever
+          // OVER-sizes the range partitioning, and empty ranges write no
+          // file. Sizing from metadata saves the count job (and the cache
+          // the count needed) that used to materialize `combined` twice
+          // per refresh.
+          val boundRows = overlap.map(f => math.max(0L, f.rows)).sum +
+            range.getLong(3)
+          // distinct registers BEFORE the anchor-advancing commit
+          // (idempotent max-merge: a crash in between re-folds the same
+          // delta on retry). The register fold and the rollup staging are
+          // independent jobs over different lakes reading the same
+          // persisted delta, so they overlap ([[graft.Concurrent]]); an
+          // abort after the fold leaves registers LEADING the anchor,
+          // which the lead-window contract above already allows.
+          regPrep.foreach(prep => s.fork {
+            val (regDelta, nRegs) = prep.join()
             foldDistinctPrepared(spark, mvRoot, regDelta, nRegs, spec, lo, hi)
-          }, spec) {
-          SnapshotLake.stageFiles(spark, mvRoot,
-            cluster(combinedP, spec, boundRows), Nil, Set(spec.pruneKey))
+          })
+          // cluster()'s repartitionByRange SAMPLES its input before the
+          // write consumes it, so without a persist the union+combine
+          // aggregate runs twice per refresh — the same double-compute
+          // foldDistinct persists `folded` to avoid (its comment cites
+          // +16 s measured at sf10).
+          val combinedP = combined.persist()
+          val newFiles =
+            try SnapshotLake.stageFiles(spark, mvRoot,
+              cluster(combinedP, spec, boundRows), Nil, Set(spec.pruneKey))
+            finally combinedP.unpersist()
+          (newFiles, overlap, untouched.size, range.getLong(2))
         }
-      } finally combinedP.unpersist()
+      }
       val overlapSet = overlap.map(_.rel).toSet
-      val nDelta = range.getLong(2)
       val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead",
         mvHead.schema, build = head => {
           guardAnchor(head, anchor, mvRoot)
           newFiles ++ head.map(_.files).getOrElse(Nil)
             .filterNot(f => overlapSet.contains(f.rel))
         }, lockExpiryMs)
-      Refresh(v, baseHead, nDelta, overlap.size, untouched.size)
+      Refresh(v, baseHead, nDelta, overlap.size, nUntouched)
     } finally {
-      // join + release the register-delta prep on every exit path (the
-      // zero-append early return and failures included); its own failure
-      // already surfaced through regJoin on the fold path, so it is
-      // swallowed here
-      regPrep.foreach(f =>
-        try f.get()._1.unpersist() catch { case _: Throwable => () })
-      regPool.foreach(_.shutdown())
       deltaState.unpersist()
       if (spec.distinctCols.nonEmpty) delta.unpersist()
     }

@@ -1107,40 +1107,12 @@ object SnapshotLake {
     val fs = fsOf(spark, root)
     val sortedBlooms = bloomCols.distinct.sorted
     // footer probes are independent driver-side reads — run them
-    // on a bounded pool instead of serially (a refresh that stages N
-    // files pays one footer open each; serial probes were the dominant
-    // commit constant in the incremental-rollup loop)
+    // concurrently instead of serially (a refresh that stages N files pays
+    // one footer open each; serial probes were the dominant commit
+    // constant in the incremental-rollup loop)
     val probed: Map[String, (Map[String, (Double, Double)], Long)] =
-      if (parts.size <= 1)
-        parts.map { case (p, rel, _) =>
-          rel -> footerProbe(spark, p, statsCols) }.toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, parts.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[
-            (String, (Map[String, (Double, Double)], Long))]] =
-            parts.toSeq.map { case (p, rel, _) =>
-              new java.util.concurrent.Callable[
-                (String, (Map[String, (Double, Double)], Long))] {
-                override def call() = rel -> footerProbe(spark, p, statsCols)
-              }
-            }
-          // unwrap ExecutionException so a probe failure surfaces as the
-          // SAME exception type/message the serial single-file path throws
-          pool.invokeAll(tasks.asJava).asScala.map { f =>
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause match {
-                  case null => e
-                  case c => c
-                }
-            }
-          }.toMap
-        } finally pool.shutdown()
-      }
+      graft.Concurrent.all(spark)(parts.map { case (p, rel, _) =>
+        () => rel -> footerProbe(spark, p, statsCols) }).toMap
     // pass 3: publish moves in walk order
     val staged = parts.map { case (p, relOut, len) =>
       val target = new Path(dataDir(root), relOut)
@@ -1910,20 +1882,12 @@ object SnapshotLake {
     // trip). A serving layer doing repeated lookups should additionally
     // cache loaded filters per (file, column); one-shot queries get the
     // parallel load.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val checks = statsKept.map { f =>
-      Future {
-        val keep = point.forall { case (c, v) =>
-          !f.bloomCols.contains(c) ||
-            loadBloom(fs, root, f.rel, c).forall(bloomHit(_, v))
-        }
-        (f, keep)
+    graft.Concurrent.all(spark)(statsKept.map { f =>
+      () => f -> point.forall { case (c, v) =>
+        !f.bloomCols.contains(c) ||
+          loadBloom(fs, root, f.rel, c).forall(bloomHit(_, v))
       }
-    }
-    Await.result(Future.sequence(checks), Duration.Inf)
-      .collect { case (f, true) => f }
+    }).collect { case (f, true) => f }
   }
 
   /** Bloom + stats pruned equality read: plan over only
@@ -2663,20 +2627,13 @@ object SnapshotLake {
     }
     if (keysByCol.isEmpty) return (envKept, envSkipped)
     val fs = fsOf(spark, root)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val checks = envKept.map { f =>
-      Future {
-        val keep = keysByCol.forall { case (pk, keys) =>
-          !f.bloomCols.contains(pk) ||
-            loadBloom(fs, root, f.rel, pk)
-              .forall(bf => keys.exists(bloomHit(bf, _)))
-        }
-        (f, keep)
+    val probed = graft.Concurrent.all(spark)(envKept.map { f =>
+      () => f -> keysByCol.forall { case (pk, keys) =>
+        !f.bloomCols.contains(pk) ||
+          loadBloom(fs, root, f.rel, pk)
+            .forall(bf => keys.exists(bloomHit(bf, _)))
       }
-    }
-    val probed = Await.result(Future.sequence(checks), Duration.Inf)
+    })
     val (kept, skipped) = probed.partition(_._2)
     (kept.map(_._1), envSkipped ++ skipped.map(_._1))
   }

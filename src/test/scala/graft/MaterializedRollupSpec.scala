@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -158,6 +160,63 @@ class MaterializedRollupSpec extends SparkSpec {
     intercept[Exception](MV.refresh(spark, base, mv, dspec))
     assert(spark.sharedState.cacheManager.isEmpty,
       "a failed refresh left frames cached")
+  }
+
+  test("a staging failure during the register fold rethrows the staging " +
+      "error, leaves nothing running, cached or staged, and the MV where " +
+      "it was; a rerun converges to the one-shot init") {
+    val (base, mv) = roots()
+    def withUid(df: DataFrame) =
+      df.withColumn("uid", (col("close") % 13).cast("long"))
+    val dspec = spec.copy(distinctCols = Seq("uid"), hllP = 8)
+    SnapshotLake.append(spark, base, withUid(bars(1, 200, 100.0)),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, dspec)
+    SnapshotLake.append(spark, base, withUid(bars(1, 100, 250.0)),
+      statsCols = Seq("bucket_ts")) // overlaps the MV's files
+    val head0 = SnapshotLake.manifest(spark, mv).version
+    val anchor0 = MV.lastRefreshedBase(spark, mv)
+    // corrupt the MV's rollup files in place (the corrupt-file technique
+    // of the register-count case, aimed at the other side): the rollup
+    // staging reads them and fails, while the register fold reads only
+    // the delta and the register lake
+    val files = SnapshotLake.manifest(spark, mv).files.map(f =>
+      java.nio.file.Paths.get(s"$mv/data/${f.rel}"))
+    val saved = files.map(p => p -> java.nio.file.Files.readAllBytes(p))
+    files.foreach(p => java.nio.file.Files.write(p, "not parquet".getBytes))
+    spark.catalog.clearCache()
+    val e = intercept[Exception](MV.refresh(spark, base, mv, dspec))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(chain.exists(m => files.exists(p =>
+      m.contains(p.getFileName.toString))),
+      s"not the staging error: ${chain.mkString(" <- ")}")
+    // drain first: a job start still queued on the bus reads as inactive
+    def idle = {
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark)
+      spark.sparkContext.statusTracker.getActiveJobIds.isEmpty
+    }
+    val t0 = System.currentTimeMillis
+    while (!idle && System.currentTimeMillis - t0 < 2000) Thread.sleep(20)
+    assert(idle, "a refresh job kept running after refresh threw")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed refresh left frames cached")
+    assert(SnapshotLake.manifest(spark, mv).version == head0)
+    assert(MV.lastRefreshedBase(spark, mv) == anchor0)
+    val stages = java.nio.file.Files.walk(java.nio.file.Paths.get(mv))
+    try assert(!stages.iterator.asScala.exists(
+      _.getFileName.toString.startsWith(".stage-")), "a stage dir was left")
+    finally stages.close()
+    // repair the files: the rerun folds the same delta (registers may
+    // already lead the anchor) and lands on the one-shot answer
+    saved.foreach { case (p, b) => java.nio.file.Files.write(p, b) }
+    MV.refresh(spark, base, mv, dspec)
+    val oneShot = TempDirs.create("mvoneshot") + "/mv"
+    MV.init(spark, base, oneShot, dspec)
+    val got = MV.readFinal(spark, mv, dspec)
+    val want = MV.readFinal(spark, oneShot, dspec)
+    assert(got.except(want).isEmpty && want.except(got).isEmpty,
+      "the rerun diverged from the one-shot init")
   }
 
   test("no-op refresh publishes nothing; zero-row append bumps only the " +

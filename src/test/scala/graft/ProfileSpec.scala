@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 import graft.operators.{Profile, Sketch}
 
@@ -62,6 +65,39 @@ class ProfileSpec extends SparkSpec {
     // sample-of-256 median of a uniform permutation lands near the true
     // median (rank error O(1/sqrt k))
     assert(math.abs(metric(rows, "v", "q50").get - n / 2.0) < n * 0.15)
+  }
+
+  test("a failed pass cancels its sibling passes: no job or helper " +
+      "thread outlives the throw") {
+    // `bad` (string: census + HLL passes) throws on its first row; `v`
+    // (double: census + quantile passes) sleeps per row, so the quantile
+    // pass alone would run for tens of seconds. One input partition: each
+    // pass's scan is one task, so the three never queue for cores.
+    val bad = udf { (i: Long) =>
+      if (i >= 0) throw new IllegalStateException("profile udf failed")
+      "x"
+    }
+    val slow = udf { (i: Long) => Thread.sleep(40); i.toDouble }
+      .asNondeterministic()
+    val frame = spark.range(0, 500, 1, 1)
+      .select(col("id"), slow(col("id")).as("v"), bad(col("id")).as("bad"))
+    val e = intercept[Exception](Profile.dataset(frame, keyCol = "id"))
+    val thrownAt = System.nanoTime
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("profile udf failed")),
+      s"not the UDF's error: $e")
+    // drain the listener bus first: a job start still queued there would
+    // read as "no active job"
+    def settled = {
+      ListenerBridge.drain(spark)
+      spark.sparkContext.statusTracker.getActiveJobIds.isEmpty
+    } &&
+      !Thread.getAllStackTraces.keySet.asScala.exists(t =>
+        t.isAlive && t.getName.startsWith("graft-concurrent-"))
+    // look once, 2 s after the throw: a pass still planning at the throw
+    // starts its job later, so an earlier look can miss it
+    Thread.sleep(math.max(0L, 2000L - (System.nanoTime - thrownAt) / 1000000))
+    assert(settled, "a profile pass kept running after Profile.dataset threw")
   }
 
   test("unknown profile column fails loudly") {

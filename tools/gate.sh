@@ -6,6 +6,8 @@
 #   1. sbt compile + full sbt test (live-PG spec included via the sidecar;
 #      if the sidecar cannot start, the spec cancels rather than fails and
 #      the gate records that)
+#   1a. one way to run concurrent driver work: no thread pool, Future or
+#      ExecutionContext in engine code outside graft.Concurrent
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -50,6 +52,22 @@ if [[ $SKIP_TESTS -eq 0 ]]; then
     TESTS=$(grep -Eo "Tests: succeeded [0-9]+, failed [0-9]+, canceled [0-9]+" "$LOG" | tail -1)
     note "TESTS FAILED: $TESTS"; fail=1
   fi
+fi
+
+# --- 1a. one way to run concurrent driver work -------------------------
+# Independent driver work runs through graft.Concurrent (cancel on first
+# failure, release, first cause); a hand-rolled pool elsewhere fails.
+note "one-way concurrency check"
+STRAY=$(git grep -nE 'java\.util\.concurrent\.(Executors|Callable|ExecutionException)|ExecutionContext|Await\.result|invokeAll' \
+  -- src/main ':!src/main/scala/graft/tools' \
+  ':!src/main/scala/graft/Concurrent.scala')
+if [[ -z "$STRAY" ]]; then
+  ONEWAY="ok"
+  note "concurrency: graft.Concurrent is the only pool"
+else
+  ONEWAY="FAILED: $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
+  echo "$STRAY" | tee -a "$LOG"
+  note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
 
 # --- 1b. repo benchmark build + tests ---------------------------------
@@ -121,11 +139,12 @@ fi
 
 # --- summary ----------------------------------------------------------
 python3 - "$TS" "$fail" "$ORACLE" "${TESTS:-unknown}" "${BENCH:-unknown}" \
-    "${PERFBENCH:-unknown}" <<'EOF'
+    "${PERFBENCH:-unknown}" "${ONEWAY:-unknown}" <<'EOF'
 import json, sys
-ts, fail, oracle, tests, bench, perfbench = sys.argv[1:7]
+ts, fail, oracle, tests, bench, perfbench, oneway = sys.argv[1:8]
 json.dump({"ts": ts, "pass": fail == "0", "tests": tests,
-           "perfbench": perfbench, "oracle": oracle, "bench": bench},
+           "perfbench": perfbench, "oneway": oneway, "oracle": oracle,
+           "bench": bench},
           open("target/gate_summary.json", "w"), indent=1)
 EOF
 note "summary -> target/gate_summary.json (pass=$((1-fail)))"
