@@ -116,11 +116,12 @@ object Bench {
     // own FIXED seed decorrelates which queries share a wall-clock
     // window while keeping runs reproducible.
     def sweep(seed: Long): Seq[(String, Option[Double])] =
-      new scala.util.Random(seed).shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
-        .map { case (name, fn) =>
+      new scala.util.Random(seed).shuffle(SparkEntry.queries.keys.toSeq.sorted)
+        .map { name =>
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          SparkEntry.run(spark, name, sfDir)(
+            _.write.format("noop").mode("overwrite").save())
           name -> Some((System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName} ${e.getMessage}")

@@ -24,10 +24,11 @@ object BenchOne {
     // SPARK_GRAFT_EXPLAIN=1: print the formatted physical plan once before
     // timing — the plan-audit loop ("explain and iterate") without a REPL.
     if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      SparkEntry.run(spark, name, sfDir)(_.explain("formatted"))
     for (i <- 1 to args.lift(1).map(_.toInt).getOrElse(3)) {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      SparkEntry.run(spark, name, sfDir)(
+        _.write.format("noop").mode("overwrite").save())
       println(f"[benchone] $name run$i: ${(System.nanoTime()-t0)/1e9}%.2f s")
     }
     spark.stop()

@@ -22,6 +22,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("a5_grouped_stats")(spark, "/root/testdata/sf0.001")
 
+  /** Run declared query `name` and hand its DataFrame to `action` — the
+    * one way `Verify`, `Bench` and `BenchOne` execute a query. Frames the
+    * query materialized for reuse ([[Reuse.persist]]) are released once
+    * `action` has returned or thrown, so a query leaves no cache entry.
+    */
+  def run[A](spark: SparkSession, name: String, sfDir: String)(
+      action: DataFrame => A): A =
+    Reuse.releasing(action(queries(name)(spark, sfDir)))
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = base ++
     graft.operators.CleaningQueries.queries ++

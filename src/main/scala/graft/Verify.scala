@@ -75,7 +75,7 @@ object Verify {
     if (shard.isDefined)
       Files.deleteIfExists(Paths.get(s"$outDir/verify_errors.json"))
     var attempted = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.keys.foreach { name =>
       if (!selected(name)) ()
       else
       // repartition(1), NOT coalesce(1): coalesce folds the query's
@@ -89,11 +89,18 @@ object Verify {
       if (resume && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))) ()
       else {
       attempted += 1
-      try fn(spark, sfDir)
-        .repartition(sys.env.getOrElse("SPARK_GRAFT_VERIFY_PARTS", "1").toInt)
-        .write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      val cache = spark.sharedState.cacheManager
+      val wasEmpty = cache.isEmpty
+      try {
+        SparkEntry.run(spark, name, sfDir)(_
+          .repartition(sys.env.getOrElse("SPARK_GRAFT_VERIFY_PARTS", "1").toInt)
+          .write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+        // a query owns what it caches: one that leaves a cache entry
+        // behind is a failure, not a warning in the log
+        if (wasEmpty && !cache.isEmpty) throw new IllegalStateException(
+          s"$name left cache entries behind")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types._
   * the IDENTICAL arithmetic: each product formed once ((double)aᵢ ·
   * (double)bᵢ — float→double widening is exact), then added left-to-
   * right — the same op sequence as products-array-then-fold, so every
-  * double is bit-equal (witnessed in VectorSpec) and the DuckDB oracles
-  * are untouched.
+  * double is bit-equal (the Column form is the test witness
+  * `graft.Witness.dot`/`norm2`, asserted in VectorSpec) and the DuckDB
+  * oracles are untouched.
   */
 object Dot {
   def dot(a: Column, b: Column): Column =

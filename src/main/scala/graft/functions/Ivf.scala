@@ -10,11 +10,10 @@ import org.apache.spark.sql.types._
 /** Native coarse-quantizer assignment for the IVF paths (SURVEY §2.10
   * ladder: custom Expression before UDFs/mapPartitions).
   *
-  * WHY native — two defects of the Column/HOF formulation
-  * ([[graft.operators.VectorOps.ivfAssignViaColumns]], kept as the
-  * equivalence witness), both of which get WORSE with codebook size,
-  * i.e. exactly at 100 TB where a real index runs thousands of coarse
-  * centroids:
+  * WHY native — two defects of the Column/HOF formulation (the test
+  * witness `graft.Witness.ivfAssign`), both of which get WORSE with
+  * codebook size, i.e. exactly at 100 TB where a real index runs
+  * thousands of coarse centroids:
   *
   *  1. the codebook rides the plan as a LITERAL `array(struct(...))` —
   *     at 16×64 doubles that is already a wall of text in every explain;

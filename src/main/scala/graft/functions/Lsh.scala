@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
 /** Native sign-random-projection LSH bucketing (SURVEY §2.10 ladder —
   * same reasoning as [[PqEncode]]/[[IvfAssignTopN]]).
   *
-  * The Column formulation ([[graft.operators.VectorOps.lshBucketViaColumns]],
-  * kept as the equivalence witness) folds `aggregate(sequence(1, dims))`
+  * The Column formulation (the sign bits of
+  * [[graft.operators.VectorOps.planeDot]], test witness
+  * `graft.Witness.lshBucket`) folds `aggregate(sequence(1, dims))`
   * once PER PLANE, and because the hyperplane coefficient expression
   * references the lambda variable it is NOT constant-folded — every
   * coefficient is re-derived interpreted, per row, per plane, per dim,

@@ -13,12 +13,12 @@ import org.apache.spark.sql.types._
   * before UDFs, never instead of built-ins that already fit).
   *
   * WHY native: the Column formulation of PQ encode/ADC
-  * ([[graft.operators.VectorOps.pqTopKViaColumns]]) leans on higher-order
+  * (the test witness `graft.Witness.pqTopK`) leans on higher-order
   * functions (`transform`/`array_sort`/`aggregate`), which evaluate their
   * lambdas INTERPRETED, per element, with intermediate array allocations —
   * measured ~3.6 s for encode+ADC over just 5 k × 64-dim vectors. A naive
   * "flattened" Column rewrite is far worse (65× — subtrees re-evaluate per
-  * reference; see `tools/PqProf`). Generated Java with loop-local
+  * reference). Generated Java with loop-local
   * accumulators evaluates each value exactly once: measured ~7× faster
   * warm on the same pass, and it participates in whole-stage codegen.
   *

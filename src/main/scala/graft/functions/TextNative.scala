@@ -31,8 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation EXACTLY — same single-space tokenizer (split on ' ' then
   * drop empties), same md5-prefix 60-bit hash (first 15 hex chars, i.e.
   * first 8 big-endian bytes >>> 4), same fold orders, same integer
-  * arithmetic. The HOF chains survive as witnesses in
-  * [[graft.operators.TextWitness]] and the specs assert equality on the
+  * arithmetic. The HOF chains survive only as test witnesses
+  * (`graft.Witness`), and the specs assert equality on the
   * real corpus plus adversarial synthetics; the DuckDB oracles are
   * unchanged and keep hash-matching.
   */
@@ -834,7 +834,7 @@ object CharLmScore {
   * slot ids (prev·38 + next) in document order, from the same one-pass
   * code-point walk — feeds the char-LM training explode without the
   * split("")→transform→slice→zip_with chain. Bit-equal to
-  * `TextOps.lmSlots` (witnessed in DedupSpec).
+  * the HOF slot chain `graft.Witness.lmSlots` (asserted in DedupSpec).
   */
 case class CharLmSlots(child: Expression) extends UnaryExpression {
 

@@ -26,7 +26,8 @@ import org.apache.spark.sql.types._
   * pass at any corpus size — the 100 TB form of "rank and keep k".
   *
   * Semantics match the window formulation EXACTLY for the cases the
-  * engine uses (asserted in VectorSpec): keep the k entries with the
+  * engine uses (asserted in VectorSpec and PropertySpec against the window
+  * witness `graft.Witness.topKPerQuery`): keep the k entries with the
   * highest (score, then LOWEST id on ties) and emit them best-first, so
   * `posexplode + 1` reproduces `row_number() ORDER BY score DESC, id`.
   *

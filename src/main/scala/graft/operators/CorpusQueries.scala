@@ -26,7 +26,12 @@ object CorpusQueries {
     // bound attribute instead of re-tokenizing per line (the wordNgrams
     // CSE cliff).
     "c2_line_dedup" -> ((s, dir) => {
-      val lined = Tables.documents(s, dir)
+      // lineDedup consumes its input three times (line census, keep join,
+      // final doc join) and Catalyst re-evaluates this tokenize + re-line
+      // projection once per consumer — materialize it once, released by
+      // whoever runs the query ([[graft.Reuse]]; same trade-off note as
+      // Skew.chunkedSeries' marked frame).
+      val lined = graft.Reuse.persist(Tables.documents(s, dir)
         .withColumn("__tk", TextNative.tokens(col("text")))
         .select(col("doc_id"),
           when(size(col("__tk")) === 0, lit(""))
@@ -38,15 +43,7 @@ object CorpusQueries {
                   ((size(col("__tk")) - lit(1)) / lit(8)).cast("int")),
                 i => array_join(
                   slice(col("__tk"), i * lit(8) + lit(1), lit(8)), " ")),
-              "\n")).as("mtext"))
-        // lineDedup consumes its input three times (line census, keep
-        // join, final doc join) and Catalyst re-evaluates this tokenize +
-        // re-line projection once per consumer — materialize it once.
-        // persist, not localCheckpoint: the frame is corpus-sized, and a
-        // local checkpoint's executor-pinned, lineage-truncated blocks
-        // make executor loss fatal at cluster scale (same trade-off note
-        // as Skew.chunkedSeries' marked frame).
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              "\n")).as("mtext")))
       Dedup.lineDedup(lined, col("mtext"), col("doc_id"), minDocs = 2)
     }),
     // C3 — incremental exact-dedup ingest against a persisted corpus

@@ -83,28 +83,18 @@ object Dedup {
     * and [[simhash]] by construction: same tokenizer, same shingle
     * hashing mod P, same affine maps, same bit-vote fold (asserted in
     * StreamingSpec). Pure per-row expressions — map-only, no state, so
-    * it drops into any streaming plan.
-    *
-    * Same alias-once discipline as the batch forms: token/shingle/hash
-    * arrays live in their own projections so the n minhash lambdas and
-    * `bits` vote folds never re-tokenize (Catalyst does not CSE across
-    * lambda boundaries).
+    * it drops into any streaming plan: one compiled minhash pass and one
+    * compiled stats pass per document.
     */
   def withSignatures(df: DataFrame, text: Column, n: Int = 16,
       shingleN: Int = 3, bits: Int = 60): DataFrame = {
-    require(bits <= 60)
     val staged = df
       .withColumn("__sig", TextNative.minhashSig(text, shingleN, n))
       .withColumn("__stats", TextNative.stats(text, TextOps.EnStopwords))
     val mhCols = (0 until n).map(i =>
       element_at(col("__sig"), i + 1).as(f"mh$i%02d"))
-    // the 60-bit kernel simhash == the bits-bold fold only at bits = 60;
-    // narrower signatures keep the witness fold (never used on hot paths)
-    val simhashWord =
-      if (bits == 60) coalesce(col("__stats").getField("simhash"), lit(0L))
-      else TextWitness.simhash(text, bits)
-    staged.select(
-      (df.columns.map(col).toSeq ++ mhCols) :+ simhashWord.as("simhash"): _*)
+    staged.select((df.columns.map(col).toSeq ++ mhCols) :+
+      simhashBits(col("__stats"), bits).as("simhash"): _*)
   }
 
   /** D2b — LSH candidate pairs: band the signature (bands × rowsPerBand
@@ -552,27 +542,28 @@ object Dedup {
 
   /** D3 — SimHash per document, MAP-ONLY: each token occurrence votes ±1
     * on every bit of its 60-bit md5-prefix hash; bit b of the result is set
-    * when the vote sum is positive (⟺ 2·#set > n). Every bit is a fold over
-    * the per-row token-hash array — no explode, no groupBy, zero shuffles
-    * (the previous construction exploded tokens × bits into two groupBys).
-    * 60 bits (not 64): the md5-prefix hash is 15 hex chars so it stays
-    * positive in a signed int64 on both engines; the 64-bit construction
-    * would need unsigned arithmetic DuckDB's BIGINT can't mirror.
-    *
-    * The hash array is materialized in its own projection first — Catalyst
-    * does not CSE across lambda boundaries, so inlining it into all `bits`
-    * fold lambdas would re-tokenize the text per bit.
+    * when the vote sum is positive (⟺ 2·#set > n). The votes are folded in
+    * the one compiled [[TextNative.stats]] pass per document — no explode,
+    * no groupBy, zero shuffles. 60 bits (not 64): the md5-prefix hash is
+    * 15 hex chars so it stays positive in a signed int64 on both engines;
+    * the 64-bit construction would need unsigned arithmetic DuckDB's
+    * BIGINT can't mirror. `bits` < 60 keeps the low `bits` votes
+    * ([[simhashBits]]); the per-bit vote fold is the test witness
+    * (`graft.Witness.simhash`, TextNativeSpec).
     */
-  def simhash(df: DataFrame, text: Column, id: Column, bits: Int = 60): DataFrame = {
-    require(bits <= 60)
-    // 60-bit default = one compiled TextStats pass (votes folded alongside
-    // the rest of the per-doc census); narrower widths keep the HOF fold.
-    val word =
-      if (bits == 60)
-        coalesce(TextNative.stats(text, TextOps.EnStopwords).getField("simhash"),
-          lit(0L))
-      else TextWitness.simhash(text, bits)
-    df.select(id.as("doc_id"), word.as("simhash"))
+  def simhash(df: DataFrame, text: Column, id: Column, bits: Int = 60): DataFrame =
+    df.select(id.as("doc_id"),
+      simhashBits(TextNative.stats(text, TextOps.EnStopwords), bits).as("simhash"))
+
+  /** The `bits`-bit simhash word from a [[TextNative.stats]] struct: its
+    * 60-bit word (votes folded in the one compiled per-doc pass) masked to
+    * the low `bits` bits. Each bit is an independent majority vote, so the
+    * mask IS the `bits`-bit simhash; null text hashes to 0.
+    */
+  private[graft] def simhashBits(stats: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 60, s"simhash bits must be in [1, 60], got $bits")
+    val word = coalesce(stats.getField("simhash"), lit(0L))
+    if (bits == 60) word else word.bitwiseAND(lit((1L << bits) - 1))
   }
 
   /** D3b — near-dup pair histogram by Hamming distance: band the simhash

@@ -103,15 +103,16 @@ object Skew {
     // repartition and the tail-rank window — once per consumer (measured on
     // w12: 4 parquet scans, 26 exchanges). Materialize it once; every
     // consumer then reads the materialized partitions instead of recomputing
-    // the corpus pipeline. persist(MEMORY_AND_DISK), NOT localCheckpoint,
-    // for this CORPUS-sized frame: a local checkpoint truncates lineage and
-    // pins blocks to executors, so one lost executor on a preemptible
-    // cluster fails the whole job; the persist keeps lineage intact (a lost
-    // partition recomputes) at the same reuse benefit. The dimension-sized
-    // census below keeps its localCheckpoint — there the point is AQE
-    // size discovery and the blocks are trivially rebuilt.
-    val marked = base.withColumn("__from_end", row_number().over(fromEnd))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the corpus pipeline. A persist ([[graft.Reuse]]: released by whoever
+    // runs the action), NOT localCheckpoint, for this CORPUS-sized frame: a
+    // local checkpoint truncates lineage and pins blocks to executors, so
+    // one lost executor on a preemptible cluster fails the whole job; the
+    // persist keeps lineage intact (a lost partition recomputes) at the
+    // same reuse benefit. The dimension-sized census below keeps its
+    // localCheckpoint — there the point is AQE size discovery and the
+    // blocks are trivially rebuilt.
+    val marked = graft.Reuse.persist(
+      base.withColumn("__from_end", row_number().over(fromEnd)))
 
     // A chunk's warm-up context is the last `halo` rows BEFORE its first
     // row in series order — which span SEVERAL preceding chunks when those

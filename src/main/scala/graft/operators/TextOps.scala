@@ -15,8 +15,9 @@ import graft.functions.{TextHash, TextNative}
   * the ratio arithmetic and its null semantics stay in Column land as the
   * exact when/otherwise shapes the DuckDB mirrors replay. The original
   * higher-order-function chains — interpreted per row, measured ~15 ms of
-  * CPU per 300-char doc across a 5-expression quality pass — survive in
-  * [[TextWitness]] and the specs assert bit-equality field by field.
+  * CPU per 300-char doc across a 5-expression quality pass — survive only
+  * as test witnesses (`graft.Witness`), and the specs assert bit-equality
+  * field by field.
   * A quality-score pass over 100 TB of documents remains a single map-only
   * scan; it just stops paying interpreted-tree prices for it.
   */
@@ -139,9 +140,7 @@ object TextOps {
     * P = 2^31−1. Detects exact token-sequence duplicates regardless of
     * whitespace/formatting; cheap enough to store as a content key.
     */
-  def fingerprint(text: Column, p: Long = 2147483647L): Column =
-    if (p == 2147483647L) stats(text).getField("fingerprint")
-    else TextWitness.fingerprint(text, p)
+  def fingerprint(text: Column): Column = stats(text).getField("fingerprint")
 
   // ------------------------------------------------------------------
   // Repetition / shape filters (the Gopher-rule family)
@@ -151,16 +150,16 @@ object TextOps {
     * time repetition signal behind the classic "duplicate n-grams" quality
     * rule: boilerplate and generation loops push it toward 1 while natural
     * text stays near 0. One compiled pass per row — no explode, no shuffle.
+    * `n` is 2 or 3: the one-pass stats kernel counts exactly those.
     */
-  def repeatedNgramRatio(text: Column, n: Int): Column = n match {
-    case 2 | 3 =>
-      val s = stats(text)
-      val total = s.getField(s"rep${n}_total")
-      val dist = s.getField(s"rep${n}_distinct")
-      when(total > 0,
-        (total - dist).cast("double") / total.cast("double"))
-        .otherwise(lit(0.0))
-    case _ => TextWitness.repeatedNgramRatio(text, n)
+  def repeatedNgramRatio(text: Column, n: Int): Column = {
+    require(n == 2 || n == 3, s"repeatedNgramRatio supports n = 2 or 3, got $n")
+    val s = stats(text)
+    val total = s.getField(s"rep${n}_total")
+    val dist = s.getField(s"rep${n}_distinct")
+    when(total > 0,
+      (total - dist).cast("double") / total.cast("double"))
+      .otherwise(lit(0.0))
   }
 
   /** Mean characters per whitespace token (0 for empty docs). Gibberish
@@ -263,26 +262,6 @@ object TextOps {
     */
   private val LmClasses = 38
 
-  private def charClasses(t: Column): Column =
-    transform(filter(split(lower(t), ""), c => c =!= ""), { c =>
-      val a = ascii(c)
-      when(a >= 97 && a <= 122, a - 96)
-        .when(a >= 48 && a <= 57, a - 21) // 27 + (a - 48)
-        .when(a === 32, lit(37))
-        .otherwise(lit(0))
-    })
-
-  /** Bigram slot ids (prev·38 + next) in document order; empty below 2
-    * chars.
-    */
-  private[operators] def lmSlots(t: Column): Column = {
-    val cls = charClasses(t)
-    when(size(cls) >= 2,
-      zip_with(slice(cls, lit(1), size(cls) - 1), slice(cls, lit(2), size(cls) - 1),
-        (x, y) => x * LmClasses + y))
-      .otherwise(array().cast("array<int>"))
-  }
-
   /** X11 — language-model quality scoring, the perplexity-filter shape
     * every LLM-corpus pipeline runs (CCNet/KenLM-style): train a smoothed
     * character-bigram model on the corpus itself, then score every doc
@@ -321,7 +300,8 @@ object TextOps {
   def trainCharLm(df: DataFrame, text: Column): Array[Double] = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val nSlots = LmClasses * LmClasses
-    // native one-pass slot walk (CharLmSlots, witnessed == lmSlots)
+    // native one-pass slot walk (CharLmSlots; the HOF slot chain is its
+    // test witness)
     val slots = ColumnBridge.column(graft.functions.CharLmSlots(
       ColumnBridge.expression(coalesce(text.cast("string"), lit("")))))
     val counts = df.select(explode(slots).as("slot"))
@@ -340,8 +320,8 @@ object TextOps {
 
   /** SCORE against a frozen model: ONE native code-point pass per doc
     * ([[graft.functions.CharLmScore]] — model in the expression object,
-    * left fold in document order), bit-equal to [[TextWitness
-    * .scoreCharLm]]'s HOF formulation, which the DuckDB oracle mirrors.
+    * left fold in document order), bit-equal to the HOF formulation the
+    * DuckDB oracle mirrors (`graft.Witness.scoreCharLm` in DedupSpec).
     */
   def scoreCharLm(df: DataFrame, text: Column, id: Column,
       model: Array[Double]): DataFrame = {
@@ -382,102 +362,4 @@ object TextOps {
         regexp_replace(text, EmailRe, "[EMAIL]"),
         Ipv4Re, "[IP]"),
       PhoneRe, "[PHONE]")
-}
-
-/** The legacy higher-order-function formulations, kept VERBATIM as
-  * bit-equality witnesses for the native kernels (TextNativeSpec asserts
-  * native == witness on the real corpus plus null/empty/multi-space/unicode
-  * synthetics — the same discipline as `lshBucketViaColumns` for
-  * [[graft.functions.LshBucket]]). Interpreted per row; do not use on hot
-  * paths.
-  */
-object TextWitness {
-
-  /** The HOF slot chain (split→classify→zip), the shape the DuckDB
-    * oracle mirrors — witness for the native
-    * [[graft.functions.CharLmSlots]].
-    */
-  def lmSlots(t: Column): Column = TextOps.lmSlots(t)
-
-  /** The HOF formulation of frozen-model char-LM scoring (the shape the
-    * DuckDB oracle mirrors) — kept VERBATIM as the bit-equality witness
-    * for the native [[graft.functions.CharLmScore]] kernel.
-    */
-  def scoreCharLm(df: DataFrame, text: Column, id: Column,
-      model: Array[Double]): DataFrame = {
-    require(model.length == 38 * 38,
-      s"char-LM model must have 1444 slots, got ${model.length}")
-    val lp = typedlit(model.toSeq)
-    val scored = df.select(id.as("doc_id"), TextOps.lmSlots(text).as("__sl"))
-    val sum = aggregate(col("__sl"), lit(0.0),
-      (acc, s) => acc + element_at(lp, s + 1))
-    scored.select(col("doc_id"),
-      size(col("__sl")).cast("long").as("n_bigrams"),
-      when(size(col("__sl")) > 0,
-        -sum / size(col("__sl"))).as("nll"))
-  }
-
-  def tokenCount(text: Column): Column = size(TextHash.tokens(text))
-
-  def stopwordRatio(text: Column): Column = {
-    val toks = TextHash.tokens(text)
-    val stops = filter(toks, t => t.isInCollection(TextOps.EnStopwords))
-    when(size(toks) > 0, size(stops).cast("double") / size(toks).cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  def qualityScore(text: Column): Column = {
-    val toks = TextHash.tokens(text)
-    val n = size(toks).cast("double")
-    val lenScore = least(lit(1.0), n / lit(50.0))
-    val alphaRatio =
-      size(filter(toks, t => t.rlike("^[a-z]+$"))).cast("double") / n
-    val diversity = size(array_distinct(toks)).cast("double") / n
-    val stopCloseness =
-      lit(1.0) - abs(stopwordRatio(text) - lit(0.4))
-    when(n > 0,
-      (lenScore + alphaRatio + diversity + stopCloseness) * lit(0.25))
-      .otherwise(lit(0.0))
-  }
-
-  def fingerprint(text: Column, p: Long = 2147483647L): Column =
-    aggregate(
-      TextHash.tokens(text),
-      lit(0L),
-      (acc, t) => (acc * lit(31L) + TextHash.tokenHash(t) % lit(p)) % lit(p))
-
-  def repeatedNgramRatio(text: Column, n: Int): Column = {
-    val ng = TextHash.wordNgrams(TextHash.tokens(text), n)
-    val m = size(ng)
-    when(m > 0,
-      (m - size(array_distinct(ng))).cast("double") / m.cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  def meanWordLength(text: Column): Column = {
-    val tk = TextHash.tokens(text)
-    when(size(tk) > 0,
-      aggregate(tk, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        size(tk).cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  def symbolRatio(text: Column): Column = {
-    val total = length(text)
-    val clean = length(regexp_replace(text, "[^a-z0-9 ]", ""))
-    when(total > 0,
-      (total - clean).cast("double") / total.cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  /** Simhash word over the token hashes — the fold from `Dedup.simhash`. */
-  def simhash(text: Column, bits: Int = 60): Column = {
-    val hs = transform(TextHash.tokens(text), t => TextHash.tokenHash(t))
-    val n = size(hs)
-    (0 until bits).map { b =>
-      val nSet = aggregate(hs, lit(0L),
-        (acc, h) => acc + shiftright(h, b).bitwiseAND(lit(1L)))
-      when(nSet * lit(2) > n, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 }

@@ -43,8 +43,8 @@ object TextQueries {
         col("doc_id"),
         TextOps.fingerprint(col("text")).as("fp"))),
     "x5_normalized_fp" -> ((s, dir) => {
-      // one-walk kernel; the composed normalizeText+fingerprint chain
-      // survives as the bit-equality witness (TextWitness / TextNativeSpec)
+      // one-walk kernel; TextNativeSpec asserts it equals the composed
+      // normalizeText + fingerprint chain
       val nf = TextOps.normalizedFingerprint(col("text"))
       Tables.documents(s, dir).select(
         col("doc_id"),

@@ -164,10 +164,11 @@ object VectorIndex {
       probed: Seq[Long]): DataFrame =
     codes(spark, idx).filter(col("cent_id").isin(probed: _*))
 
-  /** IVF-PQ-refine top-k served FROM the persisted index: probe lists →
-    * partition-pruned codes read → ADC shortlist (heap top-k) → exact
-    * re-rank against `corpus`. Bit-identical to
-    * [[VectorOps.ivfPqTopK]] on the same quantizers.
+  /** IVF-PQ-refine top-k served FROM the persisted index: the same
+    * probe → ADC shortlist → exact re-rank as [[VectorOps.ivfPqTopK]]
+    * (one shared step, `VectorOps.ivfPqRefine`), with the candidates read
+    * from the partition-pruned codes table instead of encoded per run —
+    * bit-identical on the same quantizers.
     *
     * The probed-list collect is `queries × nProbe` ids — the query set is
     * broadcast-small by contract (every top-k path broadcasts it), so
@@ -175,25 +176,15 @@ object VectorIndex {
     * pruning.
     */
   def topK(queries: DataFrame, corpus: DataFrame, idx: Index, k: Int,
-      nProbe: Int = 4, shortlist: Int = 100): DataFrame = {
-    val spark = queries.sparkSession
-    val probes = VectorOps.ivfAssign(queries, idx.coarse, nProbe)
-      .select(col("cent_id"), col("vec_id").as("query_id"),
-        col("embedding").as("qv"), col("__n2").as("__n2q"))
-    val probed = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val inv = probedCodes(spark, idx, probed)
-      .select(col("cent_id"), col("vec_id").as("neighbor_id"), col("codes"))
-    val cand = VectorOps.topKPerQuery(
-      probes.join(inv, Seq("cent_id"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          Pq.adcCosine(col("codes"), col("qv"), col("__n2q"), idx.cbs)
-            .as("approx_cosine")),
-      shortlist, "approx_cosine")
-      .select(col("query_id"), col("neighbor_id"))
-    VectorOps.rerankExact(queries, corpus, k, cand)
-  }
+      nProbe: Int = 4, shortlist: Int = 100): DataFrame =
+    VectorOps.ivfPqRefine(queries, corpus, k, idx.coarse, idx.cbs, nProbe,
+        shortlist) { probes =>
+      val probed = probes.select("cent_id").distinct()
+        .collect().map(_.getLong(0)).toSeq
+      probedCodes(queries.sparkSession, idx, probed)
+        .select(col("cent_id"), col("vec_id").as("neighbor_id"),
+          col("codes").as("__codes"))
+    }
 
   /** Append new vectors: encode with the STORED codebooks (no retraining)
     * and land them in the same partition layout. Idempotence is the

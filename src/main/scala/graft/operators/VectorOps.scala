@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Pq
+
 /** Vector similarity operators over embedding columns (`array<float>`):
   * cosine similarity, brute-force top-k, random-hyperplane LSH bucketing,
   * blocked near-duplicate pairs.
@@ -22,26 +24,17 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   /** Bit-exact dot product: one compiled loop forming each product once
-    * and adding left-to-right — the identical op sequence as the legacy
-    * products-array-then-fold, which survives as [[dotWitness]]
-    * (VectorSpec asserts bit-equality; the HOF form is two interpreted
-    * CodegenFallback lambdas and was the pair-stage hot spot).
+    * and adding left-to-right — the identical op sequence as the
+    * products-array-then-fold Column form (`graft.Witness.dot` in the
+    * tests; VectorSpec asserts bit-equality).
     */
   def dot(a: Column, b: Column): Column = graft.functions.Dot.dot(a, b)
 
-  /** The legacy HOF formulation, kept as the bit-equality witness. */
-  private[graft] def dotWitness(a: Column, b: Column): Column =
-    aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"), _ * _),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Squared L2 norm — dot(a, a): each v·v formed once and added in index
-    * order, the identical op sequence as the legacy fused fold (kept as
-    * [[norm2Witness]]; bit-equality in VectorSpec).
+    * order, the identical op sequence as the fused fold
+    * (`graft.Witness.norm2`; bit-equality in VectorSpec).
     */
   def norm2(a: Column): Column = graft.functions.Dot.dot(a, a)
-
-  private[graft] def norm2Witness(a: Column): Column =
-    aggregate(a.cast("array<double>"), lit(0.0), (acc, v) => acc + v * v)
 
   /** Cosine similarity — dot / (sqrt(n2a) * sqrt(n2b)). try_divide: an
     * all-zero vector yields NULL, not an ANSI DIVIDE_BY_ZERO job failure
@@ -68,7 +61,10 @@ object VectorOps {
   def planeCoef(p: Int, dims: Int)(d: Column): Column =
     (lit(1103515245L) * (lit(p.toLong * dims) + d) + lit(12345L)) % lit(2001L) - lit(1000L)
 
-  /** Signed projection of `v` onto hyperplane `p` (fold over dims). */
+  /** Signed projection of `v` onto hyperplane `p` (fold over dims) — the
+    * Column form of one [[lshBucket]] projection, the shape the oracle
+    * mirrors.
+    */
   def planeDot(v: Column, p: Int, dims: Int): Column =
     aggregate(sequence(lit(1), lit(dims)), lit(0.0), (acc, i) =>
       acc + element_at(v.cast("array<double>"), i) *
@@ -76,22 +72,12 @@ object VectorOps {
 
   /** LSH bucket id from `planes` hyperplane sign bits — the native
     * codegen'd [[graft.functions.LshBucket]]: coefficient planes live in
-    * the expression object and the projections run as generated loops
-    * (the Column form re-derives every coefficient interpreted, per row ×
-    * plane × dim, because the coef expression references the fold's
-    * lambda variable and so never constant-folds). Bit-equal to
-    * [[lshBucketViaColumns]] (VectorSpec; v2/v3 oracles).
+    * the expression object and the projections run as generated loops.
+    * Bit-equal to the [[planeDot]] sign-bit sum (`graft.Witness.lshBucket`
+    * in VectorSpec; v2/v3 oracles).
     */
   def lshBucket(v: Column, planes: Int, dims: Int): Column =
     graft.functions.Lsh.bucket(v, planes, dims)
-
-  /** The Column formulation of [[lshBucket]] — the equivalence witness
-    * and the oracle's shape.
-    */
-  private[graft] def lshBucketViaColumns(v: Column, planes: Int, dims: Int): Column =
-    (0 until planes)
-      .map(p => when(planeDot(v, p, dims) > 0, lit(1L << p)).otherwise(lit(0L)))
-      .reduce(_ + _)
 
   /** Per-query top-k WITHOUT a global sort: [[graft.functions.TopKByScore]]
     * — a bounded-heap native aggregate — keeps k entries per (query,
@@ -102,8 +88,8 @@ object VectorOps {
     * every scored row — measured at a 10 M-vector ADC scan the sort
     * dominated the whole pass; the aggregate streams it in one pass.
     * Output is identical (same rows, ranks, tie-breaks — asserted against
-    * [[topKPerQueryViaWindows]] in VectorSpec; the v1-v7 oracles pin it
-    * end-to-end).
+    * `graft.Witness.topKPerQuery` in VectorSpec and PropertySpec; the
+    * v1-v8 oracles pin it end-to-end).
     */
   private[graft] def topKPerQuery(scored: DataFrame, k: Int, scoreCol: String): DataFrame =
     scored.groupBy("query_id")
@@ -112,44 +98,61 @@ object VectorOps {
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("neighbor_id"), col("col.score").as(scoreCol))
 
-  /** The window formulation of [[topKPerQuery]] — the independent
-    * equivalence witness (and the shape the DuckDB oracles use).
-    */
-  private[graft] def topKPerQueryViaWindows(scored: DataFrame, k: Int,
-      scoreCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col(scoreCol).desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col(scoreCol))
-  }
+  // ------------------------------------------------------------------
+  // Filter-and-refine: every top-k path below is a candidate generator
+  // handed to ONE core. The generator decides which (query, candidate)
+  // pairs meet — a broadcast cross join, an equi-join on an LSH bucket or
+  // an IVF list, or a fetched shortlist — and the scorer is either the
+  // exact staged-norm cosine or ADC over PQ codes. Column contract:
+  // probes carry (query_id, qv, __n2q[, key]); candidates carry
+  // (neighbor_id[, key]) plus (cemb, __n2c) for the exact scorer or
+  // __codes for ADC.
 
-  /** [[bruteTopK]] with the window-ranked tail — for the topKPerQuery
-    * equivalence spec only.
+  /** How a met (query, candidate) pair is scored, and the score column's
+    * name in the output.
     */
-  private[graft] def bruteTopKViaWindows(queries: DataFrame, corpus: DataFrame,
-      k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        norm2(col("embedding")).as("__n2q")))
-    val joined = corpus
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("__n2c"))
-      .crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosineStaged(col("qv"), col("embedding"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-    topKPerQueryViaWindows(joined, k, "cosine")
+  private final case class Score(name: String, value: Column)
+
+  /** Exact staged-norm cosine — bit-identical across every path that uses
+    * it, so a refine re-rank scores a pair exactly as [[bruteTopK]] does.
+    */
+  private val Exact = Score("cosine",
+    cosineStaged(col("qv"), col("cemb"), col("__n2q"), col("__n2c")))
+
+  /** ADC approximate cosine from the candidate's PQ codes
+    * ([[graft.functions.PqAdcCosine]]).
+    */
+  private def adc(cbs: Pq.Codebooks) = Score("approx_cosine",
+    Pq.adcCosine(col("__codes"), col("qv"), col("__n2q"), cbs))
+
+  /** The query side, staged once: id, vector, squared norm. */
+  private def stagedQueries(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+      norm2(col("embedding")).as("__n2q"))
+
+  /** Raw-vector candidates for the exact scorer, norm staged per row. */
+  private def exactCands(corpus: DataFrame, cols: Column*): DataFrame =
+    corpus.select(Seq(col("vec_id").as("neighbor_id"), col("embedding").as("cemb"),
+      norm2(col("embedding")).as("__n2c")) ++ cols: _*)
+
+  /** THE core: meet `cands` with `probes` (cross join when `on` is None,
+    * else an equi-join on that key), drop self-pairs, score, keep the top
+    * k per query. `distinct` collapses repeated (query, candidate) pairs
+    * before ranking.
+    */
+  private def filterRefine(probes: DataFrame, cands: DataFrame,
+      on: Option[String], score: Score, k: Int,
+      distinct: Boolean = false): DataFrame = {
+    val met = on.fold(cands.crossJoin(probes))(key => cands.join(probes, Seq(key)))
+    val pairs = met.filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), score.value.as(score.name))
+    topKPerQuery(if (distinct) pairs.distinct() else pairs, k, score.name)
   }
 
   /** Brute-force cosine top-k: broadcast the query set, one corpus pass,
     * per-query ranking (ties broken by neighbor id).
     */
-  def bruteTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        norm2(col("embedding")).as("__n2q")))
+  def bruteTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
     // NOTE on the staged corpus norm: whole-stage codegen fuses this
     // projection into the join's per-pair consume, so __n2c actually
     // re-folds once per (row, query) — an exchange here would make the
@@ -159,34 +162,18 @@ object VectorOps {
     // the full corpus. The PQ paths get the exchange instead — their
     // codes are 32x smaller (see pqTopK). The 100 TB form of staging for
     // raw vectors is storing the norm as a table column at write time.
-    val joined = corpus
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("__n2c"))
-      .crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosineStaged(col("qv"), col("embedding"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-    topKPerQuery(joined, k, "cosine")
-  }
+    filterRefine(broadcast(stagedQueries(queries)), exactCands(corpus),
+      None, Exact, k)
 
   /** LSH-bucketed top-k: both sides keyed by bucket, equi-join, rank within
     * the probe's bucket only. Recall < 1 by construction; the scale path.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      planes: Int, dims: Int): DataFrame = {
-    val qb = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      norm2(col("embedding")).as("__n2q"),
-      lshBucket(col("embedding"), planes, dims).as("bucket"))
-    val cb = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"),
-      norm2(col("embedding")).as("__n2c"),
-      lshBucket(col("embedding"), planes, dims).as("bucket"))
-    val joined = qb.join(cb, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineStaged(col("qv"), col("embedding"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-    topKPerQuery(joined, k, "cosine")
-  }
+      planes: Int, dims: Int): DataFrame =
+    filterRefine(
+      stagedQueries(queries).withColumn("bucket", lshBucket(col("qv"), planes, dims)),
+      exactCands(corpus, lshBucket(col("embedding"), planes, dims).as("bucket")),
+      Some("bucket"), Exact, k)
 
   /** Multi-probe LSH top-k: the probe side also visits every bucket at
     * Hamming distance 1 from its own (flip each plane bit) — recall
@@ -197,86 +184,60 @@ object VectorOps {
     */
   def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int, dims: Int): DataFrame = {
-    val qb0 = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      norm2(col("embedding")).as("__n2q"),
-      lshBucket(col("embedding"), planes, dims).as("bucket0"))
-    val probes = qb0.select(col("query_id"), col("qv"), col("__n2q"), col("bucket0"),
-      explode(array((lit(0L) +: (0 until planes).map(p => lit(1L << p))): _*))
-        .as("flip"))
+    // the bucket is computed before the explode so it runs once per
+    // query, not once per flip
+    val probes = stagedQueries(queries)
+      .withColumn("bucket0", lshBucket(col("qv"), planes, dims))
+      .select(col("query_id"), col("qv"), col("__n2q"), col("bucket0"),
+        explode(array((lit(0L) +: (0 until planes).map(p => lit(1L << p))): _*))
+          .as("flip"))
       .select(col("query_id"), col("qv"), col("__n2q"),
         col("bucket0").bitwiseXOR(col("flip")).as("bucket"))
-    val cb = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"),
-      norm2(col("embedding")).as("__n2c"),
-      lshBucket(col("embedding"), planes, dims).as("bucket"))
-    val joined = probes.join(cb, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineStaged(col("qv"), col("embedding"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-      .distinct()
-    topKPerQuery(joined, k, "cosine")
+    filterRefine(probes,
+      exactCands(corpus, lshBucket(col("embedding"), planes, dims).as("bucket")),
+      Some("bucket"), Exact, k, distinct = true)
   }
 
-  /** Driver-side deterministic k-means codebook (Lloyd, FIXED iteration
-    * count, no randomness — reproducible on any cluster and exactly
-    * mirrorable in SQL):
-    *
-    *  - training sample = rows with `vec_id % sampleMod == 0` (a stride
-    *    sample is the one sampling scheme an oracle can replicate
-    *    verbatim; production codebooks train on samples anyway);
-    *  - init = the k smallest-vec_id sample vectors, cid = 0..k-1;
-    *  - assignment = argmax cosine, ties to the LOWEST cid (the same
-    *    `ORDER BY cos DESC, cid` rule the query itself uses);
-    *  - update = per-dim mean over members in vec_id order — a
-    *    LEFT-TO-RIGHT double fold seeded 0.0, divided by the member
-    *    count, so every float op has a fixed association mirrored by
-    *    DuckDB's `list_reduce(list_prepend(0.0, …))`; empty clusters
-    *    keep their previous centroid.
-    *
-    * The result is tiny (k × dims doubles) and rides into the plan as a
-    * literal — broadcast by construction, never a shuffle.
-    *
-    * The sample is collected onto the DRIVER, so it is bounded on BOTH
-    * sides: at least k rows, and at most `maxSample` rows — the count is
-    * checked with a cheap aggregate BEFORE the collect, so pointing a
-    * small `sampleMod` at a 10¹⁰-row corpus fails fast with an explicit
-    * message instead of OOMing the driver (same guard-rail discipline as
-    * [[blockedTopPairs]]'s in-plan block-size assert). 100 k × 128-dim
-    * doubles ≈ 100 MB — a comfortable ceiling for Lloyd iterations on the
-    * driver; raise it deliberately if you have the heap.
+  /** The driver-side stride sample both codebook trainers learn from:
+    * rows with `vec_id % sampleMod == 0` in vec_id order, bounded on BOTH
+    * sides — at most `maxSample` rows (checked with a 1-row count BEFORE
+    * the collect, so pointing a small `sampleMod` at a 10¹⁰-row corpus
+    * fails fast instead of OOMing the driver) and at least `k`.
     */
-  def kmeansCodebook(corpus: DataFrame, k: Int, iters: Int,
-      sampleMod: Long, maxSample: Long = 100000): Array[(Long, Array[Double])] = {
+  private def strideSample(corpus: DataFrame, what: String, k: Int,
+      sampleMod: Long, maxSample: Long): Array[(Long, Array[Double])] = {
     val strided = corpus.filter(col("vec_id") % sampleMod === 0)
     val sampleRows = strided.count() // 1-row aggregate, no data movement
     require(sampleRows <= maxSample,
-      s"k-means sample ($sampleRows rows at sampleMod=$sampleMod) exceeds " +
+      s"$what sample ($sampleRows rows at sampleMod=$sampleMod) exceeds " +
         s"maxSample=$maxSample — the sample is collected onto the driver; " +
         "raise sampleMod so the stride sample stays bounded, or raise " +
         "maxSample deliberately")
-    val sample: Array[(Long, Array[Double])] = strided
+    val sample = strided
       .select("vec_id", "embedding").orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     require(sample.length >= k,
-      s"k-means sample (${sample.length}) smaller than k=$k — lower sampleMod")
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc = acc + a(i) * b(i); i += 1 }; acc
-    }
-    def norm2D(a: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc = acc + a(i) * a(i); i += 1 }; acc
-    }
-    def cosD(a: Array[Double], b: Array[Double]): Double =
-      dotD(a, b) / (math.sqrt(norm2D(a)) * math.sqrt(norm2D(b)))
-    var cents: Array[Array[Double]] = sample.take(k).map(_._2)
+      s"$what sample (${sample.length}) smaller than k=$k — lower sampleMod")
+    sample
+  }
+
+  /** Fixed-iteration Lloyd over the slice [off, off + len) of every sample
+    * vector: init = the first k sample slices, cid = 0..k-1; assignment =
+    * argmax of `score(v, off, centroid)`, strict > so ties keep the LOWEST
+    * cid; update = per-dim mean over members in vec_id order, a
+    * LEFT-TO-RIGHT double fold seeded 0.0 divided by the member count;
+    * empty clusters keep their previous centroid.
+    */
+  private def lloyd(sample: Array[(Long, Array[Double])], k: Int, iters: Int,
+      off: Int, len: Int,
+      score: (Array[Double], Int, Array[Double]) => Double): Array[(Long, Array[Double])] = {
+    var cents: Array[Array[Double]] = sample.take(k).map(_._2.slice(off, off + len))
     for (_ <- 0 until iters) {
-      // argmax cosine, strict > keeps the earliest (lowest) cid on ties
-      val assigned: Array[(Int, (Long, Array[Double]))] = sample.map { case (id, v) =>
-        var best = 0; var bestCos = cosD(v, cents(0)); var c = 1
+      val assigned = sample.map { case (id, v) =>
+        var best = 0; var bestS = score(v, off, cents(0)); var c = 1
         while (c < k) {
-          val cs = cosD(v, cents(c))
-          if (cs > bestCos) { best = c; bestCos = cs }
+          val s = score(v, off, cents(c))
+          if (s > bestS) { best = c; bestS = s }
           c += 1
         }
         (best, (id, v))
@@ -284,13 +245,12 @@ object VectorOps {
       val byC = assigned.groupBy(_._1)
       cents = Array.tabulate(k) { c =>
         byC.get(c) match {
-          case None => cents(c) // empty cluster keeps its centroid
+          case None => cents(c)
           case Some(members) =>
             val vs = members.map(_._2).sortBy(_._1).map(_._2)
-            val dims = vs(0).length
-            Array.tabulate(dims) { d =>
+            Array.tabulate(len) { d =>
               var acc = 0.0; var i = 0
-              while (i < vs.length) { acc = acc + vs(i)(d); i += 1 }
+              while (i < vs.length) { acc = acc + vs(i)(off + d); i += 1 }
               acc / vs.length
             }
         }
@@ -299,20 +259,32 @@ object VectorOps {
     cents.zipWithIndex.map { case (cv, cid) => (cid.toLong, cv) }
   }
 
-  /** V4 — IVF-flat top-k: partition the corpus into inverted lists by
-    * nearest centroid, probe only the `nProbe` closest lists per query.
+  /** Driver-side deterministic k-means codebook: [[lloyd]] over the whole
+    * vector with argmax COSINE assignment (the same `ORDER BY cos DESC,
+    * cid` rule the query itself uses), on the guarded [[strideSample]].
+    * No randomness and a FIXED iteration count — reproducible on any
+    * cluster, and every float op has a fixed association mirrored by
+    * DuckDB's `list_reduce(list_prepend(0.0, …))` (a stride sample is the
+    * one sampling scheme an oracle can replicate verbatim; production
+    * codebooks train on samples anyway).
     *
-    * The codebook is [[kmeansCodebook]] when `codebook` is given;
-    * otherwise the embeddings of the `nCentroids` smallest vec_ids — a
-    * deterministic stand-in (production IVF works the same way either
-    * way: the codebook is driver-side, tiny, and broadcast). Assignment
-    * is a PURE MAP over the corpus — the centroid array is a literal, the
-    * argmax a per-row fold — so building the inverted lists costs one
-    * pass and zero shuffles; the only shuffle is the probe join on
-    * cent_id. Recall/cost dial: nProbe/nCentroids of the corpus is
-    * scanned per query (nProbe=4 of 16 lists = 25%), vs 100% for
-    * [[bruteTopK]] and bucket-luck for [[lshTopK]].
+    * The result is tiny (k × dims doubles) and rides into the plan as a
+    * literal — broadcast by construction, never a shuffle. 100 k × 128-dim
+    * doubles ≈ 100 MB of sample — a comfortable `maxSample` ceiling for
+    * Lloyd iterations on the driver; raise it deliberately if you have the
+    * heap.
     */
+  def kmeansCodebook(corpus: DataFrame, k: Int, iters: Int,
+      sampleMod: Long, maxSample: Long = 100000): Array[(Long, Array[Double])] = {
+    val sample = strideSample(corpus, "k-means", k, sampleMod, maxSample)
+    def dotD(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0; var i = 0
+      while (i < b.length) { acc = acc + a(i) * b(i); i += 1 }; acc
+    }
+    lloyd(sample, k, iters, 0, sample(0)._2.length, (v, _, c) =>
+      dotD(v, c) / (math.sqrt(dotD(v, v)) * math.sqrt(dotD(c, c))))
+  }
+
   /** Coarse IVF assignment: each row of `df` gets its `n` nearest
     * centroids (cosine desc, cid asc — identical tie order to the
     * oracle's `row_number() OVER (ORDER BY cos DESC, cid)`) exploded into
@@ -321,9 +293,9 @@ object VectorOps {
     * expression OBJECT, not the plan tree — a literal codebook bloats
     * every explain at 16 centroids and becomes a multi-megabyte plan at
     * the thousands a 100 TB index runs — and the top-n selection never
-    * allocates or sorts a per-row struct array. Bit-equal to
-    * [[ivfAssignViaColumns]] (asserted in VectorSpec; v4/v7/v8 oracles
-    * pin it end-to-end).
+    * allocates or sorts a per-row struct array. Bit-equal to the
+    * `transform` + `array_sort` Column form (`graft.Witness.ivfAssign`
+    * in VectorSpec; v4/v7/v8 oracles pin it end-to-end).
     */
   private[graft] def ivfAssign(df: DataFrame,
       cents: Array[(Long, Array[Double])], n: Int): DataFrame = {
@@ -334,41 +306,24 @@ object VectorOps {
         cents, n)).as("cent_id"))
   }
 
-  /** The Column/HOF formulation of [[ivfAssign]] — the equivalence
-    * witness (and the shape the DuckDB oracles mirror CTE-for-CTE).
-    */
-  private[graft] def ivfAssignViaColumns(df: DataFrame,
-      cents: Array[(Long, Array[Double])], n: Int): DataFrame = {
-    val centArr = array(cents.map { case (cid, cv) =>
-      struct(lit(cid).as("cid"), typedLit(cv).as("cv")) }: _*)
-    // (score DESC, NULL last, cid ASC) — NULL scores (try_divide's
-    // zero-denominator result, the native expression's NaN) are ranked
-    // explicitly so the comparator is total; an implicit fall-through to
-    // the cid tie would be non-transitive and array_sort's output
-    // undefined on degenerate inputs (ADVICE r4).
-    val cmp: (Column, Column) => Column = (l, r) =>
-      when(l.getField("cs").isNull && r.getField("cs").isNull,
-          when(l.getField("cid") < r.getField("cid"), -1).otherwise(1))
-        .when(l.getField("cs").isNull, 1)
-        .when(r.getField("cs").isNull, -1)
-        .when(l.getField("cs") > r.getField("cs"), -1)
-        .when(l.getField("cs") < r.getField("cs"), 1)
-        .when(l.getField("cid") < r.getField("cid"), -1)
-        .otherwise(1)
-    // row norm staged once — the transform would otherwise re-fold it
-    // per CENTROID (centroid norms are literals Catalyst constant-folds)
-    val staged = df.select(col("vec_id"), col("embedding"),
-      norm2(col("embedding")).as("__n2"))
-    val scored = transform(centArr, c =>
-      struct(cosineStaged(col("embedding"), c.getField("cv"),
-        col("__n2"), norm2(c.getField("cv"))).as("cs"),
-        c.getField("cid").as("cid")))
-    staged.select(col("vec_id"), col("embedding"), col("__n2"),
-        explode(slice(array_sort(scored, cmp), 1, n)).as("__a"))
-      .select(col("vec_id"), col("embedding"), col("__n2"),
-        col("__a.cid").as("cent_id"))
-  }
+  /** The IVF probe side: each query on its `nProbe` nearest lists. */
+  private def ivfProbes(queries: DataFrame,
+      cents: Array[(Long, Array[Double])], nProbe: Int): DataFrame =
+    ivfAssign(queries, cents, nProbe).select(col("cent_id"),
+      col("vec_id").as("query_id"), col("embedding").as("qv"),
+      col("__n2").as("__n2q"))
 
+  /** V4 — IVF-flat top-k: partition the corpus into inverted lists by
+    * nearest centroid, probe only the `nProbe` closest lists per query.
+    *
+    * The codebook is `codebook` when given, else a [[kmeansCodebook]]
+    * trained here. Assignment is a PURE MAP over the corpus
+    * ([[ivfAssign]]), so building the inverted lists costs one pass and
+    * zero shuffles; the only shuffle is the probe join on cent_id.
+    * Recall/cost dial: nProbe/nCentroids of the corpus is scanned per
+    * query (nProbe=4 of 16 lists = 25%), vs 100% for [[bruteTopK]] and
+    * bucket-luck for [[lshTopK]].
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4,
       codebook: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
@@ -390,94 +345,46 @@ object VectorOps {
       kmeansCodebook(corpus, nCentroids, iters = 5, sampleMod = mod,
         maxSample = 2 * maxSample)
     }
-    def assign(df: DataFrame, n: Int): DataFrame = ivfAssign(df, cents, n)
-    val inv = assign(corpus, 1).select(col("cent_id"),
+    val inv = ivfAssign(corpus, cents, 1).select(col("cent_id"),
       col("vec_id").as("neighbor_id"), col("embedding").as("cemb"),
       col("__n2").as("__n2c"))
-    val probes = assign(queries, nProbe).select(col("cent_id"),
-      col("vec_id").as("query_id"), col("embedding").as("qv"),
-      col("__n2").as("__n2q"))
-    val scored = probes.join(inv, Seq("cent_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineStaged(col("qv"), col("cemb"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-    topKPerQuery(scored, k, "cosine")
+    filterRefine(ivfProbes(queries, cents, nProbe), inv, Some("cent_id"), Exact, k)
   }
 
   /** Per-subspace deterministic k-means codebooks for product quantization:
     * the vector is cut into `m` contiguous subspaces of `dims/m` dims, and
-    * each subspace gets its own [[kmeansCodebook]]-style codebook — same
-    * stride sample (ONE driver collect, shared by all m trainings, same
-    * `maxSample` guard), same fixed-iteration Lloyd, same vec_id-ordered
-    * member means and empty-cluster carry — but with SQUARED-L2 assignment
-    * (cosine is meaningless on subvectors; L2 is the PQ-standard metric),
-    * ties to the lowest cid. Every float op is a left-to-right double fold
-    * seeded 0.0, so DuckDB replays the training bit-exactly.
+    * each subspace gets its own [[lloyd]] codebook — the same guarded
+    * [[strideSample]] as [[kmeansCodebook]] (ONE driver collect, shared by
+    * all m trainings) — but with SQUARED-L2 assignment (cosine is
+    * meaningless on subvectors; L2 is the PQ-standard metric), ties to the
+    * lowest cid. Every float op is a left-to-right double fold seeded 0.0,
+    * so DuckDB replays the training bit-exactly.
     */
   def pqCodebooks(corpus: DataFrame, m: Int, ksub: Int, iters: Int,
       sampleMod: Long, maxSample: Long = 100000): Array[Array[(Long, Array[Double])]] = {
-    val strided = corpus.filter(col("vec_id") % sampleMod === 0)
-    val sampleRows = strided.count()
-    require(sampleRows <= maxSample,
-      s"PQ sample ($sampleRows rows at sampleMod=$sampleMod) exceeds " +
-        s"maxSample=$maxSample — the sample is collected onto the driver; " +
-        "raise sampleMod or raise maxSample deliberately")
-    val sample: Array[(Long, Array[Double])] = strided
-      .select("vec_id", "embedding").orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-    require(sample.length >= ksub,
-      s"PQ sample (${sample.length}) smaller than ksub=$ksub — lower sampleMod")
+    val sample = strideSample(corpus, "PQ", ksub, sampleMod, maxSample)
     val dims = sample(0)._2.length
     require(dims % m == 0, s"dims=$dims not divisible into m=$m subspaces")
     val sub = dims / m
-    def l2D(a: Array[Double], off: Int, b: Array[Double]): Double = {
+    // argmin L2² as argmax of its negation: negation is exact, so the
+    // strict > keeps exactly the cid the strict < would
+    def negL2(a: Array[Double], off: Int, b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < b.length) {
         val d = a(off + i) - b(i); acc = acc + d * d; i += 1
       }
-      acc
+      -acc
     }
-    Array.tabulate(m) { j =>
-      val off = j * sub
-      var cents: Array[Array[Double]] =
-        sample.take(ksub).map(_._2.slice(off, off + sub))
-      for (_ <- 0 until iters) {
-        // argmin L2², strict < keeps the earliest (lowest) cid on ties
-        val assigned = sample.map { case (id, v) =>
-          var best = 0; var bestD = l2D(v, off, cents(0)); var c = 1
-          while (c < ksub) {
-            val d = l2D(v, off, cents(c))
-            if (d < bestD) { best = c; bestD = d }
-            c += 1
-          }
-          (best, (id, v))
-        }
-        val byC = assigned.groupBy(_._1)
-        cents = Array.tabulate(ksub) { c =>
-          byC.get(c) match {
-            case None => cents(c)
-            case Some(members) =>
-              val vs = members.map(_._2).sortBy(_._1).map(_._2)
-              Array.tabulate(sub) { d =>
-                var acc = 0.0; var i = 0
-                while (i < vs.length) { acc = acc + vs(i)(off + d); i += 1 }
-                acc / vs.length
-              }
-          }
-        }
-      }
-      cents.zipWithIndex.map { case (cv, cid) => (cid.toLong, cv) }
-    }
+    Array.tabulate(m)(j => lloyd(sample, ksub, iters, j * sub, sub, negL2))
   }
 
   /** V5 — product-quantization top-k with asymmetric distance computation
     * (ADC): the corpus is ENCODED once into `m` small codes (argmin
-    * squared-L2 against each subspace codebook — a pure map, the codebooks
-    * are literals), and each query scores a candidate from its codes
-    * alone: approx dot = Σ_j dot(q_j, centroid_{j,code_j}), approx corpus
-    * norm = Σ_j ‖centroid_{j,code_j}‖², approx cosine = adot /
-    * (‖q‖·√(Σ‖c‖²)) with the EXACT query norm (the asymmetric half).
+    * squared-L2 against each subspace codebook — a pure map), and each
+    * query scores a candidate from its codes alone: approx dot =
+    * Σ_j dot(q_j, centroid_{j,code_j}), approx corpus norm =
+    * Σ_j ‖centroid_{j,code_j}‖², approx cosine = adot / (‖q‖·√(Σ‖c‖²))
+    * with the EXACT query norm (the asymmetric half).
     *
     * Scale story (the one that matters at 100 TB): the searchable index is
     * `m` bytes per vector instead of `4·dims` — 32× smaller at 64-dim
@@ -485,92 +392,27 @@ object VectorOps {
     * becomes a codes table that fits in MEMORY; encode is one shuffle-free
     * pass, search is the same broadcast-queries single corpus pass as
     * [[bruteTopK]] but over codes (compose with [[ivfTopK]]'s coarse
-    * lists to also cut the scanned fraction). Ranking ties break on
-    * neighbor_id; all folds (subspace dots, the Σ over j, the argmin
-    * distances) are fixed-order expressions, so the scores — and the
-    * DuckDB oracle replaying codebook training, encoding, and ADC — are
-    * bit-exact.
+    * lists to also cut the scanned fraction). Encode and ADC are the
+    * native codegen'd [[graft.functions.PqEncode]] /
+    * [[graft.functions.PqAdcCosine]], bit-equal to their HOF Column form
+    * (`graft.Witness.pqTopK` in VectorSpec); all folds are fixed-order, so
+    * the scores — and the DuckDB oracle replaying codebook training,
+    * encoding, and ADC — are bit-exact.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       codebooks: Array[Array[(Long, Array[Double])]]): DataFrame = {
-    import graft.functions.Pq
     val cbs: Pq.Codebooks = codebooks.map(_.map(_._2))
-    // native codegen'd encode + ADC ([[graft.functions.PqEncode]] /
-    // [[PqAdcCosine]]): same fold orders as [[pqTopKViaColumns]] and the
-    // oracle — bit-equal, ~7x faster warm (HOF lambdas evaluate interpreted)
     // the repartition is a deliberate pipeline break: whole-stage codegen
     // fuses this projection into the broadcast join's per-PAIR consume, so
     // without an exchange PqEncode re-evaluates once per (row, query) —
     // measured 8 queries x 10 M rows: 72 s fused vs 4.4 s encode + 2.6 s
-    // scan with the boundary (tools/PqProf2). At scale this exchange is
-    // the moral equivalent of writing the codes table — which a real
-    // deployment persists anyway.
-    val encoded = corpus.select(col("vec_id"),
+    // scan with the boundary. At scale this exchange is the moral
+    // equivalent of writing the codes table — which a real deployment
+    // persists anyway.
+    val encoded = corpus.select(col("vec_id").as("neighbor_id"),
       Pq.encode(col("embedding"), cbs).as("__codes"))
-      .repartition(col("vec_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"), norm2(col("embedding")).as("__n2q")))
-    val scored = encoded.crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Pq.adcCosine(col("__codes"), col("qv"), col("__n2q"), cbs)
-          .as("approx_cosine"))
-    topKPerQuery(scored, k, "approx_cosine")
-  }
-
-  /** The Column-function formulation of [[pqTopK]] — higher-order-function
-    * folds only, no custom expressions. Kept as the independent
-    * equivalence witness for the native path (VectorSpec asserts bit-equal
-    * output) and as the reference for the oracle's fold orders; ~7×
-    * slower warm (HOF lambdas evaluate interpreted, per element).
-    */
-  private[graft] def pqTopKViaColumns(queries: DataFrame, corpus: DataFrame, k: Int,
-      codebooks: Array[Array[(Long, Array[Double])]]): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks(0)(0)._2.length
-    // per-subspace literal centroid arrays
-    def centArr(j: Int): Column = array(codebooks(j).map { case (cid, cv) =>
-      struct(lit(cid).as("cid"), typedLit(cv).as("cv")) }: _*)
-    def subvec(v: Column, j: Int): Column =
-      slice(v.cast("array<double>"), j * sub + 1, sub)
-    def l2sub(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v)
-    // (distance asc, cid asc) — the oracle's ORDER BY d ASC, cid
-    val cmp: (Column, Column) => Column = (l, r) =>
-      when(l.getField("d") < r.getField("d"), -1)
-        .when(l.getField("d") > r.getField("d"), 1)
-        .when(l.getField("cid") < r.getField("cid"), -1)
-        .otherwise(1)
-    // encode: argmin per subspace, then the code's centroid dot/norm terms
-    // are resolved from the literal codebooks — everything below is one
-    // shuffle-free projection over the corpus
-    val codeCols = (0 until m).map { j =>
-      element_at(array_sort(
-        transform(centArr(j), c =>
-          struct(l2sub(subvec(col("embedding"), j), c.getField("cv")).as("d"),
-            c.getField("cid").as("cid"))), cmp), 1)
-        .getField("cid").as(s"__code$j")
-    }
-    val encoded = corpus.select(col("vec_id") +: codeCols: _*)
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"), norm2(col("embedding")).as("__n2q")))
-    // ADC terms: centroid vector looked up BY CODE from the literal array
-    // (codebooks store cid 0..ksub-1 in order, so element_at(code+1) is
-    // the cid's centroid); Σ over subspaces is a left-to-right reduce —
-    // fixed association, mirrored in the oracle
-    def codeCent(j: Int): Column = {
-      val cvs = array(codebooks(j).map { case (_, cv) => typedLit(cv) }: _*)
-      element_at(cvs, (col(s"__code$j") + lit(1)).cast("int"))
-    }
-    val adot = (0 until m).map(j => dot(subvec(col("qv"), j), codeCent(j)))
-      .reduce(_ + _)
-    val cn2 = (0 until m).map(j => norm2(codeCent(j))).reduce(_ + _)
-    val scored = encoded.crossJoin(q)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        try_divide(adot, sqrt(col("__n2q")) * sqrt(cn2)).as("approx_cosine"))
-    topKPerQuery(scored, k, "approx_cosine")
+      .repartition(col("neighbor_id"))
+    filterRefine(broadcast(stagedQueries(queries)), encoded, None, adc(cbs), k)
   }
 
   /** V6 — PQ shortlist + exact re-rank (the FAISS "refine" pattern): ADC
@@ -600,17 +442,25 @@ object VectorOps {
     * pairs), keep the top k per query.
     */
   private[graft] def rerankExact(queries: DataFrame, corpus: DataFrame, k: Int,
-      cand: DataFrame): DataFrame = {
-    val fetched = corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cemb"), norm2(col("embedding")).as("__n2c"))
-      .join(broadcast(cand), Seq("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"), norm2(col("embedding")).as("__n2q")))
-    val scored = fetched.join(q, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineStaged(col("qv"), col("cemb"),
-          col("__n2q"), col("__n2c")).as("cosine"))
-    topKPerQuery(scored, k, "cosine")
+      cand: DataFrame): DataFrame =
+    filterRefine(broadcast(stagedQueries(queries)),
+      exactCands(corpus).join(broadcast(cand), Seq("neighbor_id")),
+      Some("query_id"), Exact, k)
+
+  /** IVF-PQ refine, shared by [[ivfPqTopK]] and the persisted
+    * [[VectorIndex.topK]]: probe the `nProbe` nearest lists, meet the
+    * coded candidates `codes(probes)` returns (cent_id, neighbor_id,
+    * __codes) on cent_id, keep the ADC shortlist, re-rank it exactly.
+    * `codes` sees the probes so an index can prune its read to the probed
+    * lists.
+    */
+  private[operators] def ivfPqRefine(queries: DataFrame, corpus: DataFrame,
+      k: Int, coarse: Array[(Long, Array[Double])], cbs: Pq.Codebooks,
+      nProbe: Int, shortlist: Int)(codes: DataFrame => DataFrame): DataFrame = {
+    val probes = ivfProbes(queries, coarse, nProbe)
+    val cand = filterRefine(probes, codes(probes), Some("cent_id"), adc(cbs),
+      shortlist).select(col("query_id"), col("neighbor_id"))
+    rerankExact(queries, corpus, k, cand)
   }
 
   /** V7 — IVF-PQ with refine (the full production ANN index, FAISS's
@@ -631,26 +481,15 @@ object VectorOps {
       coarse: Array[(Long, Array[Double])],
       codebooks: Array[Array[(Long, Array[Double])]],
       nProbe: Int = 4, shortlist: Int = 100): DataFrame = {
-    import graft.functions.Pq
     val cbs: Pq.Codebooks = codebooks.map(_.map(_._2))
-    // pipeline break before the probe join — see pqTopK: without it the
-    // fused join re-evaluates PqEncode per matched probe pair
-    val inv = ivfAssign(corpus, coarse, 1)
-      .select(col("cent_id"), col("vec_id").as("neighbor_id"),
-        Pq.encode(col("embedding"), cbs).as("__codes"))
-      .repartition(col("neighbor_id"))
-    val probes = ivfAssign(queries, coarse, nProbe)
-      .select(col("cent_id"), col("vec_id").as("query_id"),
-        col("embedding").as("qv"), col("__n2").as("__n2q"))
-    val cand = topKPerQuery(
-      probes.join(inv, Seq("cent_id"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          Pq.adcCosine(col("__codes"), col("qv"), col("__n2q"), cbs)
-            .as("approx_cosine")),
-      shortlist, "approx_cosine")
-      .select(col("query_id"), col("neighbor_id"))
-    rerankExact(queries, corpus, k, cand)
+    ivfPqRefine(queries, corpus, k, coarse, cbs, nProbe, shortlist) { _ =>
+      // pipeline break before the probe join — see pqTopK: without it the
+      // fused join re-evaluates PqEncode per matched probe pair
+      ivfAssign(corpus, coarse, 1)
+        .select(col("cent_id"), col("vec_id").as("neighbor_id"),
+          Pq.encode(col("embedding"), cbs).as("__codes"))
+        .repartition(col("neighbor_id"))
+    }
   }
 
   /** The scale dial for every blocked pairwise stage ([[blockedTopPairs]],

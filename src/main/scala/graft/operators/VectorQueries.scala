@@ -111,7 +111,7 @@ object VectorQueries {
   // m=16 4-dim subspaces x 32 centroids: measured on the sf0.1 embeddings
   // (near-uniform unit vectors — ANN's worst case), ADC recall@10 = 0.45
   // and refine@100 = 0.95 vs brute force; finer m or larger ksub buys more
-  // recall at more oracle CTEs (tools/PqTune sweeps the dial)
+  // recall at more oracle CTEs
   private val pqM = 16
   private val pqKsub = 32
   private val pqIters = 2

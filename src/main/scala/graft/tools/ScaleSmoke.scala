@@ -245,15 +245,9 @@ object ScaleSmoke {
       docs.select(TextOps.fingerprint(col("text")).as("f"))
         .agg(sum(col("f").cast("double"))).collect(); nd
     }
-    // ---- native kernel vs the interpreted HOF witness, same corpus:
-    // the round-6 TextStats/MinhashSig speedup measured at 1 M docs
-    // (TextOps/Dedup above already ride the kernels; these two pin the
-    // ratio explicitly against the TextWitness chains)
-    timeD("quality-witness-hof") {
-      docs.select(graft.operators.TextWitness.qualityScore(col("text")).as("q"),
-        graft.operators.TextWitness.repeatedNgramRatio(col("text"), 2).as("r"))
-        .agg(sum(col("q") + col("r"))).collect(); nd
-    }
+    // ---- native text kernels at 1 M docs (the interpreted HOF witnesses
+    // they replaced live in the test tree only; the minhash chain below
+    // is still built from engine Column helpers)
     timeD("quality-native") {
       docs.select(TextOps.qualityScore(col("text")).as("q"),
         TextOps.repeatedNgramRatio(col("text"), 2).as("r"))
@@ -314,15 +308,10 @@ object ScaleSmoke {
     timeV("brute-scan-8q") { // the raw-vector baseline the codes replace
       VectorOps.bruteTopK(queries, vecs, 10).count()
     }
-    // coarse assignment at 10 M: the native expression vs the HOF witness
-    // (the literal-codebook form the native one replaced)
+    // coarse assignment at 10 M through the native expression
     val coarse = VectorOps.kmeansCodebook(vecs, 16, 2, sampleMod = 199)
     timeV("ivf-assign-native") {
       VectorOps.ivfAssign(vecs, coarse, 1)
-        .agg(sum(col("cent_id"))).collect(); nv
-    }
-    timeV("ivf-assign-hof") {
-      VectorOps.ivfAssignViaColumns(vecs, coarse, 1)
         .agg(sum(col("cent_id"))).collect(); nv
     }
     vecs.unpersist()

@@ -409,7 +409,7 @@ class DedupSpec extends SparkSpec {
       .scoreCharLm(docs, col("text"), col("doc_id"), model)
       .collect().map(r => r.getLong(0) -> (r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-    val witness = graft.operators.TextWitness
+    val witness = Witness
       .scoreCharLm(docs, col("text"), col("doc_id"), model)
       .collect().map(r => r.getLong(0) -> (r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
@@ -421,7 +421,7 @@ class DedupSpec extends SparkSpec {
       ColumnBridge.expression(col("text"))))
     val diff = docs.select(
       nativeSlots.as("a"),
-      graft.operators.TextWitness.lmSlots(col("text")).as("b"))
+      Witness.lmSlots(col("text")).as("b"))
       .filter(not(col("a") <=> col("b"))).count()
     assert(diff == 0)
   }

@@ -19,9 +19,11 @@ class DriverContractSpec extends SparkSpec {
   }
 
   test("every declared query runs at sf0.001 with sane output columns") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    // each query must leave the cache as it found it: empty
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      try SparkEntry.run(spark, name, sfDir) { df =>
         val cols = df.columns
         val bad =
           (if (cols.distinct.length != cols.length) Seq(s"duplicate columns: ${cols.mkString(",")}") else Nil) ++
@@ -29,10 +31,25 @@ class DriverContractSpec extends SparkSpec {
             (if (cols.exists(_.startsWith("__"))) Seq(s"internal column leaked: ${cols.filter(_.startsWith("__")).mkString(",")}") else Nil)
         df.count() // must execute
         bad.map(b => s"$name: $b")
-      } catch {
+      } ++ (if (cache.isEmpty) Nil else {
+        spark.catalog.clearCache(); Seq(s"$name: left cache entries")
+      })
+      catch {
         case e: Throwable => Seq(s"$name: ${e.getClass.getSimpleName} ${e.getMessage}")
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("queries that materialize reuse frames release them once run") {
+    // w12's chunked series and c2's re-lined corpus are persisted for
+    // several plan consumers; SparkEntry.run owns their release
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    for (name <- Seq("w12_chunked_finite", "c2_line_dedup")) {
+      val rows = SparkEntry.run(spark, name, sfDir)(_.count())
+      assert(rows > 0, name)
+      assert(cache.isEmpty, s"$name left cache entries")
+    }
   }
 }

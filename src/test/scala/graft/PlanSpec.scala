@@ -16,14 +16,14 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 class PlanSpec extends SparkSpec {
   override def sfDir: String = "/root/testdata/sf0.001"
 
-  private def executed(name: String): SparkPlan = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.collect() // let AQE finalize
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
+  private def executed(name: String): SparkPlan =
+    SparkEntry.run(spark, name, sfDir) { df =>
+      df.collect() // let AQE finalize
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
     }
-  }
 
   private def plan(name: String): String = executed(name).toString
 

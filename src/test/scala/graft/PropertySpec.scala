@@ -327,7 +327,7 @@ class PropertySpec extends SparkSpec {
     // smaller than the 201-row halo, where every chunk's warm-up must
     // stitch across MANY predecessors.
     val cases = Seq((60, 97L), (45, 7L), (30, 3L)) // (chunk minutes, keep-mod)
-    for ((chunkMin, keepMod) <- cases) {
+    for ((chunkMin, keepMod) <- cases) Reuse.releasing {
       val bars = graft.sources.Generator.ohlcv(spark, Seq("hot", "cold"), 1500L)
         .filter(pmod(xxhash64(col("ts")), lit(keepMod)) =!= 0) // random thinning
       val chunk = floor(unix_micros(col("ts").cast("timestamp")) /
@@ -490,7 +490,7 @@ class PropertySpec extends SparkSpec {
       val df = rows.toDF("query_id", "cosine", "neighbor_id")
       val viaAgg = graft.operators.VectorOps.topKPerQuery(df, k, "cosine")
         .collect().map(_.toString).sorted
-      val viaWin = graft.operators.VectorOps.topKPerQueryViaWindows(df, k, "cosine")
+      val viaWin = Witness.topKPerQuery(df, k, "cosine")
         .collect().map(_.toString).sorted
       assert(viaAgg.sameElements(viaWin), s"pool=$pi k=$k")
     }

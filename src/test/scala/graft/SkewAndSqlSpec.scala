@@ -39,23 +39,24 @@ class SkewAndSqlSpec extends SparkSpec {
     val plain = Skew.finiteIndicators(bars,
         Indicators.Series(Seq(col("symbol")), Seq(col("ts"))))
       .select(cols.map(col): _*).collect().map(_.toString).sorted
-    val chunked = Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
+    // each chunked call persists a reuse frame; its caller owns the release
+    val chunked = Reuse.releasing(Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
         Seq(col("ts")), chunk)
-      .select(cols.map(col): _*).collect().map(_.toString).sorted
+      .select(cols.map(col): _*).collect().map(_.toString).sorted)
     assert(chunked.length == plain.length)
     assert(chunked.sameElements(plain)) // bit-identical, incl. null gating
 
     // an UNDERSIZED halo must differ (proves the halo is doing the work:
     // sma_200 needs 200 rows of replayed context, 10 is not enough)
-    val tooSmall = Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
+    val tooSmall = Reuse.releasing(Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
         Seq(col("ts")), chunk, halo = 10)
-      .select(cols.map(col): _*).collect().map(_.toString).sorted
+      .select(cols.map(col): _*).collect().map(_.toString).sorted)
     assert(!tooSmall.sameElements(plain))
 
     // the window really is partitioned by (symbol, chunk) — the hot
     // symbol's series is split across window partitions
-    val plan = Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
-        Seq(col("ts")), chunk).queryExecution.executedPlan.toString
+    val plan = Reuse.releasing(Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
+        Seq(col("ts")), chunk).queryExecution.executedPlan.toString)
     assert(plan.contains("__chunk"))
   }
 
@@ -86,9 +87,9 @@ class SkewAndSqlSpec extends SparkSpec {
     val plain = Skew.finiteIndicators(bars,
         Indicators.Series(Seq(col("symbol")), Seq(col("ts"))))
       .select(cols.map(col): _*).collect().map(_.toString).sorted
-    val chunked = Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
+    val chunked = Reuse.releasing(Skew.chunkedFiniteIndicators(bars, Seq(col("symbol")),
         Seq(col("ts")), chunkExpr)
-      .select(cols.map(col): _*).collect().map(_.toString).sorted
+      .select(cols.map(col): _*).collect().map(_.toString).sorted)
     assert(chunked.length == plain.length)
     assert(chunked.sameElements(plain))
   }
@@ -108,8 +109,8 @@ class SkewAndSqlSpec extends SparkSpec {
 
     val plain = byKey(Skew.emaMacd(bars,
       Indicators.Series(Seq(col("symbol")), Seq(col("ts")))))
-    val chunked = byKey(Skew.chunkedEmaMacd(bars, Seq(col("symbol")),
-      Seq(col("ts")), chunk))
+    val chunked = Reuse.releasing(byKey(Skew.chunkedEmaMacd(bars, Seq(col("symbol")),
+      Seq(col("ts")), chunk)))
     assert(chunked.keySet == plain.keySet)
 
     val range = {
@@ -127,8 +128,8 @@ class SkewAndSqlSpec extends SparkSpec {
     assert(err <= 1e-9 * range, f"error $err%.3e exceeds bound")
 
     // the halo is doing the work: a 20-row warm-up leaves visible error
-    val tooSmall = byKey(Skew.chunkedEmaMacd(bars, Seq(col("symbol")),
-      Seq(col("ts")), chunk, halo = 20))
+    val tooSmall = Reuse.releasing(byKey(Skew.chunkedEmaMacd(bars, Seq(col("symbol")),
+      Seq(col("ts")), chunk, halo = 20)))
     assert(maxErr(tooSmall) > 1e-6 * range)
 
     // and the halo calculator matches the closed form it documents

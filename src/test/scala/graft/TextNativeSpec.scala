@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextHash, TextNative}
-import graft.operators.{Dedup, TextOps, TextWitness}
+import graft.operators.{Dedup, TextOps}
 
 /** Bit-equality witnesses for the native text kernels
   * ([[graft.functions.TextNative]]): every kernel must reproduce the legacy
@@ -50,25 +50,32 @@ class TextNativeSpec extends SparkSpec {
   }
 
   test("TextStats scalars equal the legacy HOF chains field by field") {
+    // the native 60-bit simhash word masked to `bits`, as Dedup.simhash and
+    // Dedup.withSignatures compute it
+    def simhash(bits: Int) =
+      Dedup.simhashBits(TextNative.stats(col("text"), TextOps.EnStopwords), bits)
     val checks: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = Seq(
-      ("tokenCount", TextOps.tokenCount(col("text")), TextWitness.tokenCount(col("text"))),
-      ("stopwordRatio", TextOps.stopwordRatio(col("text")), TextWitness.stopwordRatio(col("text"))),
-      ("qualityScore", TextOps.qualityScore(col("text")), TextWitness.qualityScore(col("text"))),
-      ("fingerprint", TextOps.fingerprint(col("text")), TextWitness.fingerprint(col("text"))),
-      ("fingerprint_p97", TextOps.fingerprint(col("text"), 97L), TextWitness.fingerprint(col("text"), 97L)),
-      ("rep2", TextOps.repeatedNgramRatio(col("text"), 2), TextWitness.repeatedNgramRatio(col("text"), 2)),
-      ("rep3", TextOps.repeatedNgramRatio(col("text"), 3), TextWitness.repeatedNgramRatio(col("text"), 3)),
-      ("meanWordLength", TextOps.meanWordLength(col("text")), TextWitness.meanWordLength(col("text"))),
-      ("symbolRatio", TextOps.symbolRatio(col("text")), TextWitness.symbolRatio(col("text"))),
-      ("simhash60", coalesce(TextNative.stats(col("text"), TextOps.EnStopwords)
-        .getField("simhash"), lit(0L)), TextWitness.simhash(col("text"))),
-      ("langId", TextOps.langId(col("text")), when(TextWitness.stopwordRatio(col("text")) >= 0.05,
+      ("tokenCount", TextOps.tokenCount(col("text")), Witness.tokenCount(col("text"))),
+      ("stopwordRatio", TextOps.stopwordRatio(col("text")), Witness.stopwordRatio(col("text"))),
+      ("qualityScore", TextOps.qualityScore(col("text")), Witness.qualityScore(col("text"))),
+      ("fingerprint", TextOps.fingerprint(col("text")), Witness.fingerprint(col("text"))),
+      ("rep2", TextOps.repeatedNgramRatio(col("text"), 2), Witness.repeatedNgramRatio(col("text"), 2)),
+      ("rep3", TextOps.repeatedNgramRatio(col("text"), 3), Witness.repeatedNgramRatio(col("text"), 3)),
+      ("meanWordLength", TextOps.meanWordLength(col("text")), Witness.meanWordLength(col("text"))),
+      ("symbolRatio", TextOps.symbolRatio(col("text")), Witness.symbolRatio(col("text"))),
+      ("simhash1", simhash(1), Witness.simhash(col("text"), 1)),
+      ("simhash16", simhash(16), Witness.simhash(col("text"), 16)),
+      ("simhash59", simhash(59), Witness.simhash(col("text"), 59)),
+      ("simhash60", simhash(60), Witness.simhash(col("text"))),
+      ("langId", TextOps.langId(col("text")), when(Witness.stopwordRatio(col("text")) >= 0.05,
         lit("en")).otherwise(lit("unk")))
     )
     checks.foreach { case (name, native, witness) =>
       assertColsEqual(
         fixtures.select(col("doc_id"), native.as("a"), witness.as("b")), name)
     }
+    // the one-pass kernel counts 2- and 3-grams only; other n are refused
+    intercept[IllegalArgumentException](TextOps.repeatedNgramRatio(col("text"), 4))
   }
 
   test("Tokens equals filter(split) incl. order") {
@@ -178,12 +185,12 @@ class TextNativeSpec extends SparkSpec {
     val df = strs.zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("doc_id", "text")
     val checks = Seq(
-      ("fp", TextOps.fingerprint(col("text")), TextWitness.fingerprint(col("text"))),
+      ("fp", TextOps.fingerprint(col("text")), Witness.fingerprint(col("text"))),
       ("rep2", TextOps.repeatedNgramRatio(col("text"), 2),
-        TextWitness.repeatedNgramRatio(col("text"), 2)),
-      ("mwl", TextOps.meanWordLength(col("text")), TextWitness.meanWordLength(col("text"))),
-      ("sym", TextOps.symbolRatio(col("text")), TextWitness.symbolRatio(col("text"))),
-      ("q", TextOps.qualityScore(col("text")), TextWitness.qualityScore(col("text"))))
+        Witness.repeatedNgramRatio(col("text"), 2)),
+      ("mwl", TextOps.meanWordLength(col("text")), Witness.meanWordLength(col("text"))),
+      ("sym", TextOps.symbolRatio(col("text")), Witness.symbolRatio(col("text"))),
+      ("q", TextOps.qualityScore(col("text")), Witness.qualityScore(col("text"))))
     checks.foreach { case (name, a, b) =>
       assertColsEqual(df.select(col("doc_id"), a.as("a"), b.as("b")), s"fuzz-$name")
     }
@@ -218,14 +225,14 @@ class TextNativeSpec extends SparkSpec {
 
   test("filterVerdict equals the witness-composed CASE chain") {
     val witnessVerdict = {
-      val n = TextWitness.tokenCount(col("text"))
-      val mwl = TextWitness.meanWordLength(col("text"))
+      val n = Witness.tokenCount(col("text"))
+      val mwl = Witness.meanWordLength(col("text"))
       when(n < 20, lit("too_short"))
         .when(n > 90, lit("too_long"))
-        .when(TextWitness.symbolRatio(col("text")) > 0.1, lit("symbols"))
+        .when(Witness.symbolRatio(col("text")) > 0.1, lit("symbols"))
         .when(mwl < 4.3 || mwl > 4.7, lit("word_length"))
-        .when(TextWitness.repeatedNgramRatio(col("text"), 2) > 0.05, lit("repetitive"))
-        .when(TextWitness.stopwordRatio(col("text")) === 0.0, lit("no_stopwords"))
+        .when(Witness.repeatedNgramRatio(col("text"), 2) > 0.05, lit("repetitive"))
+        .when(Witness.stopwordRatio(col("text")) === 0.0, lit("no_stopwords"))
         .otherwise(lit("keep"))
     }
     assertColsEqual(fixtures.select(col("doc_id"),

@@ -166,7 +166,7 @@ class VectorSpec extends SparkSpec {
     // same ranks, same approx_cosine doubles
     val native = VectorOps.pqTopK(q, emb, 10, cb1)
       .collect().map(_.toString).sorted
-    val viaCols = VectorOps.pqTopKViaColumns(q, emb, 10, cb1)
+    val viaCols = Witness.pqTopK(q, emb, 10, cb1)
       .collect().map(_.toString).sorted
     assert(native.sameElements(viaCols), "native PQ path diverged from HOF path")
     // shortlist-100 + exact re-rank: quantization error only costs recall
@@ -223,7 +223,7 @@ class VectorSpec extends SparkSpec {
     for (planes <- Seq(1, 4, 8)) {
       val pair = emb.select(
         VectorOps.lshBucket(col("embedding"), planes, 64).as("nb"),
-        VectorOps.lshBucketViaColumns(col("embedding"), planes, 64).as("wb"))
+        Witness.lshBucket(col("embedding"), planes, 64).as("wb"))
       assert(pair.filter(col("nb") =!= col("wb")).count() == 0, s"planes=$planes")
     }
   }
@@ -239,7 +239,7 @@ class VectorSpec extends SparkSpec {
     for (cb <- Seq(cbKm, cbIds); n <- Seq(1, 4, 8)) {
       val native = VectorOps.ivfAssign(emb, cb, n)
         .selectExpr("vec_id", "cent_id").collect().map(_.toString).sorted
-      val hof = VectorOps.ivfAssignViaColumns(emb, cb, n)
+      val hof = Witness.ivfAssign(emb, cb, n)
         .selectExpr("vec_id", "cent_id").collect().map(_.toString).sorted
       assert(native.sameElements(hof), s"n=$n cids=${cb.take(2).map(_._1).mkString(",")}")
     }
@@ -293,7 +293,7 @@ class VectorSpec extends SparkSpec {
     for (n <- Seq(1, 2, 4)) {
       val native = VectorOps.ivfAssign(rows, cb, n)
         .selectExpr("vec_id", "cent_id").collect().map(_.toString).sorted
-      val hof = VectorOps.ivfAssignViaColumns(rows, cb, n)
+      val hof = Witness.ivfAssign(rows, cb, n)
         .selectExpr("vec_id", "cent_id").collect().map(_.toString).sorted
       assert(native.sameElements(hof), s"n=$n")
     }
@@ -311,7 +311,7 @@ class VectorSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 8)
     // end-to-end: the aggregate-ranked brute path vs the window-ranked one
     val viaAgg = VectorOps.bruteTopK(q, emb, 10).collect().map(_.toString).sorted
-    val viaWin = VectorOps.bruteTopKViaWindows(q, emb, 10)
+    val viaWin = Witness.bruteTopK(q, emb, 10)
       .collect().map(_.toString).sorted
     assert(viaAgg.sameElements(viaWin))
 
@@ -324,7 +324,7 @@ class VectorSpec extends SparkSpec {
     }.toDF("query_id", "cosine", "neighbor_id")
     val aggRanked = VectorOps.topKPerQuery(scored, 25, "cosine")
       .collect().map(_.toString).sorted
-    val winRanked = VectorOps.topKPerQueryViaWindows(scored, 25, "cosine")
+    val winRanked = Witness.topKPerQuery(scored, 25, "cosine")
       .collect().map(_.toString).sorted
     assert(aggRanked.sameElements(winRanked))
   }
@@ -390,7 +390,7 @@ class VectorSpec extends SparkSpec {
       .select(col("a.embedding").as("x"), col("b.embedding").as("y"))
     val diff = pairs.select(
         VectorOps.dot(col("x"), col("y")).as("n"),
-        VectorOps.dotWitness(col("x"), col("y")).as("w"))
+        Witness.dot(col("x"), col("y")).as("w"))
       .filter(!(col("n") <=> col("w"))).count()
     assert(diff == 0)
     // double-typed side (centroid shape) + mismatched lengths → null
@@ -400,12 +400,12 @@ class VectorSpec extends SparkSpec {
     ).toDF("x", "y")
     val out = edge.select(
       VectorOps.dot(col("x"), col("y")).as("n"),
-      VectorOps.dotWitness(col("x"), col("y")).as("w")).collect()
+      Witness.dot(col("x"), col("y")).as("w")).collect()
     assert(out(0).getDouble(0) == out(0).getDouble(1))
     assert(out(1).isNullAt(0) && out(1).isNullAt(1))
     // norm2 = dot(a, a) equals the fused v*v fold bit-for-bit
     val n2 = emb.select(VectorOps.norm2(col("embedding")).as("n"),
-        VectorOps.norm2Witness(col("embedding")).as("w"))
+        Witness.norm2(col("embedding")).as("w"))
       .filter(!(col("n") <=> col("w"))).count()
     assert(n2 == 0)
   }

@@ -6,8 +6,10 @@
 #   1. sbt compile + full sbt test (live-PG spec included via the sidecar;
 #      if the sidecar cannot start, the spec cancels rather than fails and
 #      the gate records that)
-#   1a. one way to run concurrent driver work: no thread pool, Future or
-#      ExecutionContext in engine code outside graft.Concurrent
+#   1a. one way to do one thing: no thread pool, Future or
+#      ExecutionContext in engine code outside graft.Concurrent, and no
+#      bit-equality witness (*Witness, *ViaColumns, *ViaWindows) in
+#      src/main — witnesses live in the tests (graft.Witness)
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -54,19 +56,24 @@ if [[ $SKIP_TESTS -eq 0 ]]; then
   fi
 fi
 
-# --- 1a. one way to run concurrent driver work -------------------------
+# --- 1a. one way to do one thing ---------------------------------------
 # Independent driver work runs through graft.Concurrent (cancel on first
 # failure, release, first cause); a hand-rolled pool elsewhere fails.
-note "one-way concurrency check"
+note "one-way check"
 STRAY=$(git grep -nE 'java\.util\.concurrent\.(Executors|Callable|ExecutionException)|ExecutionContext|Await\.result|invokeAll' \
   -- src/main ':!src/main/scala/graft/tools' \
   ':!src/main/scala/graft/Concurrent.scala')
-if [[ -z "$STRAY" ]]; then
+# One implementation per kernel: the bit-equality witnesses the native
+# kernels are checked against belong to the tests, not the engine.
+WITNESS=$(git grep -nE '\b(object|def) \w*(Witness|ViaColumns|ViaWindows)\b' -- src/main)
+if [[ -z "$STRAY" && -z "$WITNESS" ]]; then
   ONEWAY="ok"
-  note "concurrency: graft.Concurrent is the only pool"
+  note "one way: graft.Concurrent is the only pool; no witness in src/main"
 else
-  ONEWAY="FAILED: $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
-  echo "$STRAY" | tee -a "$LOG"
+  ONEWAY="FAILED:"
+  [[ -n "$STRAY" ]] && ONEWAY="$ONEWAY $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
+  [[ -n "$WITNESS" ]] && ONEWAY="$ONEWAY $(echo "$WITNESS" | wc -l) witness definition(s) in src/main"
+  { [[ -n "$STRAY" ]] && echo "$STRAY"; [[ -n "$WITNESS" ]] && echo "$WITNESS"; } | tee -a "$LOG"
   note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
 
