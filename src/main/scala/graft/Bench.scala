@@ -52,62 +52,7 @@ object Bench {
     // looked like an improvement). Failures carry through as None and are
     // reported in an explicit "failed" list with a null timing.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Host-speed canary: a CONSTANT sf-independent workload (hash-agg over
-    // a fixed range) timed before each sweep and recorded in the artifact.
-    // The shared host's speed drifts 2-3x between measurement windows
-    // (round-7 adjudication), so cross-round totals are only comparable
-    // after dividing by the canary ratio; without it, host drift reads as
-    // an engine regression.
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 50000000L, 1, 32)
-        .selectExpr("xxhash64(id) % 97 AS k", "id")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Memory-BANDWIDTH canary: a constant ~512 MB full-shuffle
-    // materialization (cheap rpad payload, so the time is serialization +
-    // shuffle write/read memory traffic, not arithmetic). Exists because
-    // the CPU canary cannot adjudicate output-bound queries: round 10's
-    // d4 read 228 s vs a prior 74.5 s artifact on a SAME-CPU-speed window
-    // — the swing was co-tenant memory-bandwidth pressure the hash-agg
-    // canary is blind to. Recorded next to canary_sec so output-bound
-    // rows in cross-round comparisons divide by the right probe.
-    def canaryMem(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 4000000L, 1, 32)
-        .selectExpr("id", "rpad(cast(id AS string), 128, 'x') AS payload")
-        .repartition(32, org.apache.spark.sql.functions.col("id"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Disk-I/O canary (round 16): a fixed 512 MB O_DIRECT read of a
-    // pre-written probe file — dd's iflag=direct bypasses the page
-    // cache, so this times the DISK, not memory. Exists because the
-    // CPU+mem probes failed to adjudicate the round-15 window (+12%
-    // uniform suite drift with BOTH canaries at parity — the drifting
-    // axis was I/O; the suite reads sf-dir parquet on the shared disks
-    // every query, and the probes never touched them). Best-effort: a
-    // filesystem without O_DIRECT records -1 rather than failing the
-    // bench.
-    val ioProbeFile = {
-      val p = java.nio.file.Files.createTempFile("graft-io-canary", ".bin")
-      p.toFile.deleteOnExit()
-      val w = new ProcessBuilder("dd", "if=/dev/zero", s"of=$p",
-        "bs=1M", "count=512", "conv=fsync")
-        .redirectErrorStream(true).start()
-      w.getInputStream.readAllBytes()
-      if (w.waitFor() == 0) Some(p) else { System.err.println(
-        "[bench] io canary fixture write failed; recording -1"); None }
-    }
-    def canaryIo(): Double = ioProbeFile.map { p =>
-      val t0 = System.nanoTime()
-      val r = new ProcessBuilder("dd", s"if=$p", "of=/dev/null",
-        "bs=1M", "iflag=direct").redirectErrorStream(true).start()
-      r.getInputStream.readAllBytes()
-      if (r.waitFor() == 0) (System.nanoTime() - t0) / 1e9 else -1.0
-    }.getOrElse(-1.0)
+    val ioProbeFile = ioProbe()
     // Round-7 lesson: both sweeps used to traverse the suite in the SAME
     // alphabetical order at similar pace, so one sustained host-steal
     // burst sat on the same contiguous block in both passes and the
@@ -129,11 +74,11 @@ object Bench {
           name -> None
         }
       }
-    val canary1 = canary(); val canaryMem1 = canaryMem()
-    val canaryIo1 = canaryIo()
+    val canary1 = canary(spark); val canaryMem1 = canaryMem(spark)
+    val canaryIo1 = canaryIo(ioProbeFile)
     val first = sweep(seed = 1).sortBy(_._1)
-    val canary2 = canary(); val canaryMem2 = canaryMem()
-    val canaryIo2 = canaryIo()
+    val canary2 = canary(spark); val canaryMem2 = canaryMem(spark)
+    val canaryIo2 = canaryIo(ioProbeFile)
     val second = sweep(seed = 2).toMap
     val canarySec = math.min(canary1, canary2)
     val canaryMemSec = math.min(canaryMem1, canaryMem2)
@@ -158,7 +103,8 @@ object Bench {
     // is the ESTIMATE of what this sweep would cost on that reference host;
     // raw `value` + `canary_sec` stay primary for anyone re-deriving it.
     val canaryRef = 0.487
-    // canary_mem_ref: measured in round 11 via CanaryProbe on a host
+    // canary_mem_ref: measured in round 11 with the standalone canary
+    // probe (now `graft.tools.Prof canary`) on a host
     // window whose CPU canary sat AT the reference (0.40-0.54 vs 0.487):
     // mem probe 1.80-1.89 s steady. First round the probe exists, so this
     // IS the reference by definition (BASELINE.md round-11 section).
@@ -185,4 +131,64 @@ object Bench {
       sys.exit(3)
     }
   }
+
+  // Host-speed canary: a CONSTANT sf-independent workload (hash-agg over
+  // a fixed range) timed before each sweep and recorded in the artifact.
+  // The shared host's speed drifts 2-3x between measurement windows
+  // (round-7 adjudication), so cross-round totals are only comparable
+  // after dividing by the canary ratio; without it, host drift reads as
+  // an engine regression.
+  def canary(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0, 50000000L, 1, 32)
+      .selectExpr("xxhash64(id) % 97 AS k", "id")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  // Memory-BANDWIDTH canary: a constant ~512 MB full-shuffle
+  // materialization (cheap rpad payload, so the time is serialization +
+  // shuffle write/read memory traffic, not arithmetic). Exists because
+  // the CPU canary cannot adjudicate output-bound queries: round 10's
+  // d4 read 228 s vs a prior 74.5 s artifact on a SAME-CPU-speed window
+  // — the swing was co-tenant memory-bandwidth pressure the hash-agg
+  // canary is blind to. Recorded next to canary_sec so output-bound
+  // rows in cross-round comparisons divide by the right probe.
+  def canaryMem(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0, 4000000L, 1, 32)
+      .selectExpr("id", "rpad(cast(id AS string), 128, 'x') AS payload")
+      .repartition(32, org.apache.spark.sql.functions.col("id"))
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  // Disk-I/O canary (round 16): a fixed 512 MB O_DIRECT read of a
+  // pre-written probe file — dd's iflag=direct bypasses the page
+  // cache, so this times the DISK, not memory. Exists because the
+  // CPU+mem probes failed to adjudicate the round-15 window (+12%
+  // uniform suite drift with BOTH canaries at parity — the drifting
+  // axis was I/O; the suite reads sf-dir parquet on the shared disks
+  // every query, and the probes never touched them). Best-effort: a
+  // filesystem without O_DIRECT records -1 rather than failing the
+  // bench.
+  def ioProbe(): Option[java.nio.file.Path] = {
+    val p = java.nio.file.Files.createTempFile("graft-io-canary", ".bin")
+    p.toFile.deleteOnExit()
+    val w = new ProcessBuilder("dd", "if=/dev/zero", s"of=$p",
+      "bs=1M", "count=512", "conv=fsync")
+      .redirectErrorStream(true).start()
+    w.getInputStream.readAllBytes()
+    if (w.waitFor() == 0) Some(p) else { System.err.println(
+      "[bench] io canary fixture write failed; recording -1"); None }
+  }
+
+  def canaryIo(probe: Option[java.nio.file.Path]): Double = probe.map { p =>
+    val t0 = System.nanoTime()
+    val r = new ProcessBuilder("dd", s"if=$p", "of=/dev/null",
+      "bs=1M", "iflag=direct").redirectErrorStream(true).start()
+    r.getInputStream.readAllBytes()
+    if (r.waitFor() == 0) (System.nanoTime() - t0) / 1e9 else -1.0
+  }.getOrElse(-1.0)
 }

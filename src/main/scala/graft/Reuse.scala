@@ -15,8 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * release. [[releasing]] is that owner: every frame [[persist]]ed while
   * its body runs — on the calling thread or on a thread it starts — is
   * unpersisted when the body returns or throws. [[SparkEntry.run]] wraps
-  * every declared query in it, so `Verify`, `Bench` and `BenchOne` leave
-  * no cache entry behind a query. A frame persisted outside any
+  * every declared query in it, so `Verify`, `Bench` and
+  * `graft.tools.Prof` leave no cache entry behind a query. A frame persisted outside any
   * `releasing` body stays cached until its caller unpersists it.
   */
 object Reuse {

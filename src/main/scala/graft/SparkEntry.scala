@@ -23,7 +23,8 @@ object SparkEntry {
     queries("a5_grouped_stats")(spark, "/root/testdata/sf0.001")
 
   /** Run declared query `name` and hand its DataFrame to `action` — the
-    * one way `Verify`, `Bench` and `BenchOne` execute a query. Frames the
+    * one way `Verify`, `Bench` and `graft.tools.Prof` execute a query
+    * (gate stage 1a rejects a direct `queries(name)` call). Frames the
     * query materialized for reuse ([[Reuse.persist]]) are released once
     * `action` has returned or thrown, so a query leaves no cache entry.
     */

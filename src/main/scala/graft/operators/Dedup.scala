@@ -876,7 +876,8 @@ object Dedup {
           col("x.cid") < col("y.cid"))
       // multi-band collisions dedupe map-side ([[firstCollision]]) — the
       // old `.distinct()` shuffled the whole near-quadratic candidate
-      // stream (the second-largest stage in D4Prof16's decomposition)
+      // stream (the second-largest stage of d4 in round 16's per-stage
+      // profile)
       .filter(firstCollision(col("x.__bks"), col("y.__bks"), col("x.band"), bands))
       .select(col("x.cid").as("cid1"), col("y.cid").as("cid2"))
   }

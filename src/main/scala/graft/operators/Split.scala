@@ -57,8 +57,9 @@ object Split {
     *   - exact = false (default): approximate quantiles of the time column
     *     (one parallel aggregate; EXACT interpolating percentile buffers
     *     every value and is itself a bottleneck — measured 42 s exact vs
-    *     2 s approx vs 11 s for the row_number variant on 10 M rows,
-    *     tools/ScaleSmoke). Fractions are approximate.
+    *     2 s approx vs 11 s for the row_number variant on 10 M rows in
+    *     the retired 2026-08 scale smoke, BASELINE.md). Fractions are
+    *     approximate.
     *   - exact = true: rank-based cutoffs — cut_i is the ⌊cut·n⌋-th
     *     smallest timestamp, from cumulative counts over DISTINCT
     *     timestamps (a year of 1-minute bars is ~526 k distinct values, so

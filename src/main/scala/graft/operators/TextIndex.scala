@@ -103,8 +103,8 @@ object TextIndex {
     * agg spilled on one-shot builds; now the only shuffle is the bucket
     * repartition of the already-aggregated postings (1 M-doc build:
     * 137.8 s with the explode+groupBy form vs 17.9-42 s across runs with
-    * the kernel — ScaleSmoke stream section; the spread is shared-host
-    * load, the win reproduces in every pairing).
+    * the kernel — round 7's streaming smoke, BASELINE.md; the spread is
+    * shared-host load, the win reproduces in every pairing).
     */
   private def postingsOf(perDoc: DataFrame, buckets: Int): DataFrame =
     perDoc

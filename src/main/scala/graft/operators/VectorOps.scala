@@ -137,16 +137,15 @@ object VectorOps {
 
   /** THE core: meet `cands` with `probes` (cross join when `on` is None,
     * else an equi-join on that key), drop self-pairs, score, keep the top
-    * k per query. `distinct` collapses repeated (query, candidate) pairs
-    * before ranking.
+    * k per query. Every generator meets a (query, candidate) pair at most
+    * once, so no pair needs collapsing before ranking.
     */
   private def filterRefine(probes: DataFrame, cands: DataFrame,
-      on: Option[String], score: Score, k: Int,
-      distinct: Boolean = false): DataFrame = {
+      on: Option[String], score: Score, k: Int): DataFrame = {
     val met = on.fold(cands.crossJoin(probes))(key => cands.join(probes, Seq(key)))
-    val pairs = met.filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), score.value.as(score.name))
-    topKPerQuery(if (distinct) pairs.distinct() else pairs, k, score.name)
+    topKPerQuery(met.filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), score.value.as(score.name)),
+      k, score.name)
   }
 
   /** Brute-force cosine top-k: broadcast the query set, one corpus pass,
@@ -180,7 +179,9 @@ object VectorOps {
     * recovers the near-misses that straddle one hyperplane at the cost of
     * (planes+1)× probe rows; the corpus side stays single-bucket so the
     * index build is unchanged. The standard recall/latency dial for
-    * sign-random-projection LSH.
+    * sign-random-projection LSH. A query's probe buckets are pairwise
+    * distinct and each corpus vector sits in exactly one bucket, so a
+    * (query, neighbor) pair meets at most once.
     */
   def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int, dims: Int): DataFrame = {
@@ -195,7 +196,7 @@ object VectorOps {
         col("bucket0").bitwiseXOR(col("flip")).as("bucket"))
     filterRefine(probes,
       exactCands(corpus, lshBucket(col("embedding"), planes, dims).as("bucket")),
-      Some("bucket"), Exact, k, distinct = true)
+      Some("bucket"), Exact, k)
   }
 
   /** The driver-side stride sample both codebook trainers learn from:

@@ -102,7 +102,8 @@ object VectorQueries {
   private val kmIters = 4
   private val sampleMod = 3
   // d5b/d7b blocking dial: expected rows per coarse block. 2048 matches
-  // the round-8 ScaleSmoke measurement (1.3x wall for 2x data at 100-200k)
+  // the round-8 scale measurement (1.3x wall for 2x data at 100-200k,
+  // BASELINE.md)
   private val dialTarget = 2048L
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[String, VectorIndex.Index]()

@@ -160,38 +160,18 @@ private[sinks] object GraftProcedures {
             a.getLong(1)))
       }
       case "history" => new GraftProcedure("history",
-        Seq(param("table", StringType)),
-        StructType(Seq(StructField("version", LongType),
-          StructField("parent", LongType),
-          StructField("op", StringType),
-          StructField("n_files", LongType),
-          StructField("bytes", LongType),
-          StructField("n_delete_files", LongType),
-          StructField("commit_time_us", LongType)))) {
-        // multi-row result: one line per committed version, straight off
-        // the manifests (no data I/O) — the SQL twin of SnapshotLake.history
+        Seq(param("table", StringType)), SnapshotLake.HistorySchema) {
+        // multi-row result: SnapshotLake.history's rows, one per committed
+        // version, straight off the manifests (no data I/O)
         override def run(a: InternalRow): Seq[Any] = Seq.empty
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
-          val root = rootOf(catalog, str(input, 0))
-          val out: Array[InternalRow] =
-            SnapshotLake.versions(spark, root).map { v =>
-              val m = SnapshotLake.manifest(spark, root, Some(v))
-              new GenericInternalRow(Array[Any](m.version, m.parent,
-                org.apache.spark.unsafe.types.UTF8String.fromString(m.op),
-                m.files.size.toLong, m.bytes,
-                m.files.flatMap(_.deletes).distinct.size.toLong,
-                m.props.get("commitTimeUs")
-                  .flatMap(s => scala.util.Try(s.toLong).toOption)
-                  .map(Long.box).orNull)): InternalRow
-            }.toArray
-          val schema = StructType(Seq(StructField("version", LongType),
-            StructField("parent", LongType), StructField("op", StringType),
-            StructField("n_files", LongType), StructField("bytes", LongType),
-            StructField("n_delete_files", LongType),
-            StructField("commit_time_us", LongType)))
+          val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToCatalystConverter(SnapshotLake.HistorySchema)
+          val out = SnapshotLake.historyRows(spark, rootOf(catalog, str(input, 0)))
+            .map(r => toRow(r).asInstanceOf[InternalRow]).toArray
           java.util.Collections.singletonList[Scan](new LocalScan {
             override def rows(): Array[InternalRow] = out
-            override def readSchema(): StructType = schema
+            override def readSchema(): StructType = SnapshotLake.HistorySchema
           }).iterator()
         }
       }

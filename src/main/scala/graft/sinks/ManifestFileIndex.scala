@@ -97,6 +97,18 @@ object ManifestFileIndex {
       stats.get(c).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi }
     }
 
+  /** Does file `f` survive both the envelope `box` and the partition
+    * `values` filter? A partition column the file's path does not name
+    * keeps it, as a column with no envelope does.
+    */
+  private[sinks] def surviving(f: SnapshotLake.FileEntry,
+      box: Map[String, (Double, Double)],
+      values: Map[String, Set[String]]): Boolean =
+    surviving(f.stats, box) && (values.isEmpty || {
+      val pv = SnapshotLake.partitionValuesOf(f.rel)
+      values.forall { case (c, allowed) => pv.get(c).forall(allowed.contains) }
+    })
+
   private def intersect(a: Map[String, (Double, Double)],
       b: Map[String, (Double, Double)]): Map[String, (Double, Double)] =
     (a.keySet ++ b.keySet).map { k =>

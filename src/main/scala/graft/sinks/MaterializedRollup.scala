@@ -249,8 +249,7 @@ object MaterializedRollup {
     SnapshotLake.retryOnConflict(spark, root, "hll-fold") { () =>
       val m = SnapshotLake.manifest(spark, root, None)
       val overlap = m.files.filter(f =>
-        f.stats.get(spec.pruneKey).forall { case (fLo, fHi) =>
-          fHi >= lo && fLo <= hi })
+        ManifestFileIndex.surviving(f.stats, Map(spec.pruneKey -> (lo, hi))))
       val existing =
         if (overlap.isEmpty)
           spark.createDataFrame(
@@ -409,8 +408,7 @@ object MaterializedRollup {
           val (lo, hi) = (SnapshotLake.toDoubleStat(range.get(0)),
             SnapshotLake.toDoubleStat(range.get(1)))
           val (overlap, untouched) = mvHead.files.partition(f =>
-            f.stats.get(spec.pruneKey).forall { case (fLo, fHi) =>
-              fHi >= lo && fLo <= hi })
+            ManifestFileIndex.surviving(f.stats, Map(spec.pruneKey -> (lo, hi))))
           val existing =
             if (overlap.isEmpty)
               spark.createDataFrame(

@@ -166,16 +166,8 @@ final class SnapshotMorScanBuilder(
     val box = SnapshotTable.pruneBoxOf(pushed)
     val partVals = SnapshotTable.partitionValuesFrom(pushed, partCols,
       spark.sessionState.conf.sessionLocalTimeZone)
-    val candidates = base.files.filter { f =>
-      box.forall { case (c, (lo, hi)) =>
-        f.stats.get(c).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-      } && {
-        val pv = SnapshotLake.partitionValuesOf(f.rel)
-        partVals.forall { case (c, allowed) =>
-          pv.get(c).forall(allowed.contains)
-        }
-      }
-    }
+    val candidates =
+      base.files.filter(f => ManifestFileIndex.surviving(f, box, partVals))
     op.foreach(_.candidates = candidates)
     val needsPos = required.exists(_.fieldNames
       .contains(SnapshotTable.PosMetaCol)) || op.nonEmpty

@@ -1063,8 +1063,9 @@ object SnapshotLake {
         (df.observe(o, metrics.head, metrics.tail: _*), Some(o))
       }
     val w = toWrite.write.mode("overwrite").option("compression", "zstd")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(stage.toString)
+    writeStage(spark, stage)(
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(stage.toString))
     obs.foreach { o =>
       val bad = o.get.toSeq.collect {
         case (n, v: Long) if v > 0 => s"$n ($v row(s))"
@@ -1093,6 +1094,32 @@ object SnapshotLake {
       sortedBlooms)
     fs.delete(stage, true)
     staged
+  }
+
+  /** Run `write` into `stage` under a job tag of its own; on failure,
+    * delete the stage and rethrow. The write's abort empties the stage
+    * but leaves its directory, and a failed or cancelled job ends before
+    * its killed tasks do — a task still running may write under the stage
+    * again — so the stage is deleted once every task of the tagged jobs
+    * has ended.
+    */
+  private def writeStage(spark: SparkSession, stage: Path)(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-${stage.getName}"
+    sc.addJobTag(tag)
+    try write
+    catch { case e: Throwable =>
+      val st = sc.statusTracker
+      def running: Boolean = {
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark)
+        st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+          .flatMap(_.stageIds).flatMap(st.getStageInfo(_))
+          .exists(_.numActiveTasks > 0)
+      }
+      while (running) Thread.sleep(10)
+      stage.getFileSystem(sc.hadoopConfiguration).delete(stage, true)
+      throw e
+    } finally sc.removeJobTag(tag)
   }
 
   /** Pass 2+3 of a stage: footer-probe, move under data/, build the
@@ -1826,11 +1853,8 @@ object SnapshotLake {
   def candidateEntries(spark: SparkSession, root: String,
       box: Map[String, (Double, Double)],
       version: Option[Long] = None): Seq[FileEntry] =
-    manifest(spark, root, version).files.filter { f =>
-      box.forall { case (c, (lo, hi)) =>
-        f.stats.get(c).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-      }
-    }
+    manifest(spark, root, version).files
+      .filter(f => ManifestFileIndex.surviving(f.stats, box))
 
   /** Stats-pruned box read: plan over only [[candidateEntries]] plus the
     * residual predicate — the candidate set is decided from ONE manifest,
@@ -1974,18 +1998,34 @@ object SnapshotLake {
   }
 
   /** Version history — (version, parent, op, n_files, bytes,
-    * n_delete_files): the last column is the distinct position-delete
-    * sidecars the version references (0 = no pending merge-on-read
-    * deletes; a rewrite absorbing them shows the count dropping).
+    * n_delete_files, commit_time_us): `n_delete_files` is the distinct
+    * position-delete sidecars the version references (0 = no pending
+    * merge-on-read deletes; a rewrite absorbing them shows the count
+    * dropping). `CALL graft.system.history` returns the same rows.
     */
-  def history(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    versions(spark, root)
-      .map(v => manifest(spark, root, Some(v)))
-      .map(m => (m.version, m.parent, m.op, m.files.size.toLong, m.bytes,
-        m.files.flatMap(_.deletes).distinct.size.toLong))
-      .toDF("version", "parent", "op", "n_files", "bytes", "n_delete_files")
+  def history(spark: SparkSession, root: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(historyRows(spark, root): _*), HistorySchema)
+
+  /** The schema of [[history]] and of `CALL graft.system.history`. */
+  val HistorySchema: StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    StructType(Seq("version", "parent", "op", "n_files", "bytes",
+      "n_delete_files", "commit_time_us").map(n =>
+      StructField(n, if (n == "op") StringType else LongType)))
   }
+
+  /** One [[HistorySchema]] row per committed version, from the manifests
+    * alone (no data I/O); `commit_time_us` is null on a manifest written
+    * before commits were stamped.
+    */
+  private[sinks] def historyRows(spark: SparkSession, root: String): Seq[Row] =
+    versions(spark, root).map { v =>
+      val m = manifest(spark, root, Some(v))
+      Row(m.version, m.parent, m.op, m.files.size.toLong, m.bytes,
+        m.files.flatMap(_.deletes).distinct.size.toLong,
+        m.props.get("commitTimeUs").flatMap(_.toLongOption).map(Long.box).orNull)
+    }
 
   // ----------------------------------------------------------- maintenance
 
@@ -2387,10 +2427,9 @@ object SnapshotLake {
       } else {
         // a file is a candidate only when EVERY boxed prune column's
         // envelope overlaps (missing stats are conservatively kept)
-        val (envKept, envSkipped) = base.files.partition(f =>
-          boxes.forall { case (pk, box) => box.forall { case (lo, hi) =>
-            f.stats.get(pk).forall { case (fLo, fHi) =>
-              fHi >= lo && fLo <= hi } } })
+        val box = boxes.collect { case (pk, Some(b)) => pk -> b }.toMap
+        val (envKept, envSkipped) = base.files
+          .partition(f => ManifestFileIndex.surviving(f.stats, box))
         val (rewrite, untouched) = bloomPrunedMergeCandidates(spark, root,
           updates, pruneKeys, updCount, envKept, envSkipped)
         if (base.props.get("dmlMode").contains("mor")) {
@@ -2661,10 +2700,8 @@ object SnapshotLake {
       lockExpiryMs: Long = DefaultLockExpiryMs): (Long, Long, Int, Int) =
     retryOnConflict(spark, root, "delete") { () =>
       val base = manifest(spark, root, None)
-      val (rewrite, untouched) = base.files.partition(f =>
-        pruneBox.forall { case (c, (lo, hi)) =>
-          f.stats.get(c).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-        })
+      val (rewrite, untouched) = base.files
+        .partition(f => ManifestFileIndex.surviving(f.stats, pruneBox))
       if (rewrite.isEmpty) (base.version, 0L, 0, untouched.size)
       else {
         val fns = org.apache.spark.sql.functions
@@ -2748,16 +2785,8 @@ object SnapshotLake {
             "overwritten region; fix the predicate or the frame " +
             "(validate=false to override)")
       }
-      val (rewrite, untouched) = base.files.partition { f =>
-        pruneBox.forall { case (c, (lo, hi)) =>
-          f.stats.get(c).forall { case (fLo, fHi) => fHi >= lo && fLo <= hi }
-        } && {
-          val pv = partitionValuesOf(f.rel)
-          partitionValues.forall { case (c, allowed) =>
-            pv.get(c).forall(allowed.contains)
-          }
-        }
-      }
+      val (rewrite, untouched) = base.files.partition(f =>
+        ManifestFileIndex.surviving(f, pruneBox, partitionValues))
       val (keep, deleted) =
         if (rewrite.isEmpty)
           (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], base.schema), 0L)

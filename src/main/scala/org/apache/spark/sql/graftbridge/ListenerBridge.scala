@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Test seam for plan-capture specs: `QueryExecutionListener` events ride
   * the shared async listener bus, so a spec that registers a listener,
@@ -16,5 +18,14 @@ object ListenerBridge {
     */
   def drain(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The query execution a successful SQL execution ran, when the driver
+    * attached it to the end event (`private[sql]`; a failed execution may
+    * have no executed plan). Unlike a `QueryExecutionListener` callback,
+    * the event also names the execution id, which the start event maps to
+    * its job tags.
+    */
+  def queryExecution(e: SparkListenerSQLExecutionEnd): Option[QueryExecution] =
+    Option(e.qe).filter(_ => e.executionFailure.isEmpty)
 }
 

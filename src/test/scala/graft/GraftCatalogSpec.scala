@@ -808,16 +808,27 @@ class GraftCatalogSpec extends SparkSpec {
       f.rel.matches("y=\\d+/sym=[^/]+/.*")),
       s"post-evolution files must dir-encode the new spec: ${
         newFiles.map(_.rel)}")
-    // SQL reads span both generations through ONE split BatchScan
+    // SQL reads span both generations through ONE split BatchScan, read
+    // vectorized (a ColumnarToRow above the scan serves both)
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
     val all = spark.sql("SELECT * FROM graft.pev.t")
     assert(all.queryExecution.executedPlan.toString
       .contains("graft-split-scan"))
+    assert(scans(all).size == 1 && all.queryExecution.executedPlan
+      .collect { case c: ColumnarToRowExec => c }.nonEmpty)
     assert(all.count() == 24)
     // per-generation values and cross-layout pruning answers: sym is a
     // DATA column in generation A and a DIR column in generation B —
-    // the same predicate must see both
-    assert(spark.sql("SELECT * FROM graft.pev.t WHERE sym = 's1'")
-      .count() == 8)
+    // the same predicate must see both; one scan serves both generations
+    // and the predicate is re-applied above it
+    val bySym = spark.sql("SELECT * FROM graft.pev.t WHERE sym = 's1'")
+    assert(scans(bySym).size == 1 && bySym.queryExecution.executedPlan
+      .collect { case f: FilterExec => f }
+      .exists(_.condition.references.exists(_.name == "sym")))
+    assert(bySym.count() == 8)
     assert(spark.sql(
       "SELECT sum(close) FROM graft.pev.t WHERE y >= 2025").head.getDouble(0)
       == rows(12, 2025L, 100.0).filter(col("y") >= 2025)
@@ -869,5 +880,29 @@ class GraftCatalogSpec extends SparkSpec {
       case None =>
         spark.conf.unset("spark.sql.parquet.fieldId.read.enabled")
     }
+  }
+
+  test("SnapshotLake.history and CALL graft.system.history return one " +
+      "schema and the same rows: append, merge, merge-on-read delete") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.hist")
+    spark.sql("DROP TABLE IF EXISTS graft.hist.t")
+    spark.sql("CREATE TABLE graft.hist.t (id BIGINT, v DOUBLE) USING " +
+      "`graft-snapshot` TBLPROPERTIES ('dmlMode' 'mor', 'statsCols' 'id')")
+    (0L until 20L).map(i => (i, i.toDouble)).toDF("id", "v")
+      .createOrReplaceTempView("hist_src")
+    spark.sql("INSERT INTO graft.hist.t SELECT * FROM hist_src")
+    spark.sql("MERGE INTO graft.hist.t t USING (SELECT id, v + 1 AS v " +
+      "FROM hist_src WHERE id < 5) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v")
+    spark.sql("DELETE FROM graft.hist.t WHERE id >= 15")
+    val lib = SnapshotLake.history(spark, s"$warehouse/hist/t")
+    val sql = spark.sql("CALL graft.system.history(`table` => 'hist.t')")
+    assert(lib.schema == sql.schema, s"${lib.schema} vs ${sql.schema}")
+    assert(lib.schema == SnapshotLake.HistorySchema)
+    val rows = lib.collect().toSeq
+    assert(rows == sql.collect().toSeq)
+    assert(rows.size >= 3 && rows.forall(r => !r.isNullAt(6)))
+    assert(rows.last.getAs[Long]("n_delete_files") > 0,
+      s"the mor delete must show its sidecars: $rows")
   }
 }

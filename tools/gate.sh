@@ -7,9 +7,11 @@
 #      if the sidecar cannot start, the spec cancels rather than fails and
 #      the gate records that)
 #   1a. one way to do one thing: no thread pool, Future or
-#      ExecutionContext in engine code outside graft.Concurrent, and no
+#      ExecutionContext in engine code outside graft.Concurrent; no
 #      bit-equality witness (*Witness, *ViaColumns, *ViaWindows) in
-#      src/main — witnesses live in the tests (graft.Witness)
+#      src/main — witnesses live in the tests (graft.Witness); no main
+#      under graft/tools but graft.tools.Prof; no SparkEntry.queries( call
+#      outside SparkEntry.scala (SparkEntry.run releases reuse frames)
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -61,19 +63,28 @@ fi
 # failure, release, first cause); a hand-rolled pool elsewhere fails.
 note "one-way check"
 STRAY=$(git grep -nE 'java\.util\.concurrent\.(Executors|Callable|ExecutionException)|ExecutionContext|Await\.result|invokeAll' \
-  -- src/main ':!src/main/scala/graft/tools' \
-  ':!src/main/scala/graft/Concurrent.scala')
+  -- src/main ':!src/main/scala/graft/Concurrent.scala')
 # One implementation per kernel: the bit-equality witnesses the native
 # kernels are checked against belong to the tests, not the engine.
 WITNESS=$(git grep -nE '\b(object|def) \w*(Witness|ViaColumns|ViaWindows)\b' -- src/main)
-if [[ -z "$STRAY" && -z "$WITNESS" ]]; then
+# One profiler: graft.tools.Prof is the only dev main.
+MAINS=$(git grep -nE '\bdef main\b' -- src/main/scala/graft/tools \
+  ':!src/main/scala/graft/tools/Prof.scala')
+# A declared query runs through SparkEntry.run, which releases the frames
+# it persisted for reuse; calling SparkEntry.queries(...) directly skips
+# that release (so does looking a query up with get/getOrElse/apply).
+QUERIES=$(git grep -nE 'SparkEntry\.queries(\(|\.(apply|get|getOrElse)\()' -- src/main \
+  ':!src/main/scala/graft/SparkEntry.scala')
+if [[ -z "$STRAY$WITNESS$MAINS$QUERIES" ]]; then
   ONEWAY="ok"
-  note "one way: graft.Concurrent is the only pool; no witness in src/main"
+  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run"
 else
   ONEWAY="FAILED:"
   [[ -n "$STRAY" ]] && ONEWAY="$ONEWAY $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
   [[ -n "$WITNESS" ]] && ONEWAY="$ONEWAY $(echo "$WITNESS" | wc -l) witness definition(s) in src/main"
-  { [[ -n "$STRAY" ]] && echo "$STRAY"; [[ -n "$WITNESS" ]] && echo "$WITNESS"; } | tee -a "$LOG"
+  [[ -n "$MAINS" ]] && ONEWAY="$ONEWAY $(echo "$MAINS" | wc -l) main(s) in graft/tools besides Prof"
+  [[ -n "$QUERIES" ]] && ONEWAY="$ONEWAY $(echo "$QUERIES" | wc -l) SparkEntry.queries( call(s) outside SparkEntry.scala"
+  printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" | grep -v '^$' | tee -a "$LOG"
   note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
 
