@@ -3,6 +3,7 @@ package graft.obs
 import java.util.Properties
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -11,6 +12,8 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Rows (when the operator counts them) and time one physical operator
   * reported in a query's final plan.
@@ -29,7 +32,7 @@ final class Cost {
   /** One JSON object: `head` fields first, then the counters and the
     * operators.
     */
-  def json(head: (String, Any)*): String = Cost.obj(head ++ Seq(
+  def json(head: (String, Any)*): String = Cost.json(head ++ Seq(
     "wall_ms" -> wallMs, "jobs" -> jobs, "stages" -> stages,
     "tasks" -> tasks, "queries" -> queries,
     "executor_run_ms" -> runMs, "executor_cpu_ms" -> cpuMs,
@@ -37,36 +40,15 @@ final class Cost {
     "shuffle_write_bytes" -> shuffleWrite, "spill_bytes" -> spill,
     "input_bytes" -> input, "analysis_ms" -> analysisMs,
     "optimization_ms" -> optimizationMs, "planning_ms" -> planningMs,
-    "operators" -> operators.map(o =>
-      Cost.Raw(Cost.obj(Seq("node" -> o.node, "rows" -> o.rows, "ms" -> o.ms))))))
+    "operators" -> operators.toList))
 }
 
 object Cost {
-  /** A value already rendered as JSON. */
-  final case class Raw(json: String)
+  private implicit val formats: Formats = DefaultFormats
 
-  /** Render `fields` as one JSON object (strings escaped, doubles to
-    * three decimals, sequences as arrays).
-    */
-  def obj(fields: Seq[(String, Any)]): String =
-    fields.map { case (k, v) => s"${str(k)}:${value(v)}" }.mkString("{", ",", "}")
-
-  private def value(v: Any): String = v match {
-    case Raw(j) => j
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
-    case n @ (_: Int | _: Long | _: Boolean) => n.toString
-    case s: Iterable[_] => s.map(value).mkString("[", ",", "]")
-    case null | None => "null"
-    case Some(x) => value(x)
-    case other => str(other.toString)
-  }
-
-  private def str(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }.mkString("\"", "", "\"")
+  /** `fields` as one JSON object, in order. */
+  def json(fields: Seq[(String, Any)]): String =
+    Serialization.write(ListMap(fields: _*))
 }
 
 /** The engine's cost ledger: what Spark's listener bus and SQL metrics
@@ -110,13 +92,19 @@ object Ledger {
     attach(spark, tag, cost)
     sc.addJobTag(tag)
     val t0 = System.nanoTime()
-    try (body, cost)
-    finally {
+    // the listener is detached even when the closing drain times out, and
+    // a failure to close never hides the body's own
+    def close(): Unit = {
       cost.wallMs = (System.nanoTime() - t0) / 1e6
       sc.removeJobTag(tag)
-      ListenerBridge.drain(spark)
-      detach(spark, tag, cost)
+      try ListenerBridge.drain(spark) finally detach(spark, tag, cost)
     }
+    val a = try body catch { case e: Throwable =>
+      try close() catch { case c: Throwable => e.addSuppressed(c) }
+      throw e
+    }
+    close()
+    (a, cost)
   }
 
   private def attach(spark: SparkSession, tag: String, cost: Cost): Unit =

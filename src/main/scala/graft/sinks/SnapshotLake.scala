@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-pinned snapshot lake: serializable reads over plain parquet.
@@ -61,7 +62,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   1. head = latest manifest; next = head+1;
   *   2. createNewFile(v<next>.lock) — lose ⇒ wait (the lock is broken if
   *      its manifest already exists = owner crashed after publishing, or
-  *      its mtime exceeds `lockExpiryMs` = owner died mid-commit);
+  *      its mtime is older than `lockExpiryMs` plus a one-second slack
+  *      for coarse mtimes = owner died mid-commit);
   *   3. holding the lock, if v<next>.manifest exists ⇒ stale acquire,
   *      release and retry; otherwise the head is FROZEN at `next-1`
   *      (any other committer needs this very lock to publish next, and
@@ -415,8 +417,8 @@ object SnapshotLake {
           case _: java.io.FileNotFoundException => None
         }
         if (fs.exists(target)) lockProvider.unlock(fs, lock) // owner crashed post-publish
-        else if (st.exists(s =>
-            System.currentTimeMillis - s.getModificationTime > lockExpiryMs))
+        else if (st.exists(s => System.currentTimeMillis -
+            s.getModificationTime > lockExpiryMs + LockMtimeSlackMs))
           lockProvider.unlock(fs, lock) // owner died mid-commit; lease expired
         else { lockWaits.incrementAndGet(); Thread.sleep(25) }
       }
@@ -425,6 +427,14 @@ object SnapshotLake {
   }
 
   private[sinks] val DefaultLockExpiryMs = 10L * 60 * 1000
+
+  /** Added to every lease before a lock is broken. A lock's mtime is
+    * stamped from a coarse clock (Linux: the last timer tick) or truncated
+    * to a whole second (ext3, HFS+, many object-store gateways), so it can
+    * read earlier than the moment the lock was taken; without the slack a
+    * lease could end before `lockExpiryMs` of real time has passed.
+    */
+  private val LockMtimeSlackMs = 1000L
 
   /** Observability seam: cumulative 25 ms waits spent behind a LIVE
     * rival's lock (not expiry breaks). The lockbench tool reads the
@@ -1101,7 +1111,9 @@ object SnapshotLake {
     * but leaves its directory, and a failed or cancelled job ends before
     * its killed tasks do — a task still running may write under the stage
     * again — so the stage is deleted once every task of the tagged jobs
-    * has ended.
+    * has ended, or after `StageSettleMs` at most. The write's own error is
+    * always the one rethrown; a failure to settle or delete rides on it
+    * as a suppressed exception.
     */
   private def writeStage(spark: SparkSession, stage: Path)(write: => Unit): Unit = {
     val sc = spark.sparkContext
@@ -1109,18 +1121,23 @@ object SnapshotLake {
     sc.addJobTag(tag)
     try write
     catch { case e: Throwable =>
-      val st = sc.statusTracker
-      def running: Boolean = {
-        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark)
-        st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
-          .flatMap(_.stageIds).flatMap(st.getStageInfo(_))
-          .exists(_.numActiveTasks > 0)
-      }
-      while (running) Thread.sleep(10)
-      stage.getFileSystem(sc.hadoopConfiguration).delete(stage, true)
+      try {
+        val st = sc.statusTracker
+        def running: Boolean = {
+          ListenerBridge.drain(spark)
+          ListenerBridge.tasksRunning(sc, st.getJobIdsForTag(tag).toSeq
+            .flatMap(st.getJobInfo(_)).flatMap(_.stageIds))
+        }
+        val deadline = System.nanoTime + StageSettleMs * 1000000L
+        try while (System.nanoTime < deadline && running) Thread.sleep(10)
+        finally stage.getFileSystem(sc.hadoopConfiguration).delete(stage, true)
+      } catch { case s: Throwable => e.addSuppressed(s) }
       throw e
     } finally sc.removeJobTag(tag)
   }
+
+  /** How long a failed stage write waits for its killed tasks to end. */
+  private val StageSettleMs = 30000L
 
   /** Pass 2+3 of a stage: footer-probe, move under data/, build the
     * bloom sidecars — shared by [[stageFiles]] (whose parts come from a

@@ -104,10 +104,10 @@ object Prof {
     val cached = records.collect { case (n, _, true) => n }
     val body = records.map {
       case (n, Right(c), left) => c.json("query" -> n, "cache_left" -> left)
-      case (n, Left(e), left) => Cost.obj(Seq("query" -> n, "error" -> e,
+      case (n, Left(e), left) => Cost.json(Seq("query" -> n, "error" -> e,
         "cache_left" -> left))
     }
-    val head = Cost.obj(Seq("sf" -> sfDir,
+    val head = Cost.json(Seq("sf" -> sfDir,
       "cpus" -> spark.sparkContext.defaultParallelism, "queries" -> records.size,
       "failed" -> failed, "cache_left" -> cached))
     // one record per line, so a diff of two profiles reads per query
@@ -138,7 +138,7 @@ object Prof {
 
   /** A phase's measured fact that is not a cost. */
   private def fact(phase: String, facts: (String, Any)*): Unit =
-    println(Cost.obj(("phase" -> phase) +: facts))
+    println(Cost.json(("phase" -> phase) +: facts))
 
   /** The named phases, in `all` order. Each backs a claim in BASELINE.md
     * or COVERAGE.md; `rows` sizes the generator-fed ones.
@@ -203,7 +203,8 @@ object Prof {
       .withColumn("ver", lit(1L))
     val work = TempDirs.create("graft-prof-cdc4")
     val root = s"$work/lake"
-    val mid = 500000000L
+    val r = b.agg(min("event_id"), max("event_id")).head
+    val mid = (r.getLong(0) + r.getLong(1)) / 2
     step(ctx, "cdc4", "append1")(SnapshotLake.append(spark, root,
       b.filter(col("event_id") < mid).repartition(2), statsCols = Seq("event_id")))
     step(ctx, "cdc4", "append2")(SnapshotLake.append(spark, root,

@@ -422,13 +422,11 @@ class SnapshotLakeSpec extends SparkSpec {
     // with a short lease breaks it and proceeds
     val lock2 = new Path(mdir, "v00000002.lock")
     assert(fs.createNewFile(lock2))
-    // the lease runs from the lock file's mtime, which precedes any clock
-    // read taken after createNewFile returns
-    val locked = fs.getFileStatus(lock2).getModificationTime
+    val t0 = System.nanoTime
     val v2 = SnapshotLake.append(spark, root, bars(2, 3, 0.0),
       lockExpiryMs = 200)
     assert(v2 == 2)
-    assert(System.currentTimeMillis - locked >= 200) // actually waited the lease out
+    assert((System.nanoTime - t0) / 1e6 >= 200) // actually waited the lease out
     // (b) owner died after publish, before releasing: lock v3 AND
     // manifest v3 both exist — the version is consumed, so the dead lock
     // never blocks anyone (head already includes v3); vacuum sweeps it
