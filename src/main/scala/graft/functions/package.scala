@@ -24,8 +24,15 @@ package object functions {
 
   /** Order-independent exact sum of a double column, returned as double.
     * Oracle mirror: `CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE)`.
+    *
+    * `agg` wraps each aggregate call of the tree (here and in [[exactAvg]],
+    * [[exactVarSamp]], [[exactStdSamp]]): the default leaves a plain
+    * `groupBy`/`agg` aggregate, `_.over(Window.partitionBy())` makes the
+    * same tree a whole-frame window aggregate. Decimal addition is exact,
+    * so both forms give the same double bit for bit.
     */
-  def exactSum(c: Column): Column = sum(c.cast(Dec)).cast("double")
+  def exactSum(c: Column, agg: Column => Column = identity): Column =
+    agg(exactSumDec(c)).cast("double")
 
   /** [[exactSum]] WITHOUT the final double cast — the decimal bucket sum a
     * roll-up table materializes (`sum_<col>`) so that
@@ -44,8 +51,8 @@ package object functions {
     * is a single deterministic double op.
     * Oracle mirror: `CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) / count(x)`.
     */
-  def exactAvg(c: Column): Column =
-    exactSum(c) / count(c).cast("double")
+  def exactAvg(c: Column, agg: Column => Column = identity): Column =
+    exactSum(c, agg) / agg(count(c)).cast("double")
 
   /** Exact sample variance via decimal sum / sum-of-squares:
     * (sumsq - sum^2/n) / (n-1), all final arithmetic in double.
@@ -55,15 +62,16 @@ package object functions {
     *     * CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) / count(x))
     *  / (count(x) - 1)`.
     */
-  def exactVarSamp(c: Column): Column = {
-    val s = exactSum(c)
-    val sq = sum((c * c).cast(Dec)).cast("double")
-    val n = count(c).cast("double")
+  def exactVarSamp(c: Column, agg: Column => Column = identity): Column = {
+    val s = exactSum(c, agg)
+    val sq = agg(exactSumSqDec(c)).cast("double")
+    val n = agg(count(c)).cast("double")
     (sq - s * s / n) / (n - lit(1.0))
   }
 
   /** Exact sample stddev; oracle mirror `sqrt(<exactVarSamp sql>)`. */
-  def exactStdSamp(c: Column): Column = sqrt(exactVarSamp(c))
+  def exactStdSamp(c: Column, agg: Column => Column = identity): Column =
+    sqrt(exactVarSamp(c, agg))
 
   /** Exact sum for PRICE-LIKE doubles (true values have ≤4 decimal digits,
     * stored with ±few-ulp float noise). At DECIMAL(38,10) that noise can

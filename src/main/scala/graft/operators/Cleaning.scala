@@ -226,14 +226,8 @@ object Cleaning {
     * |x-mean|/std > t → price cols get NULL (caller ffills), volume gets the
     * global median. Exact decimal moments keep it oracle-deterministic.
     */
-  def zscoreOutlierBounds(df: DataFrame, cols: Seq[String], t: Double = 3.0): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(exactAvg(col(c)).as(s"__mu_$c"), exactStdSamp(col(c)).as(s"__sd_$c")))
-    df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail: _*)))
-  }
-
   def zscoreNullify(df: DataFrame, cols: Seq[String], t: Double = 3.0): DataFrame = {
-    val withBounds = zscoreOutlierBounds(df, cols, t)
+    val withBounds = Normalize.zscoreFit(df, cols)
     cols.foldLeft(withBounds)((d, c) =>
         d.withColumn(c,
           when(abs(col(c) - col(s"__mu_$c")) / col(s"__sd_$c") > t,

@@ -1,15 +1,26 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions._
 
 /** Normalization transforms (SURVEY §2.7 N1-N3) — the reference's
-  * `data_normalizer.py`. Fit is a single global aggregate reduced to a few
-  * doubles and broadcast back (no second shuffle); transform/inverse are
-  * pure row expressions, so the whole fit+transform plan is two scans of the
-  * source and stays fully codegen'd at any scale.
+  * `data_normalizer.py`. Transform/inverse are pure row expressions; the
+  * fit comes in two forms that compute the same stats bit for bit (one
+  * decimal-exact tree from [[graft.functions]], wrapped either way):
+  *
+  *  - [[zscoreFit]] / [[minmaxFit]]: a single global aggregate reduced to
+  *    a few doubles and broadcast back. The plan reads its source twice
+  *    (once for the aggregate, once for the rows) but keeps every row
+  *    task parallel — the right form for a standalone caller at scale.
+  *  - [[zscoreFitWindow]] / [[minmaxFitWindow]]: the same aggregates over
+  *    the whole-frame window `Window.partitionBy()`. The source is read
+  *    once, but every row passes through one task — the form for a plan
+  *    that already gathers the frame into one partition (as
+  *    [[Split.chronological]]'s row count does), where the stats then
+  *    cost no exchange, no broadcast job and no second read.
   *
   * The fitted stats survive as columns (`__mu_c` etc.) until [[finish]]
   * drops them — callers that need the inverse keep them (the reference
@@ -17,12 +28,29 @@ import graft.functions._
   */
 object Normalize {
 
+  private val wholeFrame: Column => Column = _.over(Window.partitionBy())
+
+  private def zscoreStats(cols: Seq[String], agg: Column => Column): Seq[Column] =
+    cols.flatMap(c => Seq(exactAvg(col(c), agg).as(s"__mu_$c"),
+      exactStdSamp(col(c), agg).as(s"__sd_$c")))
+
+  private def minmaxStats(cols: Seq[String], agg: Column => Column): Seq[Column] =
+    cols.flatMap(c => Seq(agg(min(col(c))).as(s"__mn_$c"),
+      agg(max(col(c))).as(s"__mx_$c")))
+
+  private def broadcastFit(df: DataFrame, stats: Seq[Column]): DataFrame =
+    df.crossJoin(broadcast(df.agg(stats.head, stats.tail: _*)))
+
+  private def windowFit(df: DataFrame, stats: Seq[Column]): DataFrame =
+    df.select(col("*") +: stats: _*)
+
   /** N1 — z-score: (x − μ)/σ, sample σ (pandas `std`, ddof=1). */
-  def zscoreFit(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(exactAvg(col(c)).as(s"__mu_$c"), exactStdSamp(col(c)).as(s"__sd_$c")))
-    df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail: _*)))
-  }
+  def zscoreFit(df: DataFrame, cols: Seq[String]): DataFrame =
+    broadcastFit(df, zscoreStats(cols, identity))
+
+  /** [[zscoreFit]]'s stats as whole-frame window aggregates. */
+  def zscoreFitWindow(df: DataFrame, cols: Seq[String]): DataFrame =
+    windowFit(df, zscoreStats(cols, wholeFrame))
 
   // try_divide in the transforms: a constant column (σ=0 or max=min) yields
   // NULL instead of an ANSI DIVIDE_BY_ZERO job failure — matching DuckDB
@@ -36,11 +64,12 @@ object Normalize {
       d.withColumn(c, col(c) * col(s"__sd_$c") + col(s"__mu_$c")))
 
   /** N2 — min-max: (x − min)/(max − min). */
-  def minmaxFit(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail: _*)))
-  }
+  def minmaxFit(df: DataFrame, cols: Seq[String]): DataFrame =
+    broadcastFit(df, minmaxStats(cols, identity))
+
+  /** [[minmaxFit]]'s stats as whole-frame window aggregates. */
+  def minmaxFitWindow(df: DataFrame, cols: Seq[String]): DataFrame =
+    windowFit(df, minmaxStats(cols, wholeFrame))
 
   def minmaxTransform(fitted: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(fitted)((d, c) =>

@@ -616,7 +616,9 @@ object ScaleQueries {
         .withColumn("ver", lit(1L))
       val work = graft.TempDirs.create("graft-cdc4")
       val root = s"$work/lake"
-      val mid = 500000000L
+      // split at the middle of the fixture's ids: both appends carry rows
+      val r = b.agg(min("event_id"), max("event_id")).head
+      val mid = (r.getLong(0) + r.getLong(1)) / 2
       SnapshotLake.append(s, root, b.filter(col("event_id") < mid)
         .repartition(2), statsCols = Seq("event_id"))
       SnapshotLake.append(s, root, b.filter(col("event_id") >= mid)

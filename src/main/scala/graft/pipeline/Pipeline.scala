@@ -12,10 +12,19 @@ import graft.sinks.Lake
   * → [indicators] → split → write.
   *
   * Where the reference materializes 12 intermediate frames and walks rows
-  * in Python, this declares ONE lazy DataFrame DAG; Catalyst fuses the
-  * cleaning chain into a single scan+project stage and the report counters
-  * ride along as `observe()` metrics — the full §2.3 validation report
-  * costs zero extra passes.
+  * in Python, this declares ONE lazy DataFrame DAG and runs it as ONE
+  * Spark query, reading the input once:
+  *
+  *  - the §2.3 validation report rides the DAG as `observe()` metrics on
+  *    the input;
+  *  - z-score / min-max stats are whole-frame window aggregates
+  *    ([[Normalize.zscoreFitWindow]]) sharing the one-partition exchange
+  *    the chronological split's row count already needs, instead of a
+  *    broadcast fit that would read the upstream a second time;
+  *  - with an `outputPath`, the split sizes are a second observation
+  *    riding the `Lake.writeArchive` write (one `sum(when(split = label))`
+  *    per label, labels with no rows dropped). Without one, a
+  *    `groupBy("split").count()` is the run's only action.
   *
   * Deliberate semantic changes from the reference (SURVEY §7.3.6-7):
   * normalization happens AFTER resampling (the reference normalizes first,
@@ -83,30 +92,39 @@ object Pipeline {
     config.normalize.foreach {
       case "zscore" =>
         df = Normalize.finish(Normalize.zscoreTransform(
-          Normalize.zscoreFit(df, config.normalizeCols), config.normalizeCols))
+          Normalize.zscoreFitWindow(df, config.normalizeCols), config.normalizeCols))
       case "minmax" =>
         df = Normalize.finish(Normalize.minmaxTransform(
-          Normalize.minmaxFit(df, config.normalizeCols), config.normalizeCols))
+          Normalize.minmaxFitWindow(df, config.normalizeCols), config.normalizeCols))
       case "log" =>
         df = Normalize.logTransform(df, config.normalizeCols)
       case other => throw new IllegalArgumentException(s"unknown normalize: $other")
     }
 
-    // ---- chronological split label
-    df = Split.chronological(df, Seq(col("ts")) ++
+    // ---- chronological split label; symbol orders the bars that share a
+    // timestamp (every resampled bucket), event_id the rest when present
+    df = Split.chronological(df, Seq(col("ts"), col("symbol")) ++
       (if (df.columns.contains("event_id")) Seq(col("event_id")) else Nil),
       config.split.cuts, config.split.labels)
 
-    // ---- write (partitioned lake) or materialize
-    config.outputPath match {
-      case Some(path) => Lake.writeArchive(df, path)
-      case None => ()
+    // ---- write (partitioned lake) or count; either action also fills
+    // the validation report
+    val sizes = config.outputPath match {
+      case Some(path) =>
+        val labels = config.split.labels.distinct
+        val counted = Observation()
+        val counts = labels.indices.map(i =>
+          sum(when(col("split") === labels(i), 1L)).as(s"n$i"))
+        Lake.writeArchive(df.observe(counted, counts.head, counts.tail: _*), path)
+        val m = counted.get
+        labels.indices.flatMap(i => m.get(s"n$i").collect {
+          case n: Long if n > 0 => labels(i) -> n
+        }).toMap
+      case None =>
+        df.groupBy("split").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
     }
-    val sizes = df.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // sizes' action populated the observation
-    val report = obs.get
-    Result(df, report, sizes)
+    Result(df, obs.get, sizes)
   }
 
   /** Persist a run's validation report + per-metric quality rows through

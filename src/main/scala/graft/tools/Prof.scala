@@ -148,7 +148,8 @@ object Prof {
       "mv1" -> (mvLoop(_, "mv1")), "mv2" -> (mvLoop(_, "mv2")),
       "cdc4" -> (cdc4(_)), "zorder" -> (zorder(_)),
       "pointbloom" -> (pointbloom(_)), "lockbench" -> (lockbench(_)),
-      "morbench" -> (morbench(_)), "annrecall" -> (annrecall(_)))
+      "morbench" -> (morbench(_)), "annrecall" -> (annrecall(_)),
+      "pipeline" -> (pipeline(_)))
 
   /** The mv1 / mv2 continuous aggregates over three appends: init after
     * the first, one refresh after each later one, then the final read —
@@ -392,6 +393,34 @@ object Prof {
     step(ctx, "morbench", "scan-pending-deletes")(spark.sql(scan).collect())
     spark.sql("CALL profmor.system.optimize(`table` => 'b.t_mor_1')")
     step(ctx, "morbench", "scan-after-optimize")(spark.sql(scan).collect())
+  }
+
+  /** One `Pipeline.run` in the repo benchmark's `etl_batch` shape — clean,
+    * 5-minute resample, indicators, z-score, a 70/15/15 chronological
+    * split and the partitioned archive write — over `rows` generator bars
+    * of 32 symbols (with an `event_id`, as the benchmark's input has),
+    * staged to parquet first so the generator's own windows are not
+    * charged. Two rounds; the second runs warm.
+    */
+  private def pipeline(ctx: Ctx): Unit = {
+    import graft.pipeline.Pipeline
+    val spark = ctx.spark
+    val symbols = (0 until 32).map(i => f"S$i%03d")
+    val work = TempDirs.create("graft-prof-pipeline")
+    Generator.ohlcv(spark, symbols, math.max(ctx.rows / symbols.size, 1L))
+      .withColumn("event_id", unix_timestamp(col("ts")) * symbols.size +
+        array_position(array(symbols.map(lit): _*), col("symbol")))
+      .write.parquet(s"$work/bars")
+    val cfg = Pipeline.Config(resampleTo = Some("5 minutes"),
+      normalize = Some("zscore"), indicators = true,
+      split = Pipeline.SplitConfig(Seq(0.7, 0.85), Seq("train", "val", "test")))
+    for (round <- 1 to 2) {
+      val res = step(ctx, "pipeline", s"r$round/run")(Pipeline.run(spark,
+        spark.read.parquet(s"$work/bars"),
+        cfg.copy(outputPath = Some(s"$work/out-$round"))))
+      fact("pipeline", "round" -> round, "split_sizes" -> res.splitSizes,
+        "rows_in" -> res.report("rows_in"))
+    }
   }
 
   /** recall@10 of every approximate top-k path against exact brute top-10

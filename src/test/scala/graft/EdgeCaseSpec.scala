@@ -65,6 +65,28 @@ class EdgeCaseSpec extends SparkSpec {
     }
   }
 
+  test("window-fit normalization and the one-query pipeline on empty and " +
+      "single-row frames") {
+    import graft.pipeline.Pipeline
+    val cols = Seq("open", "volume")
+    assert(Normalize.zscoreFitWindow(emptyBars, cols).count() == 0)
+    assert(Normalize.minmaxFitWindow(emptyBars, cols).count() == 0)
+    val cfg = Pipeline.Config(resampleTo = Some("5 minutes"), indicators = true)
+    // z-score of one row divides by n − 1 = 0, which fails under ANSI in
+    // both fit forms, so the single bar is min-max'd
+    for ((df, method, sizes) <- Seq((emptyBars, "zscore", Map.empty[String, Long]),
+        (emptyBars, "minmax", Map.empty[String, Long]),
+        (oneBar, "minmax", Map("test" -> 1L)))) {
+      val dir = TempDirs.create("graft-edge-pipe") + "/lake"
+      val counted = Pipeline.run(spark, df, cfg.copy(normalize = Some(method)))
+      val res = Pipeline.run(spark, df,
+        cfg.copy(normalize = Some(method), outputPath = Some(dir)))
+      // a label with no rows is left out, as the groupBy count leaves it out
+      assert(res.splitSizes == sizes && counted.splitSizes == sizes)
+      assert(res.report == counted.report)
+    }
+  }
+
   test("normalization and splits on empty frames") {
     val cols = Seq("open", "volume")
     assert(Normalize.finish(Normalize.zscoreTransform(

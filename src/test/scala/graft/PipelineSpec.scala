@@ -1,11 +1,27 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
+import graft.obs.{Cost, Ledger}
+import graft.operators.Normalize
 import graft.pipeline.Pipeline
 import graft.sources.{Generator, Tables}
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with PlanNodes {
+
+  /** The repo benchmark's `etl_batch` shape, without an output path. */
+  private val etlShape = Pipeline.Config(resampleTo = Some("5 minutes"),
+    normalize = Some("zscore"), indicators = true,
+    split = Pipeline.SplitConfig(Seq(0.7, 0.85), Seq("train", "val", "test")))
+
+  private def countsBySplit(df: DataFrame): Map[String, Long] =
+    df.groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("end-to-end: clean -> resample -> indicators -> split with one-pass report") {
     val bars = Generator.ohlcv(spark, Seq("btc", "eth"), 500, intervalSec = 60)
@@ -137,5 +153,91 @@ class PipelineSpec extends SparkSpec {
     val back = graft.sinks.Lake.readArchive(spark, dir)
     assert(back.count() == 200)
     assert(back.columns.contains("split") && back.columns.contains("year"))
+  }
+
+  test("with an outputPath, Pipeline.run is one Spark query that reads its " +
+      "input once; the split sizes ride the write") {
+    val bars = Tables.bars(spark, sfDir)
+    val dir = TempDirs.create("graft-pipe-one") + "/lake"
+    val counted = Pipeline.run(spark, bars, etlShape)
+    var res: Pipeline.Result = null
+    var cost: Cost = null
+    val qes = captured {
+      val (r, c) = Ledger.scope(spark)(
+        Pipeline.run(spark, bars, etlShape.copy(outputPath = Some(dir))))
+      res = r; cost = c
+    }
+    assert(cost.queries == 1, s"${cost.queries} queries, ${cost.jobs} jobs")
+    val plan = allNodes(qes)
+    assert(!plan.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]) &&
+      !cost.operators.exists(_.node == "BroadcastNestedLoopJoin"))
+    // the input is scanned once, and exactly one exchange carries it into
+    // the cleaning windows (an exchange with the scan but no window below)
+    def scanned(p: SparkPlan) = nodes(p).exists(_.isInstanceOf[FileSourceScanExec])
+    assert(plan.count(_.isInstanceOf[FileSourceScanExec]) == 1)
+    val intoCleaning = plan.collect { case e: ShuffleExchangeLike
+      if scanned(e) && !nodes(e).exists(_.isInstanceOf[WindowExec]) => e }
+    assert(intoCleaning.size == 1, intoCleaning.mkString("\n"))
+    assert(res.splitSizes == countsBySplit(spark.read.parquet(dir)))
+    assert(res.splitSizes == counted.splitSizes)
+    assert(res.report == counted.report)
+  }
+
+  test("the chronological split orders tied timestamps by symbol: two runs " +
+      "over differently partitioned copies label every row the same") {
+    // 8 symbols share every 15-minute bucket; both cuts fall inside one
+    val bars = Generator.ohlcv(spark, (1 to 8).map(i => s"s$i"), 300)
+    val labels = Seq("train", "val", "test")
+    val cfg = Pipeline.Config(resampleTo = Some("15 minutes"),
+      split = Pipeline.SplitConfig(Seq(0.63, 0.81), labels))
+    def labelled(in: DataFrame, partitions: Int): Seq[Row] = {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, partitions.toString)
+      try Pipeline.run(spark, in, cfg).data.select("ts", "symbol", "split")
+        .orderBy("ts", "symbol").collect().toSeq
+      finally spark.conf.set(key, prev)
+    }
+    val a = labelled(bars.repartition(1), 4)
+    val b = labelled(bars.repartition(7, col("symbol")), 3)
+    val moved = a.zip(b).filter { case (x, y) => x != y }
+    assert(a.size == 160 && b.size == 160 && moved.isEmpty,
+      s"${moved.size} rows labelled differently, first ${moved.headOption}")
+    // labels never step back along (ts, symbol), and the cuts are ⌊n·cut⌋
+    val idx = a.map(r => labels.indexOf(r.getString(2)))
+    assert(idx == idx.sorted)
+    assert(idx.count(_ == 0) == 100 && idx.count(_ == 1) == 29)
+  }
+
+  test("the pipeline's window-fit z-score and min-max columns equal the " +
+      "broadcast fit bit for bit (sf0.01 bars)") {
+    val bars = Tables.bars(spark, s"${new java.io.File(sfDir).getParent}/sf0.01")
+    val cols = Seq("open", "high", "low", "close", "volume")
+    val base = etlShape.copy(normalize = None)
+    val plain = Pipeline.run(spark, bars, base).data
+    def bits(df: DataFrame, cs: Seq[String]): Map[Seq[Any], Seq[Option[Long]]] =
+      df.select((col("symbol") +: col("ts") +: cs.map(col)): _*).collect().map { r =>
+        Seq(r.get(0), r.get(1)) -> cs.indices.map(i => Option.when(!r.isNullAt(i + 2))(
+          java.lang.Double.doubleToRawLongBits(r.getDouble(i + 2))))
+      }.toMap
+    for (method <- Seq("zscore", "minmax")) {
+      val (broadcastFit, windowFit, transform) = method match {
+        case "zscore" => (Normalize.zscoreFit(plain, cols),
+          Normalize.zscoreFitWindow(plain, cols), Normalize.zscoreTransform _)
+        case _ => (Normalize.minmaxFit(plain, cols),
+          Normalize.minmaxFitWindow(plain, cols), Normalize.minmaxTransform _)
+      }
+      val stats = broadcastFit.columns.filter(_.startsWith("__")).toSeq
+      def statBits(df: DataFrame) =
+        df.select(stats.map(col): _*).distinct().collect().toSeq
+          .map(_.toSeq.map(v => java.lang.Double.doubleToRawLongBits(
+            v.asInstanceOf[Double])))
+      assert(statBits(windowFit).size == 1)
+      assert(statBits(windowFit) == statBits(broadcastFit), method)
+      val want = bits(Normalize.finish(transform(broadcastFit, cols)), cols)
+      val got = bits(Pipeline.run(spark, bars,
+        base.copy(normalize = Some(method))).data, cols)
+      assert(want.size == plain.count() && got == want, method)
+    }
   }
 }
