@@ -14,7 +14,7 @@ object OracleSql {
     s"${exactSum(c)} / CAST(count($c) AS DOUBLE)"
 
   def exactVarSamp(c: String): String =
-    s"(CAST(sum(CAST($c*$c AS DECIMAL(38,10))) AS DOUBLE) - ${exactSum(c)} * ${exactSum(c)} / CAST(count($c) AS DOUBLE)) / (CAST(count($c) AS DOUBLE) - 1.0)"
+    s"(CAST(sum(CAST($c*$c AS DECIMAL(38,10))) AS DOUBLE) - ${exactSum(c)} * ${exactSum(c)} / CAST(count($c) AS DOUBLE)) / NULLIF(CAST(count($c) AS DOUBLE) - 1.0, 0.0)"
 
   def exactStdSamp(c: String): String = s"sqrt(${exactVarSamp(c)})"
 

@@ -55,18 +55,20 @@ package object functions {
     exactSum(c, agg) / agg(count(c)).cast("double")
 
   /** Exact sample variance via decimal sum / sum-of-squares:
-    * (sumsq - sum^2/n) / (n-1), all final arithmetic in double.
+    * (sumsq - sum^2/n) / (n-1), all final arithmetic in double; NULL for a
+    * single value (n = 1), as `var_samp` gives, instead of an ANSI
+    * divide-by-zero error.
     * Oracle mirror — keep the tree shape identical:
     * `(CAST(sum(CAST(x*x AS DECIMAL(38,10))) AS DOUBLE)
     *   - CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE)
     *     * CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) / count(x))
-    *  / (count(x) - 1)`.
+    *  / NULLIF(count(x) - 1, 0)`.
     */
   def exactVarSamp(c: Column, agg: Column => Column = identity): Column = {
     val s = exactSum(c, agg)
     val sq = agg(exactSumSqDec(c)).cast("double")
     val n = agg(count(c)).cast("double")
-    (sq - s * s / n) / (n - lit(1.0))
+    try_divide(sq - s * s / n, n - lit(1.0))
   }
 
   /** Exact sample stddev; oracle mirror `sqrt(<exactVarSamp sql>)`. */

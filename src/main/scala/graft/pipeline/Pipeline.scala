@@ -64,11 +64,13 @@ object Pipeline {
 
     // ---- validate + clean, report riding along as observed metrics
     val obs = Observation("validation")
-    val observed = bars.observe(obs,
-      count(lit(1)).as("rows_in"),
-      sum(when(col("close").isNull, 1L).otherwise(0L)).as("null_close"),
-      sum(when(Cleaning.ohlcInvalid(), 1L).otherwise(0L)).as("ohlc_violations"),
-      sum(when(col("volume") < 0, 1L).otherwise(0L)).as("negative_volume"))
+    val checks = Seq(
+      "rows_in" -> count(lit(1)),
+      "null_close" -> count_if(col("close").isNull),
+      "ohlc_violations" -> count_if(Cleaning.ohlcInvalid()),
+      "negative_volume" -> count_if(col("volume") < 0))
+    val metrics = checks.map { case (name, metric) => metric.as(name) }
+    val observed = bars.observe(obs, metrics.head, metrics.tail: _*)
 
     var df = observed
     val c = config.cleaning
@@ -124,7 +126,11 @@ object Pipeline {
         df.groupBy("split").count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
     }
-    Result(df, obs.get, sizes)
+    // an input with no partitions never runs the observed node, so Spark
+    // reports no metrics at all: its report is that of no rows, all zeros
+    val report = obs.get
+    Result(df, if (report.nonEmpty) report
+      else checks.map(_._1 -> (0L: Any)).toMap, sizes)
   }
 
   /** Persist a run's validation report + per-metric quality rows through

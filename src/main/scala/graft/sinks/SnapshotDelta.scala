@@ -438,15 +438,17 @@ final class SnapshotDeltaWrite(
 
   override def toBatch: DeltaBatchWrite = this
 
+  private val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    openStage(base.schema)
-    fs.mkdirs(new Path(stageDir, "deletes"))
     // delete-only statements pass an empty write schema; the (unused)
     // insert factory still needs a real one
     val rowSchema = if (writeSchema.fields.isEmpty) base.schema else writeSchema
     val (dataFactory, dataConf) = parquetFactory(StructType(
-      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))))
+      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))), bloomCols)
     val (delFactory, delConf) = parquetFactory(SnapshotMor.DeleteSchema)
+    openStage(base.schema)
+    fs.mkdirs(new Path(stageDir, "deletes"))
     new SnapshotDeltaWriterFactory(dataFactory, dataConf, delFactory, delConf,
       stageDir.toString, rowSchema, op.partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
@@ -459,7 +461,6 @@ final class SnapshotDeltaWrite(
       .flatMap(_.delete).filter(_.positions > 0)
     // a no-match statement publishes nothing
     if (inserts.nonEmpty || deleteInfos.nonEmpty) {
-      val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
       val newFiles = publish(inserts, statsCols, bloomCols)
       val deletes = SnapshotLake.moveDeleteSidecars(spark, root, token,
         deleteInfos.map(d => (new Path(stageDir, d.rel), d.covered)))

@@ -846,119 +846,10 @@ object SnapshotLake {
   }
 
   // ---------------------------------------------------------------- blooms
-
-  /** False-positive rate of the per-file bloom sidecars. A false positive
-    * only costs an extra file open (the residual filter still runs); there
-    * are NO false negatives, which is what pruning soundness rests on.
-    */
-  private val BloomFpp = 0.01
-
-  /** Keys are hashed identically at build and probe time: integral values
-    * through putLong/mightContainLong, strings through their UTF-8 bytes.
-    * Floats and timestamps are deliberately unsupported — equality point
-    * lookup on them is a data-modeling smell, and min/max envelopes
-    * already serve their range queries.
-    */
-  private def bloomPut(bf: org.apache.spark.util.sketch.BloomFilter, v: Any): Unit = v match {
-    case s: String => bf.putBinary(s.getBytes(StandardCharsets.UTF_8))
-    case n: java.lang.Number => bf.putLong(n.longValue)
-    case other => throw new IllegalArgumentException(
-      s"bloom column value unsupported: ${other.getClass.getName}")
-  }
-
-  private def bloomHit(bf: org.apache.spark.util.sketch.BloomFilter, v: Any): Boolean = v match {
-    case s: String => bf.mightContainBinary(s.getBytes(StandardCharsets.UTF_8))
-    case n: java.lang.Number => bf.mightContainLong(n.longValue)
-    case other => throw new IllegalArgumentException(
-      s"point-lookup value unsupported for bloom probe: ${other.getClass.getName}")
-  }
-
-  /** Build one bloom sidecar per (staged file, bloom column) in ONE Spark
-    * job: partial filters accumulate per task (a task may read several
-    * coalesced small files — `input_file_name` keys the partials), the
-    * shuffle moves only serialized filters (never row data), and the
-    * driver writes each merged filter to `_blooms/<rel>.<col>.bloom`
-    * behind a tmp+rename so a crash never leaves a torn sidecar. Files
-    * with zero non-null values for a column get an explicit empty filter
-    * — "definitely absent" stays answerable.
-    */
-  private def writeBlooms(spark: SparkSession, root: String,
-      entries: Seq[FileEntry], bloomCols: Seq[String]): Unit = {
-    if (entries.isEmpty || bloomCols.isEmpty) return
-    import org.apache.spark.util.sketch.BloomFilter
-    val fs = fsOf(spark, root)
-    val dd = dataDir(root)
-    // qualified first: tasks key by `input_file_name`, which is absolute
-    // even when `root` is relative; then scheme-insensitive
-    def key(p: Path): String = fs.makeQualified(p).toUri.getPath
-    // sole caller is stageFiles, whose entries carry the footer row count
-    // already — sizes each file's filter so fpp holds at any file size
-    val rowsByKey = entries.map { e =>
-      key(new Path(dd, e.rel)) -> math.max(1L, e.rows)
-    }.toMap
-    val df = spark.read.parquet(entries.map(e => new Path(dd, e.rel).toString): _*)
-    bloomCols.foreach { c =>
-      val f = df.schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"bloom column $c not in the staged data files " +
-            s"(${df.schema.fieldNames.mkString(",")}) — partition columns " +
-            "live in directory names and cannot carry a bloom sidecar"))
-      import org.apache.spark.sql.types._
-      require(Seq(LongType, IntegerType, ShortType, ByteType, StringType)
-          .contains(f.dataType),
-        s"bloom column $c has type ${f.dataType.simpleString}; supported: " +
-          "integral + string (floats/timestamps belong to min/max envelopes)")
-    }
-    val fpp = BloomFpp
-    val rowsBc = spark.sparkContext.broadcast(rowsByKey)
-    val n = bloomCols.size
-    val sel = df.select(
-      org.apache.spark.sql.functions.input_file_name().as("__file") +:
-        bloomCols.map(col): _*)
-    val merged: Array[((String, Int), Array[Byte])] = sel.rdd.mapPartitions { it =>
-      val acc = scala.collection.mutable.Map.empty[(String, Int), BloomFilter]
-      it.foreach { row =>
-        val fk = new Path(row.getString(0)).toUri.getPath
-        var i = 0
-        while (i < n) {
-          if (!row.isNullAt(i + 1)) {
-            val bf = acc.getOrElseUpdate((fk, i),
-              BloomFilter.create(rowsBc.value(fk), fpp))
-            bloomPut(bf, row.get(i + 1))
-          }
-          i += 1
-        }
-      }
-      acc.iterator.map { case (k, bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (k, bos.toByteArray)
-      }
-    }.reduceByKey { (a, b) =>
-      val fa = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a))
-      fa.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
-      val bos = new java.io.ByteArrayOutputStream()
-      fa.writeTo(bos)
-      bos.toByteArray
-    }.collect()
-    val byKey = merged.toMap
-    entries.foreach { e =>
-      val fk = key(new Path(dd, e.rel))
-      bloomCols.zipWithIndex.foreach { case (c, i) =>
-        val bytes = byKey.getOrElse((fk, i), {
-          val bos = new java.io.ByteArrayOutputStream()
-          BloomFilter.create(1, fpp).writeTo(bos)
-          bos.toByteArray
-        })
-        val target = bloomPath(root, e.rel, c)
-        fs.mkdirs(target.getParent)
-        val tmp = new Path(target.getParent, s".tmp-${newToken()}")
-        val out = fs.create(tmp, true)
-        try out.write(bytes) finally out.close()
-        require(fs.rename(tmp, target), s"bloom sidecar publish failed: $target")
-      }
-    }
-  }
+  //
+  // Sidecars are built by the task that writes each data file
+  // (graft.sinks.BloomSidecars) and moved under _blooms/ by publishStaged;
+  // this section only reads them.
 
   /** Load one bloom sidecar; None (conservative: keep the file) when the
     * sidecar is missing — e.g. written by a legacy version of the lake.
@@ -1045,6 +936,10 @@ object SnapshotLake {
   /** Stage-write `df` and move its files (hive partition subdirs
     * preserved) under data/ with a unique token prefix; returns a
     * [[FileEntry]] (with footer stats for `statsCols`) per data file.
+    * The write goes through [[BloomParquetFormat]], so each task leaves
+    * the `bloomCols` sidecars of the files it writes beside them in the
+    * stage; the columns are checked against `df`'s schema before
+    * anything is staged.
     *
     * Declared constraints are measured DURING the write itself via
     * `observe` (one `sum(CASE WHEN violated)` per constraint riding the
@@ -1058,6 +953,9 @@ object SnapshotLake {
     require(bloomCols.intersect(partitionCols).isEmpty,
       s"bloom columns ${bloomCols.intersect(partitionCols).mkString(",")} " +
         "are partition columns — directory pruning already serves them")
+    val sortedBlooms = bloomCols.distinct.sorted
+    BloomSidecars.requireSupported(StructType(
+      df.schema.fields.filterNot(f => partitionCols.contains(f.name))), sortedBlooms)
     val fs = fsOf(spark, root)
     val token = newToken()
     val stage = new Path(root, s".stage-$token")
@@ -1072,10 +970,12 @@ object SnapshotLake {
         }
         (df.observe(o, metrics.head, metrics.tail: _*), Some(o))
       }
-    val w = toWrite.write.mode("overwrite").option("compression", "zstd")
+    val w = toWrite.write.format(classOf[BloomParquetFormat].getName)
+      .mode("overwrite").option("compression", "zstd")
+      .option(BloomParquetFormat.ColsKey, sortedBlooms.mkString(","))
     writeStage(spark, stage)(
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(stage.toString))
+        .save(stage.toString))
     obs.foreach { o =>
       val bad = o.get.toSeq.collect {
         case (n, v: Long) if v > 0 => s"$n ($v row(s))"
@@ -1088,7 +988,6 @@ object SnapshotLake {
             "notNullCols table properties; nothing was committed)")
       }
     }
-    val sortedBlooms = bloomCols.distinct.sorted
     // pass 1: collect the staged part files (walk order = deterministic)
     val parts = scala.collection.mutable.ArrayBuffer
       .empty[(Path, String, Long)]
@@ -1139,10 +1038,13 @@ object SnapshotLake {
   /** How long a failed stage write waits for its killed tasks to end. */
   private val StageSettleMs = 30000L
 
-  /** Pass 2+3 of a stage: footer-probe, move under data/, build the
-    * bloom sidecars — shared by [[stageFiles]] (whose parts come from a
-    * Spark write into a stage dir) and the SQL row-level-operation
-    * BatchWrite (whose parts come from executor-side DataWriters).
+  /** Pass 2+3 of a stage: footer-probe, then move each data file under
+    * data/ and its `bloomCols` sidecars under _blooms/ — shared by
+    * [[stageFiles]] (whose parts come from a Spark write into a stage
+    * dir) and the SQL row-level-operation BatchWrite (whose parts come
+    * from executor-side DataWriters). Both write through
+    * [[BloomParquetFormat]], whose tasks built the sidecars beside the
+    * staged files ([[BloomSidecars.staged]]); nothing here reads data.
     * `parts` = (current path, final data/-relative name, byte length).
     */
   private[sinks] def publishStaged(spark: SparkSession, root: String,
@@ -1157,20 +1059,23 @@ object SnapshotLake {
     val probed: Map[String, (Map[String, (Double, Double)], Long)] =
       graft.Concurrent.all(spark)(parts.map { case (p, rel, _) =>
         () => rel -> footerProbe(spark, p, statsCols) }).toMap
-    // pass 3: publish moves in walk order
-    val staged = parts.map { case (p, relOut, len) =>
+    // pass 3: publish moves in walk order. Sidecars land BEFORE the
+    // manifest commit that makes the files visible; a crash in between
+    // leaves unreferenced files + sidecars (invisible garbage, swept by
+    // vacuum), never a committed file whose recorded bloom is missing.
+    parts.map { case (p, relOut, len) =>
       val target = new Path(dataDir(root), relOut)
       fs.mkdirs(target.getParent)
       val (stats, nRows) = probed(relOut)
       require(fs.rename(p, target), s"stage move failed: $target")
+      sortedBlooms.foreach { c =>
+        val bloom = bloomPath(root, relOut, c)
+        fs.mkdirs(bloom.getParent)
+        require(fs.rename(BloomSidecars.staged(p, c), bloom),
+          s"bloom sidecar publish failed: $bloom")
+      }
       FileEntry(relOut, len, stats, sortedBlooms, nRows)
     }
-    // sidecars land BEFORE the manifest commit that makes the files
-    // visible; a crash in between leaves unreferenced files + sidecars
-    // (invisible garbage, swept by vacuum), never a committed file whose
-    // recorded bloom is missing.
-    writeBlooms(spark, root, staged.toSeq, sortedBlooms)
-    staged.toSeq
   }
 
   /** Create an EMPTY lake: a schema-only v1 manifest with zero files —
@@ -1926,7 +1831,7 @@ object SnapshotLake {
     graft.Concurrent.all(spark)(statsKept.map { f =>
       () => f -> point.forall { case (c, v) =>
         !f.bloomCols.contains(c) ||
-          loadBloom(fs, root, f.rel, c).forall(bloomHit(_, v))
+          loadBloom(fs, root, f.rel, c).forall(BloomSidecars.hit(_, v))
       }
     }).collect { case (f, true) => f }
   }
@@ -2687,7 +2592,7 @@ object SnapshotLake {
       () => f -> keysByCol.forall { case (pk, keys) =>
         !f.bloomCols.contains(pk) ||
           loadBloom(fs, root, f.rel, pk)
-            .forall(bf => keys.exists(bloomHit(bf, _)))
+            .forall(bf => keys.exists(BloomSidecars.hit(bf, _)))
       }
     })
     val (kept, skipped) = probed.partition(_._2)

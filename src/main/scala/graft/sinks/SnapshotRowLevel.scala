@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predica
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -65,10 +64,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The write path is a REAL distributed DSv2 write (ReplaceData has no
   * V1 fallback): executors write zstd parquet through Spark's own
-  * `ParquetFileFormat.prepareWrite` factory straight into the lake's
-  * stage-dir convention — for hive-partitioned lakes each task routes
-  * rows to per-partition files (partition columns live in the directory
-  * name, not the file, exactly like a library append) — commit messages
+  * `ParquetFileFormat.prepareWrite` factory (wrapped by
+  * [[BloomParquetFormat]], which leaves each file's bloom sidecars beside
+  * it) straight into the lake's stage-dir convention — for
+  * hive-partitioned lakes each task routes rows to per-partition files
+  * (partition columns live in the directory name, not the file, exactly
+  * like a library append) — commit messages
   * carry (file, bytes, rows), and the driver publishes through
   * [[SnapshotStagedWrite]] + the rewrite-commit core — footer stats and
   * bloom sidecars restamped exactly like every other rewrite,
@@ -307,13 +308,17 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
   }
 
   /** A zstd parquet writer factory for files of `schema`, with its own
-    * Job: `prepareWrite` threads the schema through the job conf.
+    * Job: `prepareWrite` threads the schema through the job conf. Its
+    * writers leave the `bloomCols` sidecars beside each file they write
+    * ([[BloomParquetFormat]]); an unsupported or missing bloom column
+    * refuses here, on the driver, before any task runs.
     */
-  protected def parquetFactory(schema: StructType)
+  protected def parquetFactory(schema: StructType, bloomCols: Seq[String] = Nil)
       : (OutputWriterFactory, SerializableConfiguration) = {
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job,
-      Map("compression" -> "zstd"), schema)
+    val factory = new BloomParquetFormat().prepareWrite(spark, job,
+      Map("compression" -> "zstd",
+        BloomParquetFormat.ColsKey -> bloomCols.mkString(",")), schema)
     (factory, new SerializableConfiguration(job.getConfiguration))
   }
 
@@ -326,9 +331,10 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
       case _ => Nil
     }.filter(_.rows > 0)
 
-  /** Footer-probe, move under data/ and bloom-index the staged files:
-    * the write token prefixes each BASENAME, preserving the hive
-    * partition directories the task writers routed into.
+  /** Footer-probe and move the staged files under data/ and their bloom
+    * sidecars under _blooms/: the write token prefixes each BASENAME,
+    * preserving the hive partition directories the task writers routed
+    * into. `bloomCols` must be the columns the writers' factory built.
     */
   private[sinks] def publish(files: Seq[StagedFileInfo], statsCols: Set[String],
       bloomCols: Seq[String]): Seq[SnapshotLake.FileEntry] =
@@ -371,11 +377,13 @@ final class SnapshotReplaceDataWrite(
     s"row-level write schema ${writeSchema.simpleString} != lake schema " +
       s"${base.schema.simpleString}")
 
+  private val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    openStage(base.schema)
     // partition columns live in the directory name; files carry the rest
     val (factory, conf) = parquetFactory(StructType(
-      writeSchema.fields.filterNot(f => op.partCols.contains(f.name))))
+      writeSchema.fields.filterNot(f => op.partCols.contains(f.name))), bloomCols)
+    openStage(base.schema)
     new SnapshotDataWriterFactory(factory, conf,
       stageDir.toString, writeSchema, op.partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
@@ -383,7 +391,6 @@ final class SnapshotReplaceDataWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
-    val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
     val newFiles = publish(stagedFiles(messages), statsCols, bloomCols)
     // the REPLACED set: exactly the candidate files the statement's
     // scan was narrowed to; a statement that touched nothing publishes
@@ -436,10 +443,18 @@ final class SnapshotDynamicOverwriteWrite(
     tableOptions: CaseInsensitiveStringMap)
     extends SnapshotStagedWrite(spark, root) with BatchWrite {
 
+  // the index columns are fixed when the writers are built: the
+  // published entries record exactly the sidecars those writers made
+  private lazy val (statsCols, bloomCols) = {
+    val (_, _, stats, blooms) = SnapshotTable.writeShape(spark, root,
+      declaredPartitioning, tableOptions)
+    (stats.toSet -- partCols, blooms.filterNot(partCols.contains))
+  }
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    openStage(tableSchema)
     val (factory, conf) = parquetFactory(StructType(
-      tableSchema.fields.filterNot(f => partCols.contains(f.name))))
+      tableSchema.fields.filterNot(f => partCols.contains(f.name))), bloomCols)
+    openStage(tableSchema)
     new SnapshotDataWriterFactory(factory, conf,
       stageDir.toString, tableSchema, partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
@@ -452,10 +467,7 @@ final class SnapshotDynamicOverwriteWrite(
     // partitioned + empty frame: replace nothing, publish nothing
     // (Delta semantics — there is no partition to derive)
     if (infos.nonEmpty || partCols.isEmpty) {
-      val (_, _, statsCols, bloomCols) = SnapshotTable.writeShape(spark,
-        root, declaredPartitioning, tableOptions)
-      val newFiles = publish(infos, statsCols.toSet -- partCols,
-        bloomCols.filterNot(partCols.contains))
+      val newFiles = publish(infos, statsCols, bloomCols)
       // the REPLACED partitions: exactly the directory prefixes the
       // frame's own rows routed into; an unpartitioned lake is one
       // "partition" — a full atomic replace

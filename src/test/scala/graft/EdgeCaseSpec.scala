@@ -71,12 +71,18 @@ class EdgeCaseSpec extends SparkSpec {
     val cols = Seq("open", "volume")
     assert(Normalize.zscoreFitWindow(emptyBars, cols).count() == 0)
     assert(Normalize.minmaxFitWindow(emptyBars, cols).count() == 0)
+    // the sample σ of one row is NULL (n − 1 = 0), as var_samp gives, in
+    // both fit forms and in the z-score outlier filter
+    Seq(Normalize.zscoreFit(oneBar, cols), Normalize.zscoreFitWindow(oneBar, cols))
+      .foreach { fit =>
+        val r = fit.select("__mu_open", "__sd_open").head()
+        assert(r.getDouble(0) == 1.0 && r.isNullAt(1))
+      }
+    assert(Cleaning.zscoreNullify(oneBar, cols).select("open").head().getDouble(0) == 1.0)
     val cfg = Pipeline.Config(resampleTo = Some("5 minutes"), indicators = true)
-    // z-score of one row divides by n − 1 = 0, which fails under ANSI in
-    // both fit forms, so the single bar is min-max'd
     for ((df, method, sizes) <- Seq((emptyBars, "zscore", Map.empty[String, Long]),
         (emptyBars, "minmax", Map.empty[String, Long]),
-        (oneBar, "minmax", Map("test" -> 1L)))) {
+        (oneBar, "zscore", Map("test" -> 1L)))) {
       val dir = TempDirs.create("graft-edge-pipe") + "/lake"
       val counted = Pipeline.run(spark, df, cfg.copy(normalize = Some(method)))
       val res = Pipeline.run(spark, df,
@@ -84,6 +90,8 @@ class EdgeCaseSpec extends SparkSpec {
       // a label with no rows is left out, as the groupBy count leaves it out
       assert(res.splitSizes == sizes && counted.splitSizes == sizes)
       assert(res.report == counted.report)
+      // an input with no partitions still reports its zero rows
+      Seq(res, counted).foreach(r => assert(r.report("rows_in") == df.count()))
     }
   }
 

@@ -929,6 +929,18 @@ class SnapshotLakeSpec extends SparkSpec {
       SnapshotLake.append(spark, root, scattered(10), bloomCols = Seq("v"))
     }
     assert(e2.getMessage.contains("min/max envelopes"))
+    val e3 = intercept[IllegalArgumentException] {
+      SnapshotLake.append(spark, root, scattered(10), bloomCols = Seq("nope"))
+    }
+    assert(e3.getMessage.contains("not in the written data columns"))
+    // refused before anything is staged: no stage dir, data file or
+    // sidecar is left behind
+    def under(p: Path): Seq[String] =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.flatMap(st =>
+        st.getPath.toString +: (if (st.isDirectory) under(st.getPath) else Nil))
+    val left = under(new Path(root))
+    assert(left.isEmpty, s"refused appends left behind: $left")
   }
 
   test("library merge and compact stamp the lake's declared statsCols " +

@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
 import graft.operators.{TextOps, VectorOps}
+import graft.sinks.{BloomSidecars, SnapshotLake}
 
 /** The bit-equality witnesses of the native kernels: the legacy
   * higher-order-function and Column formulations each kernel replaced,
   * kept VERBATIM and used only by the equality specs (TextNativeSpec,
-  * DedupSpec, VectorSpec, PropertySpec). Each is the shape the DuckDB
-  * oracle mirrors; the engine itself has exactly one implementation per
+  * DedupSpec, VectorSpec, PropertySpec, BloomSidecarSpec). Each is the
+  * shape the DuckDB oracle mirrors (the bloom builder: the bytes the lake
+  * wrote before its writers built sidecars in the task); the engine itself has exactly one implementation per
   * kernel. Interpreted per row — test fixtures only.
   */
 object Witness {
@@ -255,5 +258,76 @@ object Witness {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         try_divide(adot, sqrt(col("__n2q")) * sqrt(cn2)).as("approx_cosine"))
     VectorOps.topKPerQuery(scored, k, "approx_cosine")
+  }
+
+  // ------------------------------------------------------------------
+  // Lake bloom sidecars ([[graft.sinks.BloomSidecars]])
+
+  /** The two-pass sidecar builder the in-task writer replaced: read the
+    * data files back and build each (file, bloom column)'s filter in ONE
+    * Spark job — partial filters accumulate per task (a task may read
+    * several coalesced small files — `input_file_name` keys the
+    * partials), the shuffle moves only serialized filters, and partials
+    * merge by key. Files with zero non-null values for a column get an
+    * explicit empty filter. Returns the sidecar bytes by (rel, column),
+    * where the builder wrote them to `_blooms/<rel>.<col>.bloom`.
+    */
+  def bloomSidecars(spark: SparkSession, root: String,
+      entries: Seq[SnapshotLake.FileEntry],
+      bloomCols: Seq[String]): Map[(String, String), Array[Byte]] = {
+    if (entries.isEmpty || bloomCols.isEmpty) return Map.empty
+    import org.apache.spark.util.sketch.BloomFilter
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dd = new Path(root, "data")
+    // qualified first: tasks key by `input_file_name`, which is absolute
+    // even when `root` is relative; then scheme-insensitive
+    def key(p: Path): String = fs.makeQualified(p).toUri.getPath
+    // entries carry the footer row count — sizes each file's filter so
+    // fpp holds at any file size
+    val rowsByKey = entries.map { e =>
+      key(new Path(dd, e.rel)) -> math.max(1L, e.rows)
+    }.toMap
+    val df = spark.read.parquet(entries.map(e => new Path(dd, e.rel).toString): _*)
+    val fpp = BloomSidecars.Fpp
+    val rowsBc = spark.sparkContext.broadcast(rowsByKey)
+    val n = bloomCols.size
+    val sel = df.select(input_file_name().as("__file") +: bloomCols.map(col): _*)
+    val merged: Array[((String, Int), Array[Byte])] = sel.rdd.mapPartitions { it =>
+      val acc = scala.collection.mutable.Map.empty[(String, Int), BloomFilter]
+      it.foreach { row =>
+        val fk = new Path(row.getString(0)).toUri.getPath
+        var i = 0
+        while (i < n) {
+          if (!row.isNullAt(i + 1)) {
+            val bf = acc.getOrElseUpdate((fk, i),
+              BloomFilter.create(rowsBc.value(fk), fpp))
+            BloomSidecars.put(bf, row.get(i + 1))
+          }
+          i += 1
+        }
+      }
+      acc.iterator.map { case (k, bf) =>
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        (k, bos.toByteArray)
+      }
+    }.reduceByKey { (a, b) =>
+      val fa = BloomFilter.readFrom(new java.io.ByteArrayInputStream(a))
+      fa.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+      val bos = new java.io.ByteArrayOutputStream()
+      fa.writeTo(bos)
+      bos.toByteArray
+    }.collect()
+    val byKey = merged.toMap
+    entries.flatMap { e =>
+      val fk = key(new Path(dd, e.rel))
+      bloomCols.zipWithIndex.map { case (c, i) =>
+        (e.rel, c) -> byKey.getOrElse((fk, i), {
+          val bos = new java.io.ByteArrayOutputStream()
+          BloomFilter.create(1, fpp).writeTo(bos)
+          bos.toByteArray
+        })
+      }
+    }.toMap
   }
 }

@@ -11,7 +11,10 @@
 #      bit-equality witness (*Witness, *ViaColumns, *ViaWindows) in
 #      src/main — witnesses live in the tests (graft.Witness); no main
 #      under graft/tools but graft.tools.Prof; no SparkEntry.queries( call
-#      outside SparkEntry.scala (SparkEntry.run releases reuse frames)
+#      outside SparkEntry.scala (SparkEntry.run releases reuse frames);
+#      no input_file_name or BloomFilter.create in src/main outside
+#      graft/sinks/BloomSidecars.scala (bloom sidecars are built by the task
+#      that writes each file, never by a second scan)
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -75,16 +78,21 @@ MAINS=$(git grep -nE '\bdef main\b' -- src/main/scala/graft/tools \
 # that release (so does looking a query up with get/getOrElse/apply).
 QUERIES=$(git grep -nE 'SparkEntry\.queries(\(|\.(apply|get|getOrElse)\()' -- src/main \
   ':!src/main/scala/graft/SparkEntry.scala')
-if [[ -z "$STRAY$WITNESS$MAINS$QUERIES" ]]; then
+# One bloom builder: the lake's writers build each file's sidecar in the
+# writing task; nothing else sizes a filter or keys rows by their file.
+BLOOM=$(git grep -nE 'input_file_name|BloomFilter\.create' -- src/main \
+  ':!src/main/scala/graft/sinks/BloomSidecars.scala')
+if [[ -z "$STRAY$WITNESS$MAINS$QUERIES$BLOOM" ]]; then
   ONEWAY="ok"
-  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run"
+  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run; blooms are built only in BloomSidecars"
 else
   ONEWAY="FAILED:"
   [[ -n "$STRAY" ]] && ONEWAY="$ONEWAY $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
   [[ -n "$WITNESS" ]] && ONEWAY="$ONEWAY $(echo "$WITNESS" | wc -l) witness definition(s) in src/main"
   [[ -n "$MAINS" ]] && ONEWAY="$ONEWAY $(echo "$MAINS" | wc -l) main(s) in graft/tools besides Prof"
   [[ -n "$QUERIES" ]] && ONEWAY="$ONEWAY $(echo "$QUERIES" | wc -l) SparkEntry.queries( call(s) outside SparkEntry.scala"
-  printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" | grep -v '^$' | tee -a "$LOG"
+  [[ -n "$BLOOM" ]] && ONEWAY="$ONEWAY $(echo "$BLOOM" | wc -l) bloom builder line(s) outside BloomSidecars.scala"
+  printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" "$BLOOM" | grep -v '^$' | tee -a "$LOG"
   note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
 
