@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * jobs share the executors and each job's tail back-fills the others'
   * idle cores, so the wall is max(branch) instead of sum(branches) with
   * identical results. The same holds for independent blocking driver reads
-  * (footer probes, bloom sidecars).
+  * (bloom sidecar loads).
   *
   * A [[Scope]] is opened by the caller; inside it the caller may `fork` a
   * body and later `join` it, or fan out with `all`, whose results come back

@@ -16,6 +16,17 @@ import graft.sources.Tables
   */
 object ScaleQueries {
 
+  /** Land `b` in a new snapshot lake as two appends split at the middle
+    * of its event_ids, so both carry rows; returns the second's version.
+    */
+  private def appendHalves(s: SparkSession, root: String, b: DataFrame): Long = {
+    val r = b.agg(min("event_id"), max("event_id")).head
+    val mid = (r.getLong(0) + r.getLong(1)) / 2
+    Seq(col("event_id") < mid, col("event_id") >= mid).map(half =>
+      graft.sinks.SnapshotLake.append(s, root, b.filter(half).repartition(2),
+        statsCols = Seq("event_id"))).last
+  }
+
   /** Simulated metadata-DB state (symbol, timeframe, total_records),
     * derived deterministically from the same events the lake side counts
     * so DuckDB can replay it: the DB has registered all bars EXCEPT
@@ -104,12 +115,7 @@ object ScaleQueries {
         .select(col("event_id"), col("symbol"), col("ts"), col("close"))
         .withColumn("ver", lit(1L))
       val root = graft.TempDirs.create("graft-sn2") + "/lake"
-      // two appends split by id so the update batch prunes to one side
-      val mid = 500000000L
-      SnapshotLake.append(s, root, b.filter(col("event_id") < mid)
-        .repartition(2), statsCols = Seq("event_id"))
-      SnapshotLake.append(s, root, b.filter(col("event_id") >= mid)
-        .repartition(2), statsCols = Seq("event_id"))
+      appendHalves(s, root, b) // the update batch prunes to one side
       val updates = b.filter(col("event_id") % 10 === 0)
         .withColumn("close", col("close") + lit(1.0))
         .withColumn("ver", lit(2L))
@@ -509,11 +515,7 @@ object ScaleQueries {
         .select(col("event_id"), col("symbol"), col("ts"), col("close"))
         .withColumn("ver", lit(1L))
       val root = graft.TempDirs.create("graft-cdc1") + "/lake"
-      val mid = 500000000L
-      SnapshotLake.append(s, root, b.filter(col("event_id") < mid)
-        .repartition(2), statsCols = Seq("event_id"))
-      val vFrom = SnapshotLake.append(s, root, b.filter(col("event_id") >= mid)
-        .repartition(2), statsCols = Seq("event_id"))
+      val vFrom = appendHalves(s, root, b)
       val updates = b.filter(col("event_id") % 10 === 0)
         .withColumn("close", col("close") + lit(1.0))
         .withColumn("ver", lit(2L))
@@ -578,11 +580,7 @@ object ScaleQueries {
         .select(col("event_id"), col("symbol"), col("ts"), col("close"))
         .withColumn("ver", lit(1L))
       val root = graft.TempDirs.create("graft-cdc3") + "/lake"
-      val mid = 500000000L
-      SnapshotLake.append(s, root, b.filter(col("event_id") < mid)
-        .repartition(2), statsCols = Seq("event_id"))
-      val vFrom = SnapshotLake.append(s, root, b.filter(col("event_id") >= mid)
-        .repartition(2), statsCols = Seq("event_id"))
+      val vFrom = appendHalves(s, root, b)
       val updates = b.filter(col("event_id") % 10 === 0)
         .withColumn("close", col("close") + lit(1.0))
         .withColumn("ver", lit(2L))
@@ -616,13 +614,7 @@ object ScaleQueries {
         .withColumn("ver", lit(1L))
       val work = graft.TempDirs.create("graft-cdc4")
       val root = s"$work/lake"
-      // split at the middle of the fixture's ids: both appends carry rows
-      val r = b.agg(min("event_id"), max("event_id")).head
-      val mid = (r.getLong(0) + r.getLong(1)) / 2
-      SnapshotLake.append(s, root, b.filter(col("event_id") < mid)
-        .repartition(2), statsCols = Seq("event_id"))
-      SnapshotLake.append(s, root, b.filter(col("event_id") >= mid)
-        .repartition(2), statsCols = Seq("event_id"))
+      appendHalves(s, root, b)
       val sinkName = "cdc4_feed_" + java.lang.Long.toHexString(
         java.util.concurrent.ThreadLocalRandom.current().nextLong())
       val q = s.readStream.format("graft-snapshot")

@@ -3,11 +3,9 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.mapreduce.TaskAttemptContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -15,11 +13,13 @@ import org.apache.spark.util.sketch.BloomFilter
 /** The lake's per-file bloom sidecars (`_blooms/<rel>.<col>.bloom`, the
   * POINT-lookup index of [[SnapshotLake.readPoint]] and merge pruning),
   * built by the task that writes the data file: no second scan of what
-  * was just written. Every lake write stages its data files through
-  * [[BloomParquetFormat]], whose writers leave one sidecar per declared
-  * column beside each data file; [[SnapshotLake.publishStaged]] moves the
-  * sidecars under `_blooms/` with their data files, before the manifest
-  * commit that makes either visible.
+  * was just written. Every lake write stages its data files through a
+  * [[HiveRoutingWriter]], which wraps each parquet writer of a write that
+  * declares bloom columns in a [[BloomWriter]], so one sidecar per
+  * declared column lands beside each data file;
+  * [[SnapshotStagedWrite.publishStaged]] moves the sidecars under
+  * `_blooms/` with their data files, before the manifest commit that
+  * makes either visible.
   */
 private[graft] object BloomSidecars {
 
@@ -49,8 +49,9 @@ private[graft] object BloomSidecars {
     }
 
   /** Where the writing task leaves the sidecar of data file `data` for
-    * column `c`: beside it, inside the task's output (the commit protocol
-    * keeps or drops both together), under a `_` name the stage walk skips.
+    * column `c`: beside it in the stage dir, under a `_` name no data
+    * file has. Publishing moves the two together; a write that never
+    * publishes drops both with its stage dir.
     */
   def staged(data: Path, c: String): Path =
     new Path(data.getParent, s"_${data.getName}.$c.bloom")
@@ -87,39 +88,6 @@ private[graft] object BloomSidecars {
   }
 }
 
-/** Spark's parquet file format whose writers also build the bloom
-  * sidecars of the columns named by the [[BloomParquetFormat.ColsKey]]
-  * write option (comma-separated; absent or empty = plain parquet). The
-  * option is how a lake write hands its `bloomCols` to the format, which
-  * Spark instantiates by class name.
-  */
-private[sinks] class BloomParquetFormat extends ParquetFileFormat {
-  override def prepareWrite(sparkSession: SparkSession, job: Job,
-      options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
-    val cols = options.get(BloomParquetFormat.ColsKey).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
-    BloomSidecars.requireSupported(dataSchema, cols)
-    val parquet = super.prepareWrite(sparkSession, job,
-      options - BloomParquetFormat.ColsKey, dataSchema)
-    if (cols.isEmpty) parquet else new BloomWriterFactory(parquet, cols)
-  }
-}
-
-private[sinks] object BloomParquetFormat {
-  val ColsKey = "graft.bloomCols"
-}
-
-private final class BloomWriterFactory(parquet: OutputWriterFactory,
-    cols: Seq[String]) extends OutputWriterFactory {
-  override def getFileExtension(context: TaskAttemptContext): String =
-    parquet.getFileExtension(context)
-
-  override def newInstance(path: String, dataSchema: StructType,
-      context: TaskAttemptContext): OutputWriter =
-    new BloomWriter(parquet.newInstance(path, dataSchema, context), path,
-      dataSchema, cols, context)
-}
-
 /** Passes rows through to the parquet writer, counting them and keeping
   * each bloom column's distinct non-null values: integrals widened to
   * long in a primitive-keyed set, strings as copies of their UTF-8 bytes.
@@ -127,7 +95,7 @@ private final class BloomWriterFactory(parquet: OutputWriterFactory,
   * rows. On close, once the row count is known, builds and writes each
   * column's sidecar.
   */
-private final class BloomWriter(parquet: OutputWriter, dataPath: String,
+private[sinks] final class BloomWriter(parquet: OutputWriter, dataPath: String,
     dataSchema: StructType, cols: Seq[String], context: TaskAttemptContext)
     extends OutputWriter {
 

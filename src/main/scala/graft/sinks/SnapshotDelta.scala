@@ -352,7 +352,7 @@ private final class SnapshotMorReaderFactory(
 private case class StagedDeleteInfo(rel: String, bytes: Long,
     positions: Long, covered: Seq[String])
 
-private case class DeltaFilesMessage(inserts: Seq[StagedFileInfo],
+private case class DeltaFilesMessage(inserts: Seq[SnapshotLake.FileEntry],
     delete: Option[StagedDeleteInfo]) extends WriterCommitMessage
 
 final class SnapshotDeltaRowLevelOperationBuilder(
@@ -412,8 +412,9 @@ final class SnapshotDeltaRowLevelOperation(
 
 /** The delta BatchWrite: executors write insert files (hive-routed, same
   * convention as every SQL write) and one position-delete sidecar per
-  * task; the driver publishes the inserts (footer stats + bloom sidecars
-  * restamped), moves the sidecars under `_deletes/`, and commits ONE
+  * task; the driver publishes the inserts (with the entries and bloom
+  * sidecars their tasks built), moves the sidecars under `_deletes/`,
+  * and commits ONE
   * rewrite that guards the statement's candidates and stacks each
   * sidecar onto the entries it covers — every data file survives by
   * IDENTITY.
@@ -425,7 +426,8 @@ final class SnapshotDeltaWrite(
     op: SnapshotDeltaRowLevelOperation,
     writeSchema: StructType,
     opName: String)
-    extends SnapshotStagedWrite(spark, root) with DeltaWrite with DeltaBatchWrite {
+    extends SnapshotStagedWrite(spark, root) with DeltaWrite with DeltaBatchWrite
+    with PartitionOrdered {
 
   // the framework must hand insert rows in exactly the table's schema;
   // a delete-only statement (SQL DELETE) carries NO row projection and
@@ -440,28 +442,32 @@ final class SnapshotDeltaWrite(
 
   private val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
 
+  // a delete-only statement's rows carry no data columns to sort by
+  override protected def orderCols: Seq[String] =
+    if (writeSchema.fields.isEmpty) Nil else op.partCols
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     // delete-only statements pass an empty write schema; the (unused)
     // insert factory still needs a real one
     val rowSchema = if (writeSchema.fields.isEmpty) base.schema else writeSchema
-    val (dataFactory, dataConf) = parquetFactory(StructType(
-      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))), bloomCols)
-    val (delFactory, delConf) = parquetFactory(SnapshotMor.DeleteSchema)
+    val dataFiles = parquetFactory(StructType(
+      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))),
+      statsCols, bloomCols)
+    val deleteFiles = parquetFactory(SnapshotMor.DeleteSchema)
     openStage(base.schema)
     fs.mkdirs(new Path(stageDir, "deletes"))
-    new SnapshotDeltaWriterFactory(dataFactory, dataConf, delFactory, delConf,
+    new SnapshotDeltaWriterFactory(dataFiles, deleteFiles,
       stageDir.toString, rowSchema, op.partCols,
       spark.sessionState.conf.sessionLocalTimeZone,
       SnapshotLake.boundConstraints(spark, rowSchema, base.props))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
-    val inserts = stagedFiles(messages)
+    val newFiles = publishStaged(messages)
     val deleteInfos = messages.toSeq.collect { case m: DeltaFilesMessage => m }
       .flatMap(_.delete).filter(_.positions > 0)
     // a no-match statement publishes nothing
-    if (inserts.nonEmpty || deleteInfos.nonEmpty) {
-      val newFiles = publish(inserts, statsCols, bloomCols)
+    if (newFiles.nonEmpty || deleteInfos.nonEmpty) {
       val deletes = SnapshotLake.moveDeleteSidecars(spark, root, token,
         deleteInfos.map(d => (new Path(stageDir, d.rel), d.covered)))
       SnapshotLake.commitRewrite(spark, root, s"$opName:sql-mor", base,
@@ -474,10 +480,8 @@ final class SnapshotDeltaWrite(
 }
 
 final class SnapshotDeltaWriterFactory(
-    dataFactory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    dataConf: SerializableConfiguration,
-    delFactory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    delConf: SerializableConfiguration,
+    dataFiles: StagedParquet,
+    deleteFiles: StagedParquet,
     stageDir: String,
     schema: StructType,
     partCols: Seq[String],
@@ -489,7 +493,7 @@ final class SnapshotDeltaWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
     // constraints guard INSERTED row versions only (deletes remove rows,
     // which cannot create a violation)
-    val inserts = new HiveRoutingWriter(dataFactory, dataConf, stageDir,
+    val inserts = new HiveRoutingWriter(dataFiles, stageDir,
       schema, partCols, timeZoneId, partitionId, taskId,
       constraints = constraints)
 
@@ -522,7 +526,7 @@ final class SnapshotDeltaWriterFactory(
           else {
             // one sorted sidecar per task: (file, pos) ascending — sorted
             // runs delta-encode well and read-side arrays come pre-ordered
-            val w = new HiveRoutingWriter(delFactory, delConf,
+            val w = new HiveRoutingWriter(deleteFiles,
               s"$stageDir/deletes", SnapshotMor.DeleteSchema, Nil,
               timeZoneId, partitionId, taskId, namePrefix = "delete")
             var n = 0L

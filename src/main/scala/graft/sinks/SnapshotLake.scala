@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.graftbridge.{ListenerBridge, WriteBridge}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-pinned snapshot lake: serializable reads over plain parquet.
@@ -94,11 +94,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
 object SnapshotLake {
 
   /** One immutable data file: lake-relative path, size, (optionally)
-    * per-column min/max envelopes lifted from the parquet footer at commit
-    * time — the data-skipping index a 100 TB reader consults BEFORE
-    * planning, so a selective box query opens a handful of files instead
-    * of listing and footer-probing the whole lake — and (optionally) the
-    * columns this file carries a bloom-filter sidecar for (the POINT
+    * per-column min/max envelopes lifted from the parquet footer by the
+    * task that wrote the file — the data-skipping index a 100 TB reader
+    * consults BEFORE planning, so a selective box query opens a handful
+    * of files instead of listing and footer-probing the whole lake — and
+    * (optionally) the columns this file carries a bloom-filter sidecar for (the POINT
     * lookup index min/max can't provide when the key is hash-scattered
     * across ingest-ordered files; see [[readPoint]]). `rows` is the
     * file's exact row count from the same footer probe (−1 on entries
@@ -146,7 +146,7 @@ object SnapshotLake {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestDir(root: String) = new Path(root, "_manifests")
-  private def dataDir(root: String) = new Path(root, "data")
+  private[sinks] def dataDir(root: String) = new Path(root, "data")
   private def bloomsDir(root: String) = new Path(root, "_blooms")
   private[sinks] def deletesDir(root: String) = new Path(root, "_deletes")
   def bloomPath(root: String, rel: String, c: String): Path =
@@ -754,17 +754,13 @@ object SnapshotLake {
 
   /** Re-attach the lake schema's field-id metadata to a frame about to
     * be staged (user frames never carry it), so the parquet writer
-    * persists the ids. No-op for id-less schemas. Loud when the session
-    * disabled id writing — an id-schema lake with id-less files would
-    * make a later RENAME silently corrupting.
+    * persists the ids (the staged write refuses through
+    * [[requireFieldIdWrites]] when the session disabled id writing).
+    * No-op for id-less schemas.
     */
   private[sinks] def attachFieldIds(df: DataFrame, idSchema: StructType): DataFrame =
     if (!schemaHasFieldIds(idSchema)) df
     else {
-      require(df.sparkSession.sessionState.conf.parquetFieldIdWriteEnabled,
-        "this lake tracks parquet field ids, but " +
-          "spark.sql.parquet.fieldId.write.enabled is false — id-less " +
-          "files would break RENAME/DROP COLUMN resolution; re-enable it")
       val byName = idSchema.fields.map(f => f.name -> f.metadata).toMap
       df.select(df.schema.fields.map { f =>
         byName.get(f.name) match {
@@ -774,10 +770,9 @@ object SnapshotLake {
       }.toIndexedSeq: _*)
     }
 
-  /** Loud write-side guard shared by the executor-writing SQL DML paths
-    * (the library paths go through [[attachFieldIds]]): an id-schema
-    * lake must never gain id-less files, or a later RENAME would
-    * silently mis-resolve them.
+  /** Loud write-side guard every staged write runs before its tasks: an
+    * id-schema lake must never gain id-less files, or a later RENAME
+    * would silently mis-resolve them.
     */
   private[sinks] def requireFieldIdWrites(spark: SparkSession,
       schema: StructType): Unit =
@@ -801,9 +796,10 @@ object SnapshotLake {
   // ----------------------------------------------------------------- write
 
   /** Per-column (min, max) envelopes plus the exact row count from one
-    * parquet footer — a metadata-only driver read (no row data), done
-    * once per file at commit time. Only columns whose physical stats convert cleanly to a
-    * double ordering (int32/int64/float/double — timestamps ride int64
+    * parquet footer — a metadata-only read (no row data): the writing
+    * task runs it on each file it closes ([[HiveRoutingWriter]]), and
+    * [[addStats]] on existing files. Only columns whose physical stats
+    * convert cleanly to a double ordering (int32/int64/float/double — timestamps ride int64
     * micros) are recorded; anything else is simply not prunable. Note
     * TIMESTAMP_NTZ (the engine's canonical ts type) writes as INT64 and
     * prunes; plain LTZ TimestampType writes as INT96 under Spark's default
@@ -811,11 +807,10 @@ object SnapshotLake {
     * min/max for — such a column silently yields no envelope and every
     * reader falls back to the conservative (read-it) side.
     */
-  private def footerProbe(spark: SparkSession, file: Path,
-      statsCols: Set[String]): (Map[String, (Double, Double)], Long) = {
+  private[sinks] def footerProbe(conf: org.apache.hadoop.conf.Configuration,
+      file: Path, statsCols: Set[String]): (Map[String, (Double, Double)], Long) = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(file, spark.sparkContext.hadoopConfiguration)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       var rowCount = 0L
@@ -848,7 +843,8 @@ object SnapshotLake {
   // ---------------------------------------------------------------- blooms
   //
   // Sidecars are built by the task that writes each data file
-  // (graft.sinks.BloomSidecars) and moved under _blooms/ by publishStaged;
+  // (graft.sinks.BloomSidecars) and moved under _blooms/ with it
+  // (SnapshotStagedWrite.publishStaged);
   // this section only reads them.
 
   /** Load one bloom sidecar; None (conservative: keep the file) when the
@@ -890,20 +886,9 @@ object SnapshotLake {
     (checks ++ notNulls).sortBy(_._1)
   }
 
-  /** The lake-head constraint set for a write under `root` (empty before
-    * the first commit — constraints are declared at CREATE, so a bare
-    * first append has none).
-    */
-  private def headConstraints(spark: SparkSession,
-      root: String): Seq[(String, org.apache.spark.sql.Column)] =
-    latestVersion(spark, root) match {
-      case None => Nil
-      case Some(_) => constraintColumns(spark, manifest(spark, root, None).props)
-    }
-
   /** The same constraints as BOUND catalyst violation expressions
-    * against `schema` (rows in exactly the table schema — the shape the
-    * executor-writing SQL DML paths hand their writers), resolved
+    * against `schema` (rows in exactly the shape the staged writes hand
+    * their [[HiveRoutingWriter]]s), resolved
     * through the analyzer on the driver and shipped serialized; each
     * writer compiles them to codegen'd predicates once per task. Empty
     * for constraint-free lakes, so those paths stay byte-identical.
@@ -936,16 +921,14 @@ object SnapshotLake {
   /** Stage-write `df` and move its files (hive partition subdirs
     * preserved) under data/ with a unique token prefix; returns a
     * [[FileEntry]] (with footer stats for `statsCols`) per data file.
-    * The write goes through [[BloomParquetFormat]], so each task leaves
-    * the `bloomCols` sidecars of the files it writes beside them in the
-    * stage; the columns are checked against `df`'s schema before
-    * anything is staged.
-    *
-    * Declared constraints are measured DURING the write itself via
-    * `observe` (one `sum(CASE WHEN violated)` per constraint riding the
-    * write job — N constraints cost zero extra passes at 100 TB); a
-    * violation deletes the invisible stage and refuses before anything
-    * could commit.
+    * The write is a DSv2 append into a [[SnapshotStageTable]], the same
+    * staged write the SQL paths use: each task's [[HiveRoutingWriter]]
+    * checks the lake's declared constraints on every row (a violation
+    * fails the write with an IllegalArgumentException before anything
+    * could commit), leaves the
+    * `bloomCols` sidecars beside the files it writes, and reports each
+    * file's complete entry. The bloom columns are checked against `df`'s
+    * schema before anything is staged.
     */
   private[sinks] def stageFiles(spark: SparkSession, root: String, df: DataFrame,
       partitionCols: Seq[String], statsCols: Set[String],
@@ -953,62 +936,25 @@ object SnapshotLake {
     require(bloomCols.intersect(partitionCols).isEmpty,
       s"bloom columns ${bloomCols.intersect(partitionCols).mkString(",")} " +
         "are partition columns — directory pruning already serves them")
-    val sortedBlooms = bloomCols.distinct.sorted
-    BloomSidecars.requireSupported(StructType(
-      df.schema.fields.filterNot(f => partitionCols.contains(f.name))), sortedBlooms)
-    val fs = fsOf(spark, root)
-    val token = newToken()
-    val stage = new Path(root, s".stage-$token")
-    val fns = org.apache.spark.sql.functions
-    val constraints = headConstraints(spark, root)
-    val (toWrite, obs) =
-      if (constraints.isEmpty) (df, None)
-      else {
-        val o = org.apache.spark.sql.Observation(s"graft-constraints-$token")
-        val metrics = constraints.map { case (n, viol) =>
-          fns.sum(fns.when(viol, 1L).otherwise(0L)).as(n)
-        }
-        (df.observe(o, metrics.head, metrics.tail: _*), Some(o))
-      }
-    val w = toWrite.write.format(classOf[BloomParquetFormat].getName)
-      .mode("overwrite").option("compression", "zstd")
-      .option(BloomParquetFormat.ColsKey, sortedBlooms.mkString(","))
-    writeStage(spark, stage)(
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .save(stage.toString))
-    obs.foreach { o =>
-      val bad = o.get.toSeq.collect {
-        case (n, v: Long) if v > 0 => s"$n ($v row(s))"
-      }.sorted
-      if (bad.nonEmpty) {
-        fs.delete(stage, true)
-        throw new IllegalArgumentException(
-          s"write refused: constraint violation under $root — " +
-            bad.mkString("; ") + " (declared via constraint.<name> / " +
-            "notNullCols table properties; nothing was committed)")
-      }
+    // constraints are declared at CREATE, so a bare first append has none
+    val props = latestVersion(spark, root)
+      .fold(Map.empty[String, String])(_ => manifest(spark, root, None).props)
+    val stage = new SnapshotStageTable(spark, root, df.schema, partitionCols,
+      statsCols, bloomCols, props)
+    try writeStage(spark, stage.stageDir)(WriteBridge.append(df, stage))
+    catch { case e: org.apache.spark.SparkException =>
+      // a task's refusal reaches the caller as itself, not as the job
+      // failure Spark wraps it in
+      throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case r: IllegalArgumentException => r }.getOrElse(e)
     }
-    // pass 1: collect the staged part files (walk order = deterministic)
-    val parts = scala.collection.mutable.ArrayBuffer
-      .empty[(Path, String, Long)]
-    def walk(dir: Path, rel: String): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, s"$rel$name/")
-        else if (!name.startsWith("_") && !name.startsWith("."))
-          parts += ((st.getPath, s"$rel$token-$name", st.getLen))
-      }
-    walk(stage, "")
-    val staged = publishStaged(spark, root, parts.toSeq, statsCols,
-      sortedBlooms)
-    fs.delete(stage, true)
-    staged
+    stage.published
   }
 
   /** Run `write` into `stage` under a job tag of its own; on failure,
-    * delete the stage and rethrow. The write's abort empties the stage
-    * but leaves its directory, and a failed or cancelled job ends before
-    * its killed tasks do — a task still running may write under the stage
+    * delete the stage and rethrow. The write's abort leaves the stage
+    * alone, and a failed or cancelled job ends before its killed tasks
+    * do — a task still running may write under the stage
     * again — so the stage is deleted once every task of the tagged jobs
     * has ended, or after `StageSettleMs` at most. The write's own error is
     * always the one rethrown; a failure to settle or delete rides on it
@@ -1037,46 +983,6 @@ object SnapshotLake {
 
   /** How long a failed stage write waits for its killed tasks to end. */
   private val StageSettleMs = 30000L
-
-  /** Pass 2+3 of a stage: footer-probe, then move each data file under
-    * data/ and its `bloomCols` sidecars under _blooms/ — shared by
-    * [[stageFiles]] (whose parts come from a Spark write into a stage
-    * dir) and the SQL row-level-operation BatchWrite (whose parts come
-    * from executor-side DataWriters). Both write through
-    * [[BloomParquetFormat]], whose tasks built the sidecars beside the
-    * staged files ([[BloomSidecars.staged]]); nothing here reads data.
-    * `parts` = (current path, final data/-relative name, byte length).
-    */
-  private[sinks] def publishStaged(spark: SparkSession, root: String,
-      parts: Seq[(Path, String, Long)], statsCols: Set[String],
-      bloomCols: Seq[String]): Seq[FileEntry] = {
-    val fs = fsOf(spark, root)
-    val sortedBlooms = bloomCols.distinct.sorted
-    // footer probes are independent driver-side reads — run them
-    // concurrently instead of serially (a refresh that stages N files pays
-    // one footer open each; serial probes were the dominant commit
-    // constant in the incremental-rollup loop)
-    val probed: Map[String, (Map[String, (Double, Double)], Long)] =
-      graft.Concurrent.all(spark)(parts.map { case (p, rel, _) =>
-        () => rel -> footerProbe(spark, p, statsCols) }).toMap
-    // pass 3: publish moves in walk order. Sidecars land BEFORE the
-    // manifest commit that makes the files visible; a crash in between
-    // leaves unreferenced files + sidecars (invisible garbage, swept by
-    // vacuum), never a committed file whose recorded bloom is missing.
-    parts.map { case (p, relOut, len) =>
-      val target = new Path(dataDir(root), relOut)
-      fs.mkdirs(target.getParent)
-      val (stats, nRows) = probed(relOut)
-      require(fs.rename(p, target), s"stage move failed: $target")
-      sortedBlooms.foreach { c =>
-        val bloom = bloomPath(root, relOut, c)
-        fs.mkdirs(bloom.getParent)
-        require(fs.rename(BloomSidecars.staged(p, c), bloom),
-          s"bloom sidecar publish failed: $bloom")
-      }
-      FileEntry(relOut, len, stats, sortedBlooms, nRows)
-    }
-  }
 
   /** Create an EMPTY lake: a schema-only v1 manifest with zero files —
     * the `CREATE TABLE` landing for catalog-managed lakes. Declared
@@ -2154,8 +2060,8 @@ object SnapshotLake {
     * metadata path now want envelopes: a [[compact]] would rewrite the
     * whole lake to learn numbers that already sit in every footer.
     *
-    * Cost: one driver-side footer read per CURRENT file (the same probe
-    * `stageFiles` pays at commit time), one lock commit. Existing
+    * Cost: one driver-side footer read per CURRENT file (the probe each
+    * writing task runs on the files it writes), one lock commit. Existing
     * envelopes are kept and extended (probing is per-column additive);
     * files whose footer has no usable stats for a column (all-null,
     * INT96, non-numeric) simply stay envelope-free for it — conservative
@@ -2171,7 +2077,8 @@ object SnapshotLake {
       s"stats column $c not in snapshot schema ${base.schema.simpleString}"))
     val dd = dataDir(root)
     val enriched: Map[String, FileEntry] = base.files.map { f =>
-      val (stats, nRows) = footerProbe(spark, new Path(dd, f.rel), cols.toSet)
+      val (stats, nRows) = footerProbe(spark.sparkContext.hadoopConfiguration,
+        new Path(dd, f.rel), cols.toSet)
       f.rel -> f.copy(stats = f.stats ++ stats,
         rows = if (f.rows >= 0) f.rows else nRows)
     }.toMap
@@ -2474,10 +2381,9 @@ object SnapshotLake {
       .select(col("_metadata.file_path").as("__side"), col("file"))
       .distinct().collect()
     val (statsCols, bloomCols) = indexCols(base, partitionCols)
-    val (newFiles, emptyStaged) = stageFiles(spark, root,
+    val newFiles = stageFiles(spark, root,
       attachFieldIds(inserts, base.schema), partitionCols, statsCols,
-      bloomCols).partition(_.rows > 0)
-    reclaim(spark, root, emptyStaged) // zero-row part files: reclaim, not publish
+      bloomCols)
     try {
       // move the non-empty sidecars under _deletes/; empty part files
       // cover no rows, stay in the stage dir and die with it

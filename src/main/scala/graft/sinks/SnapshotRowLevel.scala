@@ -6,13 +6,17 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
-import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, TableCapability}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -63,17 +67,16 @@ import org.apache.spark.util.SerializableConfiguration
   * statement loudly; concurrent appends ride through untouched).
   *
   * The write path is a REAL distributed DSv2 write (ReplaceData has no
-  * V1 fallback): executors write zstd parquet through Spark's own
-  * `ParquetFileFormat.prepareWrite` factory (wrapped by
-  * [[BloomParquetFormat]], which leaves each file's bloom sidecars beside
-  * it) straight into the lake's stage-dir convention — for
-  * hive-partitioned lakes each task routes rows to per-partition files
-  * (partition columns live in the directory name, not the file, exactly
-  * like a library append) — commit messages
-  * carry (file, bytes, rows), and the driver publishes through
-  * [[SnapshotStagedWrite]] + the rewrite-commit core — footer stats and
-  * bloom sidecars restamped exactly like every other rewrite,
-  * crash-safety by the same invisible-stage contract.
+  * V1 fallback), the same staged write every lake write uses: executors
+  * write zstd parquet through Spark's own `ParquetFileFormat.prepareWrite`
+  * factory ([[BloomWriter]] leaves each file's bloom sidecars beside it)
+  * straight into the lake's stage-dir convention — for hive-partitioned lakes each task routes its
+  * partition-sorted rows to per-partition files (partition columns live
+  * in the directory name, not the file, exactly like a library append) —
+  * commit messages carry each file's complete manifest entry, built by
+  * the task, and the driver publishes through [[SnapshotStagedWrite]] +
+  * the rewrite-commit core, crash-safety by the same invisible-stage
+  * contract.
   */
 final class SnapshotRowLevelOperation(
     spark: SparkSession,
@@ -115,7 +118,8 @@ final class SnapshotRowLevelOperation(
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new Write {
+      override def build(): Write = new PartitionOrdered {
+        override protected def orderCols: Seq[String] = partCols
         override def toBatch: BatchWrite =
           new SnapshotReplaceDataWrite(spark, root, base,
             SnapshotRowLevelOperation.this, info.schema,
@@ -276,20 +280,41 @@ final class SnapshotRowLevelScan(
     innerScan.toBatch.createReaderFactory()
 }
 
-/** One staged parquet file an executor wrote: data/-relative name +
-  * length + rows (zero-row files are never created — a writer opens on
-  * its first routed row).
-  */
-private case class StagedFileInfo(rel: String, bytes: Long, rows: Long)
-
-private case class StagedFilesMessage(files: Seq[StagedFileInfo])
+/** The entries of the files one task staged, under stage-relative names. */
+private case class StagedFilesMessage(files: Seq[SnapshotLake.FileEntry])
   extends WriterCommitMessage
 
-/** The driver-side plumbing every SQL write into a snapshot lake shares:
-  * a stage dir under a fresh token, Spark's own parquet `prepareWrite`
-  * factories for the executor writers, publishing the staged data files
-  * under their token-prefixed names, and dropping the stage dir on
-  * commit or abort. Subclasses commit through
+/** How one staged write's routing writers write and describe their
+  * files: Spark's zstd parquet factory, its job conf, and the index
+  * columns every entry records.
+  */
+private[sinks] final case class StagedParquet(factory: OutputWriterFactory,
+    conf: SerializableConfiguration, statsCols: Set[String],
+    bloomCols: Seq[String])
+
+/** A routing write's one request to Spark: rows sorted by the partition
+  * columns within each task — the sort V1's `FileFormatWriter` imposes —
+  * so each task's [[HiveRoutingWriter]] fills one file per partition
+  * directory. Nothing is asked of an unpartitioned write.
+  */
+private[sinks] trait PartitionOrdered extends RequiresDistributionAndOrdering {
+  protected def orderCols: Seq[String]
+
+  override def requiredDistribution(): Distribution = Distributions.unspecified()
+
+  // quoted: a column name is one identifier, dots and all
+  override def requiredOrdering(): Array[SortOrder] = orderCols.map(c =>
+    Expressions.sort(Expressions.column(s"`${c.replace("`", "``")}`"),
+      SortDirection.ASCENDING)).toArray
+}
+
+/** The driver-side plumbing every write into a snapshot lake shares —
+  * the library writes ([[SnapshotStageTable]]) and the SQL DML and
+  * dynamic-overwrite writes: a stage dir under a fresh token, Spark's own
+  * parquet `prepareWrite` factory for the executors'
+  * [[HiveRoutingWriter]]s, publishing the entries the tasks reported
+  * under token-prefixed names, and dropping the stage dir on commit or
+  * abort. The SQL subclasses commit through
   * [[SnapshotLake.commitRewrite]] / [[SnapshotLake.publishRewrite]],
   * which reclaim a lost race's files and abort the statement loudly.
   */
@@ -297,7 +322,10 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
     root: String) {
 
   protected val token: String = SnapshotLake.newToken()
-  protected val stageDir = new Path(root, s".stage-$token")
+  private[sinks] val stageDir = {
+    val p = new Path(root, s".stage-$token")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
 
   protected def fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -308,48 +336,119 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
   }
 
   /** A zstd parquet writer factory for files of `schema`, with its own
-    * Job: `prepareWrite` threads the schema through the job conf. Its
-    * writers leave the `bloomCols` sidecars beside each file they write
-    * ([[BloomParquetFormat]]); an unsupported or missing bloom column
-    * refuses here, on the driver, before any task runs.
+    * Job: `prepareWrite` threads the schema, field-id metadata included,
+    * through the job conf. An unsupported or missing bloom column refuses
+    * here, on the driver, before any task runs.
     */
-  protected def parquetFactory(schema: StructType, bloomCols: Seq[String] = Nil)
-      : (OutputWriterFactory, SerializableConfiguration) = {
+  protected def parquetFactory(schema: StructType,
+      statsCols: Set[String] = Set.empty,
+      bloomCols: Seq[String] = Nil): StagedParquet = {
+    val blooms = bloomCols.distinct.sorted
+    BloomSidecars.requireSupported(schema, blooms)
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val factory = new BloomParquetFormat().prepareWrite(spark, job,
-      Map("compression" -> "zstd",
-        BloomParquetFormat.ColsKey -> bloomCols.mkString(",")), schema)
-    (factory, new SerializableConfiguration(job.getConfiguration))
+    StagedParquet(new ParquetFileFormat().prepareWrite(spark, job,
+      Map("compression" -> "zstd"), schema),
+      new SerializableConfiguration(job.getConfiguration), statsCols, blooms)
   }
 
-  /** The non-empty data files the executors staged. */
-  private[sinks] def stagedFiles(messages: Array[WriterCommitMessage])
-      : Seq[StagedFileInfo] =
+  /** The task writers for rows of `schema` routed by `partCols` (which
+    * live in the directory name; files carry the rest), checking the
+    * constraints the lake `props` declare on every row.
+    */
+  protected def routingWriters(schema: StructType, partCols: Seq[String],
+      statsCols: Set[String], bloomCols: Seq[String],
+      props: Map[String, String]): SnapshotDataWriterFactory =
+    new SnapshotDataWriterFactory(parquetFactory(StructType(
+      schema.fields.filterNot(f => partCols.contains(f.name))), statsCols,
+      bloomCols), stageDir.toString, schema, partCols,
+      spark.sessionState.conf.sessionLocalTimeZone,
+      SnapshotLake.boundConstraints(spark, schema, props))
+
+  /** Publish what the executors staged: move each data file under data/,
+    * the write token prefixing its BASENAME (the hive partition dirs the
+    * task writers routed into are kept), and its bloom sidecars
+    * ([[BloomSidecars.staged]]) under _blooms/, in rel order. The entries
+    * come complete from the writing tasks, so nothing here opens a file.
+    * Sidecars land BEFORE the manifest commit that makes the files
+    * visible; a crash in between leaves unreferenced files + sidecars
+    * (invisible garbage, swept by vacuum), never a committed file whose
+    * recorded bloom is missing. Returns the published entries.
+    */
+  private[sinks] def publishStaged(messages: Array[WriterCommitMessage])
+      : Seq[SnapshotLake.FileEntry] =
     messages.toSeq.flatMap {
       case m: StagedFilesMessage => m.files
       case m: DeltaFilesMessage => m.inserts
       case _ => Nil
-    }.filter(_.rows > 0)
-
-  /** Footer-probe and move the staged files under data/ and their bloom
-    * sidecars under _blooms/: the write token prefixes each BASENAME,
-    * preserving the hive partition directories the task writers routed
-    * into. `bloomCols` must be the columns the writers' factory built.
-    */
-  private[sinks] def publish(files: Seq[StagedFileInfo], statsCols: Set[String],
-      bloomCols: Seq[String]): Seq[SnapshotLake.FileEntry] =
-    SnapshotLake.publishStaged(spark, root, files.map { f =>
+    }.sortBy(_.rel).map { f =>
       val i = f.rel.lastIndexOf('/')
-      (new Path(stageDir, f.rel),
-        f.rel.take(i + 1) + s"$token-" + f.rel.drop(i + 1), f.bytes)
-    }, statsCols, bloomCols)
+      val rel = f.rel.take(i + 1) + s"$token-" + f.rel.drop(i + 1)
+      val from = new Path(stageDir, f.rel)
+      val target = new Path(SnapshotLake.dataDir(root), rel)
+      fs.mkdirs(target.getParent)
+      require(fs.rename(from, target), s"stage move failed: $target")
+      f.bloomCols.foreach { c =>
+        val bloom = SnapshotLake.bloomPath(root, rel, c)
+        fs.mkdirs(bloom.getParent)
+        require(fs.rename(BloomSidecars.staged(from, c), bloom),
+          s"bloom sidecar publish failed: $bloom")
+      }
+      f.copy(rel = rel)
+    }
 
   /** Run the driver-side commit; the stage dir goes on every exit. */
-  protected def committing(body: => Unit): Unit =
+  protected def committing[A](body: => A): A =
     try body finally fs.delete(stageDir, true)
 
   def abort(messages: Array[WriterCommitMessage]): Unit =
     fs.delete(stageDir, true)
+}
+
+/** The library writes' staged write ([[SnapshotLake.stageFiles]]): a
+  * write-only DSv2 table over one stage dir, which a frame is appended
+  * to through [[WriteBridge]]. Its writers are built from `rowSchema`,
+  * the frame's own, so the frame's field-id metadata reaches parquet,
+  * and they check the constraints the lake `props` declare on every row.
+  */
+private[sinks] final class SnapshotStageTable(spark: SparkSession,
+    root: String, rowSchema: StructType, partCols: Seq[String],
+    statsCols: Set[String], bloomCols: Seq[String],
+    props: Map[String, String])
+    extends SnapshotStagedWrite(spark, root) with SupportsWrite with BatchWrite {
+
+  // built now: an unsupported bloom column refuses before a stage exists
+  private val writers =
+    routingWriters(rowSchema, partCols, statsCols, bloomCols, props)
+
+  /** The entries of the files the write published, once it has run. */
+  @volatile private[sinks] var published: Seq[SnapshotLake.FileEntry] = Nil
+
+  override def name(): String = s"graft-stage `$root`"
+
+  override def schema(): StructType = WriteBridge.nullable(rowSchema)
+
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new PartitionOrdered {
+        override protected def orderCols: Seq[String] = partCols
+        override def toBatch: BatchWrite = SnapshotStageTable.this
+      }
+    }
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    openStage(rowSchema)
+    writers
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    published = committing(publishStaged(messages))
+
+  // a failed write's stage dir goes once its killed tasks have ended
+  // (SnapshotLake.writeStage), not while they may still write into it
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 /** The ReplaceData BatchWrite: replace the operation's (possibly
@@ -380,18 +479,14 @@ final class SnapshotReplaceDataWrite(
   private val (statsCols, bloomCols) = SnapshotLake.indexCols(base, op.partCols)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // partition columns live in the directory name; files carry the rest
-    val (factory, conf) = parquetFactory(StructType(
-      writeSchema.fields.filterNot(f => op.partCols.contains(f.name))), bloomCols)
+    val writers = routingWriters(writeSchema, op.partCols, statsCols,
+      bloomCols, base.props)
     openStage(base.schema)
-    new SnapshotDataWriterFactory(factory, conf,
-      stageDir.toString, writeSchema, op.partCols,
-      spark.sessionState.conf.sessionLocalTimeZone,
-      SnapshotLake.boundConstraints(spark, writeSchema, base.props))
+    writers
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
-    val newFiles = publish(stagedFiles(messages), statsCols, bloomCols)
+    val newFiles = publishStaged(messages)
     // the REPLACED set: exactly the candidate files the statement's
     // scan was narrowed to; a statement that touched nothing publishes
     // nothing
@@ -452,22 +547,17 @@ final class SnapshotDynamicOverwriteWrite(
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val (factory, conf) = parquetFactory(StructType(
-      tableSchema.fields.filterNot(f => partCols.contains(f.name))), bloomCols)
+    val writers = routingWriters(tableSchema, partCols, statsCols, bloomCols,
+      base.map(_.props).getOrElse(Map.empty))
     openStage(tableSchema)
-    new SnapshotDataWriterFactory(factory, conf,
-      stageDir.toString, tableSchema, partCols,
-      spark.sessionState.conf.sessionLocalTimeZone,
-      SnapshotLake.boundConstraints(spark, tableSchema,
-        base.map(_.props).getOrElse(Map.empty)))
+    writers
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
-    val infos = stagedFiles(messages)
+    val newFiles = publishStaged(messages)
     // partitioned + empty frame: replace nothing, publish nothing
     // (Delta semantics — there is no partition to derive)
-    if (infos.nonEmpty || partCols.isEmpty) {
-      val newFiles = publish(infos, statsCols, bloomCols)
+    if (newFiles.nonEmpty || partCols.isEmpty) {
       // the REPLACED partitions: exactly the directory prefixes the
       // frame's own rows routed into; an unpartitioned lake is one
       // "partition" — a full atomic replace
@@ -497,17 +587,22 @@ final class SnapshotDynamicOverwriteWrite(
   }
 }
 
-/** The executor-side hive-routing parquet writer every SQL write path
+/** The executor-side hive-routing parquet writer every lake write
   * shares: routes each TABLE-SCHEMA row to its partition directory
-  * (partition values rendered via Spark's own Cast-to-string in the
-  * session time zone + hive escaping — byte-compatible with library
-  * appends), strips the partition columns from the written file, opens
-  * per-partition writers lazily, and reports (rel, bytes, rows) per
-  * staged file at commit.
+  * (rendered as V1's file writer renders it: Spark's own Cast-to-string
+  * in the session time zone, hive escaping, NULL or empty as
+  * `__HIVE_DEFAULT_PARTITION__`), strips the partition columns from the
+  * written file, checks the declared constraints on every row, and
+  * leaves the `bloomCols` sidecars beside each file ([[BloomWriter]]).
+  * It keeps ONE file open: rows arrive sorted by the partition columns
+  * ([[PartitionOrdered]]), so a directory change closes the file, and a
+  * directory that comes back gets a fresh numbered file. For each file
+  * it closes, the task builds the complete manifest entry — bytes, plus
+  * rows and `statsCols` envelopes from the file's own footer
+  * ([[SnapshotLake.footerProbe]]) — and reports it at commit.
   */
 private[sinks] final class HiveRoutingWriter(
-    factory: OutputWriterFactory,
-    conf: SerializableConfiguration,
+    files: StagedParquet,
     stageDir: String,
     schema: StructType,
     partCols: Seq[String],
@@ -526,17 +621,10 @@ private[sinks] final class HiveRoutingWriter(
     (n, org.apache.spark.sql.catalyst.expressions.Predicate.create(e))
   }
 
-  /** Loud ceiling on concurrently open per-partition files per task — a
-    * rewrite routing into thousands of partitions from one task should
-    * repartition by the partition columns, not OOM an executor.
-    */
-  private val MaxOpenWriters = 256
-
-  private[sinks] val context = new TaskAttemptContextImpl(conf.value,
+  private val context = new TaskAttemptContextImpl(files.conf.value,
     new TaskAttemptID("graft", 0, TaskType.MAP, partitionId,
       (taskId % Int.MaxValue).toInt))
-  private val ext = factory.getFileExtension(context)
-  private val baseName = f"$namePrefix-$partitionId%05d-$taskId$ext"
+  private val ext = files.factory.getFileExtension(context)
   private val dataSchema = StructType(
     schema.fields.filterNot(f => partCols.contains(f.name)))
   private val dataIdx = schema.fields.zipWithIndex.collect {
@@ -552,20 +640,13 @@ private[sinks] final class HiveRoutingWriter(
   private val dataProj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
     dataSchema, dataIdx)
 
-  // dir-relative rel -> (writer, rows written)
-  private val open = scala.collection.mutable.LinkedHashMap
-    .empty[String, (org.apache.spark.sql.execution.datasources.OutputWriter, Long)]
-
-  private def dirOf(row: InternalRow): String = {
-    val strings = partStrings(row)
-    partCols.indices.map { k =>
-      require(!strings.isNullAt(k),
-        s"row-level DML cannot route a NULL ${partCols(k)} partition " +
-          "value — clean the frame or use the library merge")
-      ExternalCatalogUtils.getPartitionPathString(partCols(k),
-        strings.getUTF8String(k).toString)
-    }.mkString("/")
-  }
+  // the open file: its rendered partition values, stage-relative name
+  // and writer; `written` holds the entries of the files already closed
+  private var key: UnsafeRow = null
+  private var rel: String = null
+  private var writer: OutputWriter = null
+  private val written =
+    scala.collection.mutable.ArrayBuffer.empty[SnapshotLake.FileEntry]
 
   /** Route one row in the FULL table schema. */
   def write(full: InternalRow): Unit = {
@@ -575,45 +656,59 @@ private[sinks] final class HiveRoutingWriter(
           "constraint.<name> / notNullCols table properties; nothing " +
           "was committed)")
     }
-    val rel =
-      if (partCols.isEmpty) baseName
-      else s"${dirOf(full)}/$baseName"
-    val (writer, n) = open.getOrElseUpdate(rel, {
-      require(open.size < MaxOpenWriters,
-        s"row-level DML opened $MaxOpenWriters per-partition files " +
-          "in one task — repartition the statement's input by " +
-          s"(${partCols.mkString(", ")}) or use the library merge")
-      (factory.newInstance(s"$stageDir/$rel", dataSchema, context), 0L)
-    })
+    val strings = partStrings(full)
+    if (writer == null || strings != key) {
+      closeFile()
+      key = strings.copy()
+      open(partCols.indices.map { k =>
+        ExternalCatalogUtils.getPartitionPathString(partCols(k),
+          if (key.isNullAt(k)) null else key.getUTF8String(k).toString) + "/"
+      }.mkString)
+    }
     if (partCols.isEmpty) writer.write(full)
     else {
       dataProj.project(full)
       writer.write(dataProj)
     }
-    open.update(rel, (writer, n + 1))
   }
 
-  def commitFiles(): Seq[StagedFileInfo] = {
-    val fs = new Path(stageDir).getFileSystem(conf.value)
-    open.toSeq.map { case (rel, (writer, rows)) =>
-      writer.close()
-      StagedFileInfo(rel,
-        fs.getFileStatus(new Path(s"$stageDir/$rel")).getLen, rows)
-    }
+  // fixed-width names: a manifest's bytes do not depend on task ids' digits
+  private def open(dir: String): Unit = {
+    rel = f"$dir$namePrefix-$partitionId%05d-$taskId%019d.c${written.size}%03d$ext"
+    val path = s"$stageDir/$rel"
+    val parquet = files.factory.newInstance(path, dataSchema, context)
+    writer = if (files.bloomCols.isEmpty) parquet
+      else new BloomWriter(parquet, path, dataSchema, files.bloomCols, context)
+  }
+
+  private def closeFile(): Unit = if (writer != null) {
+    writer.close()
+    writer = null
+    val p = new Path(s"$stageDir/$rel")
+    val (stats, rows) =
+      SnapshotLake.footerProbe(files.conf.value, p, files.statsCols)
+    written += SnapshotLake.FileEntry(rel,
+      p.getFileSystem(files.conf.value).getFileStatus(p).getLen, stats,
+      files.bloomCols, rows)
+  }
+
+  def commitFiles(): Seq[SnapshotLake.FileEntry] = {
+    closeFile()
+    written.toSeq
   }
 
   def abort(): Unit = {
-    val fs = new Path(stageDir).getFileSystem(conf.value)
-    open.foreach { case (rel, (writer, _)) =>
+    val fs = new Path(stageDir).getFileSystem(files.conf.value)
+    if (writer != null) {
       try writer.close() catch { case _: Throwable => () }
       fs.delete(new Path(s"$stageDir/$rel"), false)
     }
+    written.foreach(f => fs.delete(new Path(s"$stageDir/${f.rel}"), false))
   }
 }
 
 final class SnapshotDataWriterFactory(
-    factory: OutputWriterFactory,
-    conf: SerializableConfiguration,
+    files: StagedParquet,
     stageDir: String,
     schema: StructType,
     partCols: Seq[String],
@@ -623,7 +718,7 @@ final class SnapshotDataWriterFactory(
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val routing = new HiveRoutingWriter(factory, conf, stageDir, schema,
+    val routing = new HiveRoutingWriter(files, stageDir, schema,
       partCols, timeZoneId, partitionId, taskId,
       constraints = constraints)
 

@@ -362,7 +362,8 @@ final class SnapshotTable(
             .sameElements(schema().fields.map(f => (f.name, f.dataType))),
             s"dynamic overwrite schema ${info.schema.simpleString} != " +
               s"table schema ${schema().simpleString}")
-          new Write {
+          new PartitionOrdered {
+            override protected def orderCols: Seq[String] = partCols
             override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
               new SnapshotDynamicOverwriteWrite(spark, root, pinned,
                 schema(), partCols, declaredPartitioning, tableOptions)
@@ -412,7 +413,7 @@ object SnapshotTable {
 
   /** Render one filter literal EXACTLY the way the partition-directory
     * writer rendered it: Spark's own Cast-to-string in the session time
-    * zone (the `partStrings` projection in [[SnapshotDataWriterFactory]]
+    * zone (the `partStrings` projection in [[HiveRoutingWriter]]
     * and `df.write.partitionBy` both go through Cast). `String.valueOf`
     * is NOT that function for date/time external types —
     * `java.sql.Timestamp.toString` prints a trailing `.0` that the

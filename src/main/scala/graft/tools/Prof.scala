@@ -278,6 +278,8 @@ object Prof {
       (0 until 8).foreach(k => SnapshotLake.append(spark, root,
         rows.filter(pmod(col("id"), lit(8)) === k).repartition(4),
         statsCols = Seq("id"), bloomCols = blooms))
+    // untimed: JIT and Spark warm-up would land in the first timed step
+    ingest(TempDirs.create("graft-prof-pb-warm") + "/lake", Seq("id", "who"))
     step(ctx, "pointbloom", "append-plain")(ingest(plain, Nil))
     step(ctx, "pointbloom", "append-bloomed")(ingest(bloomed, Seq("id", "who")))
     val nFiles = SnapshotLake.manifest(spark, bloomed).files.size

@@ -330,4 +330,51 @@ object Witness {
       }
     }.toMap
   }
+
+  /** The manifest entry of the published data file `rel` under `root`,
+    * read back from the file itself on the driver: its length, its row
+    * count and, for each of `statsCols` whose physical type is numeric
+    * (INT32, INT64, FLOAT, DOUBLE — timestamps ride INT64 micros; INT96
+    * and binary columns get none), the (min, max) envelope over every row
+    * group's footer statistics, as doubles. `bloomCols` are the sidecars
+    * the file is expected to carry. The reference the writing tasks'
+    * own entries are checked against.
+    */
+  def footerEntry(spark: SparkSession, root: String, rel: String,
+      statsCols: Set[String], bloomCols: Seq[String]): SnapshotLake.FileEntry = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new Path(new Path(root, "data"), rel)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val chunks = blocks.flatMap(_.getColumns.asScala)
+        .filter(c => statsCols(c.getPath.toDotString))
+      val stats = chunks.groupBy(_.getPath.toDotString).flatMap { case (name, cs) =>
+        val bounds = cs.map(_.getStatistics)
+          .filter(st => st != null && st.hasNonNullValue)
+          .flatMap { st =>
+            def d(v: Any): Double = v match {
+              case i: java.lang.Integer => i.toDouble
+              case l: java.lang.Long => l.toDouble
+              case f: java.lang.Float => f.toDouble
+              case x: java.lang.Double => x.doubleValue
+            }
+            st.`type`.getPrimitiveTypeName match {
+              case INT32 | INT64 | FLOAT | DOUBLE =>
+                Some((d(st.genericGetMin), d(st.genericGetMax)))
+              case _ => None
+            }
+          }
+        if (bounds.isEmpty) None
+        else Some(name -> (bounds.map(_._1).reduce((a, b) => math.min(a, b)),
+          bounds.map(_._2).reduce((a, b) => math.max(a, b))))
+      }
+      SnapshotLake.FileEntry(rel,
+        file.getFileSystem(conf).getFileStatus(file).getLen, stats,
+        bloomCols.distinct.sorted, blocks.map(_.getRowCount).sum)
+    } finally reader.close()
+  }
 }

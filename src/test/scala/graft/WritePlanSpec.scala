@@ -173,7 +173,8 @@ class WritePlanSpec extends SparkSpec with PlanNodes {
     // the rewrite write itself: zero exchanges (read -> filter -> write)
     val writes = qes.filter(qe =>
       nodes(qe.executedPlan).exists(p =>
-        p.nodeName.contains("WriteFiles") ||
+        p.nodeName.contains("AppendData") ||
+          p.nodeName.contains("WriteFiles") ||
           p.nodeName.contains("InsertIntoHadoopFsRelationCommand") ||
           p.nodeName.contains("DataWritingCommand")))
     assert(writes.nonEmpty, "no staged write captured")

@@ -14,7 +14,10 @@
 #      outside SparkEntry.scala (SparkEntry.run releases reuse frames);
 #      no input_file_name or BloomFilter.create in src/main outside
 #      graft/sinks/BloomSidecars.scala (bloom sidecars are built by the task
-#      that writes each file, never by a second scan)
+#      that writes each file, never by a second scan); one staged write:
+#      no footerProbe( call in src/main but the task writer's
+#      (HiveRoutingWriter) and addStats', and no DataFrameWriter save in
+#      SnapshotLake.stageFiles (the writing task reports each file's entry)
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -82,9 +85,26 @@ QUERIES=$(git grep -nE 'SparkEntry\.queries(\(|\.(apply|get|getOrElse)\()' -- sr
 # writing task; nothing else sizes a filter or keys rows by their file.
 BLOOM=$(git grep -nE 'input_file_name|BloomFilter\.create' -- src/main \
   ':!src/main/scala/graft/sinks/BloomSidecars.scala')
-if [[ -z "$STRAY$WITNESS$MAINS$QUERIES$BLOOM" ]]; then
+# One staged write: every lake file is staged by a HiveRoutingWriter that
+# reports the file's manifest entry, so the only footer probes left are the
+# writer's own and addStats' backfill of existing files, and stageFiles
+# runs no V1 DataFrameWriter save.
+PROBE=$(git grep -lE 'footerProbe\(' -- src/main | xargs -r awk '
+  FNR == 1 { cls = ""; fn = "" }
+  /^ *(private[^ ]* +)?(final +)?(case +)?(class|object|trait) +[A-Za-z0-9_]+/ {
+    match($0, /(class|object|trait) +[A-Za-z0-9_]+/)
+    cls = substr($0, RSTART, RLENGTH); sub(/^[a-z]+ +/, "", cls) }
+  /[ \t]def +[A-Za-z0-9_]+/ {
+    match($0, /def +[A-Za-z0-9_]+/)
+    fn = substr($0, RSTART, RLENGTH); sub(/^def +/, "", fn) }
+  /footerProbe\(/ && !/def +footerProbe\(/ &&
+    cls != "HiveRoutingWriter" && fn != "addStats" { print FILENAME ":" FNR ": " $0 }')
+STAGEW=$(awk '/def stageFiles\(/ { on = 1; next } on && /^  [^ ]/ { on = 0 }
+  on && /\.write\b|DataFrameWriter|\.save\(|\.parquet\(|saveAsTable|insertInto/ {
+    print FILENAME ":" FNR ": " $0 }' src/main/scala/graft/sinks/SnapshotLake.scala)
+if [[ -z "$STRAY$WITNESS$MAINS$QUERIES$BLOOM$PROBE$STAGEW" ]]; then
   ONEWAY="ok"
-  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run; blooms are built only in BloomSidecars"
+  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run; blooms are built only in BloomSidecars; lake files are staged only by the routing writer"
 else
   ONEWAY="FAILED:"
   [[ -n "$STRAY" ]] && ONEWAY="$ONEWAY $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
@@ -92,7 +112,9 @@ else
   [[ -n "$MAINS" ]] && ONEWAY="$ONEWAY $(echo "$MAINS" | wc -l) main(s) in graft/tools besides Prof"
   [[ -n "$QUERIES" ]] && ONEWAY="$ONEWAY $(echo "$QUERIES" | wc -l) SparkEntry.queries( call(s) outside SparkEntry.scala"
   [[ -n "$BLOOM" ]] && ONEWAY="$ONEWAY $(echo "$BLOOM" | wc -l) bloom builder line(s) outside BloomSidecars.scala"
-  printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" "$BLOOM" | grep -v '^$' | tee -a "$LOG"
+  [[ -n "$PROBE" ]] && ONEWAY="$ONEWAY $(echo "$PROBE" | wc -l) footerProbe( call(s) outside the task writer and addStats"
+  [[ -n "$STAGEW" ]] && ONEWAY="$ONEWAY $(echo "$STAGEW" | wc -l) DataFrameWriter line(s) in SnapshotLake.stageFiles"
+  printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" "$BLOOM" "$PROBE" "$STAGEW" | grep -v '^$' | tee -a "$LOG"
   note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
 
