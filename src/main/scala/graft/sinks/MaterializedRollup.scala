@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *    (order, value) pairs — so `combine(state ∪ lift(delta))` equals
   *    `lift(base ∪ delta)` EXACTLY, not approximately. Finals (double sums,
   *    averages) are derived at read time by [[finals]].
-  *  - **Provenance from the manifest log.** The delta is
-  *    [[SnapshotLake.appendsSince]] bounded at a pinned base head: file
-  *    lists are the change log, appends racing the refresh fall into the
+  *  - **Provenance from the manifest log.** The delta is the
+  *    [[SnapshotLake.appendWindow]] bounded at a pinned base head: file
+  *    lists are the change log (and their envelopes and row counts size
+  *    the refresh), appends racing the refresh fall into the
   *    next increment, and a non-append base op (compact/merge/delete)
   *    fails the incremental path LOUDLY — [[fullRefresh]] is the documented
   *    fallback (and re-anchors the incremental chain).
@@ -96,20 +97,23 @@ object MaterializedRollup {
       (if (spec.lastCols.nonEmpty) Seq("ord_max") else Nil) ++
       spec.lastCols.map(c => s"last_$c")
 
-  /** Raw base rows → aggregate state at the key grain. */
-  def lift(df: DataFrame, spec: Spec): DataFrame = {
+  /** Raw base rows → aggregate state at the key grain: the [[combine]]
+    * of one state row per base row, so a refresh can fold the delta's
+    * rows and the overlapped MV state in ONE aggregate.
+    */
+  def lift(df: DataFrame, spec: Spec): DataFrame = combine(rowStates(df, spec), spec)
+
+  /** One state row per raw row (`n_rows` = 1). */
+  private def rowStates(df: DataFrame, spec: Spec): DataFrame = {
     val ord = spec.orderCol.map(ordExpr(df, _))
-    val aggs: Seq[Column] =
-      Seq(count(lit(1)).as("n_rows")) ++
-        spec.sumCols.map(c => sum(col(c).cast(Dec)).as(s"sum_$c")) ++
-        spec.minCols.map(c => min(col(c)).as(s"min_$c")) ++
-        spec.maxCols.map(c => max(col(c)).as(s"max_$c")) ++
-        (if (spec.firstCols.nonEmpty) Seq(min(ord.get).as("ord_min")) else Nil) ++
-        spec.firstCols.map(c => min_by(col(c), ord.get).as(s"first_$c")) ++
-        (if (spec.lastCols.nonEmpty) Seq(max(ord.get).as("ord_max")) else Nil) ++
-        spec.lastCols.map(c => max_by(col(c), ord.get).as(s"last_$c"))
-    df.groupBy(spec.keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .select(stateCols(spec).map(col): _*)
+    df.select(spec.keyCols.map(col) ++ Seq(lit(1L).as("n_rows")) ++
+      spec.sumCols.map(c => col(c).cast(Dec).as(s"sum_$c")) ++
+      spec.minCols.map(c => col(c).as(s"min_$c")) ++
+      spec.maxCols.map(c => col(c).as(s"max_$c")) ++
+      (if (spec.firstCols.nonEmpty) Seq(ord.get.as("ord_min")) else Nil) ++
+      spec.firstCols.map(c => col(c).as(s"first_$c")) ++
+      (if (spec.lastCols.nonEmpty) Seq(ord.get.as("ord_max")) else Nil) ++
+      spec.lastCols.map(c => col(c).as(s"last_$c")): _*)
   }
 
   /** State rows → state rows at the same grain (associative fold: partials
@@ -200,28 +204,12 @@ object MaterializedRollup {
           "first (same discipline as the profiler's HLL metric)")
     }
 
-  /** Fold `rows`' registers (all distinct columns) into the combined
-    * register lake in ONE commit: read only the register files whose
-    * `pruneKey` envelope overlaps the delta's [lo, hi] (sound — a
-    * register row's group key is the delta row's group key, so a
-    * non-overlapping file cannot hold any folded-into group), max-merge
-    * against the delta registers, publish through the rewrite-commit
-    * core ([[SnapshotLake.commitRewrite]]), whose read-set guard keeps
-    * racing refreshers from resurrecting superseded register files
-    * (duplicate (group, slot) rows would double-count in the harmonic
-    * sum). Idempotent: re-folding the same rows is a no-op state change.
+  /** Fail loudly unless the combined register lake exists, naming the
+    * legacy one-lake-per-column layout when that is what the MV carries.
     */
-  /** Phase 1 of the fold, independent of the delta's key range: check
-    * the register lake exists (loud legacy-layout message) and
-    * materialize the delta's registers + their count. Split out so the
-    * refresh can overlap it with its own range aggregate — both read only
-    * the persisted delta ([[graft.Concurrent]]). Caller owns the
-    * returned frame's unpersist.
-    */
-  private def prepareDistinct(spark: SparkSession, mvRoot: String,
-      rows: DataFrame, spec: Spec): (DataFrame, Long) = {
-    val root = hllRegsRoot(mvRoot)
-    if (SnapshotLake.latestVersion(spark, root).isEmpty) {
+  private def requireRegisterLake(spark: SparkSession, mvRoot: String,
+      spec: Spec): Unit =
+    if (SnapshotLake.latestVersion(spark, hllRegsRoot(mvRoot)).isEmpty) {
       spec.distinctCols.find(c =>
         SnapshotLake.latestVersion(spark, legacyHllRoot(mvRoot, c)).nonEmpty)
         .foreach(c => throw new IllegalStateException(
@@ -231,66 +219,53 @@ object MaterializedRollup {
       throw new IllegalStateException(
         s"no register lake under $mvRoot — init/fullRefresh creates it")
     }
-    val delta = registersAll(rows, spec).persist()
-    // a failed count produces no value for the caller to release: release
-    // it here before rethrowing
-    try (delta, delta.count())
-    catch { case e: Throwable => delta.unpersist(); throw e }
-  }
 
-  /** Phase 2: fold prepared delta registers into the register lake once
-    * the delta's [lo, hi] key range is known.
+  /** Fold `rows`' registers (all distinct columns) into the combined
+    * register lake in ONE commit: read only the register files whose
+    * `pruneKey` envelope survives the delta's `box` (sound — a
+    * register row's group key is the delta row's group key, so a
+    * non-overlapping file cannot hold any folded-into group), max-merge
+    * against the delta registers, publish through the rewrite-commit
+    * core ([[SnapshotLake.commitRewrite]]), whose read-set guard keeps
+    * racing refreshers from resurrecting superseded register files
+    * (duplicate (group, slot) rows would double-count in the harmonic
+    * sum). Idempotent: re-folding the same rows is a no-op state change.
+    * A delta row yields at most one register row per distinct column,
+    * so `deltaFiles`' manifest row counts size the output with no count.
     */
-  private def foldDistinctPrepared(spark: SparkSession, mvRoot: String,
-      delta: DataFrame, nDelta: Long, spec: Spec, lo: Double,
-      hi: Double): Unit = {
-    if (nDelta == 0) return // all distinct values null in this delta
+  private def foldDistinct(spark: SparkSession, mvRoot: String,
+      rows: DataFrame, deltaFiles: Seq[SnapshotLake.FileEntry], spec: Spec,
+      box: Map[String, (Double, Double)]): Unit = {
     val root = hllRegsRoot(mvRoot)
+    val delta = registersAll(rows, spec)
     SnapshotLake.retryOnConflict(spark, root, "hll-fold") { () =>
       val m = SnapshotLake.manifest(spark, root, None)
       val overlap = m.files.filter(f =>
-        ManifestFileIndex.surviving(f.stats, Map(spec.pruneKey -> (lo, hi))))
-      val existing =
-        if (overlap.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-        else {
-          val dd = new org.apache.hadoop.fs.Path(root, "data").toString
-          spark.read.option("basePath", dd).schema(m.schema)
-            .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
-        }
-      // persist: cluster()'s repartitionByRange SAMPLES its input, so an
-      // uncached fold would re-read the overlap register files and
-      // re-run the max-merge a second time for the write (measured
-      // +~16 s at sf10 before this cache)
-      val folded = graft.operators.Hll.mergeRegisters(existing, delta,
-        "__col" +: spec.keyCols).persist()
-      val boundRows = overlap.map(f => math.max(0L, f.rows)).sum + nDelta
-      val newFiles =
-        try SnapshotLake.stageFiles(spark, root,
-          cluster(folded, spec, boundRows, spec.regRowsPerFile),
-          Nil, Set(spec.pruneKey))
-        finally folded.unpersist()
+        ManifestFileIndex.surviving(f.stats, box))
+      val folded = graft.operators.Hll.mergeRegisters(
+        SnapshotLake.readEntries(spark, root, m, overlap), delta,
+        "__col" +: spec.keyCols)
+      val bound = rowsOf(overlap, spec.regRowsPerFile) +
+        rowsOf(deltaFiles, spec.regRowsPerFile) * spec.distinctCols.size
+      val newFiles = stageClustered(folded, spec, bound, spec.regRowsPerFile)(
+        SnapshotLake.stageFiles(spark, root, _, Nil, Set(spec.pruneKey)))
       SnapshotLake.commitRewrite(spark, root, "merge:hll-fold", m,
         replaced = overlap, guarded = Nil, added = newFiles)
     }
   }
 
   /** REPLACE the combined register lake from a full base read
-    * (init/fullRefresh). A legacy per-column `_hll/<c>` tree, if present,
+    * (init/fullRefresh), sized from the base's manifest row counts like
+    * [[foldDistinct]]. A legacy per-column `_hll/<c>` tree, if present,
     * is simply orphaned (the new layout reads only `_hll_regs`).
     */
   private def replaceDistinct(spark: SparkSession, mvRoot: String,
-      base: DataFrame, spec: Spec): Unit = {
-    if (spec.distinctCols.isEmpty) return
-    val regs = registersAll(base, spec).persist()
-    try {
-      val n = regs.count()
-      SnapshotLake.replace(spark, hllRegsRoot(mvRoot),
-        cluster(regs, spec, n, spec.regRowsPerFile),
-        statsCols = Seq(spec.pruneKey))
-    } finally regs.unpersist()
-  }
+      base: DataFrame, baseFiles: Seq[SnapshotLake.FileEntry],
+      spec: Spec): Unit =
+    stageClustered(registersAll(base, spec), spec,
+      rowsOf(baseFiles, spec.regRowsPerFile) * spec.distinctCols.size,
+      spec.regRowsPerFile)(SnapshotLake.replace(spark, hllRegsRoot(mvRoot),
+        _, statsCols = Seq(spec.pruneKey)))
 
   private val AnchorRe = raw"mv:base=(\d+).*".r
 
@@ -311,6 +286,12 @@ object MaterializedRollup {
     * base's current head. Also the fallback when the incremental chain is
     * broken by a non-append base op — pass `replace=true` to rebuild over
     * an existing MV (publishes one new version; history preserved).
+    *
+    * Sized from the manifest, not counted: the base head's row counts
+    * bound the MV's groups (and, per distinct column, its register rows),
+    * so nothing is cached and the rollup is the lift's aggregate and its
+    * staged write — two Spark jobs when the MV fits one file. A file
+    * without a row count follows [[refresh]]'s rule.
     */
   def init(spark: SparkSession, baseRoot: String, mvRoot: String, spec: Spec,
       replace: Boolean = false,
@@ -320,25 +301,25 @@ object MaterializedRollup {
         "init(replace=true) to rebuild")
     val baseHead = SnapshotLake.latestVersion(spark, baseRoot).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot under $baseRoot"))
+    val baseFiles = SnapshotLake.manifest(spark, baseRoot, Some(baseHead)).files
     val baseRead = SnapshotLake.read(spark, baseRoot, Some(baseHead))
     checkDistinctCols(baseRead, spec)
-    val state = lift(baseRead, spec).cache()
-    try {
-      // distinct registers BEFORE the anchor-advancing rollup commit
-      // (atomic replace; a crash in between just re-replaces on retry).
-      // The register build and the rollup staging are independent jobs
-      // over different lakes, so they overlap ([[graft.Concurrent]]); the
-      // scope joins the register build before the commit below.
-      val files = graft.Concurrent.scope(spark) { s =>
-        if (spec.distinctCols.nonEmpty)
-          s.fork(replaceDistinct(spark, mvRoot, baseRead, spec))
-        SnapshotLake.stageFiles(spark, mvRoot,
-          cluster(state, spec, state.count()), Nil, Set(spec.pruneKey))
-      }
-      val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead,init",
-        state.schema, build = _ => files, lockExpiryMs)
-      Refresh(v, baseHead, -1L, files.size, 0)
-    } finally state.unpersist()
+    val state = lift(baseRead, spec)
+    // distinct registers BEFORE the anchor-advancing rollup commit
+    // (atomic replace; a crash in between just re-replaces on retry).
+    // The register build and the rollup staging are independent jobs
+    // over different lakes, so they overlap ([[graft.Concurrent]]); the
+    // scope joins the register build before the commit below.
+    val files = graft.Concurrent.scope(spark) { s =>
+      if (spec.distinctCols.nonEmpty)
+        s.fork(replaceDistinct(spark, mvRoot, baseRead, baseFiles, spec))
+      stageClustered(state, spec, rowsOf(baseFiles, spec.targetRowsPerFile),
+        spec.targetRowsPerFile)(
+        SnapshotLake.stageFiles(spark, mvRoot, _, Nil, Set(spec.pruneKey)))
+    }
+    val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead,init",
+      state.schema, build = _ => files, lockExpiryMs)
+    Refresh(v, baseHead, -1L, files.size, 0)
   }
 
   def fullRefresh(spark: SparkSession, baseRoot: String, mvRoot: String,
@@ -349,6 +330,31 @@ object MaterializedRollup {
     * key range; every other MV file survives by identity. No-op (publishes
     * nothing) when the base head is unchanged. Fails loudly — with
     * [[fullRefresh]] named — when a non-append base op intervened.
+    *
+    * The key range and the sizes come from the manifest, not from Spark
+    * jobs: the appended files' `pruneKey` envelopes
+    * ([[SnapshotLake.appendWindow]]) give the delta's range, their `rows`
+    * bound its groups, and the overlapped MV files' `rows` bound the rest.
+    * The refresh is then ONE aggregate (overlapped state ∪ one state row
+    * per delta row) and its staged write: two Spark jobs when the output
+    * fits one file ([[stageClustered]]). A window whose files hold zero
+    * rows publishes an anchor-only bump.
+    *
+    * What the manifest does not record is taken at its widest. A file
+    * with no `pruneKey` envelope — a base without `statsCols` on the key,
+    * an INT96 (LTZ timestamp) key, a file whose keys are all NULL — spans
+    * every key, so every MV file overlaps (the MV is rewritten whole,
+    * still exactly). A file with no row count (a legacy `rows = -1`
+    * entry) counts as one full output file of rows. Both only widen the
+    * overlap set or over-split the output; [[SnapshotLake.addStats]] on
+    * the base records them wherever the footer can.
+    *
+    * A NULL `pruneKey` in the delta is refused: the write fails with a
+    * message naming [[fullRefresh]], checked inside the delta's own read
+    * (no extra job). Envelopes do not record NULLs, so no manifest entry
+    * says which MV file holds a NULL key's group, and folding it blind
+    * could leave two rows for one group. [[init]]/[[fullRefresh]] fold
+    * NULL keys like any other.
     *
     * Distinct-register lead window: the register fold runs BEFORE the
     * anchor-advancing rollup commit (crash-safety: a retry re-folds the
@@ -371,117 +377,101 @@ object MaterializedRollup {
     val mvHead = SnapshotLake.manifest(spark, mvRoot, None)
     if (baseHead == anchor)
       return Refresh(mvHead.version, anchor, 0L, 0, mvHead.files.size)
-    val delta0 =
-      try SnapshotLake.appendsSince(spark, baseRoot, anchor, Some(baseHead))
+    val window =
+      try SnapshotLake.appendWindow(spark, baseRoot, anchor, Some(baseHead))
       catch {
         case e: IllegalArgumentException => throw new IllegalStateException(
           s"incremental refresh broken (${e.getMessage}) — run fullRefresh " +
             "to re-anchor", e)
       }
-    // with distinct columns the delta is read TWICE (rollup lift +
-    // register lift) — cache the parquet read; without them it's one pass
-    val delta =
-      if (spec.distinctCols.nonEmpty) delta0.persist() else delta0
-    val deltaState = lift(delta, spec).cache()
-    checkDistinctCols(delta, spec)
-    try {
-      // the scope joins the register work (and releases the register
-      // delta) before the anchor-advancing commit below
-      val (newFiles, overlap, nUntouched, nDelta) =
-        graft.Concurrent.scope(spark) { s =>
-        // phase 1 of the register fold reads only the persisted delta, not
-        // its key range: start it now, overlapping the range aggregate
-        val regPrep =
-          if (spec.distinctCols.isEmpty) None
-          else Some(s.fork(prepareDistinct(spark, mvRoot, delta, spec),
-            release = (p: (DataFrame, Long)) => p._1.unpersist()))
-        val dom = SnapshotLake.statsDomain(deltaState.schema, spec.pruneKey)
-        // one aggregate serves the prune range, the delta row count AND the
-        // delta group count (for output-file sizing — no later count job)
-        val range = deltaState.agg(min(dom), max(dom), sum(col("n_rows")),
-          count(lit(1))).head
-        // zero-row appends: anchor-only bump, so steady-state refreshes
-        // take the baseHead==anchor fast path instead of re-walking the
-        // empty versions forever
-        if (range.isNullAt(0)) (Nil, Nil, mvHead.files.size, 0L)
-        else {
-          val (lo, hi) = (SnapshotLake.toDoubleStat(range.get(0)),
-            SnapshotLake.toDoubleStat(range.get(1)))
-          val (overlap, untouched) = mvHead.files.partition(f =>
-            ManifestFileIndex.surviving(f.stats, Map(spec.pruneKey -> (lo, hi))))
-          val existing =
-            if (overlap.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                mvHead.schema)
-            else {
-              val dd = new org.apache.hadoop.fs.Path(mvRoot, "data").toString
-              spark.read.option("basePath", dd).schema(mvHead.schema)
-                .parquet(overlap.map(f => s"$dd/${f.rel}"): _*)
-            }
-          val combined = combine(existing.unionByName(deltaState), spec)
-          // combined's row count is bounded by overlap-state rows (exact,
-          // from the manifest's footer counts) + delta groups (from the one
-          // agg above) — keys on both sides merge, so this only ever
-          // OVER-sizes the range partitioning, and empty ranges write no
-          // file. Sizing from metadata saves the count job (and the cache
-          // the count needed) that used to materialize `combined` twice
-          // per refresh.
-          val boundRows = overlap.map(f => math.max(0L, f.rows)).sum +
-            range.getLong(3)
-          // distinct registers BEFORE the anchor-advancing commit
-          // (idempotent max-merge: a crash in between re-folds the same
-          // delta on retry). The register fold and the rollup staging are
-          // independent jobs over different lakes reading the same
-          // persisted delta, so they overlap ([[graft.Concurrent]]); an
-          // abort after the fold leaves registers LEADING the anchor,
-          // which the lead-window contract above already allows.
-          regPrep.foreach(prep => s.fork {
-            val (regDelta, nRegs) = prep.join()
-            foldDistinctPrepared(spark, mvRoot, regDelta, nRegs, spec, lo, hi)
-          })
-          // cluster()'s repartitionByRange SAMPLES its input before the
-          // write consumes it, so without a persist the union+combine
-          // aggregate runs twice per refresh — the same double-compute
-          // foldDistinct persists `folded` to avoid (its comment cites
-          // +16 s measured at sf10).
-          val combinedP = combined.persist()
-          val newFiles =
-            try SnapshotLake.stageFiles(spark, mvRoot,
-              cluster(combinedP, spec, boundRows), Nil, Set(spec.pruneKey))
-            finally combinedP.unpersist()
-          (newFiles, overlap, untouched.size, range.getLong(2))
+    val pk = spec.pruneKey
+    // zero-row appends: anchor-only bump, so steady-state refreshes take
+    // the baseHead==anchor fast path instead of re-walking the empty
+    // versions forever
+    val (newFiles, overlap) =
+      if (window.files.forall(_.rows == 0)) (Nil, Nil)
+      else {
+        val envs = window.files.map(_.stats.get(pk))
+        val box = Map(pk ->
+          (if (envs.forall(_.isDefined))
+            (envs.flatten.map(_._1).min, envs.flatten.map(_._2).max)
+          else (Double.NegativeInfinity, Double.PositiveInfinity)))
+        val delta = SnapshotLake.readEntries(spark, baseRoot, window,
+          window.files).withColumn(pk, coalesce(col(pk), raise_error(lit(
+            s"refresh cannot fold a NULL $pk: no manifest envelope says " +
+              "which MV file holds its group — run fullRefresh"))))
+        checkDistinctCols(delta, spec)
+        if (spec.distinctCols.nonEmpty) requireRegisterLake(spark, mvRoot, spec)
+        val overlap = mvHead.files.filter(f =>
+          ManifestFileIndex.surviving(f.stats, box))
+        // distinct registers BEFORE the anchor-advancing commit
+        // (idempotent max-merge: a crash in between re-folds the same
+        // delta on retry). The register fold and the rollup staging are
+        // independent jobs over different lakes, so they overlap
+        // ([[graft.Concurrent]]); an abort after the fold leaves
+        // registers LEADING the anchor, which the lead-window contract
+        // above already allows. The scope joins the fold before the
+        // commit below.
+        val newFiles = graft.Concurrent.scope(spark) { s =>
+          if (spec.distinctCols.nonEmpty)
+            s.fork(foldDistinct(spark, mvRoot, delta, window.files, spec, box))
+          val combined = combine(
+            SnapshotLake.readEntries(spark, mvRoot, mvHead, overlap)
+              .unionByName(rowStates(delta, spec)), spec)
+          // keys on both sides merge, so overlap rows + delta rows only
+          // ever OVER-size the output
+          stageClustered(combined, spec,
+            rowsOf(overlap ++ window.files, spec.targetRowsPerFile),
+            spec.targetRowsPerFile)(
+            SnapshotLake.stageFiles(spark, mvRoot, _, Nil, Set(pk)))
         }
+        (newFiles, overlap)
       }
-      val overlapSet = overlap.map(_.rel).toSet
-      val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead",
-        mvHead.schema, build = head => {
-          guardAnchor(head, anchor, mvRoot)
-          newFiles ++ head.map(_.files).getOrElse(Nil)
-            .filterNot(f => overlapSet.contains(f.rel))
-        }, lockExpiryMs)
-      Refresh(v, baseHead, nDelta, overlap.size, nUntouched)
-    } finally {
-      deltaState.unpersist()
-      if (spec.distinctCols.nonEmpty) delta.unpersist()
+    val overlapSet = overlap.map(_.rel).toSet
+    val v = SnapshotLake.commit(spark, mvRoot, s"mv:base=$baseHead",
+      mvHead.schema, build = head => {
+        guardAnchor(head, anchor, mvRoot)
+        newFiles ++ head.map(_.files).getOrElse(Nil)
+          .filterNot(f => overlapSet.contains(f.rel))
+      }, lockExpiryMs)
+    val deltaRows =
+      if (window.files.exists(_.rows < 0)) -1L else window.files.map(_.rows).sum
+    Refresh(v, baseHead, deltaRows, overlap.size, mvHead.files.size - overlap.size)
+  }
+
+  /** Stage MV state through `write`, range-clustered on the prune key so
+    * each data file carries a TIGHT pruneKey footer envelope — that
+    * clustering is what lets a time-local delta refresh skip the rest of
+    * the aggregate lake entirely (the MV analog of Z-ordering the fact
+    * lake). The file count is sized from `rows`, an upper bound from
+    * manifest row counts ([[rowsOf]]), at `perFile` rows per file, not
+    * left to AQE, which would happily coalesce a small-but-growing MV
+    * into one file and erase the envelope index; an upper bound merely
+    * over-splits (empty ranges write nothing).
+    *
+    * One file needs no split: the state is coalesced into the write's
+    * single task, with no exchange, no boundary sample and no cache. More
+    * files keep `repartitionByRange`, whose boundary sample runs the
+    * state once before the write runs it again, so the state is persisted
+    * for the two (measured +~16 s at sf10 for an uncached register fold)
+    * and released after the write.
+    */
+  private def stageClustered[A](state: DataFrame, spec: Spec, rows: Long,
+      perFile: Long)(write: DataFrame => A): A = {
+    val n = math.max(1L, (rows + perFile - 1) / perFile)
+    if (n == 1) write(state.coalesce(1))
+    else {
+      val p = state.persist()
+      try write(p.repartitionByRange(n.toInt, col(spec.pruneKey)))
+      finally p.unpersist()
     }
   }
 
-  /** Range-cluster MV state on the prune key before staging so each data
-    * file carries a TIGHT pruneKey footer envelope — that clustering is
-    * what lets a time-local delta refresh skip the rest of the aggregate
-    * lake entirely (the MV analog of Z-ordering the fact lake). File count
-    * is sized from `rows` (`targetRowsPerFile`), not left to AQE, which
-    * would happily coalesce a small-but-growing MV into one file and
-    * erase the envelope index; an upper-bound `rows` merely over-splits
-    * (empty ranges write nothing).
+  /** Manifest row counts of `files`; a legacy entry without one
+    * (`rows = -1`) counts as `perFile` rows, one full output file.
     */
-  private def cluster(state: DataFrame, spec: Spec, rows: Long,
-      perFile: Long = 0L): DataFrame = {
-    val target = if (perFile > 0) perFile else spec.targetRowsPerFile
-    val n = math.max(1L, (rows + target - 1) / target)
-    state.repartitionByRange(n.toInt, col(spec.pruneKey))
-  }
+  private def rowsOf(files: Seq[SnapshotLake.FileEntry], perFile: Long): Long =
+    files.map(f => if (f.rows >= 0) f.rows else perFile).sum
 
   /** Under the commit lock: abort if a rival refresh advanced the anchor
     * past ours — folding our delta over ITS files would double-count.

@@ -152,9 +152,10 @@ object Prof {
       "pipeline" -> (pipeline(_)))
 
   /** The mv1 / mv2 continuous aggregates over three appends: init after
-    * the first, one refresh after each later one, then the final read —
-    * so the commit constant separates from the data-proportional work.
-    * Two rounds; the second runs warm.
+    * the first, one refresh after each later one, a fullRefresh (the path
+    * a rewrite of base rows forces), then the final read — so the commit
+    * constant separates from the data-proportional work. Two rounds; the
+    * second runs warm.
     */
   private def mvLoop(ctx: Ctx, which: String): Unit = {
     val spark = ctx.spark
@@ -187,6 +188,7 @@ object Prof {
       step(ctx, which, s"r$round/refresh1")(MV.refresh(spark, base, mv, spec))
       append(3, us > t2)
       step(ctx, which, s"r$round/refresh2")(MV.refresh(spark, base, mv, spec))
+      step(ctx, which, s"r$round/fullRefresh")(MV.fullRefresh(spark, base, mv, spec))
       step(ctx, which, s"r$round/readFinal")(noop(MV.readFinal(spark, mv, spec)))
     }
   }

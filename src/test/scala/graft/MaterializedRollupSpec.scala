@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.obs.Ledger
 import graft.sinks.{MaterializedRollup => MV, SnapshotLake}
 
 /** Incrementally-maintained rollup over a snapshot lake: associative state,
@@ -136,19 +137,23 @@ class MaterializedRollupSpec extends SparkSpec {
     assert(e.getMessage.contains("canonical"))
   }
 
-  test("a failed register count releases its persisted registers") {
+  test("a failed multi-file refresh releases its persisted state") {
     val (base, mv) = roots()
     def withUid(df: DataFrame) =
       df.withColumn("uid", (col("close") % 13).cast("long"))
-    val dspec = spec.copy(distinctCols = Seq("uid"), hllP = 8)
+    // 4 rows per file: both the rollup and the register fold size to
+    // several files, so each persists its state for the range split
+    val dspec = spec.copy(distinctCols = Seq("uid"), hllP = 8,
+      regRowsPerFile = 4L)
     SnapshotLake.append(spark, base, withUid(bars(1, 50, 100.0)),
       statsCols = Seq("bucket_ts"))
     MV.init(spark, base, mv, dspec)
+    val head0 = SnapshotLake.manifest(spark, mv).version
     val old = SnapshotLake.manifest(spark, base).files.map(_.rel).toSet
     SnapshotLake.append(spark, base, withUid(bars(2, 50, 500.0)),
       statsCols = Seq("bucket_ts"))
     // corrupt the delta's data files in place: the file list still plans,
-    // every job reading it fails — the register count included
+    // every job reading it fails — the range splits' samples included
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     SnapshotLake.manifest(spark, base).files.filterNot(f => old(f.rel))
@@ -160,6 +165,7 @@ class MaterializedRollupSpec extends SparkSpec {
     intercept[Exception](MV.refresh(spark, base, mv, dspec))
     assert(spark.sharedState.cacheManager.isEmpty,
       "a failed refresh left frames cached")
+    assert(SnapshotLake.manifest(spark, mv).version == head0)
   }
 
   test("a staging failure during the register fold rethrows the staging " +
@@ -290,5 +296,149 @@ class MaterializedRollupSpec extends SparkSpec {
     assert(outcomes.contains("ok"))
     assert(MV.lastRefreshedBase(spark, mv).contains(2L))
     assertMatchesFull(base, mv)
+  }
+
+  /** readFinal against a plain GROUP BY over the base, written out here
+    * rather than through [[MV.lift]]; also one row per group.
+    */
+  private def assertMatchesGroupBy(base: String, mv: String): Unit = {
+    val keys = Seq("symbol", "bucket_ts")
+    val got = MV.readFinal(spark, mv, spec).select((keys ++ Seq("n_rows",
+      "sum_volume", "min_close", "max_close", "first_close", "last_close"))
+      .map(col): _*)
+    val want = SnapshotLake.read(spark, base).groupBy(keys.map(col): _*).agg(
+      count(lit(1)).as("n_rows"),
+      sum(col("volume").cast("decimal(38,10)")).cast("double").as("sum_volume"),
+      min("close").as("min_close"), max("close").as("max_close"),
+      min_by(col("close"), col("ts")).as("first_close"),
+      max_by(col("close"), col("ts")).as("last_close"))
+    assert(got.except(want).isEmpty && want.except(got).isEmpty,
+      "the rollup diverged from a one-shot GROUP BY")
+    assert(got.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
+      .isEmpty, "two rollup rows for one group")
+  }
+
+  test("refresh and fullRefresh are sized from the manifest: at most 3 and " +
+      "2 Spark jobs; a multi-file refresh writes disjoint pruneKey envelopes") {
+    val (base, mv) = roots()
+    val oneFile = spec.copy(targetRowsPerFile = 4L * 1000 * 1000)
+    SnapshotLake.append(spark, base, bars(1, 200, 100.0),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, oneFile)
+    SnapshotLake.append(spark, base, bars(1, 150, 500.0)
+      .withColumn("ts", (col("ts") + expr("INTERVAL 30 SECOND"))
+        .cast("timestamp_ntz")), statsCols = Seq("bucket_ts"))
+    val (_, inc) = Ledger.scope(spark)(MV.refresh(spark, base, mv, oneFile))
+    assert(inc.jobs <= 3, s"an incremental refresh ran ${inc.jobs} jobs")
+    val (_, full) = Ledger.scope(spark)(MV.fullRefresh(spark, base, mv, oneFile))
+    assert(full.jobs <= 2, s"fullRefresh ran ${full.jobs} jobs")
+    assertMatchesFull(base, mv)
+    // targetRowsPerFile 4: the range split writes several files, whose
+    // envelopes — rewritten and untouched alike — never overlap
+    MV.fullRefresh(spark, base, mv, spec)
+    SnapshotLake.append(spark, base, bars(2, 90, 900.0),
+      statsCols = Seq("bucket_ts"))
+    val r = MV.refresh(spark, base, mv, spec)
+    val envs = SnapshotLake.manifest(spark, mv).files
+      .map(_.stats("bucket_ts")).sortBy(_._1)
+    assert(r.filesUntouched > 0 && envs.size > r.filesUntouched + 1)
+    envs.zip(envs.tail).foreach { case (a, b) =>
+      assert(a._2 < b._1, s"overlapping MV envelopes $a and $b")
+    }
+    assertMatchesFull(base, mv)
+  }
+
+  test("window files without an envelope overlap every MV file; several " +
+      "files and appends fold as one window") {
+    val (base, mv) = roots()
+    SnapshotLake.append(spark, base, bars(1, 300, 0.0),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, spec)
+    // no statsCols: the appended file records no bucket_ts envelope
+    SnapshotLake.append(spark, base, bars(6, 60, 50.0))
+    val wide = MV.refresh(spark, base, mv, spec)
+    assert(wide.deltaRows == 60L && wide.filesUntouched == 0,
+      s"an envelope-less delta must overlap every MV file: $wide")
+    assertMatchesFull(base, mv)
+    // two appends of several files each, then one refresh
+    SnapshotLake.append(spark, base, bars(7, 120, 70.0).repartition(3),
+      statsCols = Seq("bucket_ts"))
+    SnapshotLake.append(spark, base, bars(8, 90, 90.0).repartition(2),
+      statsCols = Seq("bucket_ts"))
+    val w = SnapshotLake.appendWindow(spark, base, wide.baseVersion)
+    assert(w.files.size > 2, s"expected a multi-file window, got ${w.files.size}")
+    val r = MV.refresh(spark, base, mv, spec)
+    assert(r.deltaRows == 210L && r.filesUntouched > 0, s"$r")
+    assertMatchesFull(base, mv)
+  }
+
+  test("legacy entries without row counts or envelopes refresh and " +
+      "fullRefresh exactly") {
+    val (base, mv) = roots()
+    SnapshotLake.append(spark, base, bars(1, 200, 0.0),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, spec)
+    val v = SnapshotLake.append(spark, base, bars(2, 100, 10.0),
+      statsCols = Seq("bucket_ts"))
+    // rewrite the head manifest's entries into the pre-rows layout
+    // (rel, bytes): no envelope, rows = -1
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mPath = new org.apache.hadoop.fs.Path(s"$base/_manifests",
+      f"v$v%08d.manifest")
+    val in = fs.open(mPath)
+    val raw = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    val out = fs.create(mPath, true)
+    try out.write(raw.split("\n").map { l =>
+      val c = l.split('\t'); if (c.length >= 3) s"${c(0)}\t${c(1)}" else l
+    }.mkString("\n").getBytes) finally out.close()
+    SnapshotLake.invalidateManifestCache(base)
+    assert(SnapshotLake.manifest(spark, base).files.forall(_.rows == -1L))
+    val r = MV.refresh(spark, base, mv, spec)
+    assert(r.deltaRows == -1L && r.filesUntouched == 0, s"$r")
+    assertMatchesFull(base, mv)
+    MV.fullRefresh(spark, base, mv, spec)
+    assertMatchesFull(base, mv)
+  }
+
+  test("a NULL pruneKey in the delta is refused, not folded or skipped; " +
+      "fullRefresh folds it") {
+    val (base, mv) = roots()
+    SnapshotLake.append(spark, base, bars(1, 120, 0.0),
+      statsCols = Seq("bucket_ts"))
+    MV.init(spark, base, mv, spec)
+    def refused(): Unit = {
+      val head = SnapshotLake.manifest(spark, mv).version
+      val anchor = MV.lastRefreshedBase(spark, mv)
+      val e = intercept[Exception](MV.refresh(spark, base, mv, spec))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(chain.exists(m => m.contains("NULL bucket_ts") &&
+        m.contains("fullRefresh")), s"unclear refusal: ${chain.mkString(" <- ")}")
+      assert(SnapshotLake.manifest(spark, mv).version == head &&
+        MV.lastRefreshedBase(spark, mv) == anchor,
+        "a refused refresh moved the MV")
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
+    // every key NULL: the file has rows but no envelope
+    SnapshotLake.append(spark, base, bars(1, 60, 300.0)
+      .withColumn("ts", (col("ts") + expr("INTERVAL 30 SECOND"))
+        .cast("timestamp_ntz"))
+      .withColumn("bucket_ts", lit(null).cast("timestamp_ntz")),
+      statsCols = Seq("bucket_ts"))
+    assert(SnapshotLake.manifest(spark, base).files.last.stats.isEmpty)
+    refused()
+    MV.fullRefresh(spark, base, mv, spec)
+    assertMatchesGroupBy(base, mv)
+    // mixed: some keys NULL — the NULL group already lives in the MV
+    SnapshotLake.append(spark, base, bars(1, 60, 600.0)
+      .withColumn("ts", (col("ts") + expr("INTERVAL 15 SECOND"))
+        .cast("timestamp_ntz"))
+      .withColumn("bucket_ts", when(col("close") % 2 === 0, lit(null))
+        .otherwise(col("bucket_ts")).cast("timestamp_ntz")),
+      statsCols = Seq("bucket_ts"))
+    refused()
+    MV.fullRefresh(spark, base, mv, spec)
+    assertMatchesGroupBy(base, mv)
   }
 }
