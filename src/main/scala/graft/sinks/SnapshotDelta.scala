@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, WriterCommitMessage}
@@ -346,15 +347,6 @@ private final class SnapshotMorReaderFactory(
   }
 }
 
-/** One staged position-delete sidecar a task wrote: stage-relative name,
-  * bytes, positions, and the data/-relative files it covers.
-  */
-private case class StagedDeleteInfo(rel: String, bytes: Long,
-    positions: Long, covered: Seq[String])
-
-private case class DeltaFilesMessage(inserts: Seq[SnapshotLake.FileEntry],
-    delete: Option[StagedDeleteInfo]) extends WriterCommitMessage
-
 final class SnapshotDeltaRowLevelOperationBuilder(
     spark: SparkSession, root: String, base: SnapshotLake.Manifest,
     info: RowLevelOperationInfo) extends RowLevelOperationBuilder {
@@ -412,12 +404,11 @@ final class SnapshotDeltaRowLevelOperation(
 
 /** The delta BatchWrite: executors write insert files (hive-routed, same
   * convention as every SQL write) and one position-delete sidecar per
-  * task; the driver publishes the inserts (with the entries and bloom
-  * sidecars their tasks built), moves the sidecars under `_deletes/`,
-  * and commits ONE
-  * rewrite that guards the statement's candidates and stacks each
-  * sidecar onto the entries it covers — every data file survives by
-  * IDENTITY.
+  * task; the driver commits them through [[SnapshotStagedWrite.
+  * commitDelta]], the commit the library merge-on-read merge
+  * ([[SnapshotLake]]'s `mergeMorAttempt`) shares: ONE rewrite that
+  * guards the statement's candidates and stacks each sidecar onto the
+  * entries it covers — every data file survives by IDENTITY.
   */
 final class SnapshotDeltaWrite(
     spark: SparkSession,
@@ -449,66 +440,67 @@ final class SnapshotDeltaWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     // delete-only statements pass an empty write schema; the (unused)
     // insert factory still needs a real one
-    val rowSchema = if (writeSchema.fields.isEmpty) base.schema else writeSchema
-    val dataFiles = parquetFactory(StructType(
-      rowSchema.fields.filterNot(f => op.partCols.contains(f.name))),
-      statsCols, bloomCols)
-    val deleteFiles = parquetFactory(SnapshotMor.DeleteSchema)
+    val writers = new SnapshotDeltaWriterFactory(routingWriters(
+      if (writeSchema.fields.isEmpty) base.schema else writeSchema,
+      op.partCols, statsCols, bloomCols, base.props),
+      parquetFactory(SnapshotMor.DeleteSchema))
     openStage(base.schema)
-    fs.mkdirs(new Path(stageDir, "deletes"))
-    new SnapshotDeltaWriterFactory(dataFiles, deleteFiles,
-      stageDir.toString, rowSchema, op.partCols,
-      spark.sessionState.conf.sessionLocalTimeZone,
-      SnapshotLake.boundConstraints(spark, rowSchema, base.props))
+    writers
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = committing {
-    val newFiles = publishStaged(messages)
-    val deleteInfos = messages.toSeq.collect { case m: DeltaFilesMessage => m }
-      .flatMap(_.delete).filter(_.positions > 0)
     // a no-match statement publishes nothing
-    if (newFiles.nonEmpty || deleteInfos.nonEmpty) {
-      val deletes = SnapshotLake.moveDeleteSidecars(spark, root, token,
-        deleteInfos.map(d => (new Path(stageDir, d.rel), d.covered)))
-      SnapshotLake.commitRewrite(spark, root, s"$opName:sql-mor", base,
-        replaced = Nil, guarded = op.candidates, added = newFiles,
-        deletes = deletes,
+    if (messages.exists { case m: StagedFilesMessage =>
+        m.files.nonEmpty || m.deletes.nonEmpty; case _ => false })
+      commitDelta(messages, base, s"$opName:sql-mor", op.candidates,
         statement = Some(s"SQL $opName (merge-on-read) lost to a " +
           "concurrent rewrite or delta DML of the same lake"))
-    }
   }
 }
 
+/** `rows`' routing writers for the inserted rows, plus one sorted
+  * position-delete sidecar per task under the stage's `deletes/`.
+  */
 final class SnapshotDeltaWriterFactory(
-    dataFiles: StagedParquet,
-    deleteFiles: StagedParquet,
-    stageDir: String,
-    schema: StructType,
-    partCols: Seq[String],
-    timeZoneId: String,
-    constraints: Seq[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
-    extends DeltaWriterFactory {
+    rows: SnapshotDataWriterFactory,
+    deleteFiles: StagedParquet) extends DeltaWriterFactory {
+
+  import rows.{schema, stageDir, timeZoneId}
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
     // constraints guard INSERTED row versions only (deletes remove rows,
     // which cannot create a violation)
-    val inserts = new HiveRoutingWriter(dataFiles, stageDir,
-      schema, partCols, timeZoneId, partitionId, taskId,
-      constraints = constraints)
+    val inserts = rows.routing(partitionId, taskId)
 
     new DeltaWriter[InternalRow] {
       // data rel -> positions deleted by this task
       private val dels = scala.collection.mutable.LinkedHashMap
         .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
 
-      override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-        val rel = id.getUTF8String(0).toString
-        dels.getOrElseUpdate(rel,
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += id.getLong(1)
-      }
+      private def deleteAt(rel: UTF8String, pos: Long): Unit =
+        dels.getOrElseUpdate(rel.toString,
+          scala.collection.mutable.ArrayBuffer.empty[Long]) += pos
+
+      override def delete(metadata: InternalRow, id: InternalRow): Unit =
+        deleteAt(id.getUTF8String(0), id.getLong(1))
 
       override def insert(row: InternalRow): Unit = inserts.write(row)
+
+      // the library merge's rows reach write(), as a DataWriter's do:
+      // (Spark's row-delta op tag, rel, pos, row...), where a DELETE
+      // fills only (rel, pos) and an INSERT only the row
+      private val inserted = org.apache.spark.sql.catalyst
+        .ProjectingInternalRow(schema, (3 until 3 + schema.length).toIndexedSeq)
+
+      override def write(row: InternalRow): Unit = row.getInt(0) match {
+        case RowDeltaUtils.DELETE_OPERATION =>
+          deleteAt(row.getUTF8String(1), row.getLong(2))
+        case RowDeltaUtils.INSERT_OPERATION =>
+          inserted.project(row)
+          insert(inserted)
+        case tag => throw new IllegalStateException(
+          s"delta write row tagged $tag — neither a DELETE nor an INSERT")
+      }
 
       override def update(metadata: InternalRow, id: InternalRow,
           row: InternalRow): Unit = {
@@ -529,21 +521,17 @@ final class SnapshotDeltaWriterFactory(
             val w = new HiveRoutingWriter(deleteFiles,
               s"$stageDir/deletes", SnapshotMor.DeleteSchema, Nil,
               timeZoneId, partitionId, taskId, namePrefix = "delete")
-            var n = 0L
-            val covered = scala.collection.mutable.ArrayBuffer.empty[String]
-            dels.toSeq.sortBy(_._1).foreach { case (rel, positions) =>
-              covered += rel
+            val covered = dels.keys.toSeq.sorted
+            covered.foreach { rel =>
               val utf8 = UTF8String.fromString(rel)
-              positions.distinct.sorted.foreach { p =>
+              dels(rel).distinct.sorted.foreach { p =>
                 w.write(new GenericInternalRow(Array[Any](utf8, p)))
-                n += 1
               }
             }
             val Seq(f) = w.commitFiles()
-            Some(StagedDeleteInfo(s"deletes/${f.rel}", f.bytes, n,
-              covered.toSeq))
+            Some((s"deletes/${f.rel}", covered))
           }
-        DeltaFilesMessage(insertFiles, deleteFile)
+        StagedFilesMessage(insertFiles, deleteFile)
       }
 
       override def abort(): Unit = inserts.abort()

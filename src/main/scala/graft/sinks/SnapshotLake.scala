@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.RowDeltaUtils
+import org.apache.spark.sql.connector.write.{DataWriterFactory, WriterCommitMessage}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.{ListenerBridge, WriteBridge}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -570,24 +572,6 @@ object SnapshotLake {
         .filterNot(partCols.contains))
   }
 
-  /** Move staged position-delete sidecars under `_deletes/` with the
-    * attempt's `token` prefix (invisible until a manifest references
-    * them). `staged` pairs each sidecar with the data rels it covers;
-    * returns the data rel → new sidecar rels map [[commitRewrite]]
-    * stacks.
-    */
-  private[sinks] def moveDeleteSidecars(spark: SparkSession, root: String,
-      token: String, staged: Seq[(Path, Seq[String])]): Map[String, Seq[String]] = {
-    val fs = fsOf(spark, root)
-    staged.flatMap { case (p, covered) =>
-      val rel = s"$token-${p.getName}"
-      val target = new Path(deletesDir(root), rel)
-      fs.mkdirs(target.getParent)
-      require(fs.rename(p, target), s"delete sidecar move failed: $target")
-      covered.map(_ -> rel)
-    }.groupBy(_._1).map { case (dataRel, ps) => dataRel -> ps.map(_._2) }
-  }
-
   /** The rewrite-commit core every rewrite of existing files publishes
     * through (library compact / zorder / merge / delete / replaceWhere,
     * the MV register fold, SQL copy-on-write and merge-on-read DML). In
@@ -939,32 +923,33 @@ object SnapshotLake {
     // constraints are declared at CREATE, so a bare first append has none
     val props = latestVersion(spark, root)
       .fold(Map.empty[String, String])(_ => manifest(spark, root, None).props)
-    val stage = new SnapshotStageTable(spark, root, df.schema, partitionCols,
-      statsCols, bloomCols, props)
-    try writeStage(spark, stage.stageDir)(WriteBridge.append(df, stage))
-    catch { case e: org.apache.spark.SparkException =>
-      // a task's refusal reaches the caller as itself, not as the job
-      // failure Spark wraps it in
-      throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case r: IllegalArgumentException => r }.getOrElse(e)
-    }
-    stage.published
+    var published = Seq.empty[FileEntry]
+    writeStage(df, new SnapshotStageTable(spark, root, df.schema, df.schema,
+        partitionCols) {
+      protected val writers: DataWriterFactory =
+        routingWriters(df.schema, partitionCols, statsCols, bloomCols, props)
+      def commit(messages: Array[WriterCommitMessage]): Unit =
+        published = committing(publishStaged(messages))
+    })
+    published
   }
 
-  /** Run `write` into `stage` under a job tag of its own; on failure,
-    * delete the stage and rethrow. The write's abort leaves the stage
-    * alone, and a failed or cancelled job ends before its killed tasks
-    * do — a task still running may write under the stage
-    * again — so the stage is deleted once every task of the tagged jobs
-    * has ended, or after `StageSettleMs` at most. The write's own error is
-    * always the one rethrown; a failure to settle or delete rides on it
-    * as a suppressed exception.
+  /** Append `df` to the write-only `stage` under a job tag of its own.
+    * On failure the stage is deleted and the error rethrown: the write's
+    * abort leaves the stage alone, and a failed or cancelled job ends
+    * before its killed tasks do — a task still running may write under
+    * the stage again — so the stage is deleted once every task of the
+    * tagged jobs has ended, or after `StageSettleMs` at most. A failure to
+    * settle or delete rides on the write's error as a suppressed
+    * exception. A task's refusal, or the commit's lost race, reaches the
+    * caller as itself, not as the job failure Spark wraps it in.
     */
-  private def writeStage(spark: SparkSession, stage: Path)(write: => Unit): Unit = {
+  private def writeStage(df: DataFrame, stage: SnapshotStageTable): Unit = {
+    val spark = df.sparkSession
     val sc = spark.sparkContext
-    val tag = s"graft-${stage.getName}"
+    val tag = s"graft-${stage.stageDir.getName}"
     sc.addJobTag(tag)
-    try write
+    try WriteBridge.append(df, stage)
     catch { case e: Throwable =>
       try {
         val st = sc.statusTracker
@@ -975,9 +960,18 @@ object SnapshotLake {
         }
         val deadline = System.nanoTime + StageSettleMs * 1000000L
         try while (System.nanoTime < deadline && running) Thread.sleep(10)
-        finally stage.getFileSystem(sc.hadoopConfiguration).delete(stage, true)
+        finally stage.stageDir.getFileSystem(sc.hadoopConfiguration)
+          .delete(stage.stageDir, true)
       } catch { case s: Throwable => e.addSuppressed(s) }
-      throw e
+      throw (e match {
+        case _: org.apache.spark.SparkException =>
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .collectFirst {
+              case r: IllegalArgumentException => r
+              case c: ConflictingRewriteException => c
+            }.getOrElse(e)
+        case _ => e
+      })
     } finally sc.removeJobTag(tag)
   }
 
@@ -1619,20 +1613,22 @@ object SnapshotLake {
   /** Shared tail of the tagged reads: `raw` arrives carrying `__abs`/
     * `__pos` from the parquet `_metadata` hidden columns (the reader's
     * own per-file ordinal — the same number the delta DML writer
-    * records); resolve `__abs` to the manifest rel via an explicit
-    * broadcast lookup built from the very paths this plan reads, then
-    * anti-join away the files' pending position deletes. Fully
-    * distributed; AQE broadcasts small delete sets.
+    * records); resolve `__abs` to the manifest rel — its path past the
+    * data dir, kept only when that is one of the `files` this plan
+    * reads (a set lookup inside the scan's stage, so no broadcast and no
+    * Spark job of its own) — then anti-join away the files' pending
+    * position deletes. Fully distributed; AQE broadcasts small delete
+    * sets.
     */
   private def readTagged(spark: SparkSession, root: String, raw: DataFrame,
       files: Seq[FileEntry]): DataFrame = {
     val fns = org.apache.spark.sql.functions
-    import spark.implicits._
-    val qd = SnapshotPartitioningIndex.qualifiedDataDir(spark, root).toString
-    val lookup = files.map(f => (s"$qd/${f.rel}", f.rel))
-      .toDF("__abs", "__rel")
+    val prefix =
+      SnapshotPartitioningIndex.qualifiedDataDir(spark, root).toString + "/"
     val tagged = raw
-      .join(fns.broadcast(lookup), Seq("__abs"), "inner")
+      .withColumn("__rel", fns.when(col("__abs").startsWith(prefix),
+        col("__abs").substr(prefix.length + 1, Int.MaxValue)))
+      .filter(col("__rel").isin(files.map(_.rel): _*))
       .drop("__abs")
     val delRels = files.flatMap(_.deletes).distinct
     if (delRels.isEmpty) return tagged
@@ -2310,31 +2306,25 @@ object SnapshotLake {
   }
 
   /** One MERGE-ON-READ merge attempt: the keep-latest semantics of
-    * [[merge]], landed as position-delete sidecars + insert files — NO
+    * [[merge]] landed as position-delete sidecars + insert files, NO
     * data file rewritten (the library/streaming twin of the SQL MERGE's
-    * [[SnapshotDeltaWrite]] path; a lake opts in with
-    * `dmlMode = 'mor'`). One COLUMN-PRUNED pass over the candidate
-    * files fetches (key, version, __rel, __pos) with pending deletes
-    * already applied; [[morClassify]] then decides each collapsed
-    * update winner PER KEY against the newest lake version of that key:
-    * a winner at `versionCol >= max(lake versions)` deletes EVERY lake
-    * position of the key and inserts (updates win ties — cow's `__src`
-    * tie-break); a winner strictly below the key's newest lake row is
-    * dropped whole and the lake rows stay untouched; keys with no lake
-    * row insert. Classifying against the per-key MAX (not per lake row,
-    * the round-15 shape) keeps the cow keep-latest contract even when
-    * plain appends stacked several versions of one key in the lake —
-    * the old per-row rule would position-delete the stale row, keep the
-    * newer one, AND insert a mid-version winner beside it. (A losing
-    * winner leaves pre-existing duplicate lake versions of its key in
-    * place — the merge touches nothing it does not win against; cow's
-    * wholesale rewrite incidentally collapses such rows. [[merge]]'s
-    * standing key discipline — keyCols unique per version — makes the
-    * case vacuous on contract-observing lakes.)
-    *
-    * Commits like the SQL delta write: the sidecars stack onto the
-    * candidates [[commitRewrite]] guards, and the inserts are added.
-    * Returns (version, filesGainingDeletes, filesUntouched).
+    * [[SnapshotDeltaWrite]]; a lake opts in with `dmlMode = 'mor'`).
+    * [[morClassify]] decides each collapsed update winner PER KEY
+    * against the newest lake version of that key, from one column-pruned
+    * pass over the candidates: a winner at or above it deletes every
+    * lake position of the key and inserts (updates win ties); one below
+    * it is dropped whole. So a losing winner leaves duplicate lake
+    * versions that plain appends stacked in place, where cow's rewrite
+    * collapses them; [[merge]]'s key discipline (keyCols unique per
+    * version) makes that case vacuous. Deletes and
+    * inserts are then ONE write query, staged and committed as the SQL
+    * delta write's are: a [[SnapshotStageTable]] hands rows tagged like
+    * Spark's row-delta rows to [[SnapshotDeltaWriterFactory]]'s task
+    * writers, and [[SnapshotStagedWrite.commitDelta]] stacks the
+    * sidecars onto the candidates it guards and adds the inserts. The
+    * delete rows are hash-partitioned by data file, so each file's
+    * positions reach one task and a merge stacks at most one sidecar on
+    * it. Returns (version, filesGainingDeletes, filesUntouched).
     */
   private def mergeMorAttempt(spark: SparkSession, root: String,
       base: Manifest, updates: DataFrame, keyCols: Seq[String],
@@ -2343,63 +2333,50 @@ object SnapshotLake {
       candidates: Seq[FileEntry], untouched: Seq[FileEntry],
       updCount: Long): (Long, Int, Int) = {
     val fns = org.apache.spark.sql.functions
-    val fs = fsOf(spark, root)
     val cols = base.schema.fields.map(f => col(f.name))
-    // collapse in-batch duplicate keys: keep-latest with the same
-    // deterministic tie-break as the cow path (version desc, full-row
-    // hash stabilizes equal-version pairs)
-    val wU = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc,
-        fns.xxhash64(cols.toIndexedSeq: _*).asc)
-    val winners = updates.select(cols.toIndexedSeq: _*)
-      .withColumn("__rn", fns.row_number().over(wU))
-      .filter(col("__rn") === 1).drop("__rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // collapse in-batch duplicate keys: keep-latest with the cow path's
+    // tie-break (version desc, then the lowest full-row hash: `~hash`
+    // reverses its order). An aggregate, not a window, so every consumer
+    // reads the same whole-row exchange
+    val winners = updates
+      .groupBy(keyCols.map(col): _*)
+      .agg(fns.max_by(fns.struct(cols.toIndexedSeq: _*),
+        fns.struct(col(versionCol), fns.bitwise_not(
+          fns.xxhash64(cols.toIndexedSeq: _*)))).as("__w"))
+      .select(base.schema.fieldNames.map(n => col("__w").getField(n).as(n))
+        .toIndexedSeq: _*)
     // ONE pass over the candidates, pruned to key + version + row id —
     // parquet reads only those columns, pending deletes already applied
     val lakeKeys = readEntriesTagged(spark, root, base, candidates)
       .select(keyCols.map(col) ++ Seq(col(versionCol).as("__lv"),
         col("__rel"), col("__pos")): _*)
-    val (classified, deletes, inserts) = morClassify(winners, lakeKeys,
+    val (_, deletes, inserts) = morClassify(winners, lakeKeys,
       keyCols, versionCol,
       broadcastWinners = updCount <= 4L * 1000 * 1000)
-    classified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // stage the delete sidecars: range-clustered by (file, pos) so each
-    // data file's positions land in few sidecars and arrive pre-sorted
-    // for the scan-side loads
-    val token = newToken()
-    val delStage = new Path(root, s".stage-$token")
-    val nParts = math.max(1, math.min(16, candidates.size / 4))
-    deletes.repartitionByRange(nParts, col("file"), col("pos"))
-      .sortWithinPartitions("file", "pos")
-      .write.option("compression", "zstd").parquet(delStage.toString)
-    // coverage (which data rels each sidecar holds) from the staged
-    // sidecars themselves — bounded by (#sidecars x #candidates) PAIRS,
-    // never positions
-    val covRows = spark.read.parquet(delStage.toString)
-      .select(col("_metadata.file_path").as("__side"), col("file"))
-      .distinct().collect()
+    // (op, rel, pos, row...): the union takes its names from the deletes
+    val rows = deletes.repartition(col("file")).select(
+      (fns.lit(RowDeltaUtils.DELETE_OPERATION).as("__op") +:
+        col("file").as("__file") +: col("pos").as("__pos") +:
+        base.schema.fields.map(f => fns.lit(null).cast(f.dataType).as(f.name)))
+        .toIndexedSeq: _*)
+      .union(inserts.select((fns.lit(RowDeltaUtils.INSERT_OPERATION) +:
+        fns.lit(null).cast("string") +: fns.lit(null).cast("long") +:
+        cols).toIndexedSeq: _*))
     val (statsCols, bloomCols) = indexCols(base, partitionCols)
-    val newFiles = stageFiles(spark, root,
-      attachFieldIds(inserts, base.schema), partitionCols, statsCols,
-      bloomCols)
-    try {
-      // move the non-empty sidecars under _deletes/; empty part files
-      // cover no rows, stay in the stage dir and die with it
-      val coverMap = moveDeleteSidecars(spark, root, token, covRows
-        .groupBy(_.getString(0)).toSeq.sortBy(_._1)
-        .map { case (abs, rows) =>
-          (new Path(abs), rows.map(_.getString(1)).toSeq) })
-      val v = commitRewrite(spark, root, op, base, replaced = Nil,
-        guarded = candidates, added = newFiles, deletes = coverMap,
-        lockExpiryMs = lockExpiryMs)
-      (v, coverMap.size, untouched.size)
-    } finally {
-      fs.delete(delStage, true)
-      classified.unpersist(blocking = false)
-      winners.unpersist(blocking = false)
-    }
+    var committed = (base.version, 0)
+    writeStage(rows, new SnapshotStageTable(spark, root, rows.schema,
+        base.schema, partitionCols) {
+      // inserts are written under the lake schema's names and field ids,
+      // every column optional (as the frame's)
+      protected val writers: DataWriterFactory =
+        new SnapshotDeltaWriterFactory(routingWriters(
+          WriteBridge.nullable(base.schema), partitionCols, statsCols,
+          bloomCols, base.props), parquetFactory(SnapshotMor.DeleteSchema))
+      def commit(messages: Array[WriterCommitMessage]): Unit =
+        committed = committing(commitDelta(messages, base, op, candidates,
+          lockExpiryMs))
+    })
+    (committed._1, committed._2, untouched.size)
   }
 
   /** The MOR merge's classification plan — the seam WritePlanSpec pins.
@@ -2425,9 +2402,9 @@ object SnapshotLake {
     *     in one pass; the anti side is <= |winners| key-only rows, so
     *     it broadcasts under the same gate.
     *
-    * Returns (classified, deletes, inserts); the caller persists
-    * `classified` (deletes and the anti side both read it — one
-    * candidate-scan materialization instead of two). NULL join keys
+    * Returns (classified, deletes, inserts); deletes and the anti side
+    * both read `classified`, each pruned to the columns it needs (the
+    * anti side's scan reads no row positions). NULL join keys
     * never match (standard SQL equality), so a NULL-keyed winner
     * inserts — same as every round since 14; cow's window groups NULLs,
     * the documented divergence for lakes violating key discipline.

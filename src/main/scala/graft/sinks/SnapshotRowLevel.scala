@@ -280,9 +280,12 @@ final class SnapshotRowLevelScan(
     innerScan.toBatch.createReaderFactory()
 }
 
-/** The entries of the files one task staged, under stage-relative names. */
-private case class StagedFilesMessage(files: Seq[SnapshotLake.FileEntry])
-  extends WriterCommitMessage
+/** What one task staged, under stage-relative names: the entries of its
+  * data files and, in a merge-on-read write, its position-delete sidecar
+  * with the data/-relative files the sidecar covers.
+  */
+private case class StagedFilesMessage(files: Seq[SnapshotLake.FileEntry],
+    deletes: Option[(String, Seq[String])] = None) extends WriterCommitMessage
 
 /** How one staged write's routing writers write and describe their
   * files: Spark's zstd parquet factory, its job conf, and the index
@@ -309,12 +312,13 @@ private[sinks] trait PartitionOrdered extends RequiresDistributionAndOrdering {
 }
 
 /** The driver-side plumbing every write into a snapshot lake shares —
-  * the library writes ([[SnapshotStageTable]]) and the SQL DML and
-  * dynamic-overwrite writes: a stage dir under a fresh token, Spark's own
-  * parquet `prepareWrite` factory for the executors'
-  * [[HiveRoutingWriter]]s, publishing the entries the tasks reported
-  * under token-prefixed names, and dropping the stage dir on commit or
-  * abort. The SQL subclasses commit through
+  * the library writes ([[SnapshotStageTable]]: appends, rewrites and the
+  * merge-on-read merge) and the SQL DML and dynamic-overwrite writes: a
+  * stage dir under a fresh token, Spark's own parquet `prepareWrite`
+  * factory for the executors' [[HiveRoutingWriter]]s, publishing the
+  * entries the tasks reported under token-prefixed names, the one
+  * merge-on-read commit ([[commitDelta]]), and dropping the stage dir on
+  * commit or abort. The SQL subclasses commit through
   * [[SnapshotLake.commitRewrite]] / [[SnapshotLake.publishRewrite]],
   * which reclaim a lost race's files and abort the statement loudly.
   */
@@ -378,7 +382,6 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
       : Seq[SnapshotLake.FileEntry] =
     messages.toSeq.flatMap {
       case m: StagedFilesMessage => m.files
-      case m: DeltaFilesMessage => m.inserts
       case _ => Nil
     }.sortBy(_.rel).map { f =>
       val i = f.rel.lastIndexOf('/')
@@ -396,6 +399,35 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
       f.copy(rel = rel)
     }
 
+  /** The one commit of a merge-on-read write, SQL DML or library merge:
+    * publish the inserts, move each task's delete sidecar under
+    * `_deletes/` behind the write token, and stack the sidecars onto the
+    * files they cover in ONE [[SnapshotLake.commitRewrite]] guarding
+    * `candidates` (a lost race throws its ConflictingRewriteException,
+    * or aborts the `statement`). Returns the version won and the number
+    * of files that gained deletes.
+    */
+  private[sinks] def commitDelta(messages: Array[WriterCommitMessage],
+      base: SnapshotLake.Manifest, op: String,
+      candidates: Seq[SnapshotLake.FileEntry],
+      lockExpiryMs: Long = SnapshotLake.DefaultLockExpiryMs,
+      statement: Option[String] = None): (Long, Int) = {
+    val added = publishStaged(messages)
+    val deletes = messages.toSeq.flatMap {
+      case StagedFilesMessage(_, Some((staged, covered))) =>
+        val rel = s"$token-${new Path(staged).getName}"
+        val target = new Path(SnapshotLake.deletesDir(root), rel)
+        fs.mkdirs(target.getParent)
+        require(fs.rename(new Path(stageDir, staged), target),
+          s"delete sidecar move failed: $target")
+        covered.map(_ -> rel)
+      case _ => Nil
+    }.groupMap(_._1)(_._2)
+    (SnapshotLake.commitRewrite(spark, root, op, base, replaced = Nil,
+      guarded = candidates, added = added, deletes = deletes,
+      lockExpiryMs = lockExpiryMs, statement = statement), deletes.size)
+  }
+
   /** Run the driver-side commit; the stage dir goes on every exit. */
   protected def committing[A](body: => A): A =
     try body finally fs.delete(stageDir, true)
@@ -404,24 +436,20 @@ private[sinks] abstract class SnapshotStagedWrite(spark: SparkSession,
     fs.delete(stageDir, true)
 }
 
-/** The library writes' staged write ([[SnapshotLake.stageFiles]]): a
-  * write-only DSv2 table over one stage dir, which a frame is appended
-  * to through [[WriteBridge]]. Its writers are built from `rowSchema`,
-  * the frame's own, so the frame's field-id metadata reaches parquet,
-  * and they check the constraints the lake `props` declare on every row.
+/** The library writes' staged write: a write-only DSv2 table over one
+  * stage dir, which a frame of `rowSchema` is appended to through
+  * [[WriteBridge]], its rows sorted by `sortCols` within each task.
+  * [[SnapshotLake]]'s `stageFiles` and `mergeMorAttempt` each give it
+  * the task writers — built with the table, so a refusal (an
+  * unsupported bloom column) comes before a stage exists — and the
+  * commit.
   */
-private[sinks] final class SnapshotStageTable(spark: SparkSession,
-    root: String, rowSchema: StructType, partCols: Seq[String],
-    statsCols: Set[String], bloomCols: Seq[String],
-    props: Map[String, String])
+private[sinks] abstract class SnapshotStageTable(spark: SparkSession,
+    root: String, rowSchema: StructType, lakeSchema: StructType,
+    sortCols: Seq[String])
     extends SnapshotStagedWrite(spark, root) with SupportsWrite with BatchWrite {
 
-  // built now: an unsupported bloom column refuses before a stage exists
-  private val writers =
-    routingWriters(rowSchema, partCols, statsCols, bloomCols, props)
-
-  /** The entries of the files the write published, once it has run. */
-  @volatile private[sinks] var published: Seq[SnapshotLake.FileEntry] = Nil
+  protected val writers: DataWriterFactory
 
   override def name(): String = s"graft-stage `$root`"
 
@@ -433,18 +461,15 @@ private[sinks] final class SnapshotStageTable(spark: SparkSession,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new PartitionOrdered {
-        override protected def orderCols: Seq[String] = partCols
+        override protected def orderCols: Seq[String] = sortCols
         override def toBatch: BatchWrite = SnapshotStageTable.this
       }
     }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    openStage(rowSchema)
+    openStage(lakeSchema)
     writers
   }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    published = committing(publishStaged(messages))
 
   // a failed write's stage dir goes once its killed tasks have ended
   // (SnapshotLake.writeStage), not while they may still write into it
@@ -709,18 +734,21 @@ private[sinks] final class HiveRoutingWriter(
 
 final class SnapshotDataWriterFactory(
     files: StagedParquet,
-    stageDir: String,
-    schema: StructType,
+    private[sinks] val stageDir: String,
+    private[sinks] val schema: StructType,
     partCols: Seq[String],
-    timeZoneId: String,
+    private[sinks] val timeZoneId: String,
     constraints: Seq[(String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil)
     extends DataWriterFactory {
 
+  /** One task's writer of rows of `schema`, routed by `partCols`. */
+  private[sinks] def routing(partitionId: Int, taskId: Long): HiveRoutingWriter =
+    new HiveRoutingWriter(files, stageDir, schema, partCols, timeZoneId,
+      partitionId, taskId, constraints = constraints)
+
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val routing = new HiveRoutingWriter(files, stageDir, schema,
-      partCols, timeZoneId, partitionId, taskId,
-      constraints = constraints)
+    val routing = this.routing(partitionId, taskId)
 
     new DataWriter[InternalRow] {
       // ReplaceData's plan tags every row with a LEADING __row_operation

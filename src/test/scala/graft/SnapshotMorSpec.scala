@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.obs.Ledger
 import graft.sinks.SnapshotLake
 
 /** Merge-on-read row-level DML (round 14): `dmlMode = 'mor'` routes
@@ -369,6 +370,33 @@ class SnapshotMorSpec extends SparkSpec {
     spark.sql("DROP TABLE graft.mor.big")
   }
 
+  /** Per data file of `before`, how many sidecars its entry in `after`
+    * gained (files `after` no longer holds are left out).
+    */
+  private def sidecarsGained(before: SnapshotLake.Manifest,
+      after: SnapshotLake.Manifest): Map[String, Int] = {
+    val was = before.files.map(f => f.rel -> f.deletes.size).toMap
+    after.files.collect {
+      case f if was.contains(f.rel) => f.rel -> (f.deletes.size - was(f.rel))
+    }.toMap
+  }
+
+  /** Run `merge` on the lake under `root` and assert that it stacked at
+    * most ONE new sidecar on each data file; returns the merge's result
+    * and the number of files whose deletes grew.
+    */
+  private def oneSidecarEach[A](root: String)(merge: => A): (A, Int) = {
+    val before = SnapshotLake.manifest(spark, root)
+    val out = merge
+    val gained = sidecarsGained(before, SnapshotLake.manifest(spark, root))
+    assertOneSidecarEach(gained)
+    (out, gained.count(_._2 > 0))
+  }
+
+  private def assertOneSidecarEach(gained: Map[String, Int]): Unit =
+    assert(gained.values.forall(_ <= 1),
+      s"a merge must stack at most one sidecar per file: $gained")
+
   test("library merge and streaming mergeStream on a dmlMode=mor lake " +
       "land as position deletes: zero data files rewritten across " +
       "micro-batches, exactly-once replays, final state identical to " +
@@ -396,7 +424,9 @@ class SnapshotMorSpec extends SparkSpec {
       0L -> kv((1L, "a2", 2L), (5L, "e", 1L), (2L, "b0", 0L)),
       // in-batch duplicate key 3 collapses to ver 3; update key 5
       1L -> kv((3L, "c2", 2L), (3L, "c3", 3L), (5L, "e2", 2L)))
-    batches.foreach { case (bid, df) => morH(df, bid); cowH(df, bid) }
+    batches.foreach { case (bid, df) =>
+      oneSidecarEach(morRoot)(morH(df, bid)); cowH(df, bid)
+    }
     // crash-replay of batch 1: skipped whole on both
     morH(batches(1)._2, 1L); cowH(batches(1)._2, 1L)
     def state(root: String): Map[Long, (String, Long)] =
@@ -422,10 +452,12 @@ class SnapshotMorSpec extends SparkSpec {
     val cowM = SnapshotLake.manifest(spark, cowRoot)
     assert(cowM.files.forall(_.deletes.isEmpty))
     // a later library merge on the mor lake takes the same delta route
-    val (v, sidecarred, _) = SnapshotLake.merge(spark, morRoot,
-      kv((4L, "d2", 2L), (6L, "f", 1L)), keyCols = Seq("id"),
-      versionCol = "ver", pruneKey = "id")
+    val ((v, sidecarred, _), grown) = oneSidecarEach(morRoot)(
+      SnapshotLake.merge(spark, morRoot, kv((4L, "d2", 2L), (6L, "f", 1L)),
+        keyCols = Seq("id"), versionCol = "ver", pruneKey = "id"))
     assert(v == morM.version + 1 && sidecarred >= 1)
+    assert(sidecarred == grown,
+      s"filesGainingDeletes $sidecarred != $grown files whose deletes grew")
     assert(state(morRoot) == expected ++ Map(4L -> ("d2", 2L),
       6L -> ("f", 1L)))
     assert(baseRels.subsetOf(
@@ -436,6 +468,57 @@ class SnapshotMorSpec extends SparkSpec {
       .forall(_.deletes.isEmpty))
     assert(state(morRoot) == expected ++ Map(4L -> ("d2", 2L),
       6L -> ("f", 1L)))
+    // a merge over many candidate files, each losing many positions,
+    // still stacks one sidecar per file and reports exactly those files
+    val narrow = SnapshotLake.manifest(spark, morRoot).files.size
+    SnapshotLake.append(spark, morRoot, spark.range(100, 4100, 1, 8)
+      .select(col("id"), lit("w").as("v"), lit(1L).as("ver")),
+      statsCols = Seq("id"))
+    val wideFiles = SnapshotLake.manifest(spark, morRoot).files.size - narrow
+    assert(wideFiles == 8, s"the wide append landed $wideFiles files")
+    val ((_, wideGained, _), wideGrown) = oneSidecarEach(morRoot)(
+      SnapshotLake.merge(spark, morRoot, spark.range(100, 4100, 3)
+        .select(col("id"), lit("w2").as("v"), lit(2L).as("ver")),
+        keyCols = Seq("id"), versionCol = "ver", pruneKey = "id"))
+    assert(wideGained == wideGrown && wideGrown >= 8,
+      s"filesGainingDeletes $wideGained, files whose deletes grew $wideGrown")
+    val wide = SnapshotLake.read(spark, morRoot).filter(col("id") >= 100)
+    assert(wide.count() == 4000 &&
+      wide.filter(col("v") === "w2").count() == 1334)
+  }
+
+  test("a library mor merge is one write query: at most 10 Spark jobs and " +
+      "2 SQL queries (the range aggregate and the write), where the " +
+      "copy-on-write twin runs 4 jobs and 2 queries") {
+    val dir = TempDirs.create("mor-jobs")
+    val lake = spark.range(0, 200000, 1, 8)
+      .select(col("id"), concat(lit("v"), col("id").cast("string")).as("v"),
+        lit(1L).as("ver"))
+    // every 100th key updated, 112 new keys
+    val updates = spark.range(0, 200000, 100)
+      .union(spark.range(200000, 200112))
+      .select(col("id"), lit("u").as("v"), lit(2L).as("ver"))
+    val costs = Seq("mor", "cow").map { mode =>
+      val root = s"$dir/$mode"
+      SnapshotLake.create(spark, root, lake.schema,
+        tableProps = Map("statsCols" -> "id") ++
+          (if (mode == "mor") Map("dmlMode" -> "mor") else Map.empty))
+      SnapshotLake.append(spark, root, lake, statsCols = Seq("id"))
+      val before = SnapshotLake.manifest(spark, root)
+      assert(before.files.size == 8)
+      val (_, cost) = Ledger.scope(spark)(SnapshotLake.merge(spark, root,
+        updates, keyCols = Seq("id"), versionCol = "ver", pruneKey = "id"))
+      val got = SnapshotLake.read(spark, root)
+      assert(got.count() == 200112 &&
+        got.filter(col("v") === "u").count() == 2112, s"$mode merge drifted")
+      mode -> (cost, sidecarsGained(before, SnapshotLake.manifest(spark, root)))
+    }.toMap
+    val (mor, cow) = (costs("mor")._1, costs("cow")._1)
+    assert(mor.jobs <= 10 && mor.queries == 2,
+      s"mor merge: ${mor.jobs} jobs, ${mor.queries} queries")
+    assert(cow.jobs <= 4 && cow.queries == 2,
+      s"cow merge: ${cow.jobs} jobs, ${cow.queries} queries")
+    assertOneSidecarEach(costs("mor")._2)
   }
 
   test("library merge evolve=true: a widened update batch lands as ONE " +

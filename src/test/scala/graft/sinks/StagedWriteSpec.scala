@@ -138,6 +138,17 @@ class StagedWriteSpec extends SparkSpec {
         keyCols = Seq("id", "p"), versionCol = "v", pruneKeys = Seq("id"))))
     assert(SnapshotLake.manifest(spark, mor).files.exists(_.deletes.nonEmpty),
       "the mor merge must land position deletes")
+    val morPart = TempDirs.create("staged-mor-part") + "/lake"
+    SnapshotLake.create(spark, morPart, frame(0, 1).schema,
+      partitionCols = Seq("p"), tableProps = Map("dmlMode" -> "mor"))
+    SnapshotLake.append(spark, morPart, frame(0, 300), partitionCols = Seq("p"),
+      statsCols = Stats, bloomCols = Blooms)
+    assertEntries("partitioned mergeComposite (mor)", morPart,
+      published(morPart)(SnapshotLake.mergeComposite(spark, morPart,
+        frame(290, 30, 2L), keyCols = Seq("id", "p"), versionCol = "v",
+        pruneKeys = Seq("id"), partitionCols = Seq("p"))))
+    val merged = SnapshotLake.read(spark, morPart)
+    assert(merged.count() == 320 && merged.filter(col("v") === 2L).count() == 30)
   }
 
   test("entry equality on the SQL writes and an MV refresh; an append is " +
@@ -288,12 +299,19 @@ class StagedWriteSpec extends SparkSpec {
 
   test("a constraint-violating append, mergeComposite and compact each " +
       "refuse and leave no stage dir, no file and no version behind") {
-    val root = TempDirs.create("staged-refuse") + "/lake"
-    SnapshotLake.create(spark, root, frame(0, 1).schema,
-      tableProps = Map("constraint.small_id" -> "id < 1000"))
-    SnapshotLake.append(spark, root, frame(0, 100), statsCols = Stats,
-      bloomCols = Blooms)
-    def listed(dir: String): Set[String] = {
+    // mergeComposite runs on a copy-on-write and a dmlMode=mor lake, and
+    // no refusal may leave a frame persisted
+    def lake(props: Map[String, String]): String = {
+      val root = TempDirs.create("staged-refuse") + "/lake"
+      SnapshotLake.create(spark, root, frame(0, 1).schema,
+        tableProps = props + ("constraint.small_id" -> "id < 1000"))
+      SnapshotLake.append(spark, root, frame(0, 100), statsCols = Stats,
+        bloomCols = Blooms)
+      root
+    }
+    val root = lake(Map.empty)
+    val mor = lake(Map("dmlMode" -> "mor"))
+    def listed(root: String, dir: String): Set[String] = {
       val d = new Path(root, dir)
       val out = scala.collection.mutable.Set.empty[String]
       if (fs.exists(d)) {
@@ -304,15 +322,18 @@ class StagedWriteSpec extends SparkSpec {
     }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ chain(x.getCause))
-    def refused(what: String)(op: => Any): Unit = {
+    def refused(what: String, root: String = root)(op: => Any): Unit = {
       val (v, data, blooms) = (SnapshotLake.latestVersion(spark, root),
-        listed("data"), listed("_blooms"))
+        listed(root, "data"), listed(root, "_blooms"))
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
       val e = intercept[Exception](op)
       assert(chain(e).exists(_.contains("constraint violation `small_id`")),
         s"$what: ${chain(e).take(3)}")
       assert(SnapshotLake.latestVersion(spark, root) == v, s"$what committed")
-      assert(listed("data") == data && listed("_blooms") == blooms,
+      assert(listed(root, "data") == data && listed(root, "_blooms") == blooms,
         s"$what left files behind")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+        s"$what left a frame persisted")
       assert(!fs.listStatus(new Path(root)).exists(
         _.getPath.getName.startsWith(".stage-")), s"$what left a stage dir")
     }
@@ -320,6 +341,9 @@ class StagedWriteSpec extends SparkSpec {
       statsCols = Stats, bloomCols = Blooms))
     refused("mergeComposite")(SnapshotLake.mergeComposite(spark, root,
       frame(95, 10, 2L).withColumn("id", col("id") + 1000),
+      keyCols = Seq("id", "p"), versionCol = "v", pruneKeys = Seq("id")))
+    refused("mergeComposite (mor)", mor)(SnapshotLake.mergeComposite(spark,
+      mor, frame(95, 10, 2L).withColumn("id", col("id") + 1000),
       keyCols = Seq("id", "p"), versionCol = "v", pruneKeys = Seq("id")))
     // rows that predate a tighter constraint: the rewrite re-checks them
     val head = SnapshotLake.manifest(spark, root)

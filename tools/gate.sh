@@ -16,8 +16,10 @@
 #      graft/sinks/BloomSidecars.scala (bloom sidecars are built by the task
 #      that writes each file, never by a second scan); one staged write:
 #      no footerProbe( call in src/main but the task writer's
-#      (HiveRoutingWriter) and addStats', and no DataFrameWriter save in
-#      SnapshotLake.stageFiles (the writing task reports each file's entry)
+#      (HiveRoutingWriter) and addStats', and no DataFrameWriter save and
+#      no spark.read of a stage dir anywhere in SnapshotLake.scala (the
+#      writing task reports each data file's entry and each position-delete
+#      sidecar it staged)
 #   1b. cd perfbench && sbt test -> the repo benchmark still builds against
 #      the engine and its own tests pass
 #   2. graft.Verify at sf0.01  -> /tmp/gate_verify_out
@@ -87,8 +89,11 @@ BLOOM=$(git grep -nE 'input_file_name|BloomFilter\.create' -- src/main \
   ':!src/main/scala/graft/sinks/BloomSidecars.scala')
 # One staged write: every lake file is staged by a HiveRoutingWriter that
 # reports the file's manifest entry, so the only footer probes left are the
-# writer's own and addStats' backfill of existing files, and stageFiles
-# runs no V1 DataFrameWriter save.
+# writer's own and addStats' backfill of existing files. Every
+# position-delete sidecar, library merge or SQL DML, is staged by
+# SnapshotDeltaWriterFactory's task writer, whose commit message names the
+# files it covers: SnapshotLake.scala runs no V1 DataFrameWriter save and
+# reads no stage dir back.
 PROBE=$(git grep -lE 'footerProbe\(' -- src/main | xargs -r awk '
   FNR == 1 { cls = ""; fn = "" }
   /^ *(private[^ ]* +)?(final +)?(case +)?(class|object|trait) +[A-Za-z0-9_]+/ {
@@ -99,12 +104,11 @@ PROBE=$(git grep -lE 'footerProbe\(' -- src/main | xargs -r awk '
     fn = substr($0, RSTART, RLENGTH); sub(/^def +/, "", fn) }
   /footerProbe\(/ && !/def +footerProbe\(/ &&
     cls != "HiveRoutingWriter" && fn != "addStats" { print FILENAME ":" FNR ": " $0 }')
-STAGEW=$(awk '/def stageFiles\(/ { on = 1; next } on && /^  [^ ]/ { on = 0 }
-  on && /\.write\b|DataFrameWriter|\.save\(|\.parquet\(|saveAsTable|insertInto/ {
+STAGEW=$(awk '/\.write\.(option|options|mode|format|partitionBy|bucketBy|sortBy|parquet|json|csv|orc|text|save|saveAsTable|insertInto)\(|\.write *$|DataFrameWriter|\.writeTo\(|\.save\(|saveAsTable|insertInto|spark\.read.*[sS]tage/ {
     print FILENAME ":" FNR ": " $0 }' src/main/scala/graft/sinks/SnapshotLake.scala)
 if [[ -z "$STRAY$WITNESS$MAINS$QUERIES$BLOOM$PROBE$STAGEW" ]]; then
   ONEWAY="ok"
-  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run; blooms are built only in BloomSidecars; lake files are staged only by the routing writer"
+  note "one way: graft.Concurrent is the only pool; no witness in src/main; Prof is the only tools main; queries run via SparkEntry.run; blooms are built only in BloomSidecars; lake files and delete sidecars are staged only by the task writers, never read back from a stage dir"
 else
   ONEWAY="FAILED:"
   [[ -n "$STRAY" ]] && ONEWAY="$ONEWAY $(echo "$STRAY" | wc -l) line(s) outside graft.Concurrent"
@@ -113,7 +117,7 @@ else
   [[ -n "$QUERIES" ]] && ONEWAY="$ONEWAY $(echo "$QUERIES" | wc -l) SparkEntry.queries( call(s) outside SparkEntry.scala"
   [[ -n "$BLOOM" ]] && ONEWAY="$ONEWAY $(echo "$BLOOM" | wc -l) bloom builder line(s) outside BloomSidecars.scala"
   [[ -n "$PROBE" ]] && ONEWAY="$ONEWAY $(echo "$PROBE" | wc -l) footerProbe( call(s) outside the task writer and addStats"
-  [[ -n "$STAGEW" ]] && ONEWAY="$ONEWAY $(echo "$STAGEW" | wc -l) DataFrameWriter line(s) in SnapshotLake.stageFiles"
+  [[ -n "$STAGEW" ]] && ONEWAY="$ONEWAY $(echo "$STAGEW" | wc -l) DataFrameWriter save or stage read-back line(s) in SnapshotLake.scala"
   printf '%s\n' "$STRAY" "$WITNESS" "$MAINS" "$QUERIES" "$BLOOM" "$PROBE" "$STAGEW" | grep -v '^$' | tee -a "$LOG"
   note "ONE-WAY CHECK $ONEWAY"; fail=1
 fi
